@@ -430,7 +430,7 @@ def _minhash_pairs(spark: SparkSession, sf: str) -> DataFrame:
 def _ngram_pruned_cte() -> str:
     """Shared oracle CTEs: DF-pruned inverted index + sizes on the pruned
     shingle space (cap = greatest(20, 1% of corpus), mirroring
-    `_ngram_max_df`)."""
+    `_ngram_max_df_plan`)."""
     return (
         _shingle_cte()
         + """, sets AS (
@@ -452,19 +452,14 @@ def _ngram_pruned_cte() -> str:
     )
 
 
-def _ngram_max_df(d: DataFrame) -> int:
-    """Relative DF cap: 1% of the corpus, floor 20 — scales with corpus
-    size so the prune stays a boilerplate filter, not a recall cliff."""
-    return max(20, int(d.count() * 0.01))
-
-
 def _ngram_max_df_plan(d: DataFrame) -> DataFrame:
-    """`_ngram_max_df` computed IN-PLAN: a one-row ``__max_df`` table the
-    DF-prune crosses in as a broadcast (operators/ngram_jaccard.py
-    ``_hot_shingles``) — removes the per-call driver-side ``d.count()``
-    job (guide §1.2/§5; r12 VERDICT items 4/7). Bit-identical value:
-    ``int()`` == ``floor`` for non-negative counts and the ``count *
-    0.01`` double multiply is the same IEEE op both ways."""
+    """Relative DF cap, 1% of the corpus with a floor of 20, so the prune
+    stays a boilerplate filter rather than a recall cliff. Computed
+    IN-PLAN as a one-row ``__max_df`` table that the DF-prune crosses in
+    as a broadcast (operators/ngram_jaccard.py ``_hot_shingles``), so no
+    driver-side ``d.count()`` job runs per call. ``floor(count * 0.01)``
+    is the same double multiply the oracle's ``greatest(20, 0.01 *
+    count)`` cap compares against."""
     return d.agg(
         F.greatest(
             F.lit(20).cast("long"),
@@ -3791,7 +3786,11 @@ def source_novelty_q(spark: SparkSession, sf: str) -> DataFrame:
     # was sample-bounded — it must warm its own now; cache_once keeps it
     # one registration across the family)
     sets = cache_once(shingle_sets(d, shingle_size=_MH_K))
-    inv = sets.select("doc_id", F.explode("sset").alias("shingle"))
+    # null text shingles to ``[null]``; the oracle's ``JOIN USING
+    # (shingle)`` drops that posting, so it must not count here either
+    inv = sets.select(
+        "doc_id", F.explode("sset").alias("shingle")
+    ).filter(F.col("shingle").isNotNull())
     # r13 (VERDICT item 9, guide §2.3 "aggregate before you shuffle"):
     # the old shape joined the FULL inverted index back onto the
     # first-owner table on shingle — a data-sized, skew-exposed shuffle

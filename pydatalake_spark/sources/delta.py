@@ -47,8 +47,12 @@ The transaction log IS the file listing: resolving a snapshot costs
 O(commits since last checkpoint) small JSON reads plus one parquet
 checkpoint footer-to-rows scan — never an object-store LIST over millions
 of data files. Partition pruning happens on the log's ``partitionValues``
-before Spark opens a single footer. Data IO stays fully distributed
-(``spark.read.parquet`` over the resolved file list).
+before Spark opens a single footer. Data IO stays fully distributed, and
+``_scan_files`` is the one builder of a scan over files a snapshot names:
+it hands Spark the log's resolved file list and keeps the file-status
+lookup on the driver, so no scan pays a Spark listing job (one task per
+file once a read names more than 32 paths) to rediscover what the log
+already says.
 
 Driver-memory honesty: snapshot state (path, partitionValues, size per
 live file) is one dict — ~200 B/file ≈ 200 MB at 1M files (100 TB at
@@ -64,6 +68,7 @@ import os
 import shutil
 import time
 import uuid
+from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, field
 from urllib.parse import quote, unquote
 
@@ -762,6 +767,25 @@ def _is_hive_layout(files: dict[str, dict], pcols: list[str]) -> bool:
     return True
 
 
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+@contextmanager
+def _conf_set(spark: SparkSession, key: str, value: str):
+    """Set a runtime SQL conf for the block, then put back the caller's
+    value (or unset it again) even if the block raises. The conf is
+    session-wide, so other threads on the session see it meanwhile."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
 def _scan_files(
     spark: SparkSession,
     table: str,
@@ -770,12 +794,21 @@ def _scan_files(
     pcols: list[str],
     with_meta: bool = False,
 ) -> DataFrame:
-    """One DataFrame over ``files``. Hive layouts get a single
-    basePath-ed scan (partition dirs the log vouches for); foreign
-    layouts group files by partitionValues and attach the log's values
-    as literals — unions bounded by DISTINCT live partitions, not files.
-    ``with_meta`` appends ``__dv_fn``/``__dv_ri`` (the scan's file name
-    and physical row index) for deletion-vector filtering."""
+    """One DataFrame over ``files``; every scan of files a snapshot names
+    is built here. Hive layouts get a single basePath-ed scan (partition
+    dirs the log vouches for); foreign layouts group files by
+    partitionValues and attach the log's values as literals — unions
+    bounded by DISTINCT live partitions, not files. ``with_meta`` appends
+    ``__dv_fn``/``__dv_ri`` (the scan's file name and physical row index)
+    for deletion-vector filtering.
+
+    The log already names every file, so Spark's leaf-file status lookup
+    runs on the driver: past ``parallelPartitionDiscovery.threshold``
+    paths (32 by default) Spark would otherwise fire a listing job with
+    one task per file. The log and commits go through ``os.*``, so a
+    path resolved without a URI scheme is on a driver-visible filesystem
+    and its lookup is one ``stat``. If any path keeps a scheme (a foreign
+    absolute ``add.path``), Spark's default applies."""
     names = [f.name for f in schema.fields]
     meta = (
         [
@@ -786,35 +819,43 @@ def _scan_files(
         else []
     )
     paths = [_resolve_path(table, p) for p in files]
-    if not pcols:
-        return spark.read.schema(schema).parquet(*paths).select(
-            *names, *meta
+    if any("://" in p for p in paths):
+        listing = nullcontext()
+    else:
+        floor = int(spark.conf.get(_LISTING_THRESHOLD))
+        listing = _conf_set(
+            spark, _LISTING_THRESHOLD, str(max(floor, len(paths)))
         )
-    if _is_hive_layout(files, pcols):
-        return (
-            spark.read.schema(schema)
-            .option("basePath", table)
-            .parquet(*paths)
-            .select(*names, *meta)
+    with listing:
+        if not pcols:
+            return spark.read.schema(schema).parquet(*paths).select(
+                *names, *meta
+            )
+        if _is_hive_layout(files, pcols):
+            return (
+                spark.read.schema(schema)
+                .option("basePath", table)
+                .parquet(*paths)
+                .select(*names, *meta)
+            )
+        data_schema = StructType(
+            [f for f in schema.fields if f.name not in pcols]
         )
-    data_schema = StructType(
-        [f for f in schema.fields if f.name not in pcols]
-    )
-    types = {f.name: f.dataType for f in schema.fields}
-    groups: dict[tuple, list[str]] = {}
-    for path, add in files.items():
-        key = tuple(add["partitionValues"].get(c) for c in pcols)
-        groups.setdefault(key, []).append(_resolve_path(table, path))
-    parts = []
-    for key, grp in sorted(groups.items(), key=lambda kv: str(kv[0])):
-        part = spark.read.schema(data_schema).parquet(*grp)
-        for c, raw in zip(pcols, key):
-            part = part.withColumn(c, F.lit(raw).cast(types[c]))
-        parts.append(part.select(*names, *meta))
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df
+        types = {f.name: f.dataType for f in schema.fields}
+        groups: dict[tuple, list[str]] = {}
+        for path, add in files.items():
+            key = tuple(add["partitionValues"].get(c) for c in pcols)
+            groups.setdefault(key, []).append(_resolve_path(table, path))
+        parts = []
+        for key, grp in sorted(groups.items(), key=lambda kv: str(kv[0])):
+            part = spark.read.schema(data_schema).parquet(*grp)
+            for c, raw in zip(pcols, key):
+                part = part.withColumn(c, F.lit(raw).cast(types[c]))
+            parts.append(part.select(*names, *meta))
+        df = parts[0]
+        for p in parts[1:]:
+            df = df.unionByName(p)
+        return df
 
 
 def _scan_dv_files(
@@ -823,6 +864,7 @@ def _scan_dv_files(
     dvf: dict[str, dict],
     schema: StructType,
     pcols: list[str],
+    with_meta: bool = False,
 ) -> DataFrame:
     """Scan deletion-vector-bearing files with deleted rows filtered out:
     the scan carries ``_metadata.file_name``/``row_index`` and an
@@ -832,10 +874,13 @@ def _scan_dv_files(
     broadcast-hinted when it provably fits (we hold its exact length on
     the driver; a stats-less local relation would otherwise sort-merge
     and shuffle the whole scan). Driver cost: one bounded DV blob read
-    per file (kilobytes each, the format's design point)."""
+    per file (kilobytes each, the format's design point). ``with_meta``
+    keeps ``__dv_fn``/``__dv_ri`` on the output."""
     from pydatalake_spark.sources.dv import read_dv_descriptor
 
     names = [f.name for f in schema.fields]
+    if with_meta:
+        names += ["__dv_fn", "__dv_ri"]
     basenames = [os.path.basename(p) for p in dvf]
     if len(set(basenames)) != len(basenames):
         raise DeltaProtocolError(
@@ -861,6 +906,33 @@ def _scan_dv_files(
         sub.join(deleted, on=["__dv_fn", "__dv_ri"], how="left_anti")
         .select(*names)
     )
+
+
+def _scan_visible(
+    spark: SparkSession,
+    table: str,
+    files: dict[str, dict],
+    schema: StructType,
+    pcols: list[str],
+    with_meta: bool = False,
+) -> DataFrame:
+    """All VISIBLE rows of ``files``: plain files scanned as they are,
+    deletion-vector-bearing files with their tombstoned rows dropped."""
+    plain = {p: a for p, a in files.items() if not a.get("deletionVector")}
+    dvf = {p: a for p, a in files.items() if a.get("deletionVector")}
+    parts = []
+    if plain:
+        parts.append(
+            _scan_files(spark, table, plain, schema, pcols, with_meta)
+        )
+    if dvf:
+        parts.append(
+            _scan_dv_files(spark, table, dvf, schema, pcols, with_meta)
+        )
+    df = parts[0]
+    for p in parts[1:]:
+        df = df.unionByName(p)
+    return df
 
 
 def _has_dvs(files: dict[str, dict]) -> bool:
@@ -911,20 +983,7 @@ def read_delta(
     scan_schema = _physical_type(schema) if mapping else schema
     scan_pcols = [mapping[c] for c in pcols] if mapping else pcols
 
-    plain = {p: a for p, a in files.items() if not a.get("deletionVector")}
-    dvf = {p: a for p, a in files.items() if a.get("deletionVector")}
-    parts = []
-    if plain:
-        parts.append(
-            _scan_files(spark, table, plain, scan_schema, scan_pcols)
-        )
-    if dvf:
-        parts.append(
-            _scan_dv_files(spark, table, dvf, scan_schema, scan_pcols)
-        )
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
+    df = _scan_visible(spark, table, files, scan_schema, scan_pcols)
     if mapping:
         df = df.select(
             [
@@ -1047,22 +1106,14 @@ def _staged_write(
     parquet min/max statistics (its sort order is undefined), which
     would silently disable ``data_filters`` skipping on every timestamp
     column. Runtime-settable conf, saved and restored around the job."""
-    spark = df.sparkSession
     key = "spark.sql.parquet.outputTimestampType"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "TIMESTAMP_MICROS")
-    try:
+    with _conf_set(df.sparkSession, key, "TIMESTAMP_MICROS"):
         w = df.write.mode("overwrite")
         if pcols:
             w = w.partitionBy(*pcols)
         if max_records_per_file:
             w = w.option("maxRecordsPerFile", str(max_records_per_file))
         w.parquet(staging)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 # stats are written only for types whose parquet min/max round-trip
@@ -1748,42 +1799,7 @@ def read_delta_changes(
                     adds[unquote(add["path"])] = add
     if not adds:
         return spark.createDataFrame([], schema)
-    sub = DeltaSnapshot(
-        table=table, version=end, protocol=snap.protocol,
-        metadata=snap.metadata, files=adds,
-    )
-    # reuse the snapshot read path on the synthetic file set
-    files = sub.files
-    paths = [_resolve_path(table, p) for p in files]
-    if not pcols:
-        return spark.read.schema(schema).parquet(*paths).select(
-            [f.name for f in schema.fields]
-        )
-    if _is_hive_layout(files, pcols):
-        return (
-            spark.read.schema(schema)
-            .option("basePath", table)
-            .parquet(*paths)
-            .select([f.name for f in schema.fields])
-        )
-    data_schema = StructType(
-        [f for f in schema.fields if f.name not in pcols]
-    )
-    types = {f.name: f.dataType for f in schema.fields}
-    groups: dict[tuple, list[str]] = {}
-    for path, add in files.items():
-        key = tuple(add["partitionValues"].get(c) for c in pcols)
-        groups.setdefault(key, []).append(_resolve_path(table, path))
-    parts = []
-    for key, grp in sorted(groups.items(), key=lambda kv: str(kv[0])):
-        part = spark.read.schema(data_schema).parquet(*grp)
-        for c, raw in zip(pcols, key):
-            part = part.withColumn(c, F.lit(raw).cast(types[c]))
-        parts.append(part.select([f.name for f in schema.fields]))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _scan_files(spark, table, adds, schema, pcols)
 
 
 # ---------------------------------------------------------------------------
@@ -1888,13 +1904,7 @@ def merge_delta(
         }
 
         if victims:
-            vic_paths = [_resolve_path(table, p) for p in victims]
-            reader = spark.read.schema(snap.schema)
-            if pcols:
-                reader = reader.option("basePath", table)
-            vic_df = reader.parquet(*vic_paths).select(
-                [f.name for f in snap.schema.fields]
-            )
+            vic_df = _scan_files(spark, table, victims, snap.schema, pcols)
             kept = vic_df.join(src, on=on, how="left_anti")
         else:
             kept = None
@@ -2082,13 +2092,7 @@ def compact_delta(
     if not victims:
         return None
 
-    vic_paths = [_resolve_path(table, p) for p in victims]
-    reader = spark.read.schema(snap.schema)
-    if pcols:
-        reader = reader.option("basePath", table)
-    vic_df = reader.parquet(*vic_paths).select(
-        [f.name for f in snap.schema.fields]
-    )
+    vic_df = _scan_files(spark, table, victims, snap.schema, pcols)
     total = sum((a.get("size") or 0) for a in victims.values())
     n_out = max(1, -(-total // target_file_size))  # ceil
     if zorder_by:
@@ -2252,11 +2256,12 @@ def read_delta_cdf(
                 "from a full snapshot"
             )
         actions = _read_commit_actions(table, v)
-        cdc_paths = [
-            _resolve_path(table, unquote(a["cdc"]["path"]))
+        # cdc files hold every column inline, partition columns too
+        cdc_files = {
+            unquote(a["cdc"]["path"]): a["cdc"]
             for a in actions
             if a.get("cdc")
-        ]
+        }
         adds = [
             a["add"]
             for a in actions
@@ -2266,8 +2271,8 @@ def read_delta_cdf(
             a.get("remove") and a["remove"].get("dataChange", True)
             for a in actions
         )
-        if cdc_paths:
-            df = spark.read.schema(cdc_schema).parquet(*cdc_paths)
+        if cdc_files:
+            df = _scan_files(spark, table, cdc_files, cdc_schema, [])
         elif has_data_removes:
             raise DeltaProtocolError(
                 f"version {v} changed data without cdc files (CDF was "
@@ -2305,49 +2310,6 @@ def read_delta_cdf(
     return out
 
 
-def _visible_scan_with_meta(
-    spark: SparkSession, table: str, snap: DeltaSnapshot
-) -> DataFrame:
-    """All VISIBLE rows of the snapshot (existing DV tombstones already
-    filtered) with ``__dv_fn``/``__dv_ri`` metadata columns attached —
-    the input both DV mutations (delete/update) plan from."""
-    pcols = snap.partition_columns
-    plain = {
-        p: a for p, a in snap.files.items() if not a.get("deletionVector")
-    }
-    dvf = {p: a for p, a in snap.files.items() if a.get("deletionVector")}
-    scans = []
-    if plain:
-        scans.append(
-            _scan_files(
-                spark, table, plain, snap.schema, pcols, with_meta=True
-            )
-        )
-    if dvf:
-        from pydatalake_spark.sources.dv import read_dv_descriptor
-
-        sub = _scan_files(
-            spark, table, dvf, snap.schema, pcols, with_meta=True
-        )
-        pairs = []
-        for rel, add in dvf.items():
-            bn = os.path.basename(rel)
-            for ri in read_dv_descriptor(table, add["deletionVector"]):
-                pairs.append((bn, int(ri)))
-        if pairs:
-            dele = spark.createDataFrame(
-                pairs, "__dv_fn string, __dv_ri long"
-            )
-            if len(pairs) <= 2_000_000:
-                dele = F.broadcast(dele)
-            sub = sub.join(dele, on=["__dv_fn", "__dv_ri"], how="left_anti")
-        scans.append(sub)
-    out = scans[0]
-    for s in scans[1:]:
-        out = out.unionByName(s)
-    return out
-
-
 def _dv_mutation_commit(
     spark: SparkSession,
     table: str,
@@ -2382,7 +2344,11 @@ def _dv_mutation_commit(
         cond = F.expr(predicate) if isinstance(predicate, str) else predicate
 
         cdf_on = _cdf_enabled(snap.metadata)
-        visible = _visible_scan_with_meta(spark, table, snap)
+        # every file's basename is unique (checked above), so the
+        # tombstone anti-join on __dv_fn is exact
+        visible = _scan_visible(
+            spark, table, snap.files, snap.schema, pcols, with_meta=True
+        )
         matched = visible.filter(cond).persist()
         staged: list[tuple] = []
         cdc_actions: list[dict] = []

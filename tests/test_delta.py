@@ -198,6 +198,62 @@ def test_foreign_non_hive_layout_falls_back_to_log_values(spark, table):
     assert got == [(2, "b", 2.0)]
 
 
+def _jobs_in(spark, group, fn):
+    """Run ``fn`` under a fresh job group; return (result, #jobs fired)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_snapshot_scan_fires_no_listing_job(spark, table):
+    # more log-listed files than Spark's parallel-listing threshold (32):
+    # the scan must take its file statuses on the driver, not in a job
+    # with one task per file
+    rows = [(k, "ab"[k % 2], float(k)) for k in range(48)]
+    dl.write_delta(
+        _mkdf(spark, rows), table, partition_by=["part"],
+        max_records_per_file=1,
+    )
+    assert len(dl.snapshot(table).files) >= 40
+    key = dl._LISTING_THRESHOLD
+    caller = spark.conf.get(key, None)
+    try:
+        spark.conf.unset(key)
+        df, n = _jobs_in(
+            spark, "scan-unset", lambda: dl.read_delta(spark, table)
+        )
+        assert n == 0
+        assert spark.conf.get(key, None) is None
+        assert _collect(df) == sorted(rows)
+
+        spark.conf.set(key, "7")
+        df, n = _jobs_in(
+            spark, "scan-set", lambda: dl.read_delta(spark, table)
+        )
+        assert n == 0
+        assert spark.conf.get(key, None) == "7"
+
+        (_, deleted), n = _jobs_in(
+            spark,
+            "delete-dv",
+            lambda: dl.delete_rows_dv(spark, table, "k < 5"),
+        )
+        assert n == 1
+        assert deleted == 5
+        assert spark.conf.get(key, None) == "7"
+        assert _collect(dl.read_delta(spark, table)) == sorted(rows)[5:]
+    finally:
+        if caller is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, caller)
+
+
 # ---------------------------------------------------------------------------
 # time travel
 # ---------------------------------------------------------------------------
@@ -843,14 +899,14 @@ def test_compact_bin_packs_small_files_datachange_false(spark, table):
 
 
 def test_compact_respects_partition_filter(spark, table):
+    # the two `a` rows go in separate commits, so partition `a` always
+    # holds two small files for compaction to pack
     dl.write_delta(
-        _mkdf(
-            spark,
-            [(1, "a", 1.0), (2, "a", 2.0), (3, "b", 3.0), (4, "b", 4.0)],
-        ).repartition(4),
+        _mkdf(spark, [(1, "a", 1.0), (3, "b", 3.0), (4, "b", 4.0)]),
         table,
         partition_by=["part"],
     )
+    dl.write_delta(_mkdf(spark, [(2, "a", 2.0)]), table, mode="append")
     before = dl.snapshot(table)
     b_files_before = {r for r in before.files if r.startswith("part=b")}
     v = dl.compact_delta(

@@ -172,3 +172,49 @@ def test_corpus_datacard_avg_quality_null_semantics(spark, tmp_path):
     assert row.top_lang == oracle["top_lang"]
     # the load-bearing check: null-q docs excluded from the denominator
     assert abs(row.avg_quality - oracle["avg_quality"]) < 1e-12
+
+
+def test_source_novelty_null_text_semantics(spark, tmp_path):
+    """source_novelty on a corpus with null and empty text matches the
+    DuckDB oracle. Null text shingles to ``[null]``; the oracle's ``JOIN
+    USING (shingle)`` drops that posting, so a null-text doc must add
+    nothing to its source's shingle counts. Empty text shingles to the
+    empty string, which both engines count."""
+    import os
+
+    import duckdb
+
+    from pydatalake_spark.queries import QUERIES
+    from pydatalake_spark.queries.text import ORACLE
+
+    sf = str(tmp_path / "corpus")
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over", "en", "web", 30),
+            (2, None, "en", "web", None),
+            (3, "the quick brown fox sleeps", "en", "books", 26),
+            (4, None, "en", "books", None),
+            (5, "", "en", "wiki", 0),
+            (6, "brown fox jumps over the dog", "en", "wiki", 28),
+        ],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    os.makedirs(sf, exist_ok=True)
+    docs.toPandas().to_parquet(os.path.join(sf, "documents.parquet"))
+
+    got = sorted(
+        (r.source, r.total_shingles, r.novel_shingles, r.novelty_rate)
+        for r in QUERIES["source_novelty"](spark, sf).collect()
+    )
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
+    )
+    want = sorted(con.execute(ORACLE["source_novelty"]).fetchall())
+
+    assert [g[:3] for g in got] == [w[:3] for w in want]
+    for g, w in zip(got, want):
+        assert abs(g[3] - w[3]) < 1e-12
+    # the null-text docs contribute no postings: books holds only doc 3
+    assert dict((g[0], g[1]) for g in got)["books"] == 3
