@@ -314,9 +314,8 @@ def near_dup_pairs(
             minhash_signatures(df, id_col, text_col, num_hashes, shingle_size)
         )
     sets = sig.select(F.col(id_col), F.col("shingles").alias("sset"))
-    # r13: cached pre-partitioned band table — both self-join sides read
-    # ONE materialized copy exchange-free in every join regime (see
-    # _cached_band_table); narrow (id, band, bucket) rows only
+    # cached band table (see _cached_band_table): both self-join sides
+    # read ONE materialized copy; narrow (id, band, bucket) rows only
     bb = _cached_band_table(sig, id_col, num_hashes, num_bands)
     cand = _band_self_join(bb, id_col)
     # the sets side is CORPUS-SIZED (every doc's shingle array): hint it
@@ -405,9 +404,9 @@ def minhash_jaccard_estimate(
         df, id_col, text_col, num_hashes, shingle_size
     )
     sig = cache_once(sig)
-    # r13: cached pre-partitioned band table (see _cached_band_table) —
-    # plan-equal with near_dup_pairs'/lsh_candidate_pairs' band table,
-    # so the family shares ONE cache entry per corpus
+    # cached band table (see _cached_band_table), plan-equal with
+    # near_dup_pairs'/lsh_candidate_pairs' band table, so the family
+    # shares ONE cache entry per corpus
     bb = _cached_band_table(sig, id_col, num_hashes, num_bands)
     cand = _band_self_join(bb, id_col)
     mharr = F.array(*[F.col(f"mh_{j}") for j in range(num_hashes)])

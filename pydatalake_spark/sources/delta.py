@@ -54,6 +54,16 @@ lookup on the driver, so no scan pays a Spark listing job (one task per
 file once a read names more than 32 paths) to rediscover what the log
 already says.
 
+The write side has one commit path the same way: every mutation (write,
+merge, compaction, deletion-vector delete/update/purge, restore, convert)
+publishes through ``_commit``, and nothing else calls ``_write_commit``.
+``_commit`` owns the commit format (the one ``commitInfo``), failed-attempt
+cleanup (every data, ``_change_data/`` and deletion-vector file an attempt
+wrote is unlinked unless its version publishes) and the checkpoint cadence
+(a parquet checkpoint every ``checkpoint_interval`` versions, whichever
+mutation lands there). A mutation keeps only what is its own: victim
+selection, its Spark plan and its retry policy.
+
 Driver-memory honesty: snapshot state (path, partitionValues, size per
 live file) is one dict — ~200 B/file ≈ 200 MB at 1M files (100 TB at
 100 MB/file). delta-spark's driver holds the same state for planning; the
@@ -68,6 +78,7 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, field
 from urllib.parse import quote, unquote
@@ -75,6 +86,12 @@ from urllib.parse import quote, unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from pydatalake_spark.sources.dv import (
+    _dv_file_path,
+    read_dv_descriptor,
+    write_dv_file,
+)
 
 LOG_DIR = "_delta_log"
 LAST_CHECKPOINT = "_last_checkpoint"
@@ -876,8 +893,6 @@ def _scan_dv_files(
     and shuffle the whole scan). Driver cost: one bounded DV blob read
     per file (kilobytes each, the format's design point). ``with_meta``
     keeps ``__dv_fn``/``__dv_ri`` on the output."""
-    from pydatalake_spark.sources.dv import read_dv_descriptor
-
     names = [f.name for f in schema.fields]
     if with_meta:
         names += ["__dv_fn", "__dv_ri"]
@@ -1089,12 +1104,6 @@ def _collect_staged_files(staging: str, pcols: list[str]) -> list[tuple]:
     return out
 
 
-def _num_records(path: str) -> int:
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(path).metadata.num_rows
-
-
 def _staged_write(
     df: DataFrame,
     staging: str,
@@ -1240,6 +1249,149 @@ def _file_stats(path: str, schema: StructType, pcols: list[str]) -> str:
         if nc is not None:
             out["nullCount"][name] = nc
     return json.dumps(out, default=str)
+
+
+# ---------------------------------------------------------------------------
+# the commit path: every mutation publishes through _commit
+# ---------------------------------------------------------------------------
+
+
+def _remove(add: dict, now_ms: int, data_change: bool) -> dict:
+    """The ``remove`` action retiring the live file ``add`` describes."""
+    return {
+        "remove": {
+            "path": add["path"],
+            "deletionTimestamp": now_ms,
+            "dataChange": data_change,
+            "partitionValues": add.get("partitionValues"),
+            "size": add.get("size"),
+        }
+    }
+
+
+def _adds(
+    table: str,
+    files: list[tuple[str, dict]],
+    schema: StructType,
+    pcols: list[str],
+    data_change: bool,
+) -> list[dict]:
+    """``add`` actions for data files already in place under ``table``,
+    given as (relative path, partitionValues): size and modification
+    time from the file, stats from its footer."""
+    full = [os.path.join(table, *rel.split("/")) for rel, _ in files]
+    stats = _file_stats_many(full, schema, pcols)
+    return [
+        {
+            "add": {
+                # keep = and common filename chars readable —
+                # delta-spark's URI encoding does the same
+                "path": quote(rel, safe="/=.-_"),
+                "partitionValues": {c: pvals.get(c) for c in pcols},
+                "size": os.path.getsize(p),
+                "modificationTime": int(os.path.getmtime(p) * 1000),
+                "dataChange": data_change,
+                "stats": stats[p],
+            }
+        }
+        for (rel, pvals), p in zip(files, full)
+    ]
+
+
+def _stage(
+    df: DataFrame,
+    table: str,
+    pcols: list[str],
+    written: list[str],
+    max_records_per_file: int | None = None,
+    subdir: str | None = None,
+) -> list[tuple[str, dict]]:
+    """Write ``df`` with Spark into a staging dir under ``table``, then
+    move every file to a fresh name in the table (under ``subdir`` when
+    given), appending each moved path to ``written`` the moment it lands.
+    Returns (relative path, partitionValues) per file."""
+    staging = os.path.join(table, f"_staging-{uuid.uuid4().hex}")
+    out = []
+    try:
+        _staged_write(df, staging, pcols, max_records_per_file)
+        for rel, pvals, src in _collect_staged_files(staging, pcols):
+            if subdir:
+                rel = f"{subdir}/{rel}"
+            dst = os.path.join(table, *rel.split("/"))
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.replace(src, dst)
+            written.append(dst)
+            out.append((rel, pvals))
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+    return out
+
+
+def _stage_adds(
+    df: DataFrame,
+    table: str,
+    pcols: list[str],
+    schema: StructType,
+    data_change: bool,
+    written: list[str],
+    max_records_per_file: int | None = None,
+) -> list[dict]:
+    """Stage ``df``'s data files into the table (see :func:`_stage`) and
+    return their ``add`` actions with footer stats."""
+    files = _stage(df, table, pcols, written, max_records_per_file)
+    return _adds(table, files, schema, pcols, data_change)
+
+
+def _commit(
+    table: str,
+    version: int,
+    operation: str,
+    params: dict,
+    stage: Callable[[list[str], int], list[dict]],
+    checkpoint_interval: int = DEFAULT_CHECKPOINT_INTERVAL,
+    user_metadata: dict | None = None,
+) -> int:
+    """Publish ``version``: the one writer of ``commitInfo`` and the one
+    caller of :func:`_write_commit`. Returns ``version``.
+
+    ``stage(written, now_ms)`` writes the attempt's files (data,
+    ``_change_data/`` and deletion-vector blobs), appends each path to
+    ``written`` as it lands, and returns the commit's actions after
+    ``commitInfo``. If anything raises before the version file is
+    published — Spark staging, footer stats, or a lost put-if-absent race
+    — every path in ``written`` is unlinked, so a failed attempt leaves
+    the table's files as it found them. After a publish, a parquet
+    checkpoint is written every ``checkpoint_interval`` versions (0
+    disables), so no mutation lets JSON replay grow without bound."""
+    now_ms = int(time.time() * 1000)
+    commit_info = {
+        "commitInfo": {
+            "timestamp": now_ms,
+            "operation": operation,
+            "operationParameters": params,
+            "engineInfo": "pydatalake_spark-native-delta",
+        }
+    }
+    if user_metadata:
+        commit_info["commitInfo"]["userMetadata"] = json.dumps(user_metadata)
+    written: list[str] = []
+    try:
+        actions = stage(written, now_ms)
+        _write_commit(table, version, [commit_info, *actions])
+    except BaseException:
+        for p in written:
+            try:
+                os.unlink(p)
+            except OSError:
+                pass
+        raise
+    if (
+        checkpoint_interval
+        and version > 0
+        and version % checkpoint_interval == 0
+    ):
+        write_checkpoint(table, version)
+    return version
 
 
 class DeltaConstraintViolation(RuntimeError):
@@ -1508,143 +1660,79 @@ def write_delta(
         stage_schema = _physical_type(prev.schema)
     else:
         stage_df, stage_pcols, stage_schema = df, pcols, df.schema
-    staging = os.path.join(table, f"_staging-{uuid.uuid4().hex}")
-    try:
-        _staged_write(stage_df, staging, stage_pcols, max_records_per_file)
-        staged = _collect_staged_files(staging, stage_pcols)
-
-        now_ms = int(time.time() * 1000)
-        adds = []
-        dsts = []
-        for rel, pvals, src in staged:
-            dst = os.path.join(table, *rel.split("/"))
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.replace(src, dst)
-            dsts.append(dst)
-        stats_by_path = _file_stats_many(dsts, stage_schema, stage_pcols)
-        for (rel, pvals, _src), dst in zip(staged, dsts):
-            adds.append(
-                {
-                    "add": {
-                        # keep = and common filename chars readable —
-                        # delta-spark's URI encoding does the same
-                        "path": quote(rel, safe="/=.-_"),
-                        "partitionValues": {
-                            c: pvals.get(c) for c in stage_pcols
-                        },
-                        "size": os.path.getsize(dst),
-                        "modificationTime": now_ms,
-                        "dataChange": True,
-                        "stats": stats_by_path[dst],
-                    }
-                }
-            )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-
     version = (
         _assume_version
         if _assume_version is not None
         else (prev.version + 1 if prev is not None else 0)
     )
-    op = "WRITE" if prev is None else mode.upper()
-    commit_info = {
-        "commitInfo": {
-            "timestamp": now_ms,
-            "operation": op,
-            "operationParameters": {
-                "mode": mode,
-                "partitionBy": json.dumps(pcols),
-            },
-            "engineInfo": "pydatalake_spark-native-delta",
-        }
-    }
-    if user_metadata:
-        commit_info["commitInfo"]["userMetadata"] = json.dumps(
-            user_metadata
-        )
-    actions: list[dict] = [commit_info]
-    if txn is not None:
-        actions.append(
-            {
-                "txn": {
-                    "appId": str(txn["appId"]),
-                    "version": int(txn["version"]),
-                    "lastUpdated": now_ms,
-                }
-            }
-        )
-    if prev is None:
-        proto = dict(PROTOCOL)
-        if any(
-            k.startswith("delta.constraints.")
-            for k in (configuration or {})
-        ):
-            # CHECK constraints are a writer-v3 legacy feature: advertise
-            # it so a v2-only foreign writer can't append unchecked rows
-            proto["minWriterVersion"] = max(proto["minWriterVersion"], 3)
-        if (configuration or {}).get(
-            "delta.enableChangeDataFeed"
-        ) == "true":
-            # CDF is the writer-v4 legacy feature: a foreign writer that
-            # doesn't emit cdc files would silently break the feed
-            proto["minWriterVersion"] = max(proto["minWriterVersion"], 4)
-        actions.append({"protocol": proto})
-        actions.append(
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": df.schema.json(),
-                    "partitionColumns": pcols,
-                    "configuration": dict(configuration or {}),
-                    "createdTime": now_ms,
-                }
-            }
-        )
-    elif evolved_schema is not None:
-        meta = dict(prev.metadata)
-        meta["schemaString"] = evolved_schema.json()
-        actions.append({"metaData": meta})
-    elif mode == "overwrite":
-        meta = dict(prev.metadata)
-        if overwrite_schema:
-            meta["schemaString"] = df.schema.json()
-        if configuration is not None:
-            meta["configuration"] = dict(configuration)
-        actions.append({"metaData": meta})
-        for rel, add in prev.files.items():
+
+    def stage(written: list[str], now_ms: int) -> list[dict]:
+        actions: list[dict] = []
+        if txn is not None:
             actions.append(
                 {
-                    "remove": {
-                        "path": add["path"],
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                        "partitionValues": add.get("partitionValues"),
-                        "size": add.get("size"),
+                    "txn": {
+                        "appId": str(txn["appId"]),
+                        "version": int(txn["version"]),
+                        "lastUpdated": now_ms,
                     }
                 }
             )
-    actions.extend(adds)
+        if prev is None:
+            proto = dict(PROTOCOL)
+            if any(
+                k.startswith("delta.constraints.")
+                for k in (configuration or {})
+            ):
+                # CHECK constraints are a writer-v3 legacy feature:
+                # advertise it so a v2-only foreign writer can't append
+                # unchecked rows
+                proto["minWriterVersion"] = max(proto["minWriterVersion"], 3)
+            if (configuration or {}).get(
+                "delta.enableChangeDataFeed"
+            ) == "true":
+                # CDF is the writer-v4 legacy feature: a foreign writer
+                # that doesn't emit cdc files would silently break the feed
+                proto["minWriterVersion"] = max(proto["minWriterVersion"], 4)
+            actions.append({"protocol": proto})
+            actions.append(
+                {
+                    "metaData": {
+                        "id": str(uuid.uuid4()),
+                        "format": {"provider": "parquet", "options": {}},
+                        "schemaString": df.schema.json(),
+                        "partitionColumns": pcols,
+                        "configuration": dict(configuration or {}),
+                        "createdTime": now_ms,
+                    }
+                }
+            )
+        elif evolved_schema is not None:
+            meta = dict(prev.metadata)
+            meta["schemaString"] = evolved_schema.json()
+            actions.append({"metaData": meta})
+        elif mode == "overwrite":
+            meta = dict(prev.metadata)
+            if overwrite_schema:
+                meta["schemaString"] = df.schema.json()
+            if configuration is not None:
+                meta["configuration"] = dict(configuration)
+            actions.append({"metaData": meta})
+            actions += [_remove(a, now_ms, True) for a in prev.files.values()]
+        return actions + _stage_adds(
+            stage_df, table, stage_pcols, stage_schema, True, written,
+            max_records_per_file,
+        )
 
-    try:
-        _write_commit(table, version, actions)
-    except DeltaConcurrentCommit:
-        # our data files are orphans now; drop them so losers don't leak
-        for rel, _pv, _src in staged:
-            try:
-                os.unlink(os.path.join(table, *rel.split("/")))
-            except OSError:
-                pass
-        raise
-
-    if (
-        checkpoint_interval
-        and version > 0
-        and version % checkpoint_interval == 0
-    ):
-        write_checkpoint(table, version)
-    return version
+    return _commit(
+        table,
+        version,
+        "WRITE" if prev is None else mode.upper(),
+        {"mode": mode, "partitionBy": json.dumps(pcols)},
+        stage,
+        checkpoint_interval,
+        user_metadata,
+    )
 
 
 def append_with_retry(
@@ -1918,7 +2006,7 @@ def merge_delta(
         # change data feed: matched rows as update pre/post images,
         # unmatched source rows as inserts — staged as cdc files so
         # read_delta_cdf serves row-level changes for this commit
-        cdc_actions: list[dict] = []
+        cdc_df = None
         if _cdf_enabled(snap.metadata):
             names = [f.name for f in snap.schema.fields]
             if victims:
@@ -1941,83 +2029,22 @@ def merge_delta(
                 cdc_df = new_rows.withColumn(
                     "_change_type", F.lit("insert")
                 )
-            cdc_actions = _stage_cdc_files(spark, table, cdc_df)
 
-        # stage + commit: removes for victims, adds for the rewrite
-        staging = os.path.join(table, f"_staging-{uuid.uuid4().hex}")
+        # removes for victims, adds for the rewrite
+        def stage(written: list[str], now_ms: int) -> list[dict]:
+            return (
+                [_remove(a, now_ms, True) for a in victims.values()]
+                + _stage_adds(out, table, pcols, snap.schema, True, written)
+                + _stage_cdc_files(table, cdc_df, written)
+            )
+
         try:
-            _staged_write(out, staging, pcols)
-            staged = _collect_staged_files(staging, pcols)
-            now_ms = int(time.time() * 1000)
-            actions: list[dict] = [
-                {
-                    "commitInfo": {
-                        "timestamp": now_ms,
-                        "operation": "MERGE",
-                        "operationParameters": {
-                            "predicate": json.dumps(on),
-                        },
-                        "engineInfo": "pydatalake_spark-native-delta",
-                    }
-                }
-            ]
-            for rel, add in victims.items():
-                actions.append(
-                    {
-                        "remove": {
-                            "path": add["path"],
-                            "deletionTimestamp": now_ms,
-                            "dataChange": True,
-                            "partitionValues": add.get("partitionValues"),
-                            "size": add.get("size"),
-                        }
-                    }
-                )
-            moved = []
-            for rel, pvals, srcf in staged:
-                dst = os.path.join(table, *rel.split("/"))
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.replace(srcf, dst)
-                moved.append(rel)
-                actions.append(
-                    {
-                        "add": {
-                            "path": quote(rel, safe="/=.-_"),
-                            "partitionValues": {
-                                c: pvals.get(c) for c in pcols
-                            },
-                            "size": os.path.getsize(dst),
-                            "modificationTime": now_ms,
-                            "dataChange": True,
-                            "stats": _file_stats(
-                                dst, snap.schema, pcols
-                            ),
-                        }
-                    }
-                )
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-        actions.extend(cdc_actions)
-        try:
-            _write_commit(table, snap.version + 1, actions)
-            if (snap.version + 1) % DEFAULT_CHECKPOINT_INTERVAL == 0:
-                # long-lived upsert targets keep replay bounded the same
-                # way the append path does
-                write_checkpoint(table, snap.version + 1)
-            return snap.version + 1
+            return _commit(
+                table, snap.version + 1, "MERGE",
+                {"predicate": json.dumps(on)}, stage,
+            )
         except DeltaConcurrentCommit as e:
-            for rel in moved:
-                try:
-                    os.unlink(os.path.join(table, *rel.split("/")))
-                except OSError:
-                    pass
-            for a in cdc_actions:
-                try:
-                    os.unlink(_resolve_path(table, a["cdc"]["path"]))
-                except OSError:
-                    pass
             last_err = e
-            continue
     raise last_err  # type: ignore[misc]
 
 
@@ -2108,67 +2135,15 @@ def compact_delta(
     else:
         vic_df = vic_df.coalesce(int(n_out))
 
-    staging = os.path.join(table, f"_staging-{uuid.uuid4().hex}")
-    moved: list[str] = []
-    try:
-        _staged_write(vic_df, staging, pcols)
-        staged = _collect_staged_files(staging, pcols)
-        now_ms = int(time.time() * 1000)
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "OPTIMIZE",
-                    "operationParameters": {
-                        "targetSize": target_file_size
-                    },
-                    "engineInfo": "pydatalake_spark-native-delta",
-                }
-            }
-        ]
-        for rel, add in victims.items():
-            actions.append(
-                {
-                    "remove": {
-                        "path": add["path"],
-                        "deletionTimestamp": now_ms,
-                        "dataChange": False,
-                        "partitionValues": add.get("partitionValues"),
-                        "size": add.get("size"),
-                    }
-                }
-            )
-        for rel, pvals, srcf in staged:
-            dst = os.path.join(table, *rel.split("/"))
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.replace(srcf, dst)
-            moved.append(rel)
-            actions.append(
-                {
-                    "add": {
-                        "path": quote(rel, safe="/=.-_"),
-                        "partitionValues": {c: pvals.get(c) for c in pcols},
-                        "size": os.path.getsize(dst),
-                        "modificationTime": now_ms,
-                        "dataChange": False,
-                        "stats": _file_stats(dst, snap.schema, pcols),
-                    }
-                }
-            )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-    try:
-        _write_commit(table, snap.version + 1, actions)
-    except DeltaConcurrentCommit:
-        for rel in moved:
-            try:
-                os.unlink(os.path.join(table, *rel.split("/")))
-            except OSError:
-                pass
-        raise
-    if (snap.version + 1) % DEFAULT_CHECKPOINT_INTERVAL == 0:
-        write_checkpoint(table, snap.version + 1)
-    return snap.version + 1
+    def stage(written: list[str], now_ms: int) -> list[dict]:
+        return [
+            _remove(a, now_ms, False) for a in victims.values()
+        ] + _stage_adds(vic_df, table, pcols, snap.schema, False, written)
+
+    return _commit(
+        table, snap.version + 1, "OPTIMIZE",
+        {"targetSize": target_file_size}, stage,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2184,35 +2159,27 @@ DV_PROTOCOL = {
 }
 
 
-def _stage_cdc_files(spark: SparkSession, table: str, cdc_df) -> list[dict]:
+def _stage_cdc_files(
+    table: str, cdc_df: DataFrame | None, written: list[str]
+) -> list[dict]:
     """Stage change rows (table columns + ``_change_type``) as parquet
-    under ``_change_data/`` and return their ``cdc`` actions. cdc files
-    are ``dataChange: false`` by definition and never partition-staged
-    (all columns inline, ``partitionValues`` empty — the spec allows
-    either form). Callers unlink the paths on a lost commit race."""
-    staging = os.path.join(table, f"_staging-{uuid.uuid4().hex}")
-    actions: list[dict] = []
-    try:
-        _staged_write(cdc_df, staging, [])
-        staged = _collect_staged_files(staging, [])
-        os.makedirs(os.path.join(table, CDF_DIR), exist_ok=True)
-        for _rel, _pvals, src in staged:
-            fname = f"cdc-{uuid.uuid4().hex}.snappy.parquet"
-            dst = os.path.join(table, CDF_DIR, fname)
-            os.replace(src, dst)
-            actions.append(
-                {
-                    "cdc": {
-                        "path": f"{CDF_DIR}/{fname}",
-                        "partitionValues": {},
-                        "size": os.path.getsize(dst),
-                        "dataChange": False,
-                    }
-                }
-            )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-    return actions
+    under ``_change_data/`` and return their ``cdc`` actions (none when
+    ``cdc_df`` is None: CDF is off). cdc files are ``dataChange: false``
+    by definition and never partition-staged (all columns inline,
+    ``partitionValues`` empty — the spec allows either form)."""
+    if cdc_df is None:
+        return []
+    return [
+        {
+            "cdc": {
+                "path": rel,
+                "partitionValues": {},
+                "size": os.path.getsize(os.path.join(table, rel)),
+                "dataChange": False,
+            }
+        }
+        for rel, _ in _stage(cdc_df, table, [], written, subdir=CDF_DIR)
+    ]
 
 
 def read_delta_cdf(
@@ -2343,19 +2310,18 @@ def _dv_mutation_commit(
         rel_by_name = {os.path.basename(p): p for p in snap.files}
         cond = F.expr(predicate) if isinstance(predicate, str) else predicate
 
-        cdf_on = _cdf_enabled(snap.metadata)
         # every file's basename is unique (checked above), so the
         # tombstone anti-join on __dv_fn is exact
         visible = _scan_visible(
             spark, table, snap.files, snap.schema, pcols, with_meta=True
         )
         matched = visible.filter(cond).persist()
-        staged: list[tuple] = []
-        cdc_actions: list[dict] = []
-        staging = None
         try:
             hits = matched.select("__dv_fn", "__dv_ri").collect()
-            if hits and set_exprs is not None:
+            if not hits:
+                return None, 0
+            updated = None
+            if set_exprs is not None:
                 updated = matched.drop("__dv_fn", "__dv_ri")
                 for col, expr in set_exprs.items():
                     if col not in updated.columns:
@@ -2377,14 +2343,10 @@ def _dv_mutation_commit(
                     updated,
                     snap.metadata.get("configuration") or {},
                 )
-                staging = os.path.join(
-                    table, f"_staging-{uuid.uuid4().hex}"
-                )
-                _staged_write(updated, staging, pcols)
-                staged = _collect_staged_files(staging, pcols)
-            if hits and cdf_on:
+            cdc_df = None
+            if _cdf_enabled(snap.metadata):
                 names = [f.name for f in snap.schema.fields]
-                if set_exprs is None:
+                if updated is None:
                     cdc_df = matched.select(*names).withColumn(
                         "_change_type", F.lit("delete")
                     )
@@ -2396,116 +2358,62 @@ def _dv_mutation_commit(
                         "_change_type", F.lit("update_postimage")
                     )
                     cdc_df = pre.unionByName(post)
-                cdc_actions = _stage_cdc_files(spark, table, cdc_df)
+            by_name: dict[str, set[int]] = {}
+            for r in hits:
+                by_name.setdefault(r["__dv_fn"], set()).add(int(r["__dv_ri"]))
+            upgrade = (snap.protocol.get("minReaderVersion", 1) < 3) or (
+                "deletionVectors"
+                not in (snap.protocol.get("readerFeatures") or [])
+            )
+
+            def stage(written: list[str], now_ms: int) -> list[dict]:
+                actions: list[dict] = (
+                    [{"protocol": dict(DV_PROTOCOL)}] if upgrade else []
+                )
+                for bn, rows in sorted(by_name.items()):
+                    add = snap.files[rel_by_name[bn]]
+                    merged = set(rows)
+                    if add.get("deletionVector"):
+                        merged |= set(
+                            read_dv_descriptor(table, add["deletionVector"])
+                        )
+                    desc = write_dv_file(table, merged)
+                    written.append(_dv_file_path(table, desc))
+                    kept = {
+                        k: v
+                        for k, v in add.items()
+                        if k in (
+                            "path", "partitionValues", "size",
+                            "modificationTime", "stats",
+                        )
+                    }
+                    actions.append(_remove(add, now_ms, True))
+                    actions.append(
+                        {
+                            "add": {
+                                **kept,
+                                "dataChange": True,
+                                "deletionVector": desc,
+                            }
+                        }
+                    )
+                if updated is not None:
+                    actions += _stage_adds(
+                        updated, table, pcols, snap.schema, True, written
+                    )
+                return actions + _stage_cdc_files(table, cdc_df, written)
+
+            n_matched = sum(len(rows) for rows in by_name.values())
+            try:
+                version = _commit(
+                    table, snap.version + 1, op,
+                    {"predicate": str(predicate)}, stage,
+                )
+                return version, n_matched
+            except DeltaConcurrentCommit as e:
+                last_err = e
         finally:
             matched.unpersist()
-        if not hits:
-            if staging:
-                shutil.rmtree(staging, ignore_errors=True)
-            return None, 0
-        by_name: dict[str, list[int]] = {}
-        for r in hits:
-            by_name.setdefault(r["__dv_fn"], []).append(int(r["__dv_ri"]))
-
-        from pydatalake_spark.sources.dv import (
-            read_dv_descriptor,
-            write_dv_file,
-        )
-
-        now_ms = int(time.time() * 1000)
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": op,
-                    "operationParameters": {"predicate": str(predicate)},
-                    "engineInfo": "pydatalake_spark-native-delta",
-                }
-            }
-        ]
-        if (snap.protocol.get("minReaderVersion", 1) < 3) or (
-            "deletionVectors"
-            not in (snap.protocol.get("readerFeatures") or [])
-        ):
-            actions.append({"protocol": dict(DV_PROTOCOL)})
-        n_matched = 0
-        for bn, new_rows in sorted(by_name.items()):
-            rel = rel_by_name[bn]
-            add = snap.files[rel]
-            n_matched += len(set(new_rows))
-            merged = set(new_rows)
-            if add.get("deletionVector"):
-                merged |= set(
-                    read_dv_descriptor(table, add["deletionVector"])
-                )
-            desc = write_dv_file(table, merged)
-            actions.append(
-                {
-                    "remove": {
-                        "path": add["path"],
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                        "partitionValues": add.get("partitionValues"),
-                        "size": add.get("size"),
-                    }
-                }
-            )
-            new_add = {
-                k: v
-                for k, v in add.items()
-                if k
-                in (
-                    "path",
-                    "partitionValues",
-                    "size",
-                    "modificationTime",
-                    "stats",
-                )
-            }
-            new_add["dataChange"] = True
-            new_add["deletionVector"] = desc
-            actions.append({"add": new_add})
-        moved: list[str] = []
-        try:
-            for rel, pvals, srcf in staged:
-                dst = os.path.join(table, *rel.split("/"))
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.replace(srcf, dst)
-                moved.append(rel)
-                actions.append(
-                    {
-                        "add": {
-                            "path": quote(rel, safe="/=.-_"),
-                            "partitionValues": {
-                                c: pvals.get(c) for c in pcols
-                            },
-                            "size": os.path.getsize(dst),
-                            "modificationTime": now_ms,
-                            "dataChange": True,
-                            "stats": _file_stats(dst, snap.schema, pcols),
-                        }
-                    }
-                )
-        finally:
-            if staging:
-                shutil.rmtree(staging, ignore_errors=True)
-        actions.extend(cdc_actions)
-        try:
-            _write_commit(table, snap.version + 1, actions)
-            return snap.version + 1, n_matched
-        except DeltaConcurrentCommit as e:
-            for rel in moved:
-                try:
-                    os.unlink(os.path.join(table, *rel.split("/")))
-                except OSError:
-                    pass
-            for a in cdc_actions:
-                try:
-                    os.unlink(_resolve_path(table, a["cdc"]["path"]))
-                except OSError:
-                    pass
-            last_err = e
-            continue
     raise last_err  # type: ignore[misc]
 
 
@@ -2589,63 +2497,15 @@ def rewrite_dv_files(spark: SparkSession, table: str) -> int | None:
             "implemented (read-only support)"
         )
     out = _scan_dv_files(spark, table, dvf, snap.schema, pcols)
-    staging = os.path.join(table, f"_staging-{uuid.uuid4().hex}")
-    moved: list[str] = []
-    try:
-        _staged_write(out, staging, pcols)
-        staged = _collect_staged_files(staging, pcols)
-        now_ms = int(time.time() * 1000)
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "REORG",
-                    "operationParameters": {"applyPurge": True},
-                    "engineInfo": "pydatalake_spark-native-delta",
-                }
-            }
-        ]
-        for rel, add in dvf.items():
-            actions.append(
-                {
-                    "remove": {
-                        "path": add["path"],
-                        "deletionTimestamp": now_ms,
-                        "dataChange": False,
-                        "partitionValues": add.get("partitionValues"),
-                        "size": add.get("size"),
-                    }
-                }
-            )
-        for rel, pvals, srcf in staged:
-            dst = os.path.join(table, *rel.split("/"))
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.replace(srcf, dst)
-            moved.append(rel)
-            actions.append(
-                {
-                    "add": {
-                        "path": quote(rel, safe="/=.-_"),
-                        "partitionValues": {c: pvals.get(c) for c in pcols},
-                        "size": os.path.getsize(dst),
-                        "modificationTime": now_ms,
-                        "dataChange": False,
-                        "stats": _file_stats(dst, snap.schema, pcols),
-                    }
-                }
-            )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-    try:
-        _write_commit(table, snap.version + 1, actions)
-    except DeltaConcurrentCommit:
-        for rel in moved:
-            try:
-                os.unlink(os.path.join(table, *rel.split("/")))
-            except OSError:
-                pass
-        raise
-    return snap.version + 1
+
+    def stage(written: list[str], now_ms: int) -> list[dict]:
+        return [
+            _remove(a, now_ms, False) for a in dvf.values()
+        ] + _stage_adds(out, table, pcols, snap.schema, False, written)
+
+    return _commit(
+        table, snap.version + 1, "REORG", {"applyPurge": True}, stage
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2884,46 +2744,24 @@ def convert_to_delta(
         data_fields + list((partition_schema or StructType([])).fields)
     )
 
-    now_ms = int(time.time() * 1000)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "CONVERT",
-                "operationParameters": {"numFiles": len(data_files)},
-                "engineInfo": "pydatalake_spark-native-delta",
-            }
-        },
-        {"protocol": dict(PROTOCOL)},
-        {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": full_schema.json(),
-                "partitionColumns": pcols,
-                "configuration": dict(configuration or {}),
-                "createdTime": now_ms,
-            }
-        },
-    ]
-    for rel, pvals in data_files:
-        full = _resolve_path(path, rel)
-        actions.append(
+    def stage(written: list[str], now_ms: int) -> list[dict]:
+        return [
+            {"protocol": dict(PROTOCOL)},
             {
-                "add": {
-                    "path": quote(rel, safe="/=.-_"),
-                    "partitionValues": {c: pvals.get(c) for c in pcols},
-                    "size": os.path.getsize(full),
-                    "modificationTime": int(
-                        os.path.getmtime(full) * 1000
-                    ),
-                    "dataChange": True,
-                    "stats": _file_stats(full, full_schema, pcols),
+                "metaData": {
+                    "id": str(uuid.uuid4()),
+                    "format": {"provider": "parquet", "options": {}},
+                    "schemaString": full_schema.json(),
+                    "partitionColumns": pcols,
+                    "configuration": dict(configuration or {}),
+                    "createdTime": now_ms,
                 }
-            }
-        )
-    _write_commit(path, 0, actions)
-    return 0
+            },
+        ] + _adds(path, data_files, full_schema, pcols, True)
+
+    return _commit(
+        path, 0, "CONVERT", {"numFiles": len(data_files)}, stage
+    )
 
 
 def restore_delta(table: str, version: int) -> int:
@@ -2936,8 +2774,6 @@ def restore_delta(table: str, version: int) -> int:
     head = snapshot(table)
     if version == head.version:
         return head.version
-    from pydatalake_spark.sources.dv import _dv_file_path
-
     missing = [
         rel
         for rel in old.files
@@ -2957,36 +2793,25 @@ def restore_delta(table: str, version: int) -> int:
             f"cannot restore to version {version}: {len(missing)} file(s) "
             f"were vacuumed, e.g. {missing[0]!r}"
         )
-    now_ms = int(time.time() * 1000)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "RESTORE",
-                "operationParameters": {"version": version},
-                "engineInfo": "pydatalake_spark-native-delta",
-            }
-        },
-        {"metaData": old.metadata},
-    ]
-    for rel, add in head.files.items():
-        if rel not in old.files:
-            actions.append(
-                {
-                    "remove": {
-                        "path": add["path"],
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                        "partitionValues": add.get("partitionValues"),
-                        "size": add.get("size"),
-                    }
-                }
-            )
-    for rel, add in old.files.items():
-        if rel not in head.files:
-            actions.append({"add": {**add, "dataChange": True}})
-    _write_commit(table, head.version + 1, actions)
-    return head.version + 1
+
+    def stage(written: list[str], now_ms: int) -> list[dict]:
+        return (
+            [{"metaData": old.metadata}]
+            + [
+                _remove(add, now_ms, True)
+                for rel, add in head.files.items()
+                if rel not in old.files
+            ]
+            + [
+                {"add": {**add, "dataChange": True}}
+                for rel, add in old.files.items()
+                if rel not in head.files
+            ]
+        )
+
+    return _commit(
+        table, head.version + 1, "RESTORE", {"version": version}, stage
+    )
 
 
 def describe_delta(table: str) -> dict:
@@ -3111,8 +2936,6 @@ def vacuum_delta(
     snap = snapshot(table)
     live = {os.path.normpath(p) for p in snap.files}
     # live DV bitmap files (referenced by current adds) must survive too
-    from pydatalake_spark.sources.dv import _dv_file_path
-
     live_dv = set()
     for add in snap.files.values():
         dv = add.get("deletionVector")

@@ -1840,3 +1840,106 @@ def test_cdf_range_and_version_column(spark, table):
     assert {r[1] for r in only_v2} == {
         "update_preimage", "update_postimage",
     }
+
+
+# ---------------------------------------------------------------------------
+# the one commit path: failed attempts leave no files behind, and every
+# mutation checkpoints on the same cadence
+# ---------------------------------------------------------------------------
+
+
+def _table_files(table):
+    """Every file under the table outside ``_delta_log/``."""
+    out = set()
+    for root, dirs, names in os.walk(table):
+        dirs[:] = [d for d in dirs if d != dl.LOG_DIR]
+        out.update(
+            os.path.relpath(os.path.join(root, n), table) for n in names
+        )
+    return out
+
+
+def _ids(spark, lo, hi):
+    """Rows ``lo..hi-1`` as one file per partition."""
+    return (
+        spark.range(lo, hi, numPartitions=1)
+        .withColumn("part", (F.col("id") % 2).cast("string"))
+        .withColumn("v", F.col("id").cast("double"))
+    )
+
+
+_MUTATIONS = {
+    "append": lambda spark, t: dl.write_delta(_ids(spark, 100, 104), t),
+    "merge": lambda spark, t: dl.merge_delta(
+        spark, t, _ids(spark, 8, 12), on=["id"]
+    ),
+    "compact": lambda spark, t: dl.compact_delta(spark, t),
+    "delete_rows_dv": lambda spark, t: dl.delete_rows_dv(spark, t, "id < 3"),
+    "update_rows_dv": lambda spark, t: dl.update_rows_dv(
+        spark, t, "id < 3", {"v": "v + 100"}
+    ),
+    "rewrite_dv_files": lambda spark, t: dl.rewrite_dv_files(spark, t),
+}
+
+# delete_rows_dv stages no data files, so it has no stats to fail on
+_FAILED_ATTEMPTS = [(m, "lost_race") for m in _MUTATIONS] + [
+    (m, "stats_fail") for m in _MUTATIONS if m != "delete_rows_dv"
+]
+
+
+@pytest.mark.parametrize("mutation,failure", _FAILED_ATTEMPTS)
+def test_failed_attempt_leaves_table_unchanged(
+    spark, table, monkeypatch, mutation, failure
+):
+    """A commit attempt that fails before its version publishes — a lost
+    put-if-absent race, or footer stats raising after the data files
+    moved into the table — unlinks every file it wrote: data files,
+    ``_change_data/`` files and deletion-vector blobs. CDF is on, so
+    merge and the DV mutations stage cdc files too."""
+    _cdf_table(spark, table, n=10)
+    dl.write_delta(_ids(spark, 10, 20), table)  # >1 small file per part
+    if mutation == "rewrite_dv_files":
+        # its file keeps 4 rows, so the purge stages a data file
+        dl.delete_rows_dv(spark, table, "id = 15")
+    before = dl.snapshot(table)
+    files_before = _table_files(table)
+
+    if failure == "lost_race":
+        def lost(tmp, dst):
+            raise dl.DeltaConcurrentCommit(f"injected: {dst}")
+
+        monkeypatch.setattr(dl, "_atomic_put", lost)
+        expected = dl.DeltaConcurrentCommit
+    else:
+        landed = []
+
+        def stats_fail(path, schema, pcols):
+            landed.append(os.path.isfile(path))
+            raise RuntimeError("injected stats failure")
+
+        monkeypatch.setattr(dl, "_file_stats", stats_fail)
+        expected = RuntimeError
+    with pytest.raises(expected, match="injected"):
+        _MUTATIONS[mutation](spark, table)
+    if failure == "stats_fail":
+        assert landed and all(landed)  # the files had moved in
+
+    assert _table_files(table) == files_before
+    after = dl.snapshot(table)
+    assert after.version == before.version
+    assert after.files == before.files
+
+
+def test_dv_deletes_checkpoint_on_the_shared_cadence(spark, table):
+    """Deletion-vector commits checkpoint like every other mutation, so
+    a table changed only by DV deletes keeps its JSON replay bounded."""
+    df = spark.range(20).withColumn("part", F.lit("x")).withColumn(
+        "v", F.col("id").cast("double")
+    )
+    dl.write_delta(df, table)
+    for i in range(dl.DEFAULT_CHECKPOINT_INTERVAL):
+        assert dl.delete_rows_dv(spark, table, f"id = {i}") == (i + 1, 1)
+    ptr = dl._read_last_checkpoint(table)
+    assert ptr is not None and ptr["version"] == dl.DEFAULT_CHECKPOINT_INTERVAL
+    assert os.path.isfile(dl._checkpoint_path(table, ptr["version"]))
+    assert dl.read_delta(spark, table).count() == 10

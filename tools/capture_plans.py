@@ -1,9 +1,11 @@
 """Capture .explain("formatted") output for named queries into
-plans/r13/<query>_<suffix>.txt — the before/after evidence trail for the
-optimization round (judge checks plan claims against these files).
+plans/<round>/<query>_<suffix>.txt — the before/after evidence trail for
+an optimization round (plan claims are checked against these files).
 
-Usage: python tools/capture_plans_r13.py <suffix> [sf_dir] <query> [query ...]
-       python tools/capture_plans_r13.py <suffix> [sf_dir] --all-bench
+Usage: python tools/capture_plans.py <round> <suffix> [sf_dir] <query> [query ...]
+       python tools/capture_plans.py <round> <suffix> [sf_dir] --all-bench
+
+``<round>`` names the directory under plans/, e.g. ``r13``.
 """
 
 from __future__ import annotations
@@ -15,8 +17,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    args = sys.argv[2:]
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    rnd, suffix = sys.argv[1], sys.argv[2]
+    args = sys.argv[3:]
     sf = "/root/testdata/sf0.1"
     if args and args[0].startswith("/"):
         sf = args[0]
@@ -32,9 +36,9 @@ def main() -> None:
     else:
         names = args
 
-    out_dir = Path(__file__).resolve().parent.parent / "plans" / "r13"
+    out_dir = Path(__file__).resolve().parent.parent / "plans" / rnd
     out_dir.mkdir(parents=True, exist_ok=True)
-    spark = get_spark("plans_r13")
+    spark = get_spark(f"plans_{rnd}")
     for name in names:
         try:
             df = QUERIES[name](spark, sf)
@@ -44,7 +48,7 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001 - capture what we can
             plan = f"ERROR capturing plan: {type(e).__name__}: {e}"
         (out_dir / f"{name}_{suffix}.txt").write_text(plan)
-        print(f"wrote plans/r13/{name}_{suffix}.txt ({len(plan)} chars)")
+        print(f"wrote plans/{rnd}/{name}_{suffix}.txt ({len(plan)} chars)")
     spark.stop()
 
 
