@@ -633,18 +633,17 @@ def main() -> None:
     # quiet-machine numbers were unchanged. A third run, taken ONLY when
     # the two timed runs disagree by >1.5x on a non-trivial query, costs
     # nothing in the steady state and absorbs one more transient.
-    # r9 ADVICE: the warm-up run is also TIMED (cold_first_run in
-    # BENCH_DETAIL) — for queries served by a per-corpus session cache
-    # (pair tables, fingerprints, classifier fit, decon screen verdicts)
-    # the warm ratio measures a cache read while the oracle re-executes,
-    # so the cold number is the honest one-time build cost next to it.
-    # cold - warm over ALL queries (JIT/codegen included, so a ceiling)
-    # is surfaced as cold_minus_warm_sec in the compact line.
-    # r11 (VERDICT item 3, finishing r9 ADVICE 1): a timed run that was
-    # served by a _session_cached artifact measures a cache read while
-    # the oracle re-executes — detect it MECHANICALLY via the hit
-    # counter delta so those entries can be excluded from worst_ratios
-    # and annotated with their honest cold cost instead.
+    # The warm-up run is also TIMED (cold_first_run in BENCH_DETAIL) —
+    # for queries served by a memoized per-corpus derivation (pair
+    # tables, fingerprints, classifier fit, decon screen verdicts; the
+    # session memo, pydatalake_spark/session.py) the warm ratio measures
+    # a cache read while the oracle re-executes, so the cold number is
+    # the honest one-time build cost next to it. cold - warm over ALL
+    # queries (JIT/codegen included, so a ceiling) is surfaced as
+    # cold_minus_warm_sec in the compact line. Memo-served timed runs are
+    # detected MECHANICALLY via the hit counter delta, so those entries
+    # can be excluded from worst_ratios and annotated with their honest
+    # cold cost instead.
     from pydatalake_spark.queries.text import SESSION_CACHE_HITS
 
     timings: dict[str, float] = {}
@@ -781,9 +780,9 @@ def main() -> None:
         # the 5 worst spark/duckdb ratios among queries where the oracle
         # does >= 50 ms of real work — below that the ratio only measures
         # Spark's fixed per-query overhead, not the plan. Cache-served
-        # timings (detected via the _session_cached hit counter) are
+        # timings (detected via the per-corpus memo hit counter) are
         # EXCLUDED — their warm number times a cache read while the
-        # oracle re-executes the full pass (r10 VERDICT item 3) — and
+        # oracle re-executes the full pass — and
         # reported separately with warm AND cold ratios so the honest
         # one-time cost stays auditable from this line alone.
         "worst_ratios": dict(

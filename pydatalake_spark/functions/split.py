@@ -30,6 +30,16 @@ def hash_bucket(col: str | Column, num_buckets: int = 100) -> Column:
     )
 
 
+def split_label(bucket: Column) -> Column:
+    """The deterministic 80/10/10 ``train``/``val``/``test`` label of a
+    ``hash_bucket(key, 100)`` value."""
+    return (
+        F.when(bucket < 80, "train")
+        .when(bucket < 90, "val")
+        .otherwise("test")
+    )
+
+
 def split_by_hash(
     df: DataFrame,
     key_col: str,

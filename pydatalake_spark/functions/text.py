@@ -23,6 +23,33 @@ LANG_MARKERS: dict[str, list[str]] = {
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it"]
 
 
+def stopword_ratio(tokens: Column) -> Column:
+    """Share of ``tokens`` that are ``STOPWORDS``."""
+    return F.size(F.filter(tokens, lambda t: t.isin(*STOPWORDS))) / F.size(tokens)
+
+
+def punct_ratio(col: str | Column = "text") -> Column:
+    """Share of the characters of ``col`` that are ``.,!?;:`` (null on
+    empty text)."""
+    c = F.col(col) if isinstance(col, str) else col
+    return (
+        F.length(c) - F.length(F.regexp_replace(c, "[.,!?;:]", ""))
+    ) / F.nullif(F.length(c), F.lit(0))
+
+
+def quality_score(tokens: Column, text: str | Column = "text") -> Column:
+    """Heuristic pre-training quality of a document from its ``tokens``
+    and raw ``text``: stopword ratio, punctuation ratio and length
+    saturation at 100 tokens, weighted 0.3/0.2/0.5. The oracles spell
+    the same formula in SQL."""
+    stop_ratio = stopword_ratio(tokens)
+    return (
+        stop_ratio * 0.3
+        + (F.lit(1) - punct_ratio(text)) * 0.2
+        + F.least(F.size(tokens) / F.lit(100), F.lit(1.0)) * 0.5
+    )
+
+
 def tokenize(col: str | Column, sep: str = " ") -> Column:
     """Whitespace tokenization: ``split(trim(text), ' ')``."""
     c = F.col(col) if isinstance(col, str) else col

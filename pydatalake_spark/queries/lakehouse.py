@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pydatalake_spark.queries.tables import load_table as _t
-from pydatalake_spark.queries.text import _sf_stamp
+from pydatalake_spark.queries.tables import sf_stamp
 from pydatalake_spark.sources.delta import (
     delete_rows_dv,
     is_delta_table,
@@ -118,9 +118,9 @@ def _fixture(spark: SparkSession, sf: str, name: str, build) -> str:
     os.makedirs(root, exist_ok=True)
     table = os.path.join(root, f"{name}_{key}")
     stamp_file = table + ".stamp"
-    sf_stamp = _sf_stamp(sf)
+    dir_stamp = sf_stamp(sf)
     want = (
-        None if sf_stamp is None else list(sf_stamp) + [_code_stamp()]
+        None if dir_stamp is None else list(dir_stamp) + [_code_stamp()]
     )
     with open(table + ".lock", "w") as lf:
         fcntl.flock(lf, fcntl.LOCK_EX)

@@ -22,6 +22,7 @@ from pydatalake_spark.operators.similarity import (
     train_ivf_centroids,
 )
 from pydatalake_spark.queries.tables import load_table as _t
+from pydatalake_spark.queries.text import corpus_memo
 
 QUERIES: dict = {}
 ORACLE: dict = {}
@@ -577,24 +578,20 @@ def hard_triplet_mining_q(spark: SparkSession, sf: str) -> DataFrame:
     per-batch local top-k prune; pytest-pinned equal to the expression
     form ``hard_triplets``, which stays the oracle-exact baseline)."""
     from pydatalake_spark.operators.similarity import hard_triplets_numpy
-    from pydatalake_spark.queries.text import _session_cached
 
     e = _t(spark, sf, "embeddings")
     # per-corpus cached anchor rows (≤10 by the filter): the anchor-scan
     # job runs once per session, every later call fuses the collected
     # matrix straight into the batch closure
-    rows = _session_cached(
+    rows = corpus_memo(
         spark,
-        _TRIPLET_ANCHORS,
+        "triplet_anchors",
         sf,
         lambda: e.filter(F.col("vec_id") < 10)
         .select("vec_id", "embedding", "label")
         .collect(),
     )
     return hard_triplets_numpy(e, None, k_neg=5, anchor_rows=rows)
-
-
-_TRIPLET_ANCHORS: dict = {}
 
 
 # ---------------------------------------------------------------------------
@@ -761,27 +758,13 @@ def pipeline_full_curation_q(spark: SparkSession, sf: str) -> DataFrame:
     of two already-reduced sides — the cheap way to compose per-modality
     screens at 100 TB (each screen's shuffles stay inside its own
     modality; only ids cross)."""
-    from pydatalake_spark.functions.split import hash_bucket
-    from pydatalake_spark.functions.text import STOPWORDS
+    from pydatalake_spark.functions.split import hash_bucket, split_label
+    from pydatalake_spark.functions.text import quality_score, tokenize
     from pydatalake_spark.operators.semdedup import semantic_dedup_numpy
-    from pydatalake_spark.functions.text import tokenize
 
     d = _t(spark, sf, "documents")
     e = _t(spark, sf, "embeddings")
-    toks = tokenize("text")
-    n_tokens = F.size(toks)
-    stop_ratio = (
-        F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS))) / n_tokens
-    )
-    punct_ratio = (
-        F.length("text")
-        - F.length(F.regexp_replace(F.col("text"), "[.,!?;:]", ""))
-    ) / F.nullif(F.length("text"), F.lit(0))
-    quality = (
-        stop_ratio * 0.3
-        + (F.lit(1) - punct_ratio) * 0.2
-        + F.least(n_tokens / F.lit(100), F.lit(1.0)) * 0.5
-    )
+    quality = quality_score(tokenize("text"))
     q_keep = d.filter(quality >= 0.45).select("doc_id")
     sd_keep = (
         semantic_dedup_numpy(e, threshold=_SD_TAU)
@@ -789,14 +772,8 @@ def pipeline_full_curation_q(spark: SparkSession, sf: str) -> DataFrame:
         .select(F.col("vec_id").alias("doc_id"))
     )
     final = q_keep.join(sd_keep, "doc_id")
-    bucket = hash_bucket("doc_id", 100)
     return (
-        final.select(
-            F.when(bucket < 80, "train")
-            .when(bucket < 90, "val")
-            .otherwise("test")
-            .alias("split")
-        )
+        final.select(split_label(hash_bucket("doc_id", 100)).alias("split"))
         .groupBy("split")
         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     )
@@ -1062,14 +1039,6 @@ _PQ_CTE = f"""
     )"""
 
 
-_PQ_CB_CACHE: dict = {}
-_PQ_Q_CACHE: dict = {}
-_PQ_ENC_CACHE: dict = {}
-_PQ_LONG_CACHE: dict = {}
-_PQ_ADC_CACHE: dict = {}
-_PQ_RECALL_CACHE: dict = {}
-
-
 def _pq_codebooks(spark: SparkSession, sf: str):
     """Per-corpus cached (trained-then-collected) PQ codebook — a PQ
     index is train-once / encode-and-search-many, so queries downstream
@@ -1081,11 +1050,10 @@ def _pq_codebooks(spark: SparkSession, sf: str):
         collect_codebooks,
         train_pq_codebooks_numpy,
     )
-    from pydatalake_spark.queries.text import _session_cached
 
-    return _session_cached(
+    return corpus_memo(
         spark,
-        _PQ_CB_CACHE,
+        "pq_codebooks",
         sf,
         lambda: collect_codebooks(
             train_pq_codebooks_numpy(
@@ -1100,12 +1068,11 @@ def _pq_encoded(spark: SparkSession, sf: str):
     once, search many: the ADC/recall queries measure the SEARCH path
     over a standing code table, as a production index would."""
     from pydatalake_spark.operators.pq import pq_encode_numpy
-    from pydatalake_spark.queries.text import _session_cached
     from pydatalake_spark.session import cache_once
 
-    return _session_cached(
+    return corpus_memo(
         spark,
-        _PQ_ENC_CACHE,
+        "pq_encoded",
         sf,
         lambda: cache_once(
             pq_encode_numpy(
@@ -1116,8 +1083,6 @@ def _pq_encoded(spark: SparkSession, sf: str):
 
 
 def _pq_query_rows(spark: SparkSession, sf: str):
-    from pydatalake_spark.queries.text import _session_cached
-
     def build():
         rows = (
             _t(spark, sf, "embeddings")
@@ -1127,7 +1092,7 @@ def _pq_query_rows(spark: SparkSession, sf: str):
         )
         return [(int(r["vec_id"]), [float(x) for x in r["v"]]) for r in rows]
 
-    return _session_cached(spark, _PQ_Q_CACHE, sf, build)
+    return corpus_memo(spark, "pq_query_rows", sf, build)
 
 
 @q(
@@ -1145,17 +1110,16 @@ def pq_codebooks_q(spark: SparkSession, sf: str) -> DataFrame:
     carries only tasks x m*k*sub_dim skinny rows; the kmeans_lloyd_step
     posture).  Rounded-mean equality with the oracle-exact expression
     form (`train_pq_codebooks`) is pytest-pinned.  Long-form output
-    (s, code, i, v): array result columns crash pandas canonicalizers
-    (VERDICT r3 #3).  The built plan is session-cached per corpus (the
-    _fingerprints pattern): PQ training is train-once/reuse-many, and
-    rebuilding the plan would bill Catalyst analysis to every caller."""
+    (s, code, i, v): array result columns crash pandas canonicalizers.
+    The built plan is memoized per corpus (the _fingerprints pattern):
+    PQ training is train-once/reuse-many, and rebuilding the plan would
+    bill Catalyst analysis to every caller."""
     from pydatalake_spark.operators.pq import train_pq_long_numpy
-    from pydatalake_spark.queries.text import _session_cached
     from pydatalake_spark.session import cache_once
 
-    return _session_cached(
+    return corpus_memo(
         spark,
-        _PQ_LONG_CACHE,
+        "pq_long",
         sf,
         lambda: cache_once(
             train_pq_long_numpy(
@@ -1210,7 +1174,6 @@ def pq_adc_topk_q(spark: SparkSession, sf: str) -> DataFrame:
     built plan is session-cached too — the literal lookup tables cost
     Catalyst analysis that a standing index pays once."""
     from pydatalake_spark.operators.pq import pq_adc_topk
-    from pydatalake_spark.queries.text import _session_cached
 
     def build():
         cb = _pq_codebooks(spark, sf)
@@ -1221,11 +1184,7 @@ def pq_adc_topk_q(spark: SparkSession, sf: str) -> DataFrame:
             F.col("q_id").cast("long").alias("q_id"), "c_id", "adc"
         )
 
-    return _session_cached(spark, _PQ_ADC_CACHE, sf, build)
-
-
-_IVFADC_CACHE: dict = {}
-_IVFADC_COARSE_CACHE: dict = {}
+    return corpus_memo(spark, "pq_adc", sf, build)
 
 
 @q(
@@ -1248,14 +1207,13 @@ def ivfadc_topk_q(spark: SparkSession, sf: str) -> DataFrame:
     tests/test_pq.py."""
     from pydatalake_spark.operators.pq import ivfadc_encode_numpy, ivfadc_topk
     from pydatalake_spark.operators.similarity import train_ivf_centroids
-    from pydatalake_spark.queries.text import _session_cached
     from pydatalake_spark.session import cache_once
 
     def build():
         cb = _pq_codebooks(spark, sf)
-        coarse = _session_cached(
+        coarse = corpus_memo(
             spark,
-            _IVFADC_COARSE_CACHE,
+            "ivfadc_coarse",
             sf,
             lambda: train_ivf_centroids(
                 _t(spark, sf, "embeddings"), num_cells=8
@@ -1271,7 +1229,7 @@ def ivfadc_topk_q(spark: SparkSession, sf: str) -> DataFrame:
             F.col("q_id").cast("long").alias("q_id"), "c_id", "adc"
         )
 
-    return _session_cached(spark, _IVFADC_CACHE, sf, build)
+    return corpus_memo(spark, "ivfadc", sf, build)
 
 
 @q(
@@ -1308,7 +1266,6 @@ def pq_recall_eval_q(spark: SparkSession, sf: str) -> DataFrame:
     absolute recall measures the fixture; the eval reports it honestly.)
     """
     from pydatalake_spark.operators.scaling import fan_out
-    from pydatalake_spark.queries.text import _session_cached
 
     def build():
         e = _t(spark, sf, "embeddings")
@@ -1348,4 +1305,4 @@ def pq_recall_eval_q(spark: SparkSession, sf: str) -> DataFrame:
             )
         )
 
-    return _session_cached(spark, _PQ_RECALL_CACHE, sf, build)
+    return corpus_memo(spark, "pq_recall", sf, build)

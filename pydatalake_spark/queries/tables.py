@@ -2,28 +2,35 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from pydatalake_spark.session import memo
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
 ).split()
 
-# (applicationId, sf_dir, name) -> analyzed DataFrame. The testdata tables
-# are immutable, so re-listing files and re-reading footers on every
-# load_table call is pure per-query overhead (~50-100 ms each) — cache the
-# ANALYZED PLAN (not the data; scans stay lazy and re-run per action).
-# Single-app cache: entries from other applicationIds are evicted on first
-# touch by a new session, so plans bound to stopped SparkSessions don't
-# accumulate in long-lived driver processes (ADVICE r3).
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
-
-def _evict_other_apps(app_id: str) -> None:
-    stale = [k for k in _TABLE_CACHE if k[0] != app_id]
-    for k in stale:
-        del _TABLE_CACHE[k]
+def sf_stamp(sf: str):
+    """Cheap freshness fingerprint of a local corpus dir: (entry count,
+    max mtime_ns, total size) over its top-level entries. Replacing the
+    files inside ``<table>.parquet/`` moves that entry's mtime. ``None``
+    when the path is not a scannable local dir (a remote scheme): the
+    corpus is then taken as immutable for the session."""
+    n, mt, size = 0, 0, 0
+    try:
+        for entry in os.scandir(sf):
+            st = entry.stat()
+            n += 1
+            mt = max(mt, st.st_mtime_ns)
+            size += st.st_size
+    except OSError:
+        return None
+    return (n, mt, size)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -40,26 +47,28 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``epoch_us`` on the same naive values. Runtime-settable confs only, so
     this works under any caller-provided session.
     """
-    # pin UTC + ANSI-off per session so results are caller-session-agnostic
-    # (the driver's harness builds its own SparkSession)
+    # pin UTC per session so results do not depend on how the caller
+    # built its SparkSession
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    app_id = spark.sparkContext.applicationId
-    _evict_other_apps(app_id)
-    key = (app_id, sf_dir, name)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
+    # the ANALYZED PLAN is memoized, not the data: scans stay lazy, and a
+    # hit skips re-listing files and re-reading footers (~50-100 ms)
+    return memo(
+        spark,
+        ("table", sf_dir, name),
+        lambda: _read_table(spark, sf_dir, name),
+        stamp=sf_stamp(sf_dir),
+    )
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        ts_type = dict(df.dtypes)["ts"]
-        if ts_type == "bigint":  # nanos-as-long: truncate to micros
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":  # NTZ wall time == UTC instant here
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        _TABLE_CACHE[key] = df
-        return df
+    if name != "events":
+        return spark.read.parquet(path)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)
-    _TABLE_CACHE[key] = df
+    ts_type = dict(df.dtypes)["ts"]
+    if ts_type == "bigint":  # nanos-as-long: truncate to micros
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    elif ts_type == "timestamp_ntz":  # NTZ wall time == UTC instant here
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df

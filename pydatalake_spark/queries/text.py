@@ -14,6 +14,9 @@ from pydatalake_spark.functions.text import (
     LANG_MARKERS,
     STOPWORDS,
     predicted_language,
+    punct_ratio,
+    quality_score,
+    stopword_ratio,
     tokenize,
 )
 from pydatalake_spark.operators.minhash import (
@@ -27,7 +30,8 @@ from pydatalake_spark.operators.simhash import (
     simhash_table,
 )
 from pydatalake_spark.queries.tables import load_table as _t
-from pydatalake_spark.session import cache_once
+from pydatalake_spark.queries.tables import sf_stamp
+from pydatalake_spark.session import cache_once, memo
 
 QUERIES: dict = {}
 ORACLE: dict = {}
@@ -104,22 +108,11 @@ def text_quality_score(spark: SparkSession, sf: str) -> DataFrame:
     length saturation, the standard pre-training corpus filters."""
     d = _t(spark, sf, "documents")
     toks = tokenize("text")
-    n_tokens = F.size(toks)
-    stop_ratio = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS))) / n_tokens
-    punct_ratio = (
-        F.length("text")
-        - F.length(F.regexp_replace(F.col("text"), "[.,!?;:]", ""))
-    ) / F.nullif(F.length("text"), F.lit(0))
-    quality = (
-        stop_ratio * 0.3
-        + (F.lit(1) - punct_ratio) * 0.2
-        + F.least(n_tokens / F.lit(100), F.lit(1.0)) * 0.5
-    )
     return d.select(
         "doc_id",
-        stop_ratio.alias("stopword_ratio"),
-        punct_ratio.alias("punct_ratio"),
-        quality.alias("quality_score"),
+        stopword_ratio(toks).alias("stopword_ratio"),
+        punct_ratio("text").alias("punct_ratio"),
+        quality_score(toks).alias("quality_score"),
     )
 
 
@@ -401,9 +394,6 @@ def near_dup_pairs_q(spark: SparkSession, sf: str) -> DataFrame:
     return _minhash_pairs(spark, sf)
 
 
-_MHPAIRS_CACHE: dict = {}
-
-
 def _minhash_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """Per-corpus cached MinHash-LSH verified pair table at the 0.5
     threshold — the `_jaccard_pairs` pattern for the LSH family: the pair
@@ -424,7 +414,7 @@ def _minhash_pairs(spark: SparkSession, sf: str) -> DataFrame:
             )
         )
 
-    return _session_cached(spark, _MHPAIRS_CACHE, sf, build)
+    return corpus_memo(spark, "minhash_pairs", sf, build)
 
 
 def _ngram_pruned_cte() -> str:
@@ -468,9 +458,6 @@ def _ngram_max_df_plan(d: DataFrame) -> DataFrame:
     )
 
 
-_JPAIRS_CACHE: dict = {}
-
-
 def _jaccard_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """Per-corpus cached exact n-gram Jaccard pair table at the loose 0.5
     threshold — SEVEN diagnostics (the pair listing, clusters,
@@ -491,7 +478,7 @@ def _jaccard_pairs(spark: SparkSession, sf: str) -> DataFrame:
             )
         )
 
-    return _session_cached(spark, _JPAIRS_CACHE, sf, build)
+    return corpus_memo(spark, "jaccard_pairs", sf, build)
 
 
 @q(
@@ -548,80 +535,30 @@ def _simhash_sql() -> str:
     """
 
 
-def _sf_stamp(sf: str):
-    """Cheap freshness fingerprint of a local corpus dir: (entry count,
-    max mtime_ns, total size) over its top-level entries. None when the
-    path isn't a scannable local dir (remote scheme) — the guard then
-    degrades to the r9 immutability contract."""
-    import os as _os
-
-    n, mt, size = 0, 0, 0
-    try:
-        for entry in _os.scandir(sf):
-            st = entry.stat()
-            n += 1
-            mt = max(mt, st.st_mtime_ns)
-            size += st.st_size
-    except OSError:
-        return None
-    return (n, mt, size)
-
-
-# bench introspection (r11, VERDICT item 3): every served-without-build
-# hit increments this, so bench.py can tag cache-served timed runs
-# MECHANICALLY (counter delta around the run) instead of hand-listing
-# which queries ride which cache — the hand-list went stale twice.
+# served-without-build hits of per-corpus derivations (table loads and
+# dedup probes do not count): bench.py and perfbench tag a timed run
+# that a memoized derivation served by this counter's delta
 SESSION_CACHE_HITS = {"n": 0}
 
 
-def _session_cached(
-    spark: SparkSession, cache: dict, sf: str, build
-) -> DataFrame:
-    """(applicationId, sf)-keyed DataFrame cache with stale-app eviction —
-    the tables.py pattern (r3 ADVICE): plans bound to a stopped
-    SparkSession must not survive into a new one, or the next session
-    would hand consumers dead-JVM references.
-
-    Freshness guard (r11, VERDICT item 6): each hit re-checks a cheap
-    (count, mtime, size) stamp of the corpus dir and REBUILDS on
-    mismatch, so a compat-API user who rewrites the corpus mid-session
-    gets fresh derivations (pair tables, fingerprints, classifier fits,
-    screen VERDICTS) instead of silently-stale ones. For non-local
-    corpus paths the stamp is unavailable and the r9 contract stands:
-    the corpus is assumed immutable for the session."""
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in cache if k[0] != app_id]:
-        del cache[k]
-    key = (app_id, sf)
-    stamp = _sf_stamp(sf)
-    hit = cache.get(key)
-    if hit is not None and hit[0] != stamp:
-        # corpus rewritten mid-session: release the stale persisted
-        # blocks (best effort — cached values may be plain row lists)
-        unpersist = getattr(hit[1], "unpersist", None)
-        if callable(unpersist):
-            try:
-                unpersist()
-            except Exception:
-                pass
-        hit = None
-    if hit is None:
-        cache[key] = (stamp, build())
-    else:
-        SESSION_CACHE_HITS["n"] += 1
-    return cache[key][1]
-
-
-_SIMHASH_CACHE: dict = {}
+def corpus_memo(spark: SparkSession, name: str, sf: str, build):
+    """Per-corpus derivation ``name`` of the corpus dir ``sf``, memoized
+    in the session memo and rebuilt when the dir's ``sf_stamp`` changes,
+    so a corpus rewritten mid-session gets fresh pair tables,
+    fingerprints, fits and screen verdicts. Table loads carry the same
+    stamp, so a rebuild reads the new files."""
+    return memo(
+        spark, (name, sf), build, stamp=sf_stamp(sf), hits=SESSION_CACHE_HITS
+    )
 
 
 def _fingerprints(spark: SparkSession, sf: str) -> DataFrame:
     """Per-corpus cached fingerprint table: the expensive pass runs once
     and both the fingerprint query and the near-dup query reuse it — a
     dedup pipeline materializes its index, it doesn't recompute it."""
-    return _session_cached(
+    return corpus_memo(
         spark,
-        _SIMHASH_CACHE,
+        "simhash",
         sf,
         lambda: cache_once(simhash_table(_t(spark, sf, "documents"))),
     )
@@ -1030,18 +967,13 @@ def split_contamination_q(spark: SparkSession, sf: str) -> DataFrame:
     exactly as `ngram_jaccard_pairs`). At scale this is the same
     inverted-index join plus one broadcast-sized split-label join — the
     decontamination pass costs no more than the dedup pass it rides on."""
-    from pydatalake_spark.functions.split import hash_bucket
+    from pydatalake_spark.functions.split import hash_bucket, split_label
     from pydatalake_spark.operators.ngram_jaccard import ngram_jaccard_pairs
 
     d = _t(spark, sf, "documents")
     pairs = _jaccard_pairs(spark, sf)
-    bucket = hash_bucket("doc_id", 100)
     sp = d.select(
-        "doc_id",
-        F.when(bucket < 80, "train")
-        .when(bucket < 90, "val")
-        .otherwise("test")
-        .alias("split"),
+        "doc_id", split_label(hash_bucket("doc_id", 100)).alias("split")
     )
     j = (
         pairs.join(
@@ -1170,21 +1102,10 @@ def pipeline_clean_corpus(spark: SparkSession, sf: str) -> DataFrame:
     corpus-level signature cache (r8 VERDICT item 7), semi-joined down
     to the survivor set rather than re-shingled, and the narrow
     survivor-id set itself (consumed five times downstream)."""
-    from pydatalake_spark.functions.split import hash_bucket
+    from pydatalake_spark.functions.split import hash_bucket, split_label
 
     d = _t(spark, sf, "documents")
-    toks = tokenize("text")
-    n_tokens = F.size(toks)
-    stop_ratio = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS))) / n_tokens
-    punct_ratio = (
-        F.length("text")
-        - F.length(F.regexp_replace(F.col("text"), "[.,!?;:]", ""))
-    ) / F.nullif(F.length("text"), F.lit(0))
-    quality = (
-        stop_ratio * 0.3
-        + (F.lit(1) - punct_ratio) * 0.2
-        + F.least(n_tokens / F.lit(100), F.lit(1.0)) * 0.5
-    )
+    quality = quality_score(tokenize("text"))
     docs0 = d.filter(quality >= 0.45).select("doc_id", "text")
     keep1 = docs0.groupBy(F.md5("text").alias("__fp")).agg(
         F.min("doc_id").alias("doc_id")
@@ -1213,12 +1134,7 @@ def pipeline_clean_corpus(spark: SparkSession, sf: str) -> DataFrame:
     final = ids.join(nd, "doc_id", "left_anti")
     return (
         final.select("doc_id", hash_bucket("doc_id", 100).alias("__b"))
-        .select(
-            F.when(F.col("__b") < 80, "train")
-            .when(F.col("__b") < 90, "val")
-            .otherwise("test")
-            .alias("split"),
-        )
+        .select(split_label(F.col("__b")).alias("split"))
         .groupBy("split")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
@@ -1302,23 +1218,12 @@ def pipeline_clean_corpus_v2(spark: SparkSession, sf: str) -> DataFrame:
     deterministic split. v1 drops the higher id of each PAIR, which
     over-deletes on chains (B~A and B~C kills B and C even though C keeps
     A company); components delete exactly n-1 docs per n-doc cluster."""
-    from pydatalake_spark.functions.split import hash_bucket
+    from pydatalake_spark.functions.split import hash_bucket, split_label
     from pydatalake_spark.operators.cluster import connected_components
     from pydatalake_spark.operators.ngram_jaccard import ngram_jaccard_pairs
 
     d = _t(spark, sf, "documents")
-    toks = tokenize("text")
-    n_tokens = F.size(toks)
-    stop_ratio = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS))) / n_tokens
-    punct_ratio = (
-        F.length("text")
-        - F.length(F.regexp_replace(F.col("text"), "[.,!?;:]", ""))
-    ) / F.nullif(F.length("text"), F.lit(0))
-    quality = (
-        stop_ratio * 0.3
-        + (F.lit(1) - punct_ratio) * 0.2
-        + F.least(n_tokens / F.lit(100), F.lit(1.0)) * 0.5
-    )
+    quality = quality_score(tokenize("text"))
     docs0 = d.filter(quality >= 0.45).select("doc_id", "text")
     keep1 = docs0.groupBy(F.md5("text").alias("__fp")).agg(
         F.min("doc_id").alias("doc_id")
@@ -1338,12 +1243,7 @@ def pipeline_clean_corpus_v2(spark: SparkSession, sf: str) -> DataFrame:
     final = docs1.join(drop, "doc_id", "left_anti")
     return (
         final.select(hash_bucket("doc_id", 100).alias("__b"))
-        .select(
-            F.when(F.col("__b") < 80, "train")
-            .when(F.col("__b") < 90, "val")
-            .otherwise("test")
-            .alias("split"),
-        )
+        .select(split_label(F.col("__b")).alias("split"))
         .groupBy("split")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
@@ -2155,16 +2055,13 @@ def _qct_features(spark: SparkSession, sf: str) -> DataFrame:
 _QCT_COLS = [f"f_{f}" for f in _QCT_FEATS]
 
 
-_QCT_FIT_CACHE: dict = {}
-
-
 def _qct_fit(spark: SparkSession, sf: str):
     """Persist the narrow feature projection, standardize (one 2d-scalar
     pass), train (`_QCT_ITERS` scalar-agg passes), unpersist. Returns
     (weights, stats, accuracy) — plain floats, no lineage.
 
-    The fit is SESSION-CACHED per corpus (the bigram `cache_model` /
-    `_TRIPLET_ANCHORS` pattern for bounded model artifacts): full-batch
+    The fit is memoized per corpus (`corpus_memo`, like the triplet
+    anchor rows and the other bounded model artifacts): full-batch
     GD from a zero init is deterministic, so the trained model is a
     per-corpus constant — a pipeline trains once and deploys, it does
     not re-run gradient descent for every consumer of the weights. Both
@@ -2194,7 +2091,7 @@ def _qct_fit(spark: SparkSession, sf: str):
             raw.unpersist()
         return w, stats, acc
 
-    return _session_cached(spark, _QCT_FIT_CACHE, sf, build)
+    return corpus_memo(spark, "qct_fit", sf, build)
 
 
 @q("quality_classifier_train", _qct_oracle())
@@ -2276,8 +2173,6 @@ _DECON_CTE = f"""
         FROM documents
     )"""
 
-_DECON_EXL_CACHE: dict = {}
-
 
 def _decon_exl(spark: SparkSession, sf: str) -> DataFrame:
     """Per-corpus cached (doc_id, wh, is_train) table — the tokenize →
@@ -2303,10 +2198,7 @@ def _decon_exl(spark: SparkSession, sf: str) -> DataFrame:
         )
         return cache_once(ex.join(lab, "doc_id"))
 
-    return _session_cached(spark, _DECON_EXL_CACHE, sf, build)
-
-
-_DECON_TRAIN_CACHE: dict = {}
+    return corpus_memo(spark, "decon_exl", sf, build)
 
 
 def _decon_train_w(spark: SparkSession, sf: str) -> DataFrame:
@@ -2315,9 +2207,9 @@ def _decon_train_w(spark: SparkSession, sf: str) -> DataFrame:
     screen's left join each consume it, and without the cache each one
     re-runs the distinct shuffle over the train hashes. Bounded: one
     32-char hash per distinct train window (~26 MB at sf0.1)."""
-    return _session_cached(
+    return corpus_memo(
         spark,
-        _DECON_TRAIN_CACHE,
+        "decon_train_w",
         sf,
         lambda: cache_once(
             _decon_exl(spark, sf).filter("is_train").select("wh").distinct()
@@ -2325,16 +2217,13 @@ def _decon_train_w(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-_DECON_EVAL_CACHE: dict = {}
-
-
 def _decon_eval_w(spark: SparkSession, sf: str) -> DataFrame:
     """Cached DISTINCT eval-side window-hash set — the mirror of
     `_decon_train_w` for the screens that censor the TRAIN side
     (`pipeline_decontaminated_corpus`, `strip_contaminated_spans`)."""
-    return _session_cached(
+    return corpus_memo(
         spark,
-        _DECON_EVAL_CACHE,
+        "decon_eval_w",
         sf,
         lambda: cache_once(
             _decon_exl(spark, sf)
@@ -2345,20 +2234,17 @@ def _decon_eval_w(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-_DECON_SCREEN_CACHE: dict = {}
-
-
 def _decon_screen(spark: SparkSession, sf: str) -> DataFrame:
     """Per-corpus cached per-window screen VERDICT table
-    ``(doc_id, wh, exact_hit, bf_hit)`` over the eval windows — the r10
-    extension of the `_minhash_pairs` pattern to the decontamination
-    family (r9 VERDICT item 3): the exact semi-join verdict and the bloom
-    probe verdict are computed in ONE fused pass (one wh-keyed shuffle
-    against the distinct train set, the bloom probe mapped over that
-    join's own output), and the three screen queries
-    (`exact_ngram_decontamination`, `bloom_decontamination`,
-    `decontamination_audit`) reduce the SAME cached table with their own
-    doc-level aggregation instead of each re-running a probe pass.
+    ``(doc_id, wh, exact_hit, bf_hit)`` over the eval windows — the
+    `_minhash_pairs` pattern applied to the decontamination family: the
+    exact semi-join verdict and the bloom probe verdict are computed in
+    ONE fused pass (one wh-keyed shuffle against the distinct train set,
+    the bloom probe mapped over that join's own output), and the three
+    screen queries (`exact_ngram_decontamination`,
+    `bloom_decontamination`, `decontamination_audit`) reduce the SAME
+    cached table with their own doc-level aggregation instead of each
+    re-running a probe pass.
     Size contract: one row per distinct eval (doc, window) — the same
     order as `_decon_exl` itself, LRU-evictable under memory pressure."""
     from pydatalake_spark.operators.bloom import membership_screen
@@ -2382,7 +2268,7 @@ def _decon_screen(spark: SparkSession, sf: str) -> DataFrame:
             )
         )
 
-    return _session_cached(spark, _DECON_SCREEN_CACHE, sf, build)
+    return corpus_memo(spark, "decon_screen", sf, build)
 
 
 @q(
@@ -2954,24 +2840,13 @@ def pipeline_clean_corpus_v3(spark: SparkSession, sf: str) -> DataFrame:
     boilerplate before near-dup stops shared headers/footers from fusing
     unrelated documents into one cluster (the false-merge failure mode of
     span-blind near-dedup)."""
-    from pydatalake_spark.functions.split import hash_bucket
+    from pydatalake_spark.functions.split import hash_bucket, split_label
     from pydatalake_spark.operators.cluster import connected_components
     from pydatalake_spark.operators.ngram_jaccard import ngram_jaccard_pairs
     from pydatalake_spark.operators.span_dedup import strip_dup_spans
 
     d = _t(spark, sf, "documents")
-    toks = tokenize("text")
-    n_tokens = F.size(toks)
-    stop_ratio = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS))) / n_tokens
-    punct_ratio = (
-        F.length("text")
-        - F.length(F.regexp_replace(F.col("text"), "[.,!?;:]", ""))
-    ) / F.nullif(F.length("text"), F.lit(0))
-    quality = (
-        stop_ratio * 0.3
-        + (F.lit(1) - punct_ratio) * 0.2
-        + F.least(n_tokens / F.lit(100), F.lit(1.0)) * 0.5
-    )
+    quality = quality_score(tokenize("text"))
     docs0 = d.filter(quality >= 0.45).select("doc_id", "text")
     keep1 = docs0.groupBy(F.md5("text").alias("__fp")).agg(
         F.min("doc_id").alias("doc_id")
@@ -2994,12 +2869,7 @@ def pipeline_clean_corpus_v3(spark: SparkSession, sf: str) -> DataFrame:
     final = docs1.join(drop, "doc_id", "left_anti")
     return (
         final.select(hash_bucket("doc_id", 100).alias("__b"))
-        .select(
-            F.when(F.col("__b") < 80, "train")
-            .when(F.col("__b") < 90, "val")
-            .otherwise("test")
-            .alias("split"),
-        )
+        .select(split_label(F.col("__b")).alias("split"))
         .groupBy("split")
         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     )
@@ -3512,16 +3382,7 @@ def corpus_datacard_q(spark: SparkSession, sf: str) -> DataFrame:
     d = _t(spark, sf, "documents")
     toks = tokenize("text")
     n_tokens = F.size(toks)
-    stop_ratio = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS))) / n_tokens
-    punct_ratio = (
-        F.length("text")
-        - F.length(F.regexp_replace(F.col("text"), "[.,!?;:]", ""))
-    ) / F.nullif(F.length("text"), F.lit(0))
-    quality = (
-        stop_ratio * 0.3
-        + (F.lit(1) - punct_ratio) * 0.2
-        + F.least(n_tokens / F.lit(100), F.lit(1.0)) * 0.5
-    )
+    quality = quality_score(toks)
     per_doc = d.select(
         "doc_id", "source", "lang",
         n_tokens.alias("n_tokens"), quality.alias("q"),
@@ -3851,16 +3712,11 @@ def split_balance_report_q(spark: SparkSession, sf: str) -> DataFrame:
     fractions ride a window over the |splits|x|sources|-bounded result."""
     from pyspark.sql import Window
 
-    from pydatalake_spark.functions.split import hash_bucket
+    from pydatalake_spark.functions.split import hash_bucket, split_label
 
     d = _t(spark, sf, "documents")
-    bucket = hash_bucket("doc_id", 100)
     s = d.select(
-        "source",
-        F.when(bucket < 80, "train")
-        .when(bucket < 90, "val")
-        .otherwise("test")
-        .alias("split"),
+        "source", split_label(hash_bucket("doc_id", 100)).alias("split")
     )
     g = s.groupBy("split", "source").agg(
         F.count(F.lit(1)).cast("long").alias("n")
@@ -4032,16 +3888,7 @@ def pipeline_decontaminated_corpus_q(spark: SparkSession, sf: str) -> DataFrame:
     d = _t(spark, sf, "documents")
     toks = tokenize("text")
     n_tokens = F.size(toks)
-    stop_ratio = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS))) / n_tokens
-    punct_ratio = (
-        F.length("text")
-        - F.length(F.regexp_replace(F.col("text"), "[.,!?;:]", ""))
-    ) / F.nullif(F.length("text"), F.lit(0))
-    quality = (
-        stop_ratio * 0.3
-        + (F.lit(1) - punct_ratio) * 0.2
-        + F.least(n_tokens / F.lit(100), F.lit(1.0)) * 0.5
-    )
+    quality = quality_score(toks)
     # dedup shuffles the 16-byte content fingerprint, never the text
     # itself (the exact_dedup_docs pattern — full documents crossing a
     # groupBy exchange is the thing that does not survive 100 TB)

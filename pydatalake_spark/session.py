@@ -11,11 +11,27 @@ Replaces the reference's per-object DuckDB connection management
 - UTC session timezone so timestamps agree with UTC-naive engines (DuckDB
   oracle parity).
 - zstd parquet compression default (reference default: ``writer.py:33``).
+
+Session memo rule: every Python-side memo (table loads, per-corpus
+derivations, the dedup hot-key probe) lives in the one store behind
+``memo``; a module-level memo dict of its own is never added.
+
+- Key: ``(applicationId, namespace, *rest)``. Entries of any other
+  application are deleted on the next touch; their plans are bound to a
+  stopped session, so they are dropped without being released.
+- Freshness: an entry keeps the ``stamp`` it was built with and is
+  rebuilt when a later call passes a different one. ``None`` is a stamp
+  like any other, and a memoized ``None`` value is a hit.
+- Bound: at most ``MEMO_MAX`` entries; the least recently used goes first.
+- Release: a value dropped by the bound or by a stale stamp is
+  ``unpersist``-ed when it has that method (a cached DataFrame).
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Hashable
+from typing import Any
 
 from pyspark.sql import SparkSession
 
@@ -86,3 +102,47 @@ def cache_once(df):
     if not (sl.useMemory or sl.useDisk):
         return df.cache()
     return df
+
+
+MEMO_MAX = 256
+_MEMO: dict[tuple, tuple[Hashable, Any]] = {}
+
+
+def _release(value) -> None:
+    unpersist = getattr(value, "unpersist", None)
+    if callable(unpersist):
+        try:
+            unpersist()
+        except Exception:  # best effort: a plain value or a gone plan
+            pass
+
+
+def memo(
+    spark: SparkSession,
+    key: tuple,
+    build: Callable[[], Any],
+    stamp: Hashable = None,
+    hits: dict | None = None,
+):
+    """The value memoized under ``key`` (``(namespace, *rest)``) for this
+    application, or ``build()``'s result stored there. A hit with the
+    same ``stamp`` returns the stored value (and counts in ``hits["n"]``
+    when given); a different stamp releases the stored value and
+    rebuilds. The full rule is in the module docstring."""
+    app_id = spark.sparkContext.applicationId
+    for k in [k for k in _MEMO if k[0] != app_id]:
+        del _MEMO[k]
+    full = (app_id, *key)
+    if full in _MEMO:
+        old_stamp, value = _MEMO.pop(full)
+        if old_stamp == stamp:
+            _MEMO[full] = (stamp, value)  # now the most recently used
+            if hits is not None:
+                hits["n"] += 1
+            return value
+        _release(value)
+    value = build()
+    while len(_MEMO) >= MEMO_MAX:
+        _release(_MEMO.pop(next(iter(_MEMO)))[1])
+    _MEMO[full] = (stamp, value)
+    return value

@@ -209,13 +209,12 @@ def stream_quality_screen(
     production swaps the sink for the parquet writer of `stream_ingest`.
     Returns (doc_id, quality_score, n_tokens) for kept docs.
     """
-    from pydatalake_spark.functions.text import STOPWORDS, tokenize
+    from pydatalake_spark.functions.text import quality_score, shingles, tokenize
     from pydatalake_spark.operators.bloom import (
         BLOOM_BITS,
         BLOOM_HASHES,
         bloom_hit_expr,
     )
-    from pydatalake_spark.functions.text import shingles
 
     if isinstance(bloom_words, tuple):
         # the (words, num_bits, num_hashes) triple from build_literal_bloom
@@ -247,16 +246,7 @@ def stream_quality_screen(
     )
     toks = F.col("_toks")
     n_tokens = F.size(toks)
-    stop_ratio = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS))) / n_tokens
-    punct_ratio = (
-        F.length("text")
-        - F.length(F.regexp_replace(F.col("text"), "[.,!?;:]", ""))
-    ) / F.nullif(F.length("text"), F.lit(0))
-    quality = (
-        stop_ratio * 0.3
-        + (F.lit(1) - punct_ratio) * 0.2
-        + F.least(n_tokens / F.lit(100), F.lit(1.0)) * 0.5
-    )
+    quality = quality_score(toks)
     whs = F.transform(shingles(toks, k=eval_window), F.md5)
     contaminated = F.exists(
         whs,

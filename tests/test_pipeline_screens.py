@@ -81,37 +81,35 @@ def test_gopher_flags_consistent(spark):
 
 
 def test_session_cache_rebuilds_on_corpus_rewrite(spark, tmp_path):
-    """r10 VERDICT item 6: _session_cached re-checks a (count, mtime,
-    size) stamp of the corpus dir on every hit — rewriting the corpus
-    mid-session rebuilds instead of serving stale derivations (the old
-    contract silently kept pair tables / screen verdicts for the old
-    bytes)."""
+    """A per-corpus derivation re-checks a (count, mtime, size) stamp of
+    the corpus dir on every hit — rewriting the corpus mid-session
+    rebuilds instead of serving stale derivations (pair tables, screen
+    verdicts for the old bytes)."""
     import os
     import time
 
-    from pydatalake_spark.queries.text import _session_cached
+    from pydatalake_spark.queries.text import corpus_memo
 
     sf = str(tmp_path / "corpus")
     os.makedirs(sf)
     with open(os.path.join(sf, "documents.parquet"), "wb") as f:
         f.write(b"v1-bytes")
 
-    cache: dict = {}
     builds = []
 
     def build():
         builds.append(1)
         return f"built-{len(builds)}"
 
-    assert _session_cached(spark, cache, sf, build) == "built-1"
-    assert _session_cached(spark, cache, sf, build) == "built-1"  # hit
+    assert corpus_memo(spark, "rebuild", sf, build) == "built-1"
+    assert corpus_memo(spark, "rebuild", sf, build) == "built-1"  # hit
 
     time.sleep(0.01)  # ensure mtime_ns moves even on coarse filesystems
     with open(os.path.join(sf, "documents.parquet"), "wb") as f:
         f.write(b"v2-bytes-longer")
 
-    assert _session_cached(spark, cache, sf, build) == "built-2"
-    assert _session_cached(spark, cache, sf, build) == "built-2"
+    assert corpus_memo(spark, "rebuild", sf, build) == "built-2"
+    assert corpus_memo(spark, "rebuild", sf, build) == "built-2"
 
     # unpersistable cached values get released on rebuild (best effort)
     class FakeDF:
@@ -120,12 +118,118 @@ def test_session_cache_rebuilds_on_corpus_rewrite(spark, tmp_path):
         def unpersist(self):
             FakeDF.unpersisted = True
 
-    cache2: dict = {}
-    _session_cached(spark, cache2, sf, lambda: FakeDF())
+    corpus_memo(spark, "release", sf, lambda: FakeDF())
     with open(os.path.join(sf, "extra.parquet"), "wb") as f:
         f.write(b"x")
-    _session_cached(spark, cache2, sf, lambda: FakeDF())
+    corpus_memo(spark, "release", sf, lambda: FakeDF())
     assert FakeDF.unpersisted
+
+
+def test_session_memo_policy(spark, monkeypatch):
+    """The one session memo: at most MEMO_MAX entries, the least
+    recently used dropped first; a DataFrame dropped by the bound or by
+    a stale stamp is unpersisted; entries of another application go on
+    the next touch, without a release; a memoized None is a hit; and
+    SESSION_CACHE_HITS counts per-corpus derivation hits only — not
+    table loads or dedup probe verdicts."""
+    from pyspark.storagelevel import StorageLevel
+
+    from pydatalake_spark import session
+    from pydatalake_spark.operators.dedup import _auto_hot_keys
+    from pydatalake_spark.queries.tables import load_table
+    from pydatalake_spark.queries.text import SESSION_CACHE_HITS, corpus_memo
+
+    monkeypatch.setattr(session, "_MEMO", {})
+    store = session._MEMO
+
+    class Stopped:
+        released = False
+
+        def unpersist(self):
+            Stopped.released = True
+
+    store[("app-stopped", "table", SF_DIR, "documents")] = (None, Stopped())
+    bounded = spark.range(7).cache()
+    memo = session.memo
+    assert memo(spark, ("policy", "bounded"), lambda: bounded) is bounded
+    assert [k[0] for k in store] == [spark.sparkContext.applicationId]
+    assert not Stopped.released
+
+    stale = spark.range(11).cache()
+    memo(spark, ("policy", "stamped"), lambda: stale, stamp=1)
+    fresh = spark.range(13)
+    assert memo(spark, ("policy", "stamped"), lambda: fresh, stamp=2) is fresh
+    assert stale.storageLevel == StorageLevel.NONE
+    assert bounded.storageLevel != StorageLevel.NONE
+
+    memo(spark, ("policy", "used"), lambda: "first build")
+    for i in range(session.MEMO_MAX + 50):
+        memo(spark, ("policy", i), lambda i=i: i)
+        memo(spark, ("policy", "used"), lambda: "rebuilt")  # a hit
+        assert len(store) <= session.MEMO_MAX
+    assert bounded.storageLevel == StorageLevel.NONE
+    assert ("policy", "bounded") not in {k[1:] for k in store}
+    assert memo(spark, ("policy", "used"), lambda: "rebuilt") == "first build"
+
+    builds = []
+    for _ in range(2):
+        assert memo(spark, ("policy", "none"), lambda: builds.append(1)) is None
+    assert builds == [1]
+
+    h0 = SESSION_CACHE_HITS["n"]
+    d = load_table(spark, SF_DIR, "documents")
+    assert load_table(spark, SF_DIR, "documents") is d
+    assert _auto_hot_keys(d, ["doc_id"]) is None  # 500 docs: no hot key
+    n = len(store)
+    assert _auto_hot_keys(d, ["doc_id"]) is None
+    assert len(store) == n and any(k[1] == "dedup_probe" for k in store)
+    assert SESSION_CACHE_HITS["n"] == h0
+    corpus_memo(spark, "policy", SF_DIR, lambda: "derived")
+    corpus_memo(spark, "policy", SF_DIR, lambda: "derived")
+    assert SESSION_CACHE_HITS["n"] == h0 + 1
+
+
+def test_corpus_dir_rewrite_serves_new_files(spark, tmp_path):
+    """Replacing the files under a corpus dir's ``documents.parquet/``
+    mid-session serves the new rows to a plain table query AND to a
+    per-corpus derivation. Table loads and derivations share one
+    freshness stamp: a rebuilt derivation must not read a memoized
+    table plan whose file listing names deleted files
+    (``FAILED_READ_FILE.FILE_NOT_EXIST``)."""
+    import os
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pydatalake_spark.queries import QUERIES
+
+    sf = str(tmp_path / "corpus")
+    docs = os.path.join(sf, "documents.parquet")
+    os.makedirs(docs)
+
+    def write(part: str, n: int) -> None:
+        for old in os.listdir(docs):
+            os.remove(os.path.join(docs, old))
+        table = pa.table(
+            {
+                "doc_id": pa.array(range(n), pa.int64()),
+                "text": [f"{part} doc {i} holds the text {i * 7}" for i in range(n)],
+            }
+        )
+        pq.write_table(table, os.path.join(docs, f"{part}.parquet"))
+
+    def counts() -> tuple[int, int]:
+        return (
+            QUERIES["exact_dedup_docs"](spark, sf).count(),
+            QUERIES["simhash_fingerprints"](spark, sf).count(),
+        )
+
+    write("part-a", 40)
+    assert counts() == (40, 40)
+    time.sleep(0.01)  # ensure mtime_ns moves even on coarse filesystems
+    write("part-b", 80)
+    assert counts() == (80, 80)
 
 
 def test_corpus_datacard_avg_quality_null_semantics(spark, tmp_path):

@@ -637,13 +637,15 @@ def test_fused_audit_plan_single_wh_shuffle(spark):
 def test_decon_screen_cold_build_is_fused(spark):
     """The shared `_decon_screen` verdict build itself: the bloom probe
     (ONE MapInPandas) maps over the exact-screen join's own output — one
-    fused pass. Asserted on a COLD build: the screen cache dict and
+    fused pass. Asserted on a COLD build: the screen's session memo entry and
     Spark's relation cache are cleared first, so neither materialized-
     stage elision nor CacheManager plan-equal substitution can hide the
     build subtree (the consumers' test above stays cache-state-agnostic)."""
     import pydatalake_spark.queries.text as TX
+    from pydatalake_spark import session
 
-    TX._DECON_SCREEN_CACHE.clear()
+    for k in [k for k in session._MEMO if k[1] == "decon_screen"]:
+        del session._MEMO[k]
     spark.catalog.clearCache()
     scr = TX._decon_screen(spark, SF)
     p = scr._jdf.queryExecution().executedPlan().toString()
