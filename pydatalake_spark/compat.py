@@ -34,7 +34,7 @@ from pydatalake_spark.datalake.catalog import DataLake
 from pydatalake_spark.dataset.table import DataLakeTable
 from pydatalake_spark.dataset.timefly import TimeFly
 from pydatalake_spark.dataset.writer import write_dataset
-from pydatalake_spark.session import get_spark
+from pydatalake_spark.session import cache_once, get_spark
 from pydatalake_spark.sources.filesystem import configure_filesystem, remote_uri
 
 __all__ = [
@@ -115,8 +115,6 @@ class Reader(DataLakeTable):
     def load_pa_table(self, name: str | None = None) -> "Reader":
         """≙ ``reader.py:257-290`` — eager load; here: cache + register."""
         self.load_dataset(name)
-        from pydatalake_spark.session import cache_once
-
         self._df = cache_once(self.df)
         return self
 

@@ -21,10 +21,11 @@ first pass, and it's one explode + groupBy).
   Catalyst ``aggregate`` over the bound symbol column — no Python in the
   executor path; the driver sees only the k argmax scalars.
 
-Scale: iterations operate on the word table (small by Zipf's law);
-``localCheckpoint`` every few merges truncates the growing lineage the
-same way the connected-components loop does (operators/cluster.py). The
-reference engine has no tokenizer support (SURVEY.md §2 gap list).
+Scale: iterations operate on the word table (small by Zipf's law); a
+checkpoint every ``CHECKPOINT_EVERY`` merges truncates the growing
+lineage through the session's ``_ckpt``/``_reap`` pair, like the
+connected-components loop (operators/cluster.py). The reference engine
+has no tokenizer support (SURVEY.md §2 gap list).
 """
 
 from __future__ import annotations
@@ -34,6 +35,9 @@ from pyspark.sql import functions as F
 
 from pydatalake_spark.functions.text import tokenize
 from pydatalake_spark.operators.scaling import fan_out
+from pydatalake_spark.session import _ckpt, _reap
+
+CHECKPOINT_EVERY = 4  # merges between lineage truncations
 
 
 def word_freqs(
@@ -102,14 +106,15 @@ def train_bpe(
     df: DataFrame,
     num_merges: int = 10,
     text_col: str = "text",
-    checkpoint_every: int = 4,
 ) -> list[tuple[str, str]]:
     """Learn ``num_merges`` BPE merge rules from the corpus; returns them
-    in order. Deterministic: argmax by (count desc, pair asc)."""
+    in order. Deterministic: argmax by (count desc, pair asc). Every
+    checkpoint generation is reaped once the next one has materialized,
+    and the last one on return: the merges are a plain list."""
     words = word_freqs(df, text_col).select(
         "freq", _chars(F.col("word")).alias("sym")
     )
-    words = words.localCheckpoint()
+    words, ids = _ckpt(words)
     merges: list[tuple[str, str]] = []
     for it in range(num_merges):
         top = (
@@ -128,8 +133,11 @@ def train_bpe(
         a, b = top[0].pair.split(" ", 1)
         merges.append((a, b))
         words = words.select("freq", _merge_pair(F.col("sym"), a, b).alias("sym"))
-        if (it + 1) % checkpoint_every == 0:
-            words = words.localCheckpoint()
+        if (it + 1) % CHECKPOINT_EVERY == 0:
+            words, new_ids = _ckpt(words)
+            _reap(words, ids)
+            ids = new_ids
+    _reap(words, ids)
     return merges
 
 

@@ -30,49 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _ckpt(df: DataFrame, eager: bool = True) -> tuple[DataFrame, list[int]]:
-    """``localCheckpoint`` plus the storage-registered RDD id the call
-    created, so the caller can ``_reap`` it the moment no plan
-    references it. With ``eager=False`` the caller must run an action
-    that computes EVERY partition before relying on the truncated
-    lineage (the CC loop's fused convergence count does exactly that).
-
-    Why explicit: localCheckpoint blocks live in executor storage
-    (memory, spilling to DISK) until the ContextCleaner happens to GC the
-    Python-unreachable RDD — in an iterative loop that lag accumulates
-    one data-sized generation per round, and the round-7 1000x probe
-    filled the single local disk exactly this way ("No space left on
-    device" inside localCheckpoint; r7 VERDICT item 2). The id is read
-    DIRECTLY off the checkpointed frame — the analyzed plan of a
-    localCheckpointed Dataset is the ``LogicalRDD`` wrapping the one
-    persisted RDD — so concurrent driver jobs registering their own RDDs
-    in the same window can never be misattributed and reaped (r8 ADVICE:
-    the old ``getPersistentRDDs`` set-diff could grab a neighbor's
-    checkpoint, whose blocks ARE its lineage and are unrecoverable)."""
-    out = df.localCheckpoint(eager=eager)
-    try:
-        ids = [int(out._jdf.queryExecution().analyzed().rdd().id())]
-    except Exception:  # pragma: no cover - py4j interop failure → no reaping
-        ids = []
-    return out, ids
-
-
-def _reap(df: DataFrame, ids: list[int]) -> None:
-    """Drop the checkpoint blocks behind the given RDD ids (non-blocking).
-    Safe ONLY once every plan that could read them has materialized —
-    localCheckpoint data IS the lineage and cannot be recomputed."""
-    if not ids:
-        return
-    sc = df.sparkSession.sparkContext
-    try:
-        m = sc._jsc.getPersistentRDDs()
-        for i in ids:
-            r = m.get(i)
-            if r is not None:
-                r.unpersist(False)
-    except Exception:  # pragma: no cover - reaping is best-effort
-        pass
+from pydatalake_spark.session import _ckpt, _reap
 
 
 def connected_components(
@@ -100,9 +58,8 @@ def connected_components(
         # label (every node has exactly one self row): convergence then
         # reads a `_changed` flag off the checkpointed result — a
         # shuffle-free scan of cached blocks — instead of re-joining the
-        # new generation against the old one (r12 optimization: the old
-        # per-round convergence join was a second keyed exchange pair
-        # per iteration; guide §2.4 — remove shuffles outright).
+        # new generation against the old one (a second keyed exchange
+        # pair per round).
         neighbor = (
             edges.join(labels, edges.dst == labels.node)
             .select(F.col("src").alias("node"), "cluster_id")
@@ -123,15 +80,13 @@ def connected_components(
             .drop("_old"),
             eager=False,
         )
-        # r13 (VERDICT item 5, improved): the convergence scan IS the
-        # materializing action. The full (un-limited) count computes
-        # EVERY partition of the lazily-checkpointed RDD — persisting
-        # its blocks and finalizing the lineage truncation — and returns
-        # the changed count off the same pass: ONE job per round instead
-        # of eager-checkpoint + scan (two). The flag is honestly
-        # computed every round again, so max_iter=1 on an
-        # already-converged (e.g. empty-edge) input returns instead of
-        # raising (ADVICE r12), and the r12 round-1 skip is obsolete.
+        # the convergence scan IS the materializing action: the full
+        # (un-limited) count computes EVERY partition of the lazily
+        # checkpointed RDD — persisting its blocks and finalizing the
+        # lineage truncation — and returns the changed count off the
+        # same pass, one job per round. The flag is computed every
+        # round, so max_iter=1 on an already-converged (e.g. empty-edge)
+        # input returns instead of raising.
         changed = new_labels.filter("_changed").count()
         # the changed-count was the last reader of the PREVIOUS label
         # generation — reap its blocks before the next round allocates
@@ -275,7 +230,6 @@ def connected_components_star(
         new_fp = fingerprint(new_edges)
         # the fingerprint was the last reader through the new checkpoint;
         # the previous edge generation is now unreferenced — reap it
-        # (r7 VERDICT item 2: generations otherwise accumulate on disk)
         _reap(new_edges, edge_ids)
         edges, edge_ids = new_edges, new_ids
         if new_fp == fp:
@@ -461,10 +415,8 @@ def label_propagation(
         # it is safe for ANY orderable label type (the label itself is
         # never negated), and struct comparison is field-lexicographic,
         # so the minimum is exactly the row_number()-over-(c DESC, nl
-        # ASC) pick. r12 optimization (guide §2.3/§2.4): the argmax is
-        # a partial-aggregable reduction — map-side combine + no
-        # per-node sort — where the old window form shuffled every
-        # (node, nl, c) row into a node-keyed SORT just to keep rank 1.
+        # ASC) pick, as a partial-aggregable reduction: map-side
+        # combine and no node-keyed sort of every (node, nl, c) row.
         best = (
             counted.groupBy("node")
             .agg(

@@ -291,11 +291,8 @@ def near_dup_pairs(
     Only candidate pairs (already pruned by LSH) pay the set-compare cost;
     shingle arrays are joined back by id so the band join stayed narrow.
     The signature table is computed ONCE and shared (cached) between the
-    band join and the verification join. Cache lifetime: no safe
-    unpersist point exists inside a lazily-returned plan, so the entry
-    relies on Spark's LRU block eviction (MEMORY_AND_DISK blocks degrade
-    to recompute, never OOM); sweep-style services should
-    spark.catalog.clearCache() between batches.
+    band join and the verification join. Cache lifetime: the session
+    store's materialization rule (``session.py``).
 
     ``signatures`` optionally injects a precomputed
     ``minhash_signatures``-shaped table (id, shingles, mh_*) already
@@ -303,9 +300,7 @@ def near_dup_pairs(
     — restricting rows before or after signing yields identical values —
     so a pipeline that already holds the corpus-level cached signature
     table can semi-join it down to its survivor set instead of
-    re-shingling the survivors from text (r8 VERDICT item 7:
-    pipeline_clean_corpus's internal minhash pass re-shingled the
-    quality-filtered set the corpus cache already covered).
+    re-shingling the survivors from text.
     """
     if signatures is not None:
         sig = signatures

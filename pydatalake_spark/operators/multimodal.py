@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pydatalake_spark.session import cache_once
+
 _DECODE_TIERS = ("fake", "error", "real")
 
 
@@ -530,17 +532,15 @@ def _banded_hashes(df: DataFrame, decode_stub: str = "fake") -> DataFrame:
     guide §8 lightweight proxy (the image payload never rides any of
     this).
 
-    r13: the r12 plan-identity trick deduplicated the MapInPandas
-    decode+hash pass only in the SHUFFLE-join regime (ReuseExchange); in
-    the broadcast regime the streamed side has no exchange to reuse and
-    the corpus was decoded TWICE per query (ADVICE r12). Caching the
-    fingerprint table makes the decode run once in every regime
-    (eviction degrades to recompute); the band explode over the cached
-    blocks is shift/mask expressions, cheap per side. (Caching the
-    exploded band table pre-partitioned instead measured +0.15s warm at
-    sf0.1 — 4x the cache bytes — and freezes AQE skew splitting.)"""
-    from pydatalake_spark.session import cache_once
-
+    Plan identity deduplicates the MapInPandas decode+hash pass only in
+    the SHUFFLE-join regime (ReuseExchange); in the broadcast regime the
+    streamed side has no exchange to reuse and the corpus would be
+    decoded TWICE per query. Caching the fingerprint table makes the
+    decode run once in every regime (eviction degrades to recompute);
+    the band explode over the cached blocks is shift/mask expressions,
+    cheap per side. (Caching the exploded band table pre-partitioned
+    instead measured +0.15s warm at sf0.1 — 4x the cache bytes — and
+    freezes AQE skew splitting.)"""
     h = cache_once(perceptual_hashes(df, decode_stub=decode_stub))
     bands = h.select(
         "media_id",

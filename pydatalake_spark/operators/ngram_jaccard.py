@@ -161,10 +161,8 @@ def ngram_jaccard_pairs(
     this knob is the difference between an operator that survives 100 TB
     and one that doesn't.
 
-    Cached intermediates (inverted index / shingle sets) rely on Spark's
-    LRU block eviction for reclamation — MEMORY_AND_DISK degrades to
-    recompute, never OOM; sweep-style services should
-    spark.catalog.clearCache() between batches.
+    Cached intermediates (inverted index / shingle sets) live under the
+    session store's materialization rule (``session.py``).
     """
     sets = shingle_sets(df, id_col, text_col, shingle_size)
     inv = sets.select(F.col(id_col), F.explode("sset").alias("shingle"))
@@ -174,7 +172,7 @@ def ngram_jaccard_pairs(
             max_df,
         )
         inv = inv.join(F.broadcast(hot), on="shingle", how="left_anti")
-        # r13: cache PRE-PARTITIONED on the join key — InMemoryTableScan
+        # cache PRE-PARTITIONED on the join key — InMemoryTableScan
         # preserves the cached plan's output partitioning, so both
         # self-join sides read the index exchange-free in the shuffle
         # regime (the one inverted-index shuffle runs inside the cache

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pydatalake_spark.functions.text import tokenize
+from pydatalake_spark.session import cache_once
 
 
 def _doc_bigrams(
@@ -80,9 +81,9 @@ def bigram_surprisal(
     single-token documents never enters any p(w2|w1) and no longer costs
     a second tokenize+explode of the whole corpus just to be counted).
 
-    ``cache_model=True`` persists the bigram-count table
-    (MEMORY_AND_DISK): it is TYPE-count bounded (Zipf: distinct bigrams
-    << bigram tokens — a model table, not the corpus), and persisting it
+    ``cache_model=True`` caches the bigram-count table (``cache_once``,
+    MEMORY_AND_DISK): it is TYPE-count bounded (Zipf: distinct bigrams
+    << bigram tokens — a model table, not the corpus), and caching it
     collapses the ctx/vocab branches to cache reads so the corpus is
     tokenized at most twice per run (the model fill + the per-doc scoring
     side) instead of once per consumer branch. Leave False where the
@@ -92,9 +93,7 @@ def bigram_surprisal(
     db = _doc_bigrams(docs, id_col, text_col)
     bg = db.groupBy("w1", "w2").agg(F.sum("c_doc").alias("c_bg"))
     if cache_model:
-        from pyspark import StorageLevel
-
-        bg = bg.persist(StorageLevel.MEMORY_AND_DISK)
+        bg = cache_once(bg)
     ctx = bg.groupBy("w1").agg(F.sum("c_bg").alias("c_ctx"))
     vocab = (
         bg.select("w1")
@@ -159,7 +158,7 @@ def token_pmi(
     Returns (w1, w2, n_pair BIGINT, pmi DOUBLE) with a deterministic
     (pmi DESC, w1, w2) top-N — TakeOrderedAndProject, no global sort.
 
-    ``cache_model=True`` persists the pair-count table (MEMORY_AND_DISK,
+    ``cache_model=True`` caches the pair-count table (``cache_once``,
     type-count bounded) so the candidate/marginal/total branches read one
     materialization and the corpus is tokenized ONCE per run; see
     ``bigram_surprisal`` for when to leave it off.
@@ -167,9 +166,7 @@ def token_pmi(
     db = _doc_bigrams(docs, id_col, text_col)
     bg = db.groupBy("w1", "w2").agg(F.sum("c_doc").alias("c12"))
     if cache_model:
-        from pyspark import StorageLevel
-
-        bg = bg.persist(StorageLevel.MEMORY_AND_DISK)
+        bg = cache_once(bg)
     pair = bg.filter(F.col("c12") >= min_count)
     left = bg.groupBy("w1").agg(F.sum("c12").alias("c1"))
     right = bg.groupBy("w2").agg(F.sum("c12").alias("c2"))

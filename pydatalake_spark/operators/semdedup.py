@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pydatalake_spark.functions.vector import dot, l2_norm, to_double_array
+from pydatalake_spark.session import _ckpt, _reap
 
 
 def _default_centroids(
@@ -339,8 +340,6 @@ def split_oversized_cells(
     inside a hot cell is missed) — the standard recall trade for bounded
     per-task work.
     """
-    from pydatalake_spark.operators.cluster import _reap
-
     prev_max = None
     prev_ids: list[int] = []
     for _ in range(max_rounds):
@@ -349,12 +348,9 @@ def split_oversized_cells(
             break
         # the new generation's eager checkpoint has materialized and the
         # size count was the previous generation's last reader — reap its
-        # data-sized (id, cell, dv) blocks now instead of letting up to
-        # max_rounds generations pile up in executor storage until
-        # ContextCleaner GC (r8 ADVICE; same failure class as r7's
-        # 1000x disk fill, fixed the same way as cluster.py's loops).
-        # Only generations THIS loop checkpointed are ever reaped — the
-        # caller's input wv enters with prev_ids empty.
+        # data-sized (id, cell, dv) blocks now, so at most two
+        # generations are ever live. Only generations THIS loop
+        # checkpointed are reaped: the caller's wv enters with no ids.
         _reap(new_wv, prev_ids)
         wv, prev_ids = new_wv, new_ids
         if prev_max is not None and hot_max >= prev_max:
@@ -372,8 +368,6 @@ def _split_cells_once(
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
-
-    from pydatalake_spark.operators.cluster import _ckpt
 
     sizes = wv.groupBy("cell").agg(F.count(F.lit(1)).alias("_n"))
     hot = [
@@ -444,8 +438,8 @@ def _split_cells_once(
 
     # each round's output must MATERIALIZE before the next round counts
     # it; the checkpoint also keeps the recursive plan from nesting
-    # mapInPandas stages max_rounds deep. _ckpt returns the block ids so
-    # split_oversized_cells can reap superseded generations (r8 ADVICE).
+    # mapInPandas stages max_rounds deep; the block ids let
+    # split_oversized_cells reap superseded generations.
     split, ids = _ckpt(wv.mapInPandas(reassign, out_schema))
     return split, max(n for _, n in hot), ids
 

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from pydatalake_spark.functions.text import tokenize
 from pydatalake_spark.operators.scaling import fan_out
+from pydatalake_spark.session import cache_once
 
 SIMHASH_BITS = 64
 
@@ -211,8 +212,6 @@ def simhash_near_dup(
     # (Deliberately not cached pre-partitioned: AQE cannot skew-split a
     # cached scan, and hot band values are the skew hazard; measured
     # +0.13s warm at sf0.1 for zero broadcast-regime benefit.)
-    from pydatalake_spark.session import cache_once
-
     bb = cache_once(bb)
     x, y = bb.alias("__sa"), bb.alias("__sb")
     hd = F.bit_count(

@@ -2632,12 +2632,7 @@ def multires_rollup(spark: SparkSession, sf: str) -> DataFrame:
     # cache the hour tier: it feeds BOTH union branches, and without
     # materialization Spark re-plans (and re-scans raw) per branch —
     # the whole point of the cascade is one raw scan for the pyramid.
-    # Lifetime: the entry stays in the CacheManager after the result is
-    # consumed (a returned lazy plan has no safe unpersist point);
-    # storage-memory reclamation relies on Spark's LRU block eviction —
-    # MEMORY_AND_DISK blocks are evictable, so a long session degrades
-    # to recompute, never to OOM. Long-running services that sweep many
-    # such plans should spark.catalog.clearCache() between batches.
+    # Lifetime: the session store's materialization rule (session.py).
     hr = (
         e.groupBy(F.date_trunc("hour", "ts").alias("bucket"))
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("tv"))

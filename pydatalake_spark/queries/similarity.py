@@ -23,6 +23,7 @@ from pydatalake_spark.operators.similarity import (
 )
 from pydatalake_spark.queries.tables import load_table as _t
 from pydatalake_spark.queries.text import corpus_memo
+from pydatalake_spark.session import cache_once
 
 QUERIES: dict = {}
 ORACLE: dict = {}
@@ -1068,8 +1069,6 @@ def _pq_encoded(spark: SparkSession, sf: str):
     once, search many: the ADC/recall queries measure the SEARCH path
     over a standing code table, as a production index would."""
     from pydatalake_spark.operators.pq import pq_encode_numpy
-    from pydatalake_spark.session import cache_once
-
     return corpus_memo(
         spark,
         "pq_encoded",
@@ -1115,8 +1114,6 @@ def pq_codebooks_q(spark: SparkSession, sf: str) -> DataFrame:
     PQ training is train-once/reuse-many, and rebuilding the plan would
     bill Catalyst analysis to every caller."""
     from pydatalake_spark.operators.pq import train_pq_long_numpy
-    from pydatalake_spark.session import cache_once
-
     return corpus_memo(
         spark,
         "pq_long",
@@ -1207,8 +1204,6 @@ def ivfadc_topk_q(spark: SparkSession, sf: str) -> DataFrame:
     tests/test_pq.py."""
     from pydatalake_spark.operators.pq import ivfadc_encode_numpy, ivfadc_topk
     from pydatalake_spark.operators.similarity import train_ivf_centroids
-    from pydatalake_spark.session import cache_once
-
     def build():
         cb = _pq_codebooks(spark, sf)
         coarse = corpus_memo(

@@ -2180,11 +2180,9 @@ def _decon_exl(spark: SparkSession, sf: str) -> DataFrame:
     decontamination query starts from. ONE cached DataFrame shared by
     the exact screen, the bloom screen, and the audit (each of which has
     3-4 internal consumers of it too), so the expensive pass runs once
-    per corpus, not once per consumer — and repeated ``.cache()`` calls
-    on structurally-equal plans (the CacheManager warning in the r5
-    bench tail) disappear, because all consumers hold the SAME object.
-    LRU-evictable under memory pressure like every cache here (see
-    operators/minhash.py note)."""
+    per corpus, not once per consumer, and all consumers hold the SAME
+    object. Its lifetime is the session store's materialization rule
+    (``session.py``)."""
     from pydatalake_spark.functions.split import hash_bucket
     from pydatalake_spark.functions.text import shingles
 

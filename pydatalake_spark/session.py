@@ -12,9 +12,27 @@ Replaces the reference's per-object DuckDB connection management
   oracle parity).
 - zstd parquet compression default (reference default: ``writer.py:33``).
 
+Materialization rule: this module owns every cache and checkpoint the
+library makes. ``.cache()``, ``.persist()`` and ``localCheckpoint`` are
+called nowhere else, except a persist scoped to one call and released
+in its ``finally``.
+
+1. Caches. ``cache_once`` registers each cached plan in the ``memo``
+   store, so every cache the library makes is under the store's bound
+   and is unpersisted when the store drops it.
+2. Clearing. A hit on a DataFrame that was cached when stored, but was
+   dropped outside the store since (a catalog-wide cache clear,
+   ``unpersist``), is cached again before it is returned. Callers never
+   need to clear caches, and one who does loses no later hit.
+3. Checkpoints. An iterative loop truncates lineage with ``_ckpt`` and
+   hands each superseded generation, and its last one once nothing reads
+   it, to ``_reap``. Checkpoint blocks are lineage, not a cache: they
+   never enter the store and the bound never drops them.
+
 Session memo rule: every Python-side memo (table loads, per-corpus
-derivations, the dedup hot-key probe) lives in the one store behind
-``memo``; a module-level memo dict of its own is never added.
+derivations, the dedup hot-key probe, cached plans) lives in the one
+store behind ``memo``; a module-level memo dict of its own is never
+added.
 
 - Key: ``(applicationId, namespace, *rest)``. Entries of any other
   application are deleted on the next touch; their plans are bound to a
@@ -33,7 +51,7 @@ import os
 from collections.abc import Callable, Hashable
 from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -88,24 +106,34 @@ def stop_spark() -> None:
         active.stop()
 
 
-def cache_once(df):
-    """``df.cache()`` unless an EQUAL PLAN is already cached.
+def _is_cached(df: DataFrame) -> bool:
+    sl = df.storageLevel  # resolved by plan equality in the CacheManager
+    return sl.useMemory or sl.useDisk
 
-    ``DataFrame.storageLevel`` resolves through the CacheManager by plan
-    equality, so this also detects a cache registered via a *different*
-    DataFrame object building the same plan — exactly the case where a
-    bare ``.cache()`` logs ``CacheManager: Asked to cache already cached
-    data`` and silently double-registers. Shared helpers that several
-    queries call with identical inputs (signature tables, inverted
-    indexes, shingle tables) cache through this."""
-    sl = df.storageLevel
-    if not (sl.useMemory or sl.useDisk):
-        return df.cache()
+
+def cache_once(df: DataFrame) -> DataFrame:
+    """``df``, cached unless an EQUAL PLAN is cached already, with the
+    plan registered in the ``memo`` store (rule 1). The entry is keyed
+    by the plan's semantic hash and stamped with the canonical plan, so
+    a plan-equal DataFrame built elsewhere hits it and no plan is cached
+    twice (a bare ``.cache()`` would log ``Asked to cache already cached
+    data``). An entry whose cache was dropped outside the store is
+    re-cached from ``df``, never from the stored frame: an equal plan
+    over a rewritten directory lists different files."""
+    if not _is_cached(df):
+        df.cache()
+    plan = df._jdf.queryExecution().normalized()
+    memo(
+        df.sparkSession,
+        ("cache", plan.semanticHash()),
+        lambda: df,
+        stamp=plan.canonicalized(),
+    )
     return df
 
 
 MEMO_MAX = 256
-_MEMO: dict[tuple, tuple[Hashable, Any]] = {}
+_MEMO: dict[tuple, tuple[Hashable, Any, bool]] = {}
 
 
 def _release(value) -> None:
@@ -127,16 +155,19 @@ def memo(
     """The value memoized under ``key`` (``(namespace, *rest)``) for this
     application, or ``build()``'s result stored there. A hit with the
     same ``stamp`` returns the stored value (and counts in ``hits["n"]``
-    when given); a different stamp releases the stored value and
-    rebuilds. The full rule is in the module docstring."""
+    when given), cached again first if it was cached when stored (rule
+    2); a different stamp releases the stored value and rebuilds. The
+    full rule is in the module docstring."""
     app_id = spark.sparkContext.applicationId
     for k in [k for k in _MEMO if k[0] != app_id]:
         del _MEMO[k]
     full = (app_id, *key)
     if full in _MEMO:
-        old_stamp, value = _MEMO.pop(full)
+        old_stamp, value, cached = _MEMO.pop(full)
         if old_stamp == stamp:
-            _MEMO[full] = (stamp, value)  # now the most recently used
+            _MEMO[full] = (stamp, value, cached)  # now the most recently used
+            if cached and not _is_cached(value):
+                value.cache()
             if hits is not None:
                 hits["n"] += 1
             return value
@@ -144,5 +175,43 @@ def memo(
     value = build()
     while len(_MEMO) >= MEMO_MAX:
         _release(_MEMO.pop(next(iter(_MEMO)))[1])
-    _MEMO[full] = (stamp, value)
+    cached = isinstance(value, DataFrame) and _is_cached(value)
+    _MEMO[full] = (stamp, value, cached)
     return value
+
+
+def _ckpt(df: DataFrame, eager: bool = True) -> tuple[DataFrame, list[int]]:
+    """``localCheckpoint`` plus the id of the one RDD it persisted, for
+    ``_reap`` once no plan reads it (rule 3). With ``eager=False`` the
+    caller must run an action that computes EVERY partition before
+    relying on the truncated lineage.
+
+    Checkpoint blocks stay in executor storage (spilling to disk) until
+    the ContextCleaner collects the Python-unreachable RDD, so a loop
+    that does not reap keeps one data-sized generation per round and can
+    fill the local disk. The id is read off the checkpointed frame (its
+    analyzed plan is the ``LogicalRDD`` over the persisted RDD), never
+    by diffing the set of persistent RDDs: a concurrent job's checkpoint
+    is that job's lineage and must never be reaped by mistake."""
+    out = df.localCheckpoint(eager=eager)
+    try:
+        ids = [int(out._jdf.queryExecution().analyzed().rdd().id())]
+    except Exception:  # pragma: no cover - py4j interop failure → no reaping
+        ids = []
+    return out, ids
+
+
+def _reap(df: DataFrame, ids: list[int]) -> None:
+    """Drop the checkpoint blocks behind ``ids`` (non-blocking). Safe
+    only once every plan that reads them has materialized: checkpoint
+    data is the lineage and cannot be recomputed."""
+    if not ids:
+        return
+    try:
+        rdds = df.sparkSession.sparkContext._jsc.getPersistentRDDs()
+        for i in ids:
+            r = rdds.get(i)
+            if r is not None:
+                r.unpersist(False)
+    except Exception:  # pragma: no cover - reaping is best-effort
+        pass

@@ -21,6 +21,18 @@ def spark():
     s.stop()
 
 
+def jobs_in(spark, group, fn):
+    """Run ``fn`` under a fresh job group; return (result, #jobs fired)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture()
 def tmpdir_path():
     d = tempfile.mkdtemp(prefix="pydatalake_test_")

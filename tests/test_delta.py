@@ -16,6 +16,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from pydatalake_spark.sources import delta as dl
+from tests.conftest import jobs_in
 
 
 def _mkdf(spark, rows):
@@ -198,18 +199,6 @@ def test_foreign_non_hive_layout_falls_back_to_log_values(spark, table):
     assert got == [(2, "b", 2.0)]
 
 
-def _jobs_in(spark, group, fn):
-    """Run ``fn`` under a fresh job group; return (result, #jobs fired)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_snapshot_scan_fires_no_listing_job(spark, table):
     # more log-listed files than Spark's parallel-listing threshold (32):
     # the scan must take its file statuses on the driver, not in a job
@@ -224,7 +213,7 @@ def test_snapshot_scan_fires_no_listing_job(spark, table):
     caller = spark.conf.get(key, None)
     try:
         spark.conf.unset(key)
-        df, n = _jobs_in(
+        df, n = jobs_in(
             spark, "scan-unset", lambda: dl.read_delta(spark, table)
         )
         assert n == 0
@@ -232,13 +221,13 @@ def test_snapshot_scan_fires_no_listing_job(spark, table):
         assert _collect(df) == sorted(rows)
 
         spark.conf.set(key, "7")
-        df, n = _jobs_in(
+        df, n = jobs_in(
             spark, "scan-set", lambda: dl.read_delta(spark, table)
         )
         assert n == 0
         assert spark.conf.get(key, None) == "7"
 
-        (_, deleted), n = _jobs_in(
+        (_, deleted), n = jobs_in(
             spark,
             "delete-dv",
             lambda: dl.delete_rows_dv(spark, table, "k < 5"),

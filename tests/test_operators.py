@@ -827,15 +827,15 @@ def test_connected_components_chain_and_dedup(spark):
     assert kept == [1, 7, 99]
 
 
-def test_cc_checkpoints_reaped_between_iterations(spark):
-    """r7 VERDICT item 2: the iterative loops must REAP localCheckpoint
-    blocks as generations die — the 1000x probe filled the disk with
-    accumulated label/edge generations. A long chain graph forces many
-    iterations; afterwards the persistent-RDD count must be back to ~the
-    pre-call level (+ the returned frame's own checkpoint), not
-    +O(iterations)."""
+def test_cc_checkpoints_reaped_between_iterations(spark, monkeypatch):
+    """The iterative loops must REAP checkpoint blocks as generations
+    die — unreaped label/edge generations accumulate on local disk. A
+    long chain graph forces many iterations; afterwards the
+    persistent-RDD count must be back to ~the pre-call level (+ the
+    returned frame's own checkpoint), not +O(iterations)."""
     import pandas as pd
 
+    from pydatalake_spark.operators.bpe import train_bpe
     from pydatalake_spark.operators.cluster import (
         connected_components,
         connected_components_star,
@@ -871,6 +871,29 @@ def test_cc_checkpoints_reaped_between_iterations(spark):
     before = n_persistent()
     label_propagation(pairs, num_iters=5).collect()
     assert n_persistent() <= before + 2  # edges + final labels
+
+    # BPE training returns a plain list: no checkpoint generation is
+    # left live, neither superseded ones nor the last. The checkpointed
+    # frames are held here, so only a reap, never the ContextCleaner,
+    # can drop their blocks.
+    made = []
+    real = type(pairs).localCheckpoint
+
+    def held(self, *args, **kwargs):
+        made.append(real(self, *args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(type(pairs), "localCheckpoint", held)
+    docs = spark.createDataFrame(
+        pd.DataFrame(
+            {"text": ["the quick brown fox jumps over the lazy dog"] * 3}
+        )
+    )
+    assert len(train_bpe(docs, num_merges=12)) == 12
+    live = spark.sparkContext._jsc.getPersistentRDDs()
+    ids = [int(f._jdf.queryExecution().analyzed().rdd().id()) for f in made]
+    assert len(ids) == 4
+    assert [i for i in ids if live.get(i) is not None] == []
 
 
 def test_quantized_cosine_preserves_neighbors(spark):

@@ -188,6 +188,42 @@ def test_session_memo_policy(spark, monkeypatch):
     corpus_memo(spark, "policy", SF_DIR, lambda: "derived")
     assert SESSION_CACHE_HITS["n"] == h0 + 1
 
+    # cache_once registers in the same store: past the bound, the
+    # oldest cached plan is unpersisted
+    monkeypatch.setattr(session, "MEMO_MAX", 4)
+    frames = [spark.range(100 + i) for i in range(6)]
+    for f in frames:
+        assert session.cache_once(f) is f
+    assert frames[0].storageLevel == StorageLevel.NONE
+    assert frames[-1].storageLevel != StorageLevel.NONE
+    assert len(store) <= 4
+    assert SESSION_CACHE_HITS["n"] == h0 + 1
+
+
+def test_clear_cache_hit_is_cached_again(spark):
+    """``spark.catalog.clearCache()`` costs one refill, not every later
+    call: a memo hit on a DataFrame that was cached when stored is
+    cached again before it is returned, so the same queries fire as
+    many jobs after the clear (once refilled) as before it."""
+    from pyspark.storagelevel import StorageLevel
+
+    from pydatalake_spark.queries import QUERIES
+    from pydatalake_spark.queries.text import _minhash_pairs
+    from tests.conftest import jobs_in
+
+    def run():
+        for name in ("near_dup_pairs", "pipeline_clean_corpus"):
+            QUERIES[name](spark, SF_DIR).count()
+
+    run()
+    _, warm = jobs_in(spark, "clear-cache-warm", run)
+    assert _minhash_pairs(spark, SF_DIR).storageLevel != StorageLevel.NONE
+    spark.catalog.clearCache()
+    assert _minhash_pairs(spark, SF_DIR).storageLevel != StorageLevel.NONE
+    run()
+    _, after = jobs_in(spark, "clear-cache-after", run)
+    assert after == warm
+
 
 def test_corpus_dir_rewrite_serves_new_files(spark, tmp_path):
     """Replacing the files under a corpus dir's ``documents.parquet/``

@@ -537,8 +537,8 @@ def test_split_oversized_cells_bounds_hot_cell(spark):
         (r.vec_id, r.cell) for r in wv.collect()
     )
 
-    # r8 ADVICE: superseded checkpoint generations must be reaped as the
-    # iterative re-split proceeds (the cluster.py _ckpt/_reap discipline)
+    # superseded checkpoint generations must be reaped as the iterative
+    # re-split proceeds (session.py's _ckpt/_reap pair, rule 3)
     # — at most the final returned generation may stay persistent, not
     # one data-sized (id, cell, dv) generation per round
     def n_persistent():
