@@ -69,6 +69,24 @@ def shingles(tokens: Column, k: int = 3) -> Column:
     return F.when(F.size(tokens) >= k, make).otherwise(F.array(joined))
 
 
+def distinct_shingles(text: str | None, k: int = 3) -> list:
+    """Python form of ``array_distinct(shingles(tokenize(text), k))`` for
+    the Arrow passes, value-identical to the column expression: ``F.trim``
+    strips spaces only and ``F.split(" ")`` keeps empty tokens (so
+    ``strip(" ")``/``split(" ")``); a doc shorter than ``k`` tokens is
+    one whole-string shingle; distinct keeps first-occurrence order; a
+    null text gives ``[None]`` (``split(trim(null))`` is null and the
+    short-doc branch wraps it)."""
+    if text is None:
+        return [None]
+    toks = text.strip(" ").split(" ")
+    if len(toks) < k:
+        return [" ".join(toks)]
+    return list(
+        dict.fromkeys(" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1))
+    )
+
+
 def language_scores(tokens: Column) -> dict[str, Column]:
     """Marker-word hit count per language."""
     return {

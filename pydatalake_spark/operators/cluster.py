@@ -13,11 +13,9 @@ Per round: one join (labels onto symmetrized edges) + one min-aggregation
 graph diameter; near-dup graphs are dense little cliques with tiny
 diameters (2-4 rounds in practice). `localCheckpoint` truncates the plan
 each round so lineage doesn't grow O(iterations) — the standard Spark
-iterative-algorithm discipline (GraphX/GraphFrames do the same); for
-adversarially long path-graphs the large-star/small-star variant
-(Kiveris et al., "Connected Components in MapReduce", SoCC'14) converges
-in O(log n) rounds at the cost of two joins per round — diameter is the
-knob to watch, not data volume.
+iterative-algorithm discipline (GraphX/GraphFrames do the same).
+Diameter is the knob to watch, not data volume: an adversarially long
+path graph needs one round per hop and hits ``max_iter``.
 
 Not expressible as one Catalyst plan (a fixpoint loop), but every step is
 a plain DataFrame op, so it distributes like any join — no driver
@@ -44,8 +42,7 @@ def connected_components(
 
     Raises after ``max_iter`` rounds without convergence — near-dup graphs
     converge in a handful; hitting the cap means the edge set is not the
-    clique-soup this is meant for (see module docstring for the
-    O(log n)-round alternative).
+    clique-soup this is meant for.
     """
     edges, edge_ids = _ckpt(_symmetric_edges(pairs, src_col, dst_col))
     labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
@@ -97,8 +94,7 @@ def connected_components(
             return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds — "
-        "graph diameter exceeds the near-dup assumption; use a "
-        "large-star/small-star implementation for long-path graphs"
+        "graph diameter exceeds the near-dup assumption"
     )
 
 
@@ -146,104 +142,6 @@ def _symmetric_edges(
         .select("e.src", "e.dst")
         .distinct()
     )
-
-
-def _canon_edges(e: DataFrame) -> DataFrame:
-    """Undirected edge set canonicalized to (hi, lo), self-loops dropped."""
-    hi = F.greatest(F.col("src"), F.col("dst"))
-    lo = F.least(F.col("src"), F.col("dst"))
-    return (
-        e.select(hi.alias("src"), lo.alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-
-
-def _large_star(e: DataFrame) -> DataFrame:
-    """For each node u: connect every strictly-larger neighbor to
-    min(N(u) ∪ {u})."""
-    sym = e.select("src", "dst").union(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    mins = sym.groupBy("src").agg(
-        F.least(F.min("dst"), F.first("src")).alias("m")
-    )
-    return _canon_edges(
-        sym.filter(F.col("dst") > F.col("src"))
-        .join(mins, "src")
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-    )
-
-
-def _small_star(e: DataFrame) -> DataFrame:
-    """Orient edges (hi, lo); for each hi: connect every smaller-or-equal
-    neighbor AND hi itself to min(N⁻(hi) ∪ {hi})."""
-    mins = e.groupBy("src").agg(F.min("dst").alias("m"))
-    relink = e.join(mins, "src").select(
-        F.col("dst").alias("src"), F.col("m").alias("dst")
-    )
-    self_link = e.join(mins, "src").select("src", F.col("m").alias("dst"))
-    return _canon_edges(relink.union(self_link))
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iter: int = 40,
-) -> DataFrame:
-    """(node, cluster_id) via alternating large-star / small-star rounds
-    (Kiveris et al., SoCC'14) — O(log n) rounds on ANY graph shape, so
-    this is the variant for edge sets whose diameter is not known to be
-    small (the plain `connected_components` is O(diameter), cheaper per
-    round, and the right default for near-dup clique-soups).
-
-    Convergence: the canonical edge set is a fixpoint of both stars —
-    checked with a count + per-edge hash-sum aggregate (one scalar per
-    round, no edge-set comparison join).
-    """
-    edges, edge_ids = _ckpt(
-        _canon_edges(
-            pairs.select(
-                F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-            )
-        )
-    )
-    nodes, _node_ids = _ckpt(
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-
-    def fingerprint(e: DataFrame) -> tuple:
-        # bit_xor, not sum: order-insensitive AND overflow-free under ANSI
-        # (edge sets are distinct, so xor can't self-cancel duplicates)
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h"),
-        ).collect()[0]
-        return row.n, row.h
-
-    fp = fingerprint(edges)
-    for _ in range(max_iter):
-        new_edges, new_ids = _ckpt(_small_star(_large_star(edges)))
-        new_fp = fingerprint(new_edges)
-        # the fingerprint was the last reader through the new checkpoint;
-        # the previous edge generation is now unreferenced — reap it
-        _reap(new_edges, edge_ids)
-        edges, edge_ids = new_edges, new_ids
-        if new_fp == fp:
-            break
-        fp = new_fp
-    else:
-        raise RuntimeError(f"star CC did not converge in {max_iter} rounds")
-
-    # converged: every edge is (member, component-min); roots label themselves
-    labels = edges.select(F.col("src").alias("node"), F.col("dst").alias("cluster_id"))
-    roots = nodes.join(
-        labels.select("node"), "node", "left_anti"
-    ).withColumn("cluster_id", F.col("node"))
-    return labels.unionByName(roots)
 
 
 def pagerank(

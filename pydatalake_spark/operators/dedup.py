@@ -17,47 +17,32 @@ scans in a stable order after ``rel.order(presort)``. Spark's
 ``F.first/last`` in groupBy carry NO ordering guarantee, so the engine
 keeps one row per key by a TOTAL order over ``(presort [, tiebreak])``
 (SURVEY §7.3.2); when ``presort_by`` is absent, all non-key columns are
-the documented deterministic tiebreak. Two physical forms, selected by
-``method`` — both give byte-identical results (equal ordering tuples
-imply identical rows, since the tuple covers every non-key column;
-struct comparison orders a null field BEFORE non-null, matching
-``asc_nulls_first``/``desc_nulls_last``):
+the documented deterministic tiebreak. The physical plan is chosen from
+the input, never by the caller: a sampled hot-key probe
+(``_auto_hot_keys``) runs at plan build time.
 
-- ``method='window'`` (default): ``row_number() OVER (PARTITION BY subset
-  ORDER BY ...)`` keep rn=1 — one shuffle of all rows, one sort per
-  reduce partition. Fastest when key duplication is low (the common
-  dedup case): round-8 measurement at 18M rows (``tools/probe_skew.py``
-  data) put it 2.3x ahead of the agg form on uniform keys (2.5s vs
-  5.9s) because the agg form's map-side SortAggregate double-sorts for
-  a partial aggregation that can't reduce volume when keys are ~unique.
-- ``method='agg'``: ``min_by``/``max_by`` of the full-row struct against
-  the ordering struct — partial-combines BEFORE the exchange, so a hot
-  key forwards one row per map task instead of landing millions of rows
-  on one reducer. This is the skew escape hatch: a window partition is
-  the one shape AQE cannot split (measured 2.4x degradation at a
-  50%-hot key, vs ~1.0 for aggregation). Use when one key holds a
-  double-digit share of rows.
-- ``method='salted'``: the window form's skew escape (r7 VERDICT item 3)
-  — two-phase row_number: local winner per (key, content-hash salt)
-  spreads a hot key across ``salt`` reducers, then the global winner is
-  picked over ≤``salt`` rows/key. Same single-sort-per-partition shape
-  as the window form (no SortAggregate double-sort), so it beats agg on
-  wide rows while matching its skew immunity (probe_skew:
-  window_dedup_salted). Its cost: phase 2 re-shuffles one row per key,
-  which for a mostly-unique corpus is a second data-sized exchange
-  (measured 2.2x window on uniform keys) — generic salting is the
-  right pin only when the hot keys can't be enumerated.
-- ``method='auto'`` (default): sampled hot-key probe; hot keys found →
-  the HOT-SPLIT plan — cold keys run the window form unchanged, rows of
-  the ≤``1/AUTO_HOT_SHARE`` named hot keys take the AGG tier, whose
-  map-side partial min_by/max_by collapses each task's hot rows to
-  ≤|hot| partials before the exchange (no data-sized shuffle or sort on
-  the hot side; probe_skew 60x: ratio 0.83–1.00 vs 2.33–2.50 plain and
-  3–4x faster absolute on the skewed dir). Keys partition across the
-  sides, so the union is the same deterministic winner set.
+- No hot key (the common dedup case): ``row_number() OVER (PARTITION BY
+  subset ORDER BY ...)`` keep rn=1 — one shuffle of all rows, one sort
+  per reduce partition. At low key duplication this beats a
+  ``min_by``/``max_by`` aggregation 2.3x (18M uniform rows, 2.5s vs
+  5.9s): the aggregation's map-side SortAggregate double-sorts for a
+  partial combine that cannot reduce volume when keys are ~unique.
+- Hot keys found: the HOT-SPLIT plan. Cold keys run the window form
+  unchanged; rows of the ≤``1/AUTO_HOT_SHARE`` named hot keys take
+  ``min_by``/``max_by`` of the full-row struct against the ordering
+  struct, whose map-side partial aggregation collapses each task's hot
+  rows to ≤|hot| partials before the exchange. A window partition is
+  the one shape AQE cannot split (2.4x degradation at a 50%-hot key),
+  so the hot side never sorts or shuffles data-sized volume
+  (``tools/probe_skew.py`` at 60x: skew ratio 0.83–1.00 vs 2.33–2.50
+  for the plain window, and 3–4x faster on the skewed dir). Keys
+  partition across the sides, so the union is the same deterministic
+  winner set: equal ordering tuples imply identical rows (the tuple
+  covers every non-key column), and struct comparison orders a null
+  field BEFORE non-null, matching ``asc_nulls_first``/``desc_nulls_last``.
 
-Scale: both forms cost exactly one hash-partition shuffle on ``subset`` —
-the minimum any keyed dedup needs. No driver materialization.
+Scale: both plans cost one hash-partition shuffle on ``subset`` — the
+minimum any keyed dedup needs. No driver materialization.
 """
 
 from __future__ import annotations
@@ -70,11 +55,9 @@ from pyspark.sql import functions as F
 from pydatalake_spark.session import memo
 
 _RN = "__pydatalake_rn__"
-_SALT = "__pydatalake_salt__"
 
-# method='auto' hot-key probe knobs: a sampled key-share check picks
-# window vs salted so callers no longer need to know their skew.
-# Module-level so tests (and unusual corpora) can tune.
+# hot-key probe knobs: a sampled key-share check picks the window or the
+# hot-split plan. Module-level so tests (and unusual corpora) can tune.
 AUTO_PROBE_FRACTION = 0.01
 # a key must own this share of sampled rows to count as hot (a 5%-share
 # key at 18M probe rows measured 1.37x window degradation; uniform keys
@@ -91,7 +74,7 @@ def _auto_hot_keys(
 ) -> list[dict] | None:
     """Sampled hot-key probe: ``None`` when no key is hot (use the plain
     window form), else the list of hot key tuples (≤ ``1/AUTO_HOT_SHARE``
-    entries by construction) for the hot-split salted plan.
+    entries by construction) for the hot-split plan.
 
     One extra job over the SAMPLED KEY COLUMNS only (column-pruned scan;
     the groupBy is a hash aggregation with map-side partials, itself
@@ -140,13 +123,6 @@ def _auto_hot_keys(
     )
 
 
-def _auto_method(df: DataFrame, keys: Sequence[str]) -> str:
-    """Decision summary of the auto probe: ``salted`` when a hot key was
-    found (the auto path then builds the hot-SPLIT salted plan), else
-    ``window``."""
-    return "window" if _auto_hot_keys(df, keys) is None else "salted"
-
-
 def _hot_pred(keys: Sequence[str], hot: list[dict]):
     """Null-safe membership predicate for the hot key tuples (≤20 terms,
     codegen'd; ``eqNullSafe`` keeps null-keyed rows on the cold side
@@ -166,23 +142,14 @@ def distinct_table(
     keep: str = "first",
     presort_by: str | Sequence[str] | None = None,
     postsort_by: str | Sequence[str] | None = None,
-    method: str = "auto",
-    salt: int = 64,
 ) -> DataFrame:
     """Drop duplicate rows; with ``subset``, keep first/last per key group.
 
-    ``method='auto'`` (default, r8 VERDICT item 3) probes a 1% key
-    sample: no hot key → the plain window plan; hot keys found → the
-    HOT-SPLIT plan (the named hot keys take the agg tier — map-side
-    partial min_by/max_by, no data-sized shuffle or sort on the hot
-    side — every cold key keeps the single-sort window). Production
-    callers no longer need to know their skew. Explicit ``'window'`` /
-    ``'agg'`` / ``'salted'`` pin the
-    physical plan (identical results all four ways — see the module
-    docstring for the measured trade-off: window wins at low key
-    duplication; agg and salted are skew-immune; salted keeps the window
-    form's single-sort row_number shape, two-phase: per-(key, salt)
-    local winner, then global winner over ≤``salt`` rows/key).
+    Probes a 1% key sample: no hot key → the plain window plan; hot keys
+    found → the HOT-SPLIT plan (the named hot keys take map-side partial
+    min_by/max_by, no data-sized shuffle or sort on the hot side; every
+    cold key keeps the single-sort window). Both plans return the same
+    rows — see the module docstring for the measured trade-off.
     """
     if subset is None:
         out = df.distinct()
@@ -190,17 +157,6 @@ def distinct_table(
         keys = [subset] if isinstance(subset, str) else list(subset)
         if keep not in ("first", "last"):
             raise ValueError(f"keep must be 'first' or 'last', got {keep!r}")
-        if method not in ("auto", "window", "agg", "salted"):
-            raise ValueError(
-                f"method must be 'auto', 'window', 'agg' or 'salted', "
-                f"got {method!r}"
-            )
-        # r8 ADVICE: salt=0 makes pmod(xxhash64(...), 0) NULL for every
-        # row — phase 1 silently collapses to one (key, NULL) partition
-        # and the skew protection vanishes; salt=1 is the same no-op plus
-        # a redundant second window. Refuse both loudly.
-        if salt < 2:
-            raise ValueError(f"salt must be >= 2, got {salt}")
         presort = (
             [presort_by]
             if isinstance(presort_by, str)
@@ -212,26 +168,10 @@ def distinct_table(
         # (SURVEY §7.3.2 — the documented deterministic-tiebreak rule)
         rest = [c for c in df.columns if c not in keys and c not in presort]
         order_cols = presort + rest
-        hot: list[dict] | None = None
-        if order_cols and method == "auto":
-            hot = _auto_hot_keys(df, keys)
-            method = "window" if hot is None else "hotsplit"
-        def agg_plan(d: DataFrame) -> DataFrame:
-            ordering = F.struct(*order_cols)
-            payload = F.struct(*df.columns)
-            pick = (
-                F.min_by(payload, ordering)
-                if keep == "first"
-                else F.max_by(payload, ordering)
-            )
-            return d.groupBy(*keys).agg(pick.alias("_row")).select("_row.*")
-
         if not order_cols:
             # subset covers every column — keyed keep-first/last degenerates
             # to full-row distinct (there is nothing to order within a key)
             out = df.distinct()
-        elif method == "agg":
-            out = agg_plan(df)
         else:
             ordering_cols = [
                 F.col(c).asc_nulls_first()
@@ -248,60 +188,30 @@ def distinct_table(
                     .drop(_RN)
                 )
 
-            def salted_plan(d: DataFrame) -> DataFrame:
-                # skew escape for the WINDOW form (r7 VERDICT item 3: a
-                # window partition is the one exchange AQE cannot split —
-                # 2.4x degradation at a 50%-hot key). Same algebra as
-                # scaling.salted_agg: the per-key winner under a total
-                # order equals the winner over per-salt local winners, so
-                # phase 1 spreads the hot key across `salt` reducers and
-                # phase 2 sorts <= `salt` rows per key. The salt is a
-                # DETERMINISTIC content hash (not rand()): task retries
-                # re-derive the same buckets, and duplicate full rows are
-                # interchangeable winners anyway.
-                salt_col = F.pmod(
-                    F.xxhash64(*[F.col(c) for c in order_cols]),
-                    F.lit(int(salt)),
+            def agg_plan(d: DataFrame) -> DataFrame:
+                ordering = F.struct(*order_cols)
+                payload = F.struct(*df.columns)
+                pick = (
+                    F.min_by(payload, ordering)
+                    if keep == "first"
+                    else F.max_by(payload, ordering)
                 )
-                w1 = Window.partitionBy(*keys, _SALT).orderBy(*ordering_cols)
-                local = (
-                    d.withColumn(_SALT, salt_col)
-                    .withColumn(_RN, F.row_number().over(w1))
-                    .filter(F.col(_RN) == 1)
-                    .drop(_RN)
-                )
-                w2 = Window.partitionBy(*keys).orderBy(*ordering_cols)
-                return (
-                    local.withColumn(_RN, F.row_number().over(w2))
-                    .filter(F.col(_RN) == 1)
-                    .drop(_RN, _SALT)
-                )
+                return d.groupBy(*keys).agg(pick.alias("_row")).select("_row.*")
 
-            if method == "hotsplit":
-                # the auto path's plan (r9): generic two-phase salting
-                # re-shuffles the ~unique cold-key majority a second time
-                # (measured 2.2x the window form on uniform keys), but the
-                # probe already NAMES the hot keys — so every cold key
-                # keeps the single-sort window plan while the hot rows
-                # take the AGG tier (min_by/max_by, pinned byte-identical
-                # to the window form): its map-side partial aggregation
-                # collapses each task's hot rows to ≤|hot| rows BEFORE
-                # the exchange, so the hot side needs no shuffle-sized
-                # sort or shuffle at all — strictly cheaper than spreading
-                # the hot key across salt reducers and structurally
-                # skew-immune (no reducer ever sees more than |hot| rows
-                # per task's worth of partials). Keys are partitioned
-                # across the two sides, so the union is the same
-                # deterministic winner set (tools/probe_skew.py:
-                # window_dedup_auto).
+            hot = _auto_hot_keys(df, keys)
+            if hot is None:
+                out = window_plan(df)
+            else:
+                # the probe NAMES the hot keys, so only their rows leave
+                # the single-sort window: the aggregation's map-side
+                # partial collapses each task's hot rows to ≤|hot| rows
+                # BEFORE the exchange, and no reducer ever sees more
+                # than that per task. Keys are partitioned across the
+                # two sides, so the union is the same winner set.
                 pred = _hot_pred(keys, hot)
                 out = window_plan(df.filter(~pred)).unionByName(
                     agg_plan(df.filter(pred))
                 )
-            elif method == "salted":
-                out = salted_plan(df)
-            else:
-                out = window_plan(df)
     if postsort_by:
         post = [postsort_by] if isinstance(postsort_by, str) else list(postsort_by)
         out = out.orderBy(*post)

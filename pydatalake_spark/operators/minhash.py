@@ -1,8 +1,9 @@
 """MinHash + LSH near-duplicate detection (beyond-reference north-star op).
 
 Classic shingle → minhash → band → bucket-join pipeline (Broder 1997;
-Leskovec/Rajaraman/Ullman ch.3), expressed entirely in Catalyst array
-expressions — no Python in the hot path:
+Leskovec/Rajaraman/Ullman ch.3). Steps 1–2 run as one Arrow pass per
+batch (``minhash_signatures``); banding and the bucket join are Catalyst
+expressions:
 
 1. token k-gram shingles per document;
 2. ``num_hashes`` MinHash values — the hash family is
@@ -36,7 +37,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pydatalake_spark.functions.text import shingles, tokenize
+from pydatalake_spark.functions.text import distinct_shingles
 from pydatalake_spark.operators.scaling import fan_out
 from pydatalake_spark.session import cache_once
 
@@ -50,19 +51,17 @@ def minhash_signatures(
 ) -> DataFrame:
     """(id, shingles, mh_0..mh_{n-1}) as ONE Arrow `mapInPandas` pass.
 
-    r13 (VERDICT item 6): the r12 form was a Catalyst chain of
-    higher-order functions — `transform(md5)` + one
-    `array_min(transform(substring))` per hash — which Spark interprets
-    PER ARRAY ELEMENT (no whole-stage codegen inside HOF lambdas), the
-    exact pattern the r10 rp numpy tier replaced (guide §4.2). The
-    Arrow tier computes shingling + hashlib.md5 + window-min per batch
-    in the Python worker and measured 1.2× faster at sf0.1 and 2.6× at
-    the 10× replica dir (the HOF chain scales WORSE than the boundary
-    cost). Values are bit-identical — `_minhash_signatures_expr` keeps
-    the expression form as the equivalence-test reference
-    (tests/test_operators.py::test_minhash_signatures_arrow_matches_expr).
-    Only (id, text) crosses the boundary (guide §4.1); the iterator form
-    amortizes setup per task (§4.5)."""
+    Shingling (``distinct_shingles``) + hashlib.md5 + window-min run per
+    batch in the Python worker, not as a Catalyst chain of higher-order
+    functions (`transform(md5)` + one `array_min(transform(substring))`
+    per hash): Spark interprets those PER ARRAY ELEMENT with no
+    whole-stage codegen, and the Arrow pass measured 1.2× faster at
+    sf0.1 and 2.6× at the 10× replica dir (the HOF chain scales WORSE
+    than the boundary cost). Values are bit-identical to the expression
+    form (pinned by
+    tests/test_operators.py::test_minhash_signatures_arrow_matches_expr).
+    Only (id, text) crosses the boundary; the iterator form amortizes
+    setup per task."""
     df = fan_out(df)
     id_type = dict(df.dtypes)[id_col]
     schema = (
@@ -80,27 +79,14 @@ def minhash_signatures(
             out_sh: list = []
             out_mh: list = [[] for _ in range(num_hashes)]
             for text in pdf[text_col]:
+                sh = distinct_shingles(text, shingle_size)
+                out_sh.append(sh)
                 if text is None:
-                    # mirror the expression form exactly: split(trim(null))
-                    # is null -> the short-doc branch yields [null] and
-                    # every mh_j is null
-                    out_sh.append([None])
+                    # the [null] shingle hashes to a null mh_j
                     for j in range(num_hashes):
                         out_mh[j].append(None)
                     continue
-                # F.trim strips SPACES only; F.split(" ", -1) keeps empty
-                # tokens — str.strip(" ")/str.split(" ") match both
-                toks = text.strip(" ").split(" ")
-                if len(toks) >= shingle_size:
-                    sh = [
-                        " ".join(toks[i : i + shingle_size])
-                        for i in range(len(toks) - shingle_size + 1)
-                    ]
-                else:
-                    sh = [" ".join(toks)]
-                sh = list(dict.fromkeys(sh))  # array_distinct order
                 hx = [md5(s.encode("utf-8")).hexdigest() for s in sh]
-                out_sh.append(sh)
                 for j in range(num_hashes):
                     o = 3 * j
                     out_mh[j].append(min(h[o : o + 8] for h in hx))
@@ -110,39 +96,6 @@ def minhash_signatures(
             yield pd.DataFrame(data)
 
     return df.select(id_col, text_col).mapInPandas(run, schema)
-
-
-def _minhash_signatures_expr(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 8,
-    shingle_size: int = 3,
-) -> DataFrame:
-    """The r12 Catalyst-expression form of `minhash_signatures` — kept as
-    the oracle-shaped reference the Arrow tier is equivalence-tested
-    against (and a fallback if an environment lacks pandas workers)."""
-    df = fan_out(df)
-    toks = tokenize(text_col)
-    sh = shingles(toks, k=shingle_size)
-    # minhash over the DISTINCT shingle set — min over a set equals min over
-    # the bag, and the distinct array is what Jaccard verification needs too,
-    # so downstream stages share one narrow column
-    out = df.select(
-        F.col(id_col), F.array_distinct(sh).alias("shingles")
-    ).withColumn("__h", F.transform(F.col("shingles"), lambda s: F.md5(s)))
-
-    # NB: closure factory, not `lambda h, j=j` — PySpark infers higher-order
-    # lambda arity from the Python signature, so a default arg would turn
-    # this into the (element, index) form and silently break the hash family
-    def window(j: int):
-        return lambda h: F.substring(h, 3 * j + 1, 8)
-
-    for j in range(num_hashes):
-        out = out.withColumn(
-            f"mh_{j}", F.array_min(F.transform(F.col("__h"), window(j)))
-        )
-    return out.drop("__h")
 
 
 def band_buckets(
@@ -202,10 +155,10 @@ def _cached_band_table(
     operators build this table with the identical plan, so `cache_once`
     resolves them to ONE CacheManager entry per corpus — the band
     derivation runs once and both self-join sides read the blocks in
-    every join regime (r13).
+    every join regime.
 
     Deliberately NOT cached pre-partitioned on the join key: that shape
-    (measured r13) makes the shuffle-regime self-join exchange-free, but
+    makes the shuffle-regime self-join exchange-free, but
     AQE cannot skew-split a cached scan — and hot LSH buckets are this
     operator's documented skew hazard — while at bench SF it stores the
     exploded table 32-way-partitioned for no broadcast-regime benefit
@@ -217,15 +170,15 @@ def _cached_band_table(
 def _band_self_join(bb: DataFrame, id_col: str) -> DataFrame:
     """Distinct (id_a < id_b) pairs sharing a (band, bucket) cell.
 
-    r12: both self-join sides keep the SAME projection until after the
-    exchange, so the children canonicalize equal. r13 evidence caveat
-    (ADVICE r12): that lets ReuseExchange/the AQE stage cache
+    Both self-join sides keep the SAME projection until after the
+    exchange, so the children canonicalize equal. That lets
+    ReuseExchange/the AQE stage cache
     materialize ONE band shuffle only in the SHUFFLE-join regime over an
     UNCACHED upstream — over a cached relation each side gets its own
     `TableCacheQueryStage` (Spark 4 AQE) and the exchanges above two
     distinct cache stages never unify, and in the broadcast regime there
     is no exchange to reuse at all. Callers therefore `cache_once` the
-    narrow band table itself (r13): the InMemoryRelation's blocks are
+    narrow band table itself: the InMemoryRelation's blocks are
     computed ONCE and shared by both sides in EVERY regime — what is
     duplicated is at most a cache scan + the narrow (id, band, bucket)
     shuffle, never the upstream fingerprint/signature compute.
@@ -260,12 +213,12 @@ def lsh_candidate_pairs(
     ``max_bucket_size`` optionally drops hot buckets (see
     `cap_bucket_size`) — recall-bounded but explosion-proof.
 
-    r13: the signature AND band tables are cached — the signature table
+    The signature AND band tables are cached — the signature table
     is shared with `near_dup_pairs`/`minhash_jaccard_estimate` (same
     plan → same CacheManager entry via `cache_once`), and the cached
     band table guarantees the signature pass runs ONCE regardless of
-    join strategy (see `_band_self_join`; before this, the broadcast
-    regime re-computed the full signature chain on both join sides).
+    join strategy (see `_band_self_join`; uncached, the broadcast regime
+    re-computes the full signature chain on both join sides).
     """
     sig = cache_once(
         minhash_signatures(df, id_col, text_col, num_hashes, shingle_size)

@@ -4,7 +4,7 @@ Complements the MinHash-LSH path (operators/minhash.py): LSH is the
 probabilistic/recall-tunable variant; this is the EXACT one — every pair
 with Jaccard >= threshold is found (within the optional ``max_df`` prune).
 The standard scalable shape (set-similarity joins a la Vernica/Carey/Li,
-SIGMOD'10) expressed as two Catalyst shuffles, no Python in the hot path:
+SIGMOD'10): one Arrow shingling pass, then two Catalyst shuffles:
 
 1. shingle each document into token n-grams, distinct per doc;
 2. build the inverted index ``(shingle, doc_id)`` with one explode;
@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pydatalake_spark.functions.text import shingles, tokenize
+from pydatalake_spark.functions.text import distinct_shingles
 from pydatalake_spark.operators.scaling import fan_out
 from pydatalake_spark.session import cache_once
 
@@ -45,17 +45,17 @@ def shingle_sets(
     shingle_size: int = 3,
 ) -> DataFrame:
     """(id, sset) — distinct token-n-gram set per document, as ONE Arrow
-    `mapInPandas` pass.
+    `mapInPandas` pass over ``distinct_shingles``.
 
-    r13: the expression form (`transform(sequence)` + `concat_ws` per
-    element + `array_distinct`) is a Catalyst higher-order-function
-    chain interpreted PER ARRAY ELEMENT — same class as the minhash
-    signature chain (guide §4.2). The Arrow tier measured flat at sf0.1
-    (worker latency ≈ the saved interpretation) and **3.1× faster at
-    the 10× replica dir** where the interpreted chain dominates. Values
-    bit-identical — `_shingle_sets_expr` keeps the expression form as
-    the equivalence-test reference. Only (id, text) crosses the
-    boundary; iterator form amortizes setup per task (§4.1/§4.5)."""
+    The expression form (`transform(sequence)` + `concat_ws` per element
+    + `array_distinct`) is a Catalyst higher-order-function chain
+    interpreted PER ARRAY ELEMENT, like the minhash signature chain. The
+    Arrow pass measured flat at sf0.1 (worker latency ≈ the saved
+    interpretation) and 3.1× faster at the 10× replica dir, where the
+    interpreted chain dominates. Values are bit-identical (pinned by
+    tests/test_operators.py::test_shingle_sets_arrow_matches_expr). Only
+    (id, text) crosses the boundary; the iterator form amortizes setup
+    per task."""
     df = fan_out(df)
     id_type = dict(df.dtypes)[id_col]
 
@@ -63,22 +63,7 @@ def shingle_sets(
         import pandas as pd
 
         for pdf in batches:
-            out = []
-            for text in pdf[text_col]:
-                if text is None:
-                    # mirror the expression form: split(trim(null)) is
-                    # null -> the short-doc branch yields [null]
-                    out.append([None])
-                    continue
-                toks = text.strip(" ").split(" ")
-                if len(toks) >= shingle_size:
-                    sh = [
-                        " ".join(toks[i : i + shingle_size])
-                        for i in range(len(toks) - shingle_size + 1)
-                    ]
-                else:
-                    sh = [" ".join(toks)]
-                out.append(list(dict.fromkeys(sh)))
+            out = [distinct_shingles(t, shingle_size) for t in pdf[text_col]]
             yield pd.DataFrame({id_col: pdf[id_col], "sset": out})
 
     return df.select(id_col, text_col).mapInPandas(
@@ -86,29 +71,34 @@ def shingle_sets(
     )
 
 
-def _shingle_sets_expr(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_size: int = 3,
-) -> DataFrame:
-    """The Catalyst-expression form of `shingle_sets` — the oracle-shaped
-    reference the Arrow tier is equivalence-tested against."""
-    df = fan_out(df)
-    sh = shingles(tokenize(text_col), k=shingle_size)
-    return df.select(F.col(id_col), F.array_distinct(sh).alias("sset"))
-
-
 def _hot_shingles(dfc: DataFrame, max_df) -> DataFrame:
     """Shingles whose document frequency exceeds ``max_df``, from a
     ``(shingle, __df)`` count table. ``max_df`` is an int literal or a
-    ONE-ROW DataFrame carrying ``__max_df`` — the r13 in-plan form: the
-    cap rides the plan as a broadcast instead of a per-call driver
-    ``count()`` job (guide §1.2/§5; r12 VERDICT item 7). The cap VALUE
-    is identical either way; only where it is computed changes."""
+    ONE-ROW DataFrame carrying ``__max_df``: that cap rides the plan as
+    a broadcast instead of a per-call driver ``count()`` job. The cap
+    VALUE is identical either way; only where it is computed changes.
+
+    A cap frame with zero or several rows has no single cap, so the plan
+    raises when it runs instead of pruning by nothing or by the smallest
+    row. The row count is taken by a global aggregate over the cap frame
+    (itself one row by construction), which adds no job."""
     if isinstance(max_df, DataFrame):
+        cap = max_df.agg(
+            F.count(F.lit(1)).alias("__rows"), F.max("__max_df").alias("__cap")
+        ).select(
+            F.when(F.col("__rows") == 1, F.col("__cap"))
+            .otherwise(
+                F.raise_error(
+                    F.concat(
+                        F.lit("max_df frame must have exactly one row, got "),
+                        F.col("__rows").cast("string"),
+                    )
+                )
+            )
+            .alias("__max_df")
+        )
         return (
-            dfc.crossJoin(F.broadcast(max_df))
+            dfc.crossJoin(F.broadcast(cap))
             .filter(F.col("__df") > F.col("__max_df"))
             .select("shingle")
         )
@@ -119,11 +109,11 @@ def _inv_self_join_inter(inv: DataFrame, id_col: str) -> DataFrame:
     """(id_a < id_b, inter): per-pair co-occurrence counts from the
     inverted index's self-equi-join on shingle.
 
-    r12: identical projections on both self-join sides until after the
+    Both self-join sides keep identical projections until after the
     exchange — canonically-equal children let ReuseExchange / the AQE
     stage cache materialize ONE shuffle of the inverted index instead of
-    two (guide §2.4; same fix as the minhash/simhash/phash band joins).
-    The per-side id renames happen above the join.
+    two (same rule as the minhash/simhash/phash band joins). The
+    per-side id renames happen above the join.
     """
     x, y = inv.alias("__ja"), inv.alias("__jb")
     return (
@@ -236,8 +226,8 @@ def ngram_jaccard_pairs_against(
         hot = _hot_shingles(df_counts, max_df)
         inv_c = inv_c.join(F.broadcast(hot), on="shingle", how="left_anti")
         inv_b = inv_b.join(F.broadcast(hot), on="shingle", how="left_anti")
-    # r13: pre-partitioned caches — the batch-vs-corpus join consumes
-    # both indexes exchange-free (see ngram_jaccard_pairs)
+    # pre-partitioned caches — the batch-vs-corpus join consumes both
+    # indexes exchange-free (see ngram_jaccard_pairs)
     inv_c = cache_once(inv_c.repartition("shingle"))
     inv_b = cache_once(inv_b.repartition("shingle"))
     n_c = inv_c.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_c"))
@@ -290,7 +280,7 @@ def ngram_containment_pairs(
             max_df,
         )
         inv = inv.join(F.broadcast(hot), on="shingle", how="left_anti")
-    # r13: pre-partitioned cache — see ngram_jaccard_pairs
+    # pre-partitioned cache — see ngram_jaccard_pairs
     inv = cache_once(inv.repartition("shingle"))
     sizes = inv.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
     inter = _inv_self_join_inter(inv, id_col)

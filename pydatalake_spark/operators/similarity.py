@@ -907,13 +907,12 @@ def _jl_signs(out_dim: int, in_dim: int) -> list[list[int]]:
 
 def _rp_valid_expr(vec_col: str, dim: int):
     """Boolean column: the vector is non-null, exactly ``dim`` long, and
-    element-null-free — the rows the expr tier's zip_with/fold does NOT
-    degrade to all-null. Evaluated JVM-SIDE because the Arrow transfer is
-    lossy for this distinction: Spark->pandas renders a NULL element as
-    NaN, indistinguishable from a data NaN in Python (r10 ADVICE — the
-    tiers must agree on degenerate inputs; NaN elements stay VALID and
-    propagate as values in both tiers). size/array_compact are native
-    collection expressions, not interpreted lambdas."""
+    element-null-free — invalid rows give all-null projection components
+    and a NULL distortion ratio. Evaluated JVM-SIDE because the Arrow
+    transfer is lossy for this distinction: Spark->pandas renders a NULL
+    element as NaN, indistinguishable from a data NaN in Python (NaN
+    elements stay VALID and propagate as values). size/array_compact are
+    native collection expressions, not interpreted lambdas."""
     c = F.col(vec_col)
     return (
         c.isNotNull()
@@ -943,7 +942,6 @@ def rp_project(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-    method: str = "numpy",
 ) -> DataFrame:
     """(id, proj): Johnson–Lindenstrauss random projection to ``out_dim``
     dims with a deterministic ±1/sqrt(out_dim) sign matrix (Achlioptas
@@ -952,21 +950,13 @@ def rp_project(
     bucketing or transfer, with no training and no stored model beyond
     the hash-derived matrix.
 
-    Scale: map-only either way — no shuffle. ``method='numpy'``
-    (default, r10) evaluates the projection as ONE BLAS matmul per Arrow
-    batch via mapInPandas: Catalyst higher-order functions are
-    interpreted per ELEMENT (never whole-stage-codegen'd), so the
-    expression form pays out_dim×dim interpreted lambda calls per row —
-    the r10 crossover probe measured it ~10x DuckDB's vectorized list
-    ops and the numpy tier closes that. ``method='expr'`` keeps the pure
-    column-expression form (composes into SQL views / streaming plans
-    with no Python boundary); both produce identical values up to
-    float-sum reassociation (~1e-15, pinned to 1e-9 in pytest)."""
-    if method == "expr":
-        proj = _rp_proj_expr(to_double_array(vec_col), out_dim, dim)
-        return emb.select(F.col(id_col), proj.alias("proj"))
-    if method != "numpy":
-        raise ValueError(f"method must be 'numpy' or 'expr', got {method!r}")
+    Scale: map-only — no shuffle. The projection is ONE BLAS matmul per
+    Arrow batch via mapInPandas: Catalyst higher-order functions are
+    interpreted per ELEMENT (never whole-stage-codegen'd), so a
+    column-expression form pays out_dim×dim interpreted lambda calls per
+    row — measured ~10x DuckDB's vectorized list ops at the crossover
+    probe. Rows failing ``_rp_valid_expr`` (null, ragged or
+    null-element vectors) give all-null components."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -989,8 +979,8 @@ def rp_project(
                 continue
             V, valid = _rp_batch_matrix(pdf, vec_col, dim)
             P = V @ S.T
-            out = [None] * len(pdf)  # invalid rows: the expr tier's
-            vi = 0                   # all-null fold -> null components
+            out = [None] * len(pdf)  # invalid rows: all-null components
+            vi = 0
             for i in range(len(pdf)):
                 if valid[i]:
                     out[i] = P[vi]
@@ -1007,8 +997,8 @@ def rp_project(
     # The pandas->Arrow return leg reads a NaN in a nested float list as
     # NULL; a VALID row's null component can only have been a NaN (the
     # matmul never emits null), so restore it — out_dim interpreted
-    # coalesce calls per row, ~1.5% of the 1024-lambda fold this tier
-    # replaced. Invalid rows keep their expr-tier-shaped all-null array.
+    # coalesce calls per row, ~1.5% of a 1024-lambda expression fold.
+    # Invalid rows keep their all-null array.
     nan_lit = F.lit(float("nan"))
     fixed = F.when(
         F.col("_ok"),
@@ -1017,38 +1007,12 @@ def rp_project(
     return raw.select(F.col(id_col), fixed.alias("proj"))
 
 
-def _rp_proj_expr(dv, out_dim: int, dim: int):
-    """The projection as a column expression over a double-array input —
-    shared by rp_project and rp_distortion so the distortion readout can
-    stay map-only (both ||Pv|| and ||v|| come from the same row)."""
-    scale = 1.0 / float(out_dim) ** 0.5
-    signs = _jl_signs(out_dim, dim)
-    return F.array(
-        *[
-            (
-                F.aggregate(
-                    F.zip_with(
-                        dv,
-                        F.array(*[F.lit(float(s)) for s in signs[j]]),
-                        lambda x, y: x * y,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                * scale
-            ).alias(f"p{j}")
-            for j in range(out_dim)
-        ]
-    )
-
-
 def rp_distortion(
     emb: DataFrame,
     out_dim: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-    method: str = "numpy",
 ) -> DataFrame:
     """One-row norm-distortion readout of the JL projection: per-vector
     ratio ||Pv|| / ||v|| aggregated to (n_vectors, avg_ratio, min_ratio,
@@ -1056,38 +1020,17 @@ def rp_distortion(
     vectors into the ANN tier (ratios concentrated near 1 = distances
     survive the 4x shrink).
 
-    Map-only (r7): ||Pv|| and ||v|| come from the SAME row, so no
-    id-keyed join — the old plan shuffled the corpus once just to pair a
-    vector with its own projection. ``method='numpy'`` (default, r10):
-    per-Arrow-batch BLAS matmul + norm with per-batch (n, sum, min, max)
-    partials reduced by one scalar aggregate — interpreted HOF lambdas
-    were the whole wall (see rp_project). ``method='expr'`` keeps the
-    codegen-free-of-Python form; there, both arrays are bound to REAL
-    columns before the norm HOFs (re-inline hazard).
+    Map-only: ||Pv|| and ||v|| come from the SAME row, so no id-keyed
+    join. Per-Arrow-batch BLAS matmul + norm with per-batch (n, sum,
+    min, max) partials reduced by one scalar aggregate (see rp_project
+    for why not interpreted HOF lambdas).
 
-    Degenerate inputs (r11, closing r10 ADVICE — the tiers must agree):
-    zero-norm / null / ragged / None-element vectors count in
-    ``n_vectors`` but produce NULL r (try_divide, not an ANSI
-    DIVIDE_BY_ZERO throw; the numpy tier masks the same rows), so
-    avg/min/max skip them; NaN *elements* propagate as values with
-    Spark's aggregate ordering (min skips NaN-as-largest, max/avg go
-    NaN) in both tiers. Empty input returns n_vectors=0, NULL stats."""
-    if method == "expr":
-        bound = emb.select(to_double_array(vec_col).alias("dv"))
-        pr = bound.withColumn(
-            "proj", _rp_proj_expr(F.col("dv"), out_dim, dim)
-        )
-        j = pr.select(
-            F.try_divide(l2_norm(F.col("proj")), l2_norm(F.col("dv"))).alias("r")
-        )
-        return j.agg(
-            F.count(F.lit(1)).cast("long").alias("n_vectors"),
-            F.avg("r").alias("avg_ratio"),
-            F.min("r").alias("min_ratio"),
-            F.max("r").alias("max_ratio"),
-        )
-    if method != "numpy":
-        raise ValueError(f"method must be 'numpy' or 'expr', got {method!r}")
+    Degenerate inputs: zero-norm / null / ragged / None-element vectors
+    count in ``n_vectors`` but produce a NULL ratio (never an ANSI
+    DIVIDE_BY_ZERO throw), so avg/min/max skip them; NaN *elements*
+    propagate as values with Spark's aggregate ordering (min skips
+    NaN-as-largest, max/avg go NaN). Empty input returns n_vectors=0,
+    NULL stats."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T

@@ -63,72 +63,61 @@ def test_keep_first_last_deterministic(spark, dupes):
     assert got == want
 
 
-def test_dedup_agg_method_equals_window(spark):
-    """The skew-immune method='agg' tier must return byte-identical rows
-    to the default window form — including null ordering (struct
-    comparison puts a null field first, matching asc_nulls_first /
-    desc_nulls_last) and full-tiebreak determinism."""
+def _force_hot_probe(m):
+    """Probe thresholds that make ``distinct_table``'s hot-key probe see
+    every frame in full and name every key hot."""
+    from pydatalake_spark.operators import dedup as D
+
+    m.setattr(D, "AUTO_PROBE_FRACTION", 1.0)
+    m.setattr(D, "AUTO_MIN_SAMPLED", 1)
+    m.setattr(D, "AUTO_HOT_SHARE", 1e-6)
+
+
+def test_dedup_agg_method_equals_window(spark, monkeypatch):
+    """The hot-split plan's min_by/max_by side must return byte-identical
+    rows to the window plan — including null ordering (struct comparison
+    puts a null field first, matching asc_nulls_first /
+    desc_nulls_last), full-tiebreak determinism, and a 500-row hot key.
+    With the probe forced to name every key hot, every row takes the
+    aggregation side; the default call on these small frames runs the
+    window plan."""
+    from pydatalake_spark.operators import dedup as D
+
     rows = [
         (1, None, "a", 1.0), (1, 5, "b", 2.0), (1, 3, "c", None),
         (2, 7, None, 0.5), (2, 7, "x", 0.5),
         (3, None, None, None), (3, None, "z", 9.0),
     ]
-    df = spark.createDataFrame(rows, "k int, v int, s string, x double")
-    for keep in ("first", "last"):
-        for presort in (None, ["v"], ["v", "s"]):
-            a = distinct_table(
-                df, subset="k", keep=keep, presort_by=presort, method="window"
-            )
-            b = distinct_table(
-                df, subset="k", keep=keep, presort_by=presort, method="agg"
-            )
-            assert sorted(map(tuple, a.collect())) == sorted(
-                map(tuple, b.collect())
-            ), (keep, presort)
+    # the same rows plus a hot key: 500 duplicate rows under k=9
+    hot_rows = rows + [(9, i % 13, f"s{i % 7}", float(i % 11)) for i in range(500)]
+    for data in (rows, hot_rows):
+        df = spark.createDataFrame(data, "k int, v int, s string, x double")
+        with monkeypatch.context() as m:
+            _force_hot_probe(m)
+            named = D._auto_hot_keys(df, ["k"])
+        assert len(named) == len({r[0] for r in data})
+        for keep in ("first", "last"):
+            for presort in (None, ["v"], ["v", "s"]):
+                a = distinct_table(df, subset="k", keep=keep, presort_by=presort)
+                with monkeypatch.context() as m:
+                    _force_hot_probe(m)
+                    b = distinct_table(
+                        df, subset="k", keep=keep, presort_by=presort
+                    )
+                assert b.columns == df.columns
+                assert sorted(map(tuple, a.collect()), key=str) == sorted(
+                    map(tuple, b.collect()), key=str
+                ), (len(data), keep, presort)
     with pytest.raises(ValueError):
-        distinct_table(df, subset="k", method="sort")
-
-
-def test_dedup_salted_method_equals_window(spark):
-    """The salted two-phase window form (r7 VERDICT item 3 — the skew
-    escape for A2's keep-first/last path) must return byte-identical
-    rows to the default window form, including hot keys (one key owning
-    most rows), null ordering, full-tiebreak determinism, and a salt
-    count larger than the duplicate count."""
-    rows = [
-        (1, None, "a", 1.0), (1, 5, "b", 2.0), (1, 3, "c", None),
-        (2, 7, None, 0.5), (2, 7, "x", 0.5),
-        (3, None, None, None), (3, None, "z", 9.0),
-    ]
-    # add a hot key: 500 duplicate rows under k=9
-    rows += [(9, i % 13, f"s{i % 7}", float(i % 11)) for i in range(500)]
-    df = spark.createDataFrame(rows, "k int, v int, s string, x double")
-    for keep in ("first", "last"):
-        for presort in (None, ["v"], ["v", "s"]):
-            for salt in (4, 64, 1024):
-                a = distinct_table(
-                    df, subset="k", keep=keep, presort_by=presort,
-                    method="window",
-                )
-                b = distinct_table(
-                    df, subset="k", keep=keep, presort_by=presort,
-                    method="salted", salt=salt,
-                )
-                assert sorted(map(tuple, a.collect())) == sorted(
-                    map(tuple, b.collect())
-                ), (keep, presort, salt)
-    # the salt column must not leak into the output schema
-    out = distinct_table(df, subset="k", method="salted")
-    assert out.columns == df.columns
+        distinct_table(df, subset="k", keep="middle")
 
 
 def test_dedup_auto_method_dispatch(spark, monkeypatch):
-    """r8 VERDICT item 3: the default method='auto' picks the salted skew
-    escape from a sampled hot-key probe instead of requiring the caller
-    to know their skew — and stays on the measured-faster window form for
-    small or uniform key sets. Results are byte-identical across methods
-    (pinned above), so this test pins the DISPATCH plus the r8-ADVICE
-    salt validation."""
+    """The hot-key probe picks the hot-split plan from a sampled key
+    share instead of requiring the caller to know their skew — and stays
+    on the measured-faster window plan for small or uniform key sets.
+    The hot-split result equals the window plan's, including null-keyed
+    rows and a composite key."""
     from pydatalake_spark.operators import dedup as D
 
     # ~2 rows per key: max key share 2/400, far under the hot threshold
@@ -140,18 +129,6 @@ def test_dedup_auto_method_dispatch(spark, monkeypatch):
         [(9 if i % 2 else i, i % 13, float(i)) for i in range(400)],
         "k int, v int, x double",
     )
-    # real thresholds: a 1% sample of 400 rows is far below the floor —
-    # window regardless of skew (data this small can't hurt a reducer)
-    assert D._auto_method(hot, ["k"]) == "window"
-    # probe-scale thresholds: full sample, tiny floor
-    monkeypatch.setattr(D, "AUTO_PROBE_FRACTION", 1.0)
-    monkeypatch.setattr(D, "AUTO_MIN_SAMPLED", 100)
-    assert D._auto_method(hot, ["k"]) == "salted"  # k=9 owns half the rows
-    assert D._auto_method(uniform, ["k"]) == "window"  # max share 0.5%
-    # the default (auto) call — here the HOT-SPLIT plan (k=9 is named
-    # hot) — returns the same rows as the pinned window form, including
-    # null-keyed rows (eqNullSafe keeps them on the cold side) and a
-    # null-keyed HOT group
     hot_nulls = hot.unionByName(
         spark.createDataFrame(
             [(None, i % 13, float(i)) for i in range(200)]
@@ -159,17 +136,6 @@ def test_dedup_auto_method_dispatch(spark, monkeypatch):
             "k int, v int, x double",
         )
     )
-    assert D._auto_method(hot_nulls, ["k"]) == "salted"
-    a = distinct_table(hot_nulls, subset="k", keep="first", presort_by=["v"])
-    b = distinct_table(
-        hot_nulls, subset="k", keep="first", presort_by=["v"],
-        method="window",
-    )
-    assert sorted(map(tuple, a.collect()), key=str) == sorted(
-        map(tuple, b.collect()), key=str
-    )
-    # composite (multi-column) hot key: the probe groups, names, and
-    # predicates on the full key tuple — results equal the window form
     comp = spark.createDataFrame(
         [
             (9 if i % 2 else i, "x" if i % 2 else f"t{i % 7}", float(i))
@@ -177,15 +143,31 @@ def test_dedup_auto_method_dispatch(spark, monkeypatch):
         ],
         "k int, s string, x double",
     )
-    assert D._auto_method(comp, ["k", "s"]) == "salted"  # (9,'x') is hot
+    # real thresholds: a 1% sample of 400 rows is far below the floor —
+    # window regardless of skew (data this small can't hurt a reducer),
+    # so these calls build the window plan the hot-split must match
+    assert D._auto_hot_keys(hot, ["k"]) is None
+    assert D._auto_hot_keys(comp, ["k", "s"]) is None
+    b = distinct_table(hot_nulls, subset="k", keep="first", presort_by=["v"])
+    cb = distinct_table(comp, subset=["k", "s"], keep="last")
+    # probe-scale thresholds: full sample, tiny floor
+    monkeypatch.setattr(D, "AUTO_PROBE_FRACTION", 1.0)
+    monkeypatch.setattr(D, "AUTO_MIN_SAMPLED", 100)
+    assert D._auto_hot_keys(hot, ["k"]) is not None  # k=9 owns half the rows
+    assert D._auto_hot_keys(uniform, ["k"]) is None  # max share 0.5%
+    # the HOT-SPLIT plan (k=9 is named hot) returns the window plan's
+    # rows, including null-keyed rows (eqNullSafe keeps them on the cold
+    # side) and a null-keyed HOT group
+    assert D._auto_hot_keys(hot_nulls, ["k"]) is not None
+    a = distinct_table(hot_nulls, subset="k", keep="first", presort_by=["v"])
+    assert sorted(map(tuple, a.collect()), key=str) == sorted(
+        map(tuple, b.collect()), key=str
+    )
+    # composite (multi-column) hot key: the probe groups, names, and
+    # predicates on the full key tuple
+    assert D._auto_hot_keys(comp, ["k", "s"]) is not None  # (9,'x') is hot
     ca = distinct_table(comp, subset=["k", "s"], keep="last")
-    cb = distinct_table(comp, subset=["k", "s"], keep="last", method="window")
     assert sorted(map(tuple, ca.collect())) == sorted(map(tuple, cb.collect()))
-    # r8 ADVICE: degenerate salt values refused loudly (salt=0 NULLs the
-    # pmod bucket and silently voids the skew protection)
-    for bad in (0, 1, -3):
-        with pytest.raises(ValueError):
-            distinct_table(hot, subset="k", method="salted", salt=bad)
 
 
 def test_tables_diff_set_semantics(spark, events):
@@ -772,6 +754,67 @@ def test_ngram_jaccard_max_df_prunes_hot_shingles(spark):
     assert capped == 0
 
 
+def test_ngram_max_df_frame_must_have_one_row(spark):
+    """A ``max_df`` frame carries ONE cap: an empty or a two-row frame
+    raises when the plan runs instead of pruning by nothing or by the
+    smallest row."""
+    import pandas as pd
+
+    from pydatalake_spark.operators.ngram_jaccard import ngram_jaccard_pairs
+
+    same = ["common header line one two three unique%d tail" % i for i in range(20)]
+    df = spark.createDataFrame(pd.DataFrame({"doc_id": range(20), "text": same}))
+    for rows in ([], [(5,), (50,)]):
+        cap = spark.createDataFrame(rows, "__max_df long")
+        with pytest.raises(Exception, match="exactly one row"):
+            ngram_jaccard_pairs(df, threshold=0.5, max_df=cap).collect()
+
+
+def test_ngram_registry_max_df_frame_prunes_like_int_at_no_extra_job(spark):
+    """The registry's one-row in-plan cap prunes exactly like the same
+    cap as an int, and the cap frame's row check fires no job beyond
+    the unchecked cross-join form."""
+    from pydatalake_spark.operators.ngram_jaccard import (
+        _hot_shingles,
+        ngram_jaccard_pairs,
+        shingle_sets,
+    )
+    from pydatalake_spark.queries.tables import load_table
+    from pydatalake_spark.queries.text import _ngram_max_df_plan
+    from tests.conftest import SF_DIR, jobs_in
+
+    docs = load_table(spark, SF_DIR, "documents")
+    cap = _ngram_max_df_plan(docs)
+    as_int = cap.first()["__max_df"]
+
+    def pairs(max_df):
+        return sorted(
+            map(tuple, ngram_jaccard_pairs(docs, threshold=0.5, max_df=max_df).collect())
+        )
+
+    assert pairs(cap) == pairs(as_int)
+
+    dfc = (
+        shingle_sets(docs)
+        .select(F.explode("sset").alias("shingle"))
+        .groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("__df"))
+    )
+    bare, n_bare = jobs_in(
+        spark,
+        "max_df_bare",
+        lambda: dfc.crossJoin(F.broadcast(cap))
+        .filter(F.col("__df") > F.col("__max_df"))
+        .select("shingle")
+        .collect(),
+    )
+    checked, n_checked = jobs_in(
+        spark, "max_df_checked", lambda: _hot_shingles(dfc, cap).collect()
+    )
+    assert sorted(bare) == sorted(checked)
+    assert n_checked == n_bare
+
+
 def test_stratified_sample_stable_nested_and_rated(spark):
     """Membership is partitioning-independent; raising a rate strictly
     grows the sample (nested property); per-stratum rates land near
@@ -838,7 +881,6 @@ def test_cc_checkpoints_reaped_between_iterations(spark, monkeypatch):
     from pydatalake_spark.operators.bpe import train_bpe
     from pydatalake_spark.operators.cluster import (
         connected_components,
-        connected_components_star,
         label_propagation,
         pagerank,
     )
@@ -857,12 +899,6 @@ def test_cc_checkpoints_reaped_between_iterations(spark, monkeypatch):
     assert {r.cluster_id for r in cc.collect()} == {0}
     # live: the returned labels' checkpoint (edges reaped on convergence)
     assert n_persistent() <= before + 1
-
-    before = n_persistent()
-    star = connected_components_star(pairs)
-    assert {r.cluster_id for r in star.collect()} == {0}
-    # live: final edge generation + nodes checkpoint
-    assert n_persistent() <= before + 2
 
     before = n_persistent()
     pagerank(pairs, iters=12).collect()
@@ -956,19 +992,15 @@ def test_merge_upsert_semantics(spark):
     assert out == {1: "a", 2: "B", 3: "c", 4: "D1"}
 
 
-def test_star_cc_matches_union_find(spark):
-    """large-star/small-star components equal a union-find reference on a
+def test_cc_matches_union_find(spark):
+    """Min-label propagation components equal a union-find reference on a
     seeded random graph AND on a long path graph with shuffled ids (the
-    adversarial-diameter case the O(log n) variant exists for); labels
-    also agree with the min-propagation implementation."""
+    adversarial-diameter case: one round per hop)."""
     import random
 
     import pandas as pd
 
-    from pydatalake_spark.operators.cluster import (
-        connected_components,
-        connected_components_star,
-    )
+    from pydatalake_spark.operators.cluster import connected_components
 
     rng = random.Random(7)
     nodes = list(range(1000, 1200))
@@ -996,10 +1028,6 @@ def test_star_cc_matches_union_find(spark):
         df = spark.createDataFrame(
             pd.DataFrame(edge_set, columns=["id_a", "id_b"])
         )
-        got_star = {
-            r.node: r.cluster_id for r in connected_components_star(df).collect()
-        }
-        assert got_star == expect
         got_prop = {
             r.node: r.cluster_id for r in connected_components(df, max_iter=100).collect()
         }
@@ -1669,16 +1697,65 @@ def test_minhash_band_table_cached_once(spark):
     assert sl.useMemory or sl.useDisk
 
 
+def _minhash_signatures_expr(
+    df,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_hashes: int = 8,
+    shingle_size: int = 3,
+):
+    """The Catalyst-expression form of `minhash_signatures` — the
+    oracle-shaped reference the Arrow pass is equivalence-tested
+    against."""
+    from pydatalake_spark.functions.text import shingles, tokenize
+    from pydatalake_spark.operators.scaling import fan_out
+
+    df = fan_out(df)
+    toks = tokenize(text_col)
+    sh = shingles(toks, k=shingle_size)
+    # minhash over the DISTINCT shingle set — min over a set equals min over
+    # the bag, and the distinct array is what Jaccard verification needs too,
+    # so downstream stages share one narrow column
+    out = df.select(
+        F.col(id_col), F.array_distinct(sh).alias("shingles")
+    ).withColumn("__h", F.transform(F.col("shingles"), lambda s: F.md5(s)))
+
+    # NB: closure factory, not `lambda h, j=j` — PySpark infers higher-order
+    # lambda arity from the Python signature, so a default arg would turn
+    # this into the (element, index) form and silently break the hash family
+    def window(j: int):
+        return lambda h: F.substring(h, 3 * j + 1, 8)
+
+    for j in range(num_hashes):
+        out = out.withColumn(
+            f"mh_{j}", F.array_min(F.transform(F.col("__h"), window(j)))
+        )
+    return out.drop("__h")
+
+
+def _shingle_sets_expr(
+    df,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    shingle_size: int = 3,
+):
+    """The Catalyst-expression form of `shingle_sets` — the oracle-shaped
+    reference the Arrow pass is equivalence-tested against."""
+    from pydatalake_spark.functions.text import shingles, tokenize
+    from pydatalake_spark.operators.scaling import fan_out
+
+    df = fan_out(df)
+    sh = shingles(tokenize(text_col), k=shingle_size)
+    return df.select(F.col(id_col), F.array_distinct(sh).alias("sset"))
+
+
 def test_minhash_signatures_arrow_matches_expr(spark):
-    """r13: the Arrow mapInPandas signature tier must be bit-identical to
-    the r12 Catalyst-expression form — shingling (incl. the short-doc
+    """The Arrow mapInPandas signature pass must be bit-identical to the
+    Catalyst-expression form — shingling (incl. the short-doc
     whole-string shingle), array_distinct order, md5 hex windows, and the
     lexicographic min — including the null-text, empty-text, and
     repeated-space edges the corpus fixtures don't contain."""
-    from pydatalake_spark.operators.minhash import (
-        _minhash_signatures_expr,
-        minhash_signatures,
-    )
+    from pydatalake_spark.operators.minhash import minhash_signatures
     from pydatalake_spark.queries.tables import load_table
 
     def canon(df):
@@ -1714,14 +1791,11 @@ def test_minhash_signatures_arrow_matches_expr(spark):
 
 
 def test_shingle_sets_arrow_matches_expr(spark):
-    """r13: the Arrow shingle_sets tier must be bit-identical to the
+    """The Arrow shingle_sets pass must be bit-identical to the
     Catalyst-expression form — shingling (incl. the short-doc
     whole-string shingle), array_distinct order, and the
     null/empty/multi-space edges the fixtures lack."""
-    from pydatalake_spark.operators.ngram_jaccard import (
-        _shingle_sets_expr,
-        shingle_sets,
-    )
+    from pydatalake_spark.operators.ngram_jaccard import shingle_sets
     from pydatalake_spark.queries.tables import load_table
 
     def canon(df):

@@ -81,13 +81,13 @@ def test_dedup_single_shuffle(spark):
 
 
 def test_dedup_hotsplit_plan_shape(spark, monkeypatch):
-    """The auto path's hot-split plan (r9): the cold side keeps the
-    single-sort window (one Window over the key-only partition), the hot
-    side takes the agg tier (min_by/max_by with a map-side partial
-    aggregation BEFORE its exchange — a hot key forwards ≤1 row per task
-    instead of landing every row on one reducer), and both unite — so
-    the plan must carry exactly ONE Window node, a Union, and a partial
-    min_by on the hot branch."""
+    """The hot-split plan: the cold side keeps the single-sort window
+    (one Window over the key-only partition), the hot side takes
+    min_by/max_by with a map-side partial aggregation BEFORE its
+    exchange — a hot key forwards ≤1 row per task instead of landing
+    every row on one reducer — and both unite. So the plan must carry
+    exactly ONE Window node, a Union, and a partial min_by (keep=first)
+    or max_by (keep=last) on the hot branch."""
     from pyspark.sql import functions as F
 
     from pydatalake_spark.operators import dedup as D
@@ -101,45 +101,22 @@ def test_dedup_hotsplit_plan_shape(spark, monkeypatch):
         # make one key own ~half the rows so the probe names it hot
         (F.col("event_id") % 2 * F.col("user_id")).cast("long"),
     )
-    df = distinct_table(ev, subset="user_id", keep="first", presort_by="ts")
-    p = df._jdf.queryExecution().executedPlan().toString()
-    assert "Union" in p
-    nodes = [ln for ln in p.splitlines() if re.search(r"(^|- )Window \[", ln)]
-    assert len(nodes) == 1, p
-    # hot branch: PARTIAL min_by below its exchange (map-side combine is
-    # the skew immunity — the exchange moves ≤|tasks| rows per hot key).
-    # r9 ADVICE: bare `min_by` also matches the final aggregate, which
-    # would not pin the partial-combine property — require the partial
-    # form, and require an Exchange printed ABOVE it (children print
-    # below parents in toString, so below-the-exchange = later index).
-    m = re.search(r"partial_min_by", p)
-    assert m, p
-    assert "Exchange" in p[: m.start()], p
-
-
-def test_dedup_agg_tier_partial_before_exchange(spark):
-    """The skew-immune dedup tier (method='agg') must place a partial
-    min_by/max_by BEFORE its single exchange — that map-side combine is
-    the entire point (a hot key forwards one row per task instead of
-    landing every row on one reducer; see tools/probe_skew.py).
-    Split out of test_dedup_hotsplit_plan_shape (r9 ADVICE: a failure
-    here is about the pinned agg tier, not the auto hot-split)."""
-    from pydatalake_spark.operators.dedup import distinct_table
-    from pydatalake_spark.queries.tables import load_table
-
-    df = distinct_table(
-        load_table(spark, SF, "events"),
-        subset=["user_id", "event_type"],
-        keep="last",
-        presort_by="ts",
-        method="agg",
-    )
-    p = df._jdf.queryExecution().executedPlan().toString()
-    assert p.count("Exchange") == 1
-    assert "Window" not in p
-    assert "partial_max_by" in p
-    exch = p.index("Exchange")
-    assert "partial_max_by" in p[exch:]  # partial agg below the exchange
+    for keep, partial in (("first", "partial_min_by"), ("last", "partial_max_by")):
+        df = distinct_table(ev, subset="user_id", keep=keep, presort_by="ts")
+        p = df._jdf.queryExecution().executedPlan().toString()
+        assert "Union" in p
+        nodes = [ln for ln in p.splitlines() if re.search(r"(^|- )Window \[", ln)]
+        assert len(nodes) == 1, p
+        # hot branch: the PARTIAL aggregate below its exchange (map-side
+        # combine is the skew immunity — the exchange moves ≤|tasks| rows
+        # per hot key). Bare `min_by` also matches the final aggregate,
+        # which would not pin the partial-combine property — require the
+        # partial form, and require an Exchange printed ABOVE it
+        # (children print below parents in toString, so
+        # below-the-exchange = later index).
+        m = re.search(partial, p)
+        assert m, p
+        assert "Exchange" in p[: m.start()], p
 
 
 def test_q18_single_pass_no_detail_rejoin(spark):

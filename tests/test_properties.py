@@ -83,11 +83,13 @@ def test_keep_first_matches_pandas_model(spark, data):
     max_size=40,
 ))
 def test_hotsplit_dedup_matches_window_model(spark, data):
-    """The auto path's HOT-SPLIT plan (r9: window for cold keys ∪ agg tier
-    for probed-hot keys) returns the same winner set as the plain window
-    form on arbitrary small frames — thresholds forced low so the probe
+    """The HOT-SPLIT plan (window for cold keys ∪ min_by/max_by for
+    probed-hot keys) returns the same winner set as the plain window
+    plan on arbitrary small frames — thresholds forced low so the probe
     names hot keys on hypothesis-sized data (keys drawn from {0,1,2}, so
-    some key virtually always owns ≥5% of rows)."""
+    some key virtually always owns ≥5% of rows). The window reference is
+    the default call with the probe constants restored: a frame this
+    small is below the sampled-row floor."""
     from pydatalake_spark.operators import dedup as D
 
     pdf = pd.DataFrame(data, columns=["k", "ts", "p"])
@@ -101,15 +103,14 @@ def test_hotsplit_dedup_matches_window_model(spark, data):
                 df, subset=["k"], keep="last", presort_by=["ts"]
             ).collect()
         )
-        want = sorted(
-            (r.k, r.ts, r.p)
-            for r in distinct_table(
-                df, subset=["k"], keep="last", presort_by=["ts"],
-                method="window",
-            ).collect()
-        )
     finally:
         D.AUTO_PROBE_FRACTION, D.AUTO_MIN_SAMPLED = old
+    want = sorted(
+        (r.k, r.ts, r.p)
+        for r in distinct_table(
+            df, subset=["k"], keep="last", presort_by=["ts"]
+        ).collect()
+    )
     assert got == want
 
 

@@ -304,6 +304,62 @@ def test_numpy_variant_equals_expression_form(spark):
     assert expr == np_
 
 
+def _rp_proj_expr(dv, out_dim: int, dim: int):
+    """The JL projection as a column expression over a double-array
+    input — the reference `rp_project`/`rp_distortion` are tested
+    against."""
+    from pydatalake_spark.operators.similarity import _jl_signs
+
+    scale = 1.0 / float(out_dim) ** 0.5
+    signs = _jl_signs(out_dim, dim)
+    return F.array(
+        *[
+            (
+                F.aggregate(
+                    F.zip_with(
+                        dv,
+                        F.array(*[F.lit(float(s)) for s in signs[j]]),
+                        lambda x, y: x * y,
+                    ),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x,
+                )
+                * scale
+            ).alias(f"p{j}")
+            for j in range(out_dim)
+        ]
+    )
+
+
+def _rp_project_expr(emb):
+    """Column-expression reference for `rp_project` at its defaults
+    (64 -> 16 dims): invalid rows fold to all-null components through
+    the zip_with/aggregate."""
+    from pydatalake_spark.functions.vector import to_double_array
+
+    proj = _rp_proj_expr(to_double_array("embedding"), 16, 64)
+    return emb.select(F.col("vec_id"), proj.alias("proj"))
+
+
+def _rp_distortion_expr(emb):
+    """Column-expression reference for `rp_distortion` at its defaults.
+    Both arrays are bound to REAL columns before the norm HOFs
+    (re-inline hazard)."""
+    from pydatalake_spark.functions.vector import l2_norm, to_double_array
+
+    bound = emb.select(to_double_array("embedding").alias("dv"))
+    pr = bound.withColumn("proj", _rp_proj_expr(F.col("dv"), 16, 64))
+    j = pr.select(
+        F.try_divide(l2_norm(F.col("proj")), l2_norm(F.col("dv"))).alias("r")
+    )
+    return j.agg(
+        F.count(F.lit(1)).cast("long").alias("n_vectors"),
+        F.avg("r").alias("avg_ratio"),
+        F.min("r").alias("min_ratio"),
+        F.max("r").alias("max_ratio"),
+    )
+
+
 def test_rp_projection_preserves_neighbors(spark):
     """JL 64->16: norm ratios concentrate near 1, and the projected
     nearest neighbor of a query matches the full-dim nearest neighbor
@@ -334,23 +390,18 @@ def test_rp_projection_preserves_neighbors(spark):
     for i in range(100):
         assert np.allclose(got[i], P[i], atol=1e-9)
 
-    # r10: the default Arrow/numpy tier and the pure-expression tier are
-    # the same transform up to float-sum reassociation (~1e-15; the
-    # oracle compares at 1e-9)
+    # the Arrow/numpy pass and the pure-expression reference are the
+    # same transform up to float-sum reassociation (~1e-15; the oracle
+    # compares at 1e-9)
     exprd = {
-        r.vec_id: np.array(r.proj)
-        for r in rp_project(emb, method="expr").collect()
+        r.vec_id: np.array(r.proj) for r in _rp_project_expr(emb).collect()
     }
     for i in range(100):
         assert np.allclose(got[i], exprd[i], atol=1e-9)
-    de = rp_distortion(emb, method="expr").collect()[0]
+    de = _rp_distortion_expr(emb).collect()[0]
     assert abs(de.avg_ratio - d.avg_ratio) < 1e-9
     assert abs(de.min_ratio - d.min_ratio) < 1e-9
     assert abs(de.max_ratio - d.max_ratio) < 1e-9
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="method"):
-        rp_project(emb, method="fast")
 
 
 def test_rp_ann_recall_high_on_clustered_data(spark):
@@ -630,7 +681,7 @@ def test_blocked_verify_crosses_block_boundary(spark):
 
 
 def test_rp_tiers_agree_on_degenerate_inputs(spark):
-    """r10 ADVICE: the numpy tier must match the expr tier on edge
+    """The numpy pass must match the expression reference on edge
     inputs — zero-norm vectors (NULL ratio via try_divide, not a NaN
     that poisons min/max or an ANSI throw), ragged / None-element /
     null vectors (NULL ratio, still counted in n_vectors), NaN elements
@@ -667,8 +718,8 @@ def test_rp_tiers_agree_on_degenerate_inputs(spark):
     )
     emb = emb.unionByName(none_df)
 
-    dn = rp_distortion(emb, method="numpy").collect()[0]
-    de = rp_distortion(emb, method="expr").collect()[0]
+    dn = rp_distortion(emb).collect()[0]
+    de = _rp_distortion_expr(emb).collect()[0]
     assert dn.n_vectors == de.n_vectors == 8
     # valid rows: 0, 5 (NaN), 6 -> avg/max are NaN (NaN propagates),
     # min skips NaN-as-largest and comes from rows 0/6
@@ -677,26 +728,26 @@ def test_rp_tiers_agree_on_degenerate_inputs(spark):
     assert dn.min_ratio is not None and not math.isnan(dn.min_ratio)
     assert abs(dn.min_ratio - de.min_ratio) < 1e-9
 
-    # without the NaN row: finite stats, identical across tiers
+    # without the NaN row: finite stats, identical across forms
     clean = emb.filter("vec_id <> 5")
-    cn = rp_distortion(clean, method="numpy").collect()[0]
-    ce = rp_distortion(clean, method="expr").collect()[0]
+    cn = rp_distortion(clean).collect()[0]
+    ce = _rp_distortion_expr(clean).collect()[0]
     assert cn.n_vectors == ce.n_vectors == 7
     for a, b in [(cn.avg_ratio, ce.avg_ratio), (cn.min_ratio, ce.min_ratio),
                  (cn.max_ratio, ce.max_ratio)]:
         assert a is not None and abs(a - b) < 1e-9
 
-    # empty input: n_vectors 0 (not NULL), NULL stats, both tiers
+    # empty input: n_vectors 0 (not NULL), NULL stats, both forms
     empty = emb.filter("vec_id < 0")
-    en = rp_distortion(empty, method="numpy").collect()[0]
-    ee = rp_distortion(empty, method="expr").collect()[0]
+    en = rp_distortion(empty).collect()[0]
+    ee = _rp_distortion_expr(empty).collect()[0]
     assert en.n_vectors == 0 and ee.n_vectors == 0
     assert en.avg_ratio is None and ee.avg_ratio is None
     assert en.min_ratio is None and en.max_ratio is None
 
-    # rp_project: invalid rows yield all-null components in BOTH tiers
-    pn = {r.vec_id: r.proj for r in rp_project(emb, method="numpy").collect()}
-    pe = {r.vec_id: r.proj for r in rp_project(emb, method="expr").collect()}
+    # rp_project: invalid rows yield all-null components in both forms
+    pn = {r.vec_id: r.proj for r in rp_project(emb).collect()}
+    pe = {r.vec_id: r.proj for r in _rp_project_expr(emb).collect()}
     for vid in (2, 3, 4, 7):
         assert all(x is None for x in pn[vid]), (vid, pn[vid])
         assert all(x is None for x in pe[vid]), (vid, pe[vid])

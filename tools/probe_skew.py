@@ -1,4 +1,4 @@
-"""Skewed-key resilience probe (round 8).
+"""Skewed-key resilience probe.
 
 The 10x/100x scaling probes replicate keys UNIFORMLY, so they can't see
 the other 100 TB killer: a pathological key distribution. This runner
@@ -137,25 +137,10 @@ def _window_dedup(spark, d: str):
     )
 
 
-def _window_dedup_salted(spark, d: str):
-    # the r8 skew escape for the window-dedup path: two-phase salted
-    # row_number (operators/dedup.py method='salted')
-    from pydatalake_spark.operators.dedup import distinct_table
-
-    li = spark.read.parquet(os.path.join(d, "lineitem.parquet"))
-    return distinct_table(
-        li,
-        subset="l_orderkey",
-        keep="first",
-        presort_by=["l_shipdate", "l_linenumber", "l_partkey"],
-        method="salted",
-    )
-
-
 def _window_dedup_auto(spark, d: str):
-    # r9 (r8 VERDICT item 3): NO method arg — the default 'auto' must
-    # probe the key sample and pick salted on the skewed dir, window on
-    # the uniform one, landing ≲1.3 skew ratio without caller knowledge
+    # distinct_table probes the key sample and picks the hot-split plan
+    # on the skewed dir, the window plan on the uniform one — landing
+    # ≲1.3 skew ratio without caller knowledge
     from pydatalake_spark.operators.dedup import distinct_table
 
     li = spark.read.parquet(os.path.join(d, "lineitem.parquet"))
@@ -196,7 +181,6 @@ def main() -> None:
         ("agg_plain", _agg_plain),
         ("agg_salted", _agg_salted),
         ("window_dedup", _window_dedup),
-        ("window_dedup_salted", _window_dedup_salted),
         ("window_dedup_auto", _window_dedup_auto),
     ]:
         for variant, d in dirs.items():
@@ -210,13 +194,14 @@ def main() -> None:
             result[f"{shape}_skewed_sec"] / result[f"{shape}_uniform_sec"], 3
         )
 
-    # record what the auto dispatcher actually chose on each dir (the
-    # probe's sampled hot-key check, operators/dedup.py:_auto_method)
-    from pydatalake_spark.operators.dedup import _auto_method
+    # record which plan the dedup probe chose on each dir (the sampled
+    # hot-key check, operators/dedup.py:_auto_hot_keys)
+    from pydatalake_spark.operators.dedup import _auto_hot_keys
 
     for variant, d in dirs.items():
         li = spark.read.parquet(os.path.join(d, "lineitem.parquet"))
-        result[f"auto_method_{variant}"] = _auto_method(li, ["l_orderkey"])
+        hot = _auto_hot_keys(li, ["l_orderkey"])
+        result[f"auto_plan_{variant}"] = "window" if hot is None else "hotsplit"
 
     # fact-x-fact tier: disable broadcast so the join becomes a shuffle
     # join (what a 100 TB fact-fact join is), with AQE skew thresholds
