@@ -5,27 +5,41 @@ EDGES; an actual deduplication must turn those into clusters and keep one
 representative per cluster — near-duplicates chain (A~B, B~C but A!~C), so
 pair-local "drop id_b" under-dedups exactly where boilerplate is worst.
 
-Algorithm: iterative min-label propagation. Every node starts labeled with
-its own id; each round every node takes the min label over itself and its
-neighbors; fixpoint = each component labeled with its minimum member id.
-Per round: one join (labels onto symmetrized edges) + one min-aggregation
-— two keyed shuffles, both algebraic with map-side partial agg. Rounds =
-graph diameter; near-dup graphs are dense little cliques with tiny
-diameters (2-4 rounds in practice). `localCheckpoint` truncates the plan
-each round so lineage doesn't grow O(iterations) — the standard Spark
-iterative-algorithm discipline (GraphX/GraphFrames do the same).
-Diameter is the knob to watch, not data volume: an adversarially long
-path graph needs one round per hop and hits ``max_iter``.
+Every component is labeled with its minimum member id. The edge table is
+checkpointed and counted once; its size (rows × the default size of the
+two id columns) picks one of two paths:
 
-Not expressible as one Catalyst plan (a fixpoint loop), but every step is
-a plain DataFrame op, so it distributes like any join — no driver
-materialization; convergence is detected with a count() on changed labels
-(a scalar per round, not data).
+- **At most** ``spark.sql.autoBroadcastJoinThreshold`` (the bound Spark
+  itself ships to every executor as a broadcast table): the edges are
+  collected once as Arrow and resolved on the driver by a vectorised
+  union-find — min-label hooking plus pointer jumping, whole-array numpy
+  passes — and the ``(node, cluster_id)`` result goes back through
+  ``createDataFrame`` from Arrow: a JVM-side local relation (a
+  parallelized JVM RDD past Arrow's local-relation threshold), so no
+  Python worker runs when it executes. The edge count and one collect,
+  whatever the diameter.
+- **Above** the bound, or when the threshold is ``-1``: iterative
+  min-label propagation, the only path for an edge table the driver must
+  not hold. Every node starts labeled with its own id; each round every
+  node takes the min label over itself and its neighbors. Per round: one
+  join (labels onto symmetrized edges) + one min-aggregation — two keyed
+  shuffles, both algebraic with map-side partial agg. Rounds = graph
+  diameter; near-dup graphs are dense little cliques with tiny diameters
+  (2-4 rounds in practice). `localCheckpoint` truncates the plan each
+  round so lineage doesn't grow O(iterations) — the standard Spark
+  iterative-algorithm discipline (GraphX/GraphFrames do the same).
+  Diameter is the knob to watch, not data volume: an adversarially long
+  path graph needs one round per hop and hits ``max_iter``. Convergence
+  is detected with a count() on changed labels (a scalar per round, not
+  data).
+
+A pair with a null id on either side names no document and is dropped
+before the size is measured, on both paths.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pydatalake_spark.session import _ckpt, _reap
@@ -37,14 +51,86 @@ def connected_components(
     dst_col: str = "id_b",
     max_iter: int = 25,
 ) -> DataFrame:
-    """(node, cluster_id) for every node appearing in ``pairs``; cluster_id
-    is the component's minimum node id (deterministic, engine-portable).
+    """(node, cluster_id) for every node appearing in a non-null pair of
+    ``pairs``; cluster_id is the component's minimum node id
+    (deterministic, engine-portable).
 
-    Raises after ``max_iter`` rounds without convergence — near-dup graphs
-    converge in a handful; hitting the cap means the edge set is not the
-    clique-soup this is meant for.
+    The path follows the size of the edge table (module docstring): an
+    edge table within ``spark.sql.autoBroadcastJoinThreshold`` is
+    resolved on the driver in one union-find pass, a larger one by the
+    distributed min-label loop. ``max_iter`` applies only to the loop,
+    which raises after ``max_iter`` rounds without convergence — near-dup
+    graphs converge in a handful; hitting the cap means the edge set is
+    not the clique-soup this is meant for.
     """
-    edges, edge_ids = _ckpt(_symmetric_edges(pairs, src_col, dst_col))
+    edges, edge_ids = _ckpt(
+        pairs.select(
+            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+        ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull()),
+        eager=False,
+    )
+    # the full count computes every partition of the lazy checkpoint —
+    # persisting its blocks — and returns the row count the size test
+    # reads, in the action that builds the edges
+    n_edges = edges.count()
+    spark = edges.sparkSession
+    bound = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if bound >= 0 and n_edges * edges._jdf.schema().defaultSize() <= bound:
+        table = edges.toArrow()
+        _reap(edges, edge_ids)
+        return _union_find(spark, table)
+    return _min_label_loop(edges, edge_ids, max_iter)
+
+
+def _union_find(spark: SparkSession, edges) -> DataFrame:
+    """Components of the Arrow ``(src, dst)`` table ``edges``, resolved on
+    the driver. Ids are ranked by ``np.unique`` (the engine's ordering
+    for integer and string ids), so the smallest rank of a component is
+    its minimum id. Each round hooks the larger root of every edge whose
+    endpoints still have different roots onto the smallest root it
+    meets — parents only ever point to smaller ranks, so no cycle can
+    form and every unsatisfied round removes a root — then pointer
+    jumping flattens every tree to its root."""
+    import numpy as np
+    import pyarrow as pa
+
+    id_type = edges.schema.field("src").type
+    src = edges.column("src").to_numpy()
+    ids, rank = np.unique(
+        np.concatenate([src, edges.column("dst").to_numpy()]),
+        return_inverse=True,
+    )
+    u, v = rank[: len(src)], rank[len(src) :]
+    parent = np.arange(len(ids))
+    while True:
+        pu, pv = parent[u], parent[v]
+        open_ = pu != pv
+        if not open_.any():
+            break
+        pu, pv = pu[open_], pv[open_]
+        np.minimum.at(parent, np.maximum(pu, pv), np.minimum(pu, pv))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "node": pa.array(ids, type=id_type),
+                "cluster_id": pa.array(ids[parent], type=id_type),
+            }
+        )
+    )
+
+
+def _min_label_loop(
+    pairs: DataFrame, pair_ids: list[int], max_iter: int
+) -> DataFrame:
+    """Distributed min-label propagation over the checkpointed ``(src,
+    dst)`` pairs (reaped here once the symmetrized edges replace them)."""
+    edges, edge_ids = _ckpt(_symmetric_edges(pairs, "src", "dst"))
+    _reap(pairs, pair_ids)
     labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
         "cluster_id", F.col("node")
     )

@@ -34,31 +34,6 @@ from pydatalake_spark.session import cache_once
 
 SIMHASH_BITS = 64
 
-_SECOND_BIT_DIGITS = ("4", "5", "6", "7", "c", "d", "e", "f")
-
-
-def simhash_col(text_col: str | Column, bits: int = SIMHASH_BITS) -> Column:
-    """The simhash fingerprint as a '0'/'1' bit string column (array-
-    expression form; `simhash_table` is the faster explode form)."""
-    toks = tokenize(text_col)
-    hashes = F.transform(toks, lambda t: F.md5(t))
-
-    # closure factory (not default-arg lambdas): PySpark infers lambda arity
-    # from the Python signature, and aggregate's merge fn must be 2-arg
-    def bit_sum(j: int):
-        d = j // 2
-        if j % 2 == 0:
-            cond = lambda h: F.substring(h, d + 1, 1) >= F.lit("8")  # noqa: E731
-        else:
-            cond = lambda h: F.substring(h, d + 1, 1).isin(*_SECOND_BIT_DIGITS)  # noqa: E731
-        return lambda acc, h: acc + F.when(cond(h), 1).otherwise(-1)
-
-    bit_cols = []
-    for j in range(bits):
-        s = F.aggregate(hashes, F.lit(0), bit_sum(j))
-        bit_cols.append(F.when(s > 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bit_cols)
-
 
 def simhash_table(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = SIMHASH_BITS
@@ -79,15 +54,6 @@ def simhash_table(
         F.col(id_col), F.explode(tokenize(text_col)).alias("tok")
     )
     n_chunks = (bits // 2 + 7) // 8
-    hashed = toks.select(
-        F.col(id_col),
-        *[
-            F.conv(F.substring(F.md5("tok"), 8 * c + 1, 8), 16, 10)
-            .cast("long")
-            .alias(f"c_{c}")
-            for c in range(n_chunks)
-        ],
-    )
 
     def bit_shift(j: int) -> tuple[int, int]:
         d = j // 2  # nibble index 0..31
@@ -95,23 +61,28 @@ def simhash_table(
         nibble_shift = 28 - 4 * pos
         return chunk, nibble_shift + (3 if j % 2 == 0 else 2)
 
+    # one SQL string per column: the Column-API form of the same
+    # expressions costs ~10 py4j calls per bit (~700 per build)
+    hashed = toks.selectExpr(
+        f"`{id_col}`",
+        *[
+            f"CAST(conv(substring(md5(tok), {8 * c + 1}, 8), 16, 10)"
+            f" AS BIGINT) AS c_{c}"
+            for c in range(n_chunks)
+        ],
+    )
     sums = hashed.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("__n"),
         *[
-            F.sum(
-                F.shiftrightunsigned(F.col(f"c_{bit_shift(j)[0]}"), bit_shift(j)[1])
-                % F.lit(2)
-            ).alias(f"s_{j}")
+            F.expr("sum(shiftrightunsigned(c_%d, %d) %% 2) AS s_%d" % (*bit_shift(j), j))
             for j in range(bits)
         ],
     )
-    bit_cols = [
-        F.when(2 * F.col(f"s_{j}") - F.col("__n") > 0, F.lit("1")).otherwise(
-            F.lit("0")
-        )
+    bit_cols = ", ".join(
+        f"CASE WHEN 2 * s_{j} - __n > 0 THEN '1' ELSE '0' END"
         for j in range(bits)
-    ]
-    return sums.select(F.col(id_col), F.concat(*bit_cols).alias("simhash"))
+    )
+    return sums.selectExpr(f"`{id_col}`", f"concat({bit_cols}) AS simhash")
 
 
 def simhash_near_dup(

@@ -1010,7 +1010,6 @@ def rp_project(
 def rp_distortion(
     emb: DataFrame,
     out_dim: int = 16,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
 ) -> DataFrame:

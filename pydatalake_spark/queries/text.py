@@ -798,9 +798,8 @@ def tfidf_keywords(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = _t(spark, sf, "documents")
-    # r13 (VERDICT item 7): n_docs is a one-row broadcast crossed into
-    # the idf expression — the old float(d.count()) was a driver job per
-    # call (guide §1.2/§5). Same IEEE double division either way.
+    # n_docs is a one-row broadcast crossed into the idf expression, so
+    # the build fires no driver-side count job
     nd = d.agg(F.count(F.lit(1)).cast("double").alias("__nd"))
     tok = d.select("doc_id", F.explode(tokenize("text")).alias("token"))
     tf = tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
@@ -840,15 +839,14 @@ def tfidf_keywords(spark: SparkSession, sf: str) -> DataFrame:
 )
 def near_dup_clusters_q(spark: SparkSession, sf: str) -> DataFrame:
     """Near-dup CLUSTER resolution: exact n-gram Jaccard pairs → connected
-    components (iterative min-label propagation, operators/cluster.py) →
-    (doc_id, cluster_id=min member). The oracle computes the same
-    components via a recursive-CTE transitive closure — fine at oracle
-    scale, quadratic at real scale, which is exactly why the engine side
-    is the iterative propagation instead."""
+    components (operators/cluster.py: one driver-side union-find pass
+    when the edge table fits the broadcast threshold, else iterative
+    min-label propagation) → (doc_id, cluster_id=min member). The oracle
+    computes the same components via a recursive-CTE transitive closure
+    — fine at oracle scale, quadratic at real scale, which is exactly
+    why the engine side never joins the closure."""
     from pydatalake_spark.operators.cluster import connected_components
-    from pydatalake_spark.operators.ngram_jaccard import ngram_jaccard_pairs
 
-    d = _t(spark, sf, "documents")
     pairs = _jaccard_pairs(spark, sf)
     return connected_components(pairs).select(
         F.col("node").alias("doc_id"), "cluster_id"
@@ -1229,9 +1227,8 @@ def pipeline_clean_corpus_v2(spark: SparkSession, sf: str) -> DataFrame:
         F.min("doc_id").alias("doc_id")
     )
     docs1 = cache_once(docs0.join(keep1.select("doc_id"), "doc_id"))
-    # r13 (VERDICT item 4): the DF cap rides the plan as a one-row
-    # broadcast over the cached survivor set instead of a blocking
-    # driver-side docs1.count() job per call
+    # the DF cap rides the plan as a one-row broadcast over the cached
+    # survivor set, so the build fires no driver-side count job
     pairs = ngram_jaccard_pairs(
         docs1, shingle_size=_MH_K, threshold=0.5,
         max_df=_ngram_max_df_plan(docs1),
@@ -2853,9 +2850,8 @@ def pipeline_clean_corpus_v3(spark: SparkSession, sf: str) -> DataFrame:
     docs2 = strip_dup_spans(docs1, window=_SPAN_K).select(
         "doc_id", F.col("clean_text").alias("text")
     )
-    # r13 (VERDICT item 4): in-plan DF cap over docs1 (the cap basis is
-    # the EXACT-dedup survivor count, not docs2's cleaned text) — no
-    # driver-side count job per call
+    # in-plan DF cap over docs1: the cap basis is the EXACT-dedup
+    # survivor count, not docs2's cleaned text
     pairs = ngram_jaccard_pairs(
         docs2, shingle_size=_MH_K, threshold=0.5,
         max_df=_ngram_max_df_plan(docs1),
@@ -2968,9 +2964,7 @@ def dup_cluster_histogram_q(spark: SparkSession, sf: str) -> DataFrame:
     output as `near_dup_clusters`; the histogram is two tiny keyed
     aggregations past the (already bounded) cluster assignment."""
     from pydatalake_spark.operators.cluster import connected_components
-    from pydatalake_spark.operators.ngram_jaccard import ngram_jaccard_pairs
 
-    d = _t(spark, sf, "documents")
     pairs = _jaccard_pairs(spark, sf)
     csize = (
         connected_components(pairs)

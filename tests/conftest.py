@@ -3,6 +3,7 @@ from __future__ import annotations
 import shutil
 import sys
 import tempfile
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -31,6 +32,22 @@ def jobs_in(spark, group, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@contextmanager
+def cc_loop(spark, on):
+    """Inside, ``connected_components`` takes the distributed min-label
+    loop when ``on`` (broadcast threshold ``-1``); otherwise the session
+    threshold, under which test-sized edge tables take the driver-side
+    union-find."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    if on:
+        spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 @pytest.fixture()

@@ -847,27 +847,66 @@ def test_stratified_sample_stable_nested_and_rated(spark):
 def test_connected_components_chain_and_dedup(spark):
     """A~B, B~C chains must land in ONE cluster (the under-dedup case that
     pair-local dropping misses); dedup keeps exactly the min-id member of
-    each component and passes untouched rows through."""
+    each component and passes untouched rows through — on both CC paths."""
     import pandas as pd
 
     from pydatalake_spark.operators.cluster import (
         connected_components,
         dedup_by_clusters,
     )
+    from tests.conftest import cc_loop
 
     pairs = spark.createDataFrame(
         pd.DataFrame({"id_a": [1, 2, 7, 10], "id_b": [2, 3, 8, 1]})
     )
-    cc = {r.node: r.cluster_id for r in connected_components(pairs).collect()}
-    assert cc == {1: 1, 2: 1, 3: 1, 10: 1, 7: 7, 8: 7}
-
     docs = spark.createDataFrame(
         pd.DataFrame({"doc_id": [1, 2, 3, 7, 8, 10, 99], "x": range(7)})
     )
-    kept = sorted(
-        r.doc_id for r in dedup_by_clusters(docs, pairs).select("doc_id").collect()
-    )
-    assert kept == [1, 7, 99]
+    for loop in (False, True):
+        with cc_loop(spark, loop):
+            cc = {
+                r.node: r.cluster_id
+                for r in connected_components(pairs).collect()
+            }
+            assert cc == {1: 1, 2: 1, 3: 1, 10: 1, 7: 7, 8: 7}, loop
+            kept = sorted(
+                r.doc_id
+                for r in dedup_by_clusters(docs, pairs).select("doc_id").collect()
+            )
+            assert kept == [1, 7, 99], loop
+
+
+def test_cc_edge_inputs_agree_on_both_paths(spark):
+    """A null id names no document: its pair is dropped before either
+    path runs, so [(1,2),(2,None),(None,5)] clusters {1, 2} only, with
+    no null node and no node 5. Duplicate and reversed pairs collapse to
+    one edge, and an empty pair table gives an empty result with the id
+    type."""
+    from pydatalake_spark.operators.cluster import connected_components
+    from tests.conftest import cc_loop
+
+    cases = {
+        "nulls": ([(1, 2), (2, None), (None, 5), (None, None)], {1: 1, 2: 1}),
+        "dup_rev": (
+            [(4, 3), (3, 4), (4, 3), (9, 8), (8, 9), (3, 3)],
+            {3: 3, 4: 3, 8: 8, 9: 8},
+        ),
+        "empty": ([], {}),
+    }
+    for loop in (False, True):
+        with cc_loop(spark, loop):
+            for name, (edges, want) in cases.items():
+                cc = connected_components(
+                    spark.createDataFrame(edges, "id_a long, id_b long")
+                )
+                assert {r.node: r.cluster_id for r in cc.collect()} == want, (
+                    name,
+                    loop,
+                )
+                assert cc.dtypes == [
+                    ("node", "bigint"),
+                    ("cluster_id", "bigint"),
+                ], (name, loop)
 
 
 def test_cc_checkpoints_reaped_between_iterations(spark, monkeypatch):
@@ -884,6 +923,7 @@ def test_cc_checkpoints_reaped_between_iterations(spark, monkeypatch):
         label_propagation,
         pagerank,
     )
+    from tests.conftest import cc_loop
 
     def n_persistent():
         return int(
@@ -894,11 +934,12 @@ def test_cc_checkpoints_reaped_between_iterations(spark, monkeypatch):
     pairs = spark.createDataFrame(
         pd.DataFrame({"id_a": list(range(19)), "id_b": list(range(1, 20))})
     )
-    before = n_persistent()
-    cc = connected_components(pairs)
-    assert {r.cluster_id for r in cc.collect()} == {0}
-    # live: the returned labels' checkpoint (edges reaped on convergence)
-    assert n_persistent() <= before + 1
+    with cc_loop(spark, True):
+        before = n_persistent()
+        cc = connected_components(pairs)
+        assert {r.cluster_id for r in cc.collect()} == {0}
+        # live: the returned labels' checkpoint (edges reaped on convergence)
+        assert n_persistent() <= before + 1
 
     before = n_persistent()
     pagerank(pairs, iters=12).collect()
@@ -920,16 +961,27 @@ def test_cc_checkpoints_reaped_between_iterations(spark, monkeypatch):
         return made[-1]
 
     monkeypatch.setattr(type(pairs), "localCheckpoint", held)
+
+    def live_checkpoints():
+        live = spark.sparkContext._jsc.getPersistentRDDs()
+        ids = [
+            int(f._jdf.queryExecution().analyzed().rdd().id()) for f in made
+        ]
+        return len(ids), [i for i in ids if live.get(i) is not None]
+
+    # the union-find path returns a local relation: its one edge
+    # checkpoint is reaped once collected, nothing stays live
+    assert {r.cluster_id for r in connected_components(pairs).collect()} == {0}
+    assert live_checkpoints() == (1, [])
+
+    made.clear()
     docs = spark.createDataFrame(
         pd.DataFrame(
             {"text": ["the quick brown fox jumps over the lazy dog"] * 3}
         )
     )
     assert len(train_bpe(docs, num_merges=12)) == 12
-    live = spark.sparkContext._jsc.getPersistentRDDs()
-    ids = [int(f._jdf.queryExecution().analyzed().rdd().id()) for f in made]
-    assert len(ids) == 4
-    assert [i for i in ids if live.get(i) is not None] == []
+    assert live_checkpoints() == (4, [])
 
 
 def test_quantized_cosine_preserves_neighbors(spark):
@@ -993,14 +1045,15 @@ def test_merge_upsert_semantics(spark):
 
 
 def test_cc_matches_union_find(spark):
-    """Min-label propagation components equal a union-find reference on a
-    seeded random graph AND on a long path graph with shuffled ids (the
-    adversarial-diameter case: one round per hop)."""
+    """Both CC paths equal a union-find reference on a seeded random graph
+    AND on a long path graph with shuffled ids (the adversarial-diameter
+    case: one loop round per hop)."""
     import random
 
     import pandas as pd
 
     from pydatalake_spark.operators.cluster import connected_components
+    from tests.conftest import cc_loop
 
     rng = random.Random(7)
     nodes = list(range(1000, 1200))
@@ -1028,10 +1081,41 @@ def test_cc_matches_union_find(spark):
         df = spark.createDataFrame(
             pd.DataFrame(edge_set, columns=["id_a", "id_b"])
         )
-        got_prop = {
-            r.node: r.cluster_id for r in connected_components(df, max_iter=100).collect()
-        }
-        assert got_prop == expect
+        for loop in (False, True):
+            with cc_loop(spark, loop):
+                got_prop = {
+                    r.node: r.cluster_id
+                    for r in connected_components(df, max_iter=100).collect()
+                }
+            assert got_prop == expect, loop
+
+
+def test_cc_job_count_independent_of_diameter(spark):
+    """Under the broadcast bound CC fires a small constant number of jobs
+    (the edge build's count and one Arrow collect) whatever the graph's
+    diameter, and returns a local relation: collecting it runs no job
+    and no Python worker. The min-label loop fires a job per hop."""
+    import pandas as pd
+
+    from pydatalake_spark.operators.cluster import connected_components
+    from tests.conftest import jobs_in
+
+    ccs, counts = {}, {}
+    for hops in (2, 80):
+        df = spark.createDataFrame(
+            pd.DataFrame({"id_a": range(hops), "id_b": range(1, hops + 1)})
+        )
+        ccs[hops], counts[hops] = jobs_in(
+            spark,
+            f"cc_path_{hops}",
+            lambda: connected_components(df, max_iter=100),
+        )
+    assert counts[2] == counts[80] <= 4, counts
+    for hops, cc in ccs.items():
+        assert "LocalRelation" in cc._jdf.queryExecution().analyzed().toString()
+        rows, n = jobs_in(spark, f"cc_collect_{hops}", cc.collect)
+        assert n == 0
+        assert {r.cluster_id for r in rows} == {0}
 
 
 def test_quality_score_empty_doc_yields_null_not_error(spark):

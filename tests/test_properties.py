@@ -369,6 +369,55 @@ def test_label_propagation_matches_model(spark, edges):
 
 
 # ---------------------------------------------------------------------------
+# connected components (both paths) vs a union-find model on random graphs
+# ---------------------------------------------------------------------------
+
+cc_edge_lists = st.lists(
+    st.tuples(
+        st.one_of(st.none(), st.integers(min_value=0, max_value=9)),
+        st.one_of(st.none(), st.integers(min_value=0, max_value=9)),
+    ),
+    min_size=0,
+    max_size=14,
+)
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(edges=cc_edge_lists)
+def test_cc_matches_union_find_model(spark, edges):
+    """Random multigraphs with self-loops, duplicate and reversed pairs
+    and null ids: the driver-side union-find and the min-label loop both
+    label every node of a non-null pair with its component's minimum id,
+    and a pair with a null id names no node."""
+    from pydatalake_spark.operators.cluster import connected_components
+    from tests.conftest import cc_loop
+
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a is None or b is None:
+            continue
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    want = {x: find(x) for x in list(parent)}
+
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    for loop in (False, True):
+        with cc_loop(spark, loop):
+            got = {
+                r.node: r.cluster_id
+                for r in connected_components(df).collect()
+            }
+        assert got == want, loop
+
+
+# ---------------------------------------------------------------------------
 # Distributed feather reader vs the schema-unify model (r7 hardening):
 # randomized heterogeneous file schemas — a column missing from some files,
 # an int64-vs-string conflict on another — must read back exactly as the
