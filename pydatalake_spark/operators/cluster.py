@@ -5,19 +5,22 @@ EDGES; an actual deduplication must turn those into clusters and keep one
 representative per cluster — near-duplicates chain (A~B, B~C but A!~C), so
 pair-local "drop id_b" under-dedups exactly where boilerplate is worst.
 
-Every component is labeled with its minimum member id. The edge table is
-checkpointed and counted once; its size (rows × the default size of the
-two id columns) picks one of two paths:
+Every component is labeled with its minimum member id. The size of the
+edge table (rows × the default size of the two id columns) picks one of
+two paths:
 
-- **At most** ``spark.sql.autoBroadcastJoinThreshold`` (the bound Spark
-  itself ships to every executor as a broadcast table): the edges are
-  collected once as Arrow and resolved on the driver by a vectorised
-  union-find — min-label hooking plus pointer jumping, whole-array numpy
-  passes — and the ``(node, cluster_id)`` result goes back through
-  ``createDataFrame`` from Arrow: a JVM-side local relation (a
-  parallelized JVM RDD past Arrow's local-relation threshold), so no
-  Python worker runs when it executes. The edge count and one collect,
-  whatever the diameter.
+- **At most** ``session.driver_bound`` (the least of
+  ``spark.sql.autoBroadcastJoinThreshold`` and
+  ``spark.driver.maxResultSize``): the edges are resolved on the driver
+  by a vectorised union-find — min-label hooking plus pointer jumping,
+  whole-array numpy passes — and the ``(node, cluster_id)`` result goes
+  back through ``createDataFrame`` from Arrow: a JVM-side local relation
+  (a parallelized JVM RDD past Arrow's local-relation threshold), so no
+  Python worker runs when it executes. An edge plan that optimizes to a
+  ``LocalRelation`` (a driver-side pair front's output) is already on
+  the driver: its row count is read off the plan and its rows are
+  collected with no job. Any other edge table is checkpointed, counted
+  and collected once as Arrow, whatever the diameter.
 - **Above** the bound, or when the threshold is ``-1``: iterative
   min-label propagation, the only path for an edge table the driver must
   not hold. Every node starts labeled with its own id; each round every
@@ -39,10 +42,12 @@ before the size is measured, on both paths.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from pydatalake_spark.session import _ckpt, _reap
+from pydatalake_spark.session import _ckpt, _reap, driver_bound
 
 
 def connected_components(
@@ -56,27 +61,38 @@ def connected_components(
     (deterministic, engine-portable).
 
     The path follows the size of the edge table (module docstring): an
-    edge table within ``spark.sql.autoBroadcastJoinThreshold`` is
-    resolved on the driver in one union-find pass, a larger one by the
-    distributed min-label loop. ``max_iter`` applies only to the loop,
-    which raises after ``max_iter`` rounds without convergence — near-dup
-    graphs converge in a handful; hitting the cap means the edge set is
-    not the clique-soup this is meant for.
+    edge table within ``session.driver_bound`` is resolved on the driver
+    in one union-find pass, a larger one by the distributed min-label
+    loop. ``max_iter`` applies only to the loop, which raises after
+    ``max_iter`` rounds without convergence — near-dup graphs converge
+    in a handful; hitting the cap means the edge set is not the
+    clique-soup this is meant for.
     """
-    edges, edge_ids = _ckpt(
-        pairs.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-        ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull()),
-        eager=False,
-    )
-    # the full count computes every partition of the lazy checkpoint —
-    # persisting its blocks — and returns the row count the size test
-    # reads, in the action that builds the edges
-    n_edges = edges.count()
+    edges = pairs.select(
+        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+    ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
     spark = edges.sparkSession
-    bound = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    plan = edges._jdf.queryExecution().optimizedPlan()
+    local = plan.getClass().getSimpleName() == "LocalRelation"
+    if local:
+        n_edges, edge_ids = plan.data().length(), []
+    else:
+        edges, edge_ids = _ckpt(edges, eager=False)
+        # the full count computes every partition of the lazy checkpoint
+        # — persisting its blocks — and returns the row count the size
+        # test reads, in the action that builds the edges
+        n_edges = edges.count()
+    bound = driver_bound(spark)
     if bound >= 0 and n_edges * edges._jdf.schema().defaultSize() <= bound:
-        table = edges.toArrow()
+        # collect() of a LocalRelation fires no job; toArrow() fires one
+        table = (
+            pa.Table.from_pylist(
+                [r.asDict() for r in edges.collect()],
+                schema=to_arrow_schema(edges.schema),
+            )
+            if local
+            else edges.toArrow()
+        )
         _reap(edges, edge_ids)
         return _union_find(spark, table)
     return _min_label_loop(edges, edge_ids, max_iter)
@@ -92,7 +108,6 @@ def _union_find(spark: SparkSession, edges) -> DataFrame:
     form and every unsatisfied round removes a root — then pointer
     jumping flattens every tree to its root."""
     import numpy as np
-    import pyarrow as pa
 
     id_type = edges.schema.field("src").type
     src = edges.column("src").to_numpy()

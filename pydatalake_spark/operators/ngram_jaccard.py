@@ -23,19 +23,39 @@ SIGMOD'10): one Arrow shingling pass, then two Catalyst shuffles:
 Scale: intersection counting moves only (shingle, id) pairs — never the
 shingle arrays — and the pair aggregation is algebraic (partial agg
 map-side). Skew lives in hot shingles, bounded by ``max_df``; AQE splits
-whatever survives. Reference parity: the reference engine has no near-dup
-operator at all (SURVEY.md §2 gap list) — this is beyond-reference
-capability for the 100 TB training-data pipeline.
+whatever survives.
+
+Small inputs skip the plan. ``ngram_jaccard_pairs`` caches its
+``(id, text)`` input, so neither path re-runs the upstream, and runs
+ONE aggregate action over it: rows, text bytes, an upper bound ``P`` on
+postings (``Σ max(#tokens − k + 1, 1)``) and the DF cap. A shingle held
+by ``d ≤ min(cap, rows)`` docs yields ``d(d−1)/2`` candidate pairs, so
+``P·(min(cap, rows) − 1)/2`` bounds the candidate-pair table. When the input bytes plus that table, at the
+kernel's bytes per candidate pair, fit ``session.driver_bound``, the
+same steps run as one vectorized numpy pass on the driver and the pairs
+come back as a ``LocalRelation``; otherwise the Spark plan above runs
+over the cached input. Both give the same rows: the bound is a
+guarantee computed before anything is collected, never a
+collect-then-fall-back. Under ``get_spark``'s 64 MB threshold a 500-doc
+shard (P ≈ 26k, cap 20: 10.7 MB) takes the driver pass; sf0.1 (P ≈ 261k,
+cap 50: 251 MB) stays on Spark.
+
+Reference parity: the reference engine has no near-dup operator at all
+(SURVEY.md §2 gap list) — this is beyond-reference capability for the
+100 TB training-data pipeline.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+from pyspark.errors import ArithmeticException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pydatalake_spark.functions.text import distinct_shingles
 from pydatalake_spark.operators.scaling import fan_out
-from pydatalake_spark.session import cache_once
+from pydatalake_spark.session import cache_once, driver_bound
 
 
 def shingle_sets(
@@ -71,38 +91,68 @@ def shingle_sets(
     )
 
 
+def _cap_row(max_df: DataFrame) -> DataFrame:
+    """The one ``__max_df`` row of a cap frame. A frame with zero or
+    several rows has no single cap, so the plan raises when it runs
+    instead of pruning by nothing or by the smallest row. The row count
+    is taken by a global aggregate over the cap frame (itself one row by
+    construction), which adds no job."""
+    return max_df.agg(
+        F.count(F.lit(1)).alias("__rows"), F.max("__max_df").alias("__cap")
+    ).select(
+        F.when(F.col("__rows") == 1, F.col("__cap"))
+        .otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit("max_df frame must have exactly one row, got "),
+                    F.col("__rows").cast("string"),
+                )
+            )
+        )
+        .alias("__max_df")
+    )
+
+
 def _hot_shingles(dfc: DataFrame, max_df) -> DataFrame:
     """Shingles whose document frequency exceeds ``max_df``, from a
     ``(shingle, __df)`` count table. ``max_df`` is an int literal or a
-    ONE-ROW DataFrame carrying ``__max_df``: that cap rides the plan as
-    a broadcast instead of a per-call driver ``count()`` job. The cap
-    VALUE is identical either way; only where it is computed changes.
-
-    A cap frame with zero or several rows has no single cap, so the plan
-    raises when it runs instead of pruning by nothing or by the smallest
-    row. The row count is taken by a global aggregate over the cap frame
-    (itself one row by construction), which adds no job."""
+    ONE-ROW DataFrame carrying ``__max_df`` (checked by ``_cap_row``):
+    that cap rides the plan as a broadcast instead of a per-call driver
+    ``count()`` job. The cap VALUE is identical either way; only where
+    it is computed changes."""
     if isinstance(max_df, DataFrame):
-        cap = max_df.agg(
-            F.count(F.lit(1)).alias("__rows"), F.max("__max_df").alias("__cap")
-        ).select(
-            F.when(F.col("__rows") == 1, F.col("__cap"))
-            .otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit("max_df frame must have exactly one row, got "),
-                        F.col("__rows").cast("string"),
-                    )
-                )
-            )
-            .alias("__max_df")
-        )
         return (
-            dfc.crossJoin(F.broadcast(cap))
+            dfc.crossJoin(F.broadcast(_cap_row(max_df)))
             .filter(F.col("__df") > F.col("__max_df"))
             .select("shingle")
         )
     return dfc.filter(F.col("__df") > max_df).select("shingle")
+
+
+def _pruned_index(
+    df: DataFrame, id_col: str, text_col: str, shingle_size: int, max_df
+) -> tuple[DataFrame, DataFrame]:
+    """(inverted index ``(id, shingle)``, set sizes ``(id, n)``) over the
+    DF-pruned shingle space. The index is cached PRE-PARTITIONED on the
+    join key — InMemoryTableScan preserves the cached plan's output
+    partitioning, so both self-join sides read the index exchange-free in
+    the shuffle regime (the one inverted-index shuffle runs inside the
+    cache build; Spark 4's per-side TableCacheQueryStage otherwise blocks
+    exchange reuse over a cached relation). Hot-shingle skew in that one
+    shuffle is bounded by the ``max_df`` prune. Sizes count postings per
+    id VALUE, so rows sharing an id add up, and a null text's one null
+    shingle counts (the anti-join never drops a null key)."""
+    inv = shingle_sets(df, id_col, text_col, shingle_size).select(
+        F.col(id_col), F.explode("sset").alias("shingle")
+    )
+    if max_df is not None:
+        hot = _hot_shingles(
+            inv.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df")),
+            max_df,
+        )
+        inv = inv.join(F.broadcast(hot), on="shingle", how="left_anti")
+    inv = cache_once(inv.repartition("shingle"))
+    return inv, inv.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
 
 
 def _inv_self_join_inter(inv: DataFrame, id_col: str) -> DataFrame:
@@ -151,30 +201,43 @@ def ngram_jaccard_pairs(
     this knob is the difference between an operator that survives 100 TB
     and one that doesn't.
 
-    Cached intermediates (inverted index / shingle sets) live under the
-    session store's materialization rule (``session.py``).
+    The input is cached once and measured by one aggregate action; an
+    input whose candidate-pair table fits ``session.driver_bound`` is
+    resolved by ``_driver_pairs`` and returned as a ``LocalRelation``,
+    a larger one by the Spark plan (module docstring). Both paths share
+    these semantics: rows sharing an id add up by id value; a null id
+    never pairs; a null text is one null shingle, counted in its id's
+    size, never pruned and never paired; ``jaccard`` is the long/long
+    division as a double, so a zero denominator (only reachable through
+    duplicate ids) raises under ANSI mode and drops the pair otherwise.
     """
-    sets = shingle_sets(df, id_col, text_col, shingle_size)
-    inv = sets.select(F.col(id_col), F.explode("sset").alias("shingle"))
-    if max_df is not None:
-        hot = _hot_shingles(
-            inv.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df")),
-            max_df,
-        )
-        inv = inv.join(F.broadcast(hot), on="shingle", how="left_anti")
-        # cache PRE-PARTITIONED on the join key — InMemoryTableScan
-        # preserves the cached plan's output partitioning, so both
-        # self-join sides read the index exchange-free in the shuffle
-        # regime (the one inverted-index shuffle runs inside the cache
-        # build; Spark 4's per-side TableCacheQueryStage otherwise blocks
-        # exchange reuse over a cached relation). Hot-shingle skew in
-        # that one shuffle is bounded by the max_df prune above.
-        inv = cache_once(inv.repartition("shingle"))
-        sizes = inv.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    else:
-        sets = cache_once(sets)
-        inv = sets.select(F.col(id_col), F.explode("sset").alias("shingle"))
-        sizes = sets.select(F.col(id_col), F.size("sset").alias("n"))
+    docs = cache_once(df.select(id_col, text_col))
+    text = F.col(text_col)
+    stats = docs.agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(F.octet_length(text)).alias("text_bytes"),
+        F.sum(
+            F.greatest(
+                F.size(F.split(F.trim(text), " ")) - (shingle_size - 1), F.lit(1)
+            )
+        ).alias("postings"),
+    )
+    if isinstance(max_df, DataFrame):
+        # one row against one row: a Cartesian product reads both sides
+        # in the result stage, where a broadcast would add a job
+        stats = stats.crossJoin(_cap_row(max_df).hint("shuffle_replicate_nl"))
+    (got,) = stats.collect()
+    cap = got["__max_df"] if isinstance(max_df, DataFrame) else max_df
+    rows, postings = got["rows"], got["postings"] or 0
+    fanout = rows if cap is None else max(min(cap, rows), 0)
+    id_bytes = docs._jdf.schema().apply(id_col).dataType().defaultSize()
+    held = (got["text_bytes"] or 0) + rows * id_bytes
+    candidates = postings * max(fanout - 1, 0) // 2
+    bound = driver_bound(df.sparkSession)
+    if bound >= 0 and held + candidates * _PAIR_ROW_BYTES <= bound:
+        return _driver_pairs(docs, id_col, text_col, shingle_size, threshold, cap)
+
+    inv, sizes = _pruned_index(docs, id_col, text_col, shingle_size, max_df)
     inter = _inv_self_join_inter(inv, id_col)
     return (
         inter.join(
@@ -189,6 +252,107 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
+    )
+
+
+# The most arrays with one entry per candidate pair that `_driver_pairs`
+# holds at once: inside `np.unique` with counts, five int64 (the pair
+# keys, their sorted copy, the unique keys and two index arrays) and one
+# bool mask. Pair generation holds at most four int64 and one bool, and
+# scoring at most five int64 and one bool.
+_PAIR_ROW_BYTES = 5 * np.dtype(np.int64).itemsize + np.dtype(np.bool_).itemsize
+
+
+def _driver_pairs(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_size: int,
+    threshold: float,
+    cap,
+) -> DataFrame:
+    """The Spark plan's pairs from one numpy pass over the collected
+    ``(id, text)`` rows, as a ``LocalRelation``.
+
+    Ids are ranked by a sorted factorization, so rank order is the
+    engine's id order and ``rank_a < rank_b`` is ``id_a < id_b``. Each
+    row's ``distinct_shingles`` become postings; the DF prune drops the
+    postings of non-null shingles held by more than ``cap`` rows; sizes
+    count every surviving posting per id rank. Postings sorted by
+    (shingle, rank) make every within-shingle pair ``i < j`` come out with
+    ``rank_i <= rank_j``; equal ranks (one id) are dropped, and
+    ``np.unique`` over ``rank_a·N + rank_b`` counts each pair's
+    intersection."""
+    import pandas as pd
+
+    spark = docs.sparkSession
+    table = docs.toArrow()
+    ids = table.column(id_col).combine_chunks()
+    codes, uniq = pd.factorize(
+        ids.drop_null().to_numpy(zero_copy_only=False), sort=True
+    )
+    n_ids = len(uniq)
+    row_rank = np.full(len(ids), -1, np.int64)
+    row_rank[ids.is_valid().to_numpy(zero_copy_only=False)] = codes
+    sets = [
+        distinct_shingles(t, shingle_size)
+        for t in table.column(text_col).to_pylist()
+    ]
+    rank = np.repeat(row_rank, [len(s) for s in sets])
+    shingle, _ = pd.factorize(
+        np.array([g for s in sets for g in s], dtype=object)
+    )  # the null shingle of a null text codes as -1
+    if cap is not None:
+        df_count = np.bincount(shingle + 1)[shingle + 1]
+        keep = (shingle < 0) | ~(df_count > cap)  # Spark prunes `__df > cap`
+        rank, shingle = rank[keep], shingle[keep]
+    n = np.bincount(rank[rank >= 0], minlength=n_ids)
+
+    live = (shingle >= 0) & (rank >= 0)
+    s, r = shingle[live], rank[live]
+    order = np.lexsort((r, s))
+    s, r = s[order], r[order]
+    start = np.flatnonzero(np.diff(s, prepend=-1))
+    size = np.diff(start, append=len(s))
+    after = np.repeat(start + size, size) - np.arange(len(s)) - 1
+    left = np.repeat(np.arange(len(s)), after)
+    right = np.arange(len(left))
+    right -= np.repeat(np.cumsum(after) - after, after)
+    right += left + 1
+    b = r[right]
+    del right
+    a = r[left]
+    del left
+    pair = a < b
+    key = a[pair]
+    key *= n_ids
+    key += b[pair]
+    del a, b, pair
+    keys, inter = np.unique(key, return_counts=True)
+    del key
+    a, b = np.divmod(keys, n_ids)
+    del keys
+    denom = n[a]
+    denom += n[b]
+    denom -= inter
+    zero = denom == 0
+    if zero.any() and spark._jsparkSession.sessionState().conf().ansiEnabled():
+        raise ArithmeticException(
+            message="[DIVIDE_BY_ZERO] Division by zero in the Jaccard of "
+            "ids sharing every shingle across duplicate rows."
+        )
+    with np.errstate(divide="ignore", invalid="ignore"):
+        jaccard = inter / denom
+    del inter, denom
+    hit = ~zero & (jaccard >= threshold)
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "id_a": pa.array(uniq[a[hit]], type=ids.type),
+                "id_b": pa.array(uniq[b[hit]], type=ids.type),
+                "jaccard": pa.array(jaccard[hit], type=pa.float64()),
+            }
+        )
     )
 
 
@@ -227,7 +391,7 @@ def ngram_jaccard_pairs_against(
         inv_c = inv_c.join(F.broadcast(hot), on="shingle", how="left_anti")
         inv_b = inv_b.join(F.broadcast(hot), on="shingle", how="left_anti")
     # pre-partitioned caches — the batch-vs-corpus join consumes both
-    # indexes exchange-free (see ngram_jaccard_pairs)
+    # indexes exchange-free (see _pruned_index)
     inv_c = cache_once(inv_c.repartition("shingle"))
     inv_b = cache_once(inv_b.repartition("shingle"))
     n_c = inv_c.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_c"))
@@ -272,17 +436,7 @@ def ngram_containment_pairs(
     `ngram_jaccard_pairs` (one shuffle keyed by shingle, pair stream
     partially aggregated map-side; containment on the PRUNED space).
     """
-    sets = shingle_sets(df, id_col, text_col, shingle_size)
-    inv = sets.select(F.col(id_col), F.explode("sset").alias("shingle"))
-    if max_df is not None:
-        hot = _hot_shingles(
-            inv.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df")),
-            max_df,
-        )
-        inv = inv.join(F.broadcast(hot), on="shingle", how="left_anti")
-    # pre-partitioned cache — see ngram_jaccard_pairs
-    inv = cache_once(inv.repartition("shingle"))
-    sizes = inv.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
+    inv, sizes = _pruned_index(df, id_col, text_col, shingle_size, max_df)
     inter = _inv_self_join_inter(inv, id_col)
     scored = (
         inter.join(

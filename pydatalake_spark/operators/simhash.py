@@ -140,68 +140,47 @@ def simhash_near_dup(
     fp = fingerprints if fingerprints is not None else simhash_table(
         df, id_col, text_col, bits
     )
-    sh = fp.select(
-        F.col(id_col),
-        F.conv(F.substring("simhash", 1, half), 2, 10).cast("long").alias("sh_hi"),
-        F.conv(F.substring("simhash", half + 1, half), 2, 10)
-        .cast("long")
-        .alias("sh_lo"),
+    # SQL strings, one generated source per expression: the Column-API
+    # form costs a py4j round trip per call (~400 per build at 4 bands)
+    sh = fp.selectExpr(
+        f"`{id_col}`",
+        f"CAST(conv(substring(simhash, 1, {half}), 2, 10) AS BIGINT) AS sh_hi",
+        f"CAST(conv(substring(simhash, {half + 1}, {half}), 2, 10) AS BIGINT)"
+        " AS sh_lo",
     )
 
-    def band_val(b: int):
+    def band_val(b: int) -> str:
         # bands laid out hi→lo; width ≤ 32 keeps every value in signed range
         start_bit = b * width  # from the string's left (MSB of hi)
         if start_bit + width <= half:
-            src, off = F.col("sh_hi"), half - start_bit - width
+            src, off = "sh_hi", half - start_bit - width
         else:
-            src, off = F.col("sh_lo"), bits - start_bit - width
-        return F.shiftrightunsigned(src, off) % F.lit(2**width)
+            src, off = "sh_lo", bits - start_bit - width
+        return f"shiftrightunsigned({src}, {off}) % {2**width}"
 
-    bands = F.array(
-        *[
-            F.struct(F.lit(b).alias("band"), band_val(b).alias("val"))
-            for b in range(num_bands)
-        ]
+    bands = ", ".join(
+        f"named_struct('band', {b}, 'val', {band_val(b)})" for b in range(num_bands)
     )
-    bb = sh.select(id_col, "sh_hi", "sh_lo", F.explode(bands).alias("bb")).select(
-        id_col,
-        "sh_hi",
-        "sh_lo",
-        F.col("bb.band").alias("band"),
-        F.col("bb.val").alias("val"),
+    # the narrow (id, sh_hi, sh_lo, band, val) table is cached, so the
+    # fingerprint pass runs once and both self-join sides read its blocks
+    # in every join regime (over a cached relation each side gets its own
+    # TableCacheQueryStage, so the two exchanges never unify). It is not
+    # cached pre-partitioned: AQE cannot skew-split a cached scan, and hot
+    # band values are the skew hazard.
+    bb = cache_once(
+        sh.selectExpr(f"`{id_col}`", "sh_hi", "sh_lo", f"inline(array({bands}))")
     )
-    # r12 kept both self-join sides plan-identical below the exchange so
-    # ReuseExchange can unify them — but that only fires in the
-    # SHUFFLE-join regime over an uncached upstream (r13/ADVICE r12: in
-    # the broadcast regime there is no exchange to reuse and the
-    # fingerprint pass ran TWICE; over a cached upstream Spark 4's
-    # per-side TableCacheQueryStage blocks the unification anyway).
-    # r13: cache the narrow (id, sh_hi, sh_lo, band, val) band table —
-    # its blocks are computed once and BOTH sides read them in every
-    # join regime; the duplicated work is at most a cache scan + the
-    # narrow band shuffle, never the fingerprint pass.
-    # (Deliberately not cached pre-partitioned: AQE cannot skew-split a
-    # cached scan, and hot band values are the skew hazard; measured
-    # +0.13s warm at sf0.1 for zero broadcast-regime benefit.)
-    bb = cache_once(bb)
     x, y = bb.alias("__sa"), bb.alias("__sb")
-    hd = F.bit_count(
-        F.col("__sa.sh_hi").bitwiseXOR(F.col("__sb.sh_hi"))
-    ) + F.bit_count(F.col("__sa.sh_lo").bitwiseXOR(F.col("__sb.sh_lo")))
     return (
-        x.join(
-            y,
-            (F.col("__sa.band") == F.col("__sb.band"))
-            & (F.col("__sa.val") == F.col("__sb.val")),
+        x.join(y, F.expr("__sa.band = __sb.band AND __sa.val = __sb.val"))
+        .where(f"__sa.`{id_col}` < __sb.`{id_col}`")
+        .selectExpr(
+            f"__sa.`{id_col}` AS id_a",
+            f"__sb.`{id_col}` AS id_b",
+            "CAST(bit_count(__sa.sh_hi ^ __sb.sh_hi)"
+            " + bit_count(__sa.sh_lo ^ __sb.sh_lo) AS BIGINT) AS hamming",
         )
-        .filter(F.col(f"__sa.{id_col}") < F.col(f"__sb.{id_col}"))
-        .withColumn("hamming", hd.cast("long"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select(
-            F.col(f"__sa.{id_col}").alias("id_a"),
-            F.col(f"__sb.{id_col}").alias("id_b"),
-            "hamming",
-        )
+        .where(f"hamming <= {max_hamming}")
         .distinct()
     )
 

@@ -106,6 +106,22 @@ def stop_spark() -> None:
         active.stop()
 
 
+def driver_bound(spark: SparkSession) -> int:
+    """Bytes a driver-side tier may collect and hold: the least of
+    ``spark.sql.autoBroadcastJoinThreshold`` (the most Spark itself
+    collects to the driver to broadcast) and ``spark.driver.maxResultSize``
+    (the most one action may return; 0 means unlimited). ``-1`` when the
+    threshold is ``-1``: every driver-side tier is off and the operator
+    runs its distributed plan."""
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if threshold < 0:
+        return -1
+    result_max = spark.sparkContext._jsc.sc().conf().getSizeAsBytes(
+        "spark.driver.maxResultSize", "1g"
+    )
+    return threshold if result_max == 0 else min(threshold, result_max)
+
+
 def _is_cached(df: DataFrame) -> bool:
     sl = df.storageLevel  # resolved by plan equality in the CacheManager
     return sl.useMemory or sl.useDisk
@@ -119,7 +135,13 @@ def cache_once(df: DataFrame) -> DataFrame:
     twice (a bare ``.cache()`` would log ``Asked to cache already cached
     data``). An entry whose cache was dropped outside the store is
     re-cached from ``df``, never from the stored frame: an equal plan
-    over a rewritten directory lists different files."""
+    over a rewritten directory lists different files.
+
+    A ``LocalRelation`` (rows a driver-side tier already holds) is
+    returned as it is: collecting it fires no job, and caching it would
+    only add a cache-build job."""
+    if df._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LocalRelation":
+        return df
     if not _is_cached(df):
         df.cache()
     plan = df._jdf.queryExecution().normalized()

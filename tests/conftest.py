@@ -36,10 +36,12 @@ def jobs_in(spark, group, fn):
 
 @contextmanager
 def cc_loop(spark, on):
-    """Inside, ``connected_components`` takes the distributed min-label
-    loop when ``on`` (broadcast threshold ``-1``); otherwise the session
-    threshold, under which test-sized edge tables take the driver-side
-    union-find."""
+    """Inside, every driver-side tier is off when ``on`` (broadcast
+    threshold ``-1``, so ``session.driver_bound`` is ``-1``):
+    ``connected_components`` runs the distributed min-label loop and
+    ``ngram_jaccard_pairs`` its Spark plan. Otherwise the session
+    threshold applies, under which test-sized inputs take the driver-side
+    union-find and pair kernel."""
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
     if on:

@@ -711,6 +711,7 @@ def test_ngram_jaccard_exact_superset_of_lsh(spark):
 
     from pydatalake_spark.operators.minhash import near_dup_pairs
     from pydatalake_spark.operators.ngram_jaccard import ngram_jaccard_pairs
+    from tests.conftest import cc_loop
 
     docs = pd.DataFrame(
         {
@@ -724,19 +725,21 @@ def test_ngram_jaccard_exact_superset_of_lsh(spark):
         }
     )
     df = spark.createDataFrame(docs)
-    exact = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(df, threshold=0.5).collect()
-    }
     lsh = {
         (r.id_a, r.id_b): r.jaccard
         for r in near_dup_pairs(df, jaccard_threshold=0.5).collect()
     }
-    assert (1, 2) in exact and exact[(1, 2)] >= 0.5
-    assert (3, 4) not in exact
-    assert set(lsh) <= set(exact)  # exact is recall-1; LSH may only miss
-    for pair in lsh:
-        assert abs(lsh[pair] - exact[pair]) < 1e-12
+    for spark_path in (False, True):
+        with cc_loop(spark, spark_path):
+            exact = {
+                (r.id_a, r.id_b): r.jaccard
+                for r in ngram_jaccard_pairs(df, threshold=0.5).collect()
+            }
+        assert (1, 2) in exact and exact[(1, 2)] >= 0.5
+        assert (3, 4) not in exact
+        assert set(lsh) <= set(exact)  # exact is recall-1; LSH may only miss
+        for pair in lsh:
+            assert abs(lsh[pair] - exact[pair]) < 1e-12
 
 
 def test_ngram_jaccard_max_df_prunes_hot_shingles(spark):
@@ -745,29 +748,37 @@ def test_ngram_jaccard_max_df_prunes_hot_shingles(spark):
     import pandas as pd
 
     from pydatalake_spark.operators.ngram_jaccard import ngram_jaccard_pairs
+    from tests.conftest import cc_loop
 
     same = ["common header line one two three unique%d tail" % i for i in range(20)]
     df = spark.createDataFrame(pd.DataFrame({"doc_id": range(20), "text": same}))
-    uncapped = ngram_jaccard_pairs(df, threshold=0.5).count()
-    assert uncapped == 20 * 19 / 2  # everything pairs via the shared header
-    capped = ngram_jaccard_pairs(df, threshold=0.5, max_df=5).count()
-    assert capped == 0
+    for spark_path in (False, True):
+        with cc_loop(spark, spark_path):
+            uncapped = ngram_jaccard_pairs(df, threshold=0.5).count()
+            # everything pairs via the shared header
+            assert uncapped == 20 * 19 / 2, spark_path
+            capped = ngram_jaccard_pairs(df, threshold=0.5, max_df=5).count()
+            assert capped == 0, spark_path
 
 
 def test_ngram_max_df_frame_must_have_one_row(spark):
     """A ``max_df`` frame carries ONE cap: an empty or a two-row frame
     raises when the plan runs instead of pruning by nothing or by the
-    smallest row."""
+    smallest row, on both paths."""
     import pandas as pd
 
     from pydatalake_spark.operators.ngram_jaccard import ngram_jaccard_pairs
+    from tests.conftest import cc_loop
 
     same = ["common header line one two three unique%d tail" % i for i in range(20)]
     df = spark.createDataFrame(pd.DataFrame({"doc_id": range(20), "text": same}))
-    for rows in ([], [(5,), (50,)]):
-        cap = spark.createDataFrame(rows, "__max_df long")
-        with pytest.raises(Exception, match="exactly one row"):
-            ngram_jaccard_pairs(df, threshold=0.5, max_df=cap).collect()
+    for spark_path in (False, True):
+        for rows in ([], [(5,), (50,)]):
+            cap = spark.createDataFrame(rows, "__max_df long")
+            with cc_loop(spark, spark_path), pytest.raises(
+                Exception, match="exactly one row"
+            ):
+                ngram_jaccard_pairs(df, threshold=0.5, max_df=cap).collect()
 
 
 def test_ngram_registry_max_df_frame_prunes_like_int_at_no_extra_job(spark):
@@ -781,7 +792,7 @@ def test_ngram_registry_max_df_frame_prunes_like_int_at_no_extra_job(spark):
     )
     from pydatalake_spark.queries.tables import load_table
     from pydatalake_spark.queries.text import _ngram_max_df_plan
-    from tests.conftest import SF_DIR, jobs_in
+    from tests.conftest import SF_DIR, cc_loop, jobs_in
 
     docs = load_table(spark, SF_DIR, "documents")
     cap = _ngram_max_df_plan(docs)
@@ -792,7 +803,9 @@ def test_ngram_registry_max_df_frame_prunes_like_int_at_no_extra_job(spark):
             map(tuple, ngram_jaccard_pairs(docs, threshold=0.5, max_df=max_df).collect())
         )
 
-    assert pairs(cap) == pairs(as_int)
+    for spark_path in (False, True):
+        with cc_loop(spark, spark_path):
+            assert pairs(cap) == pairs(as_int), spark_path
 
     dfc = (
         shingle_sets(docs)
@@ -969,9 +982,15 @@ def test_cc_checkpoints_reaped_between_iterations(spark, monkeypatch):
         ]
         return len(ids), [i for i in ids if live.get(i) is not None]
 
-    # the union-find path returns a local relation: its one edge
-    # checkpoint is reaped once collected, nothing stays live
+    # the union-find path returns a local relation. Edges that already
+    # are one make no checkpoint; any other edge plan makes one, reaped
+    # once collected, so nothing stays live
     assert {r.cluster_id for r in connected_components(pairs).collect()} == {0}
+    assert live_checkpoints() == (0, [])
+    chain = spark.range(19).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    assert {r.cluster_id for r in connected_components(chain).collect()} == {0}
     assert live_checkpoints() == (1, [])
 
     made.clear()
@@ -1091,19 +1110,20 @@ def test_cc_matches_union_find(spark):
 
 
 def test_cc_job_count_independent_of_diameter(spark):
-    """Under the broadcast bound CC fires a small constant number of jobs
+    """Under the driver bound CC fires a small constant number of jobs
     (the edge build's count and one Arrow collect) whatever the graph's
     diameter, and returns a local relation: collecting it runs no job
-    and no Python worker. The min-label loop fires a job per hop."""
-    import pandas as pd
-
+    and no Python worker. The min-label loop fires a job per hop. The
+    edges come from ``spark.range`` so they are not already a local
+    relation (that case is pinned by
+    ``test_driver_pair_front_and_cc_fire_few_jobs``)."""
     from pydatalake_spark.operators.cluster import connected_components
     from tests.conftest import jobs_in
 
     ccs, counts = {}, {}
     for hops in (2, 80):
-        df = spark.createDataFrame(
-            pd.DataFrame({"id_a": range(hops), "id_b": range(1, hops + 1)})
+        df = spark.range(hops).select(
+            F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
         )
         ccs[hops], counts[hops] = jobs_in(
             spark,
@@ -1116,6 +1136,90 @@ def test_cc_job_count_independent_of_diameter(spark):
         rows, n = jobs_in(spark, f"cc_collect_{hops}", cc.collect)
         assert n == 0
         assert {r.cluster_id for r in rows} == {0}
+
+
+def test_driver_pair_front_and_cc_fire_few_jobs(spark):
+    """On the sf0.001 docs the exact pair front takes the driver kernel:
+    measuring the input, collecting it and resolving the pairs fire at
+    most 6 jobs together with CC. The pairs come back as a
+    ``LocalRelation`` that ``cache_once`` leaves uncached and CC reads
+    with no job (no checkpoint, no count, no Arrow collect). They equal
+    the Spark plan's pairs."""
+    from pyspark.storagelevel import StorageLevel
+
+    from pydatalake_spark.operators.cluster import connected_components
+    from pydatalake_spark.operators.ngram_jaccard import ngram_jaccard_pairs
+    from pydatalake_spark.queries.tables import load_table
+    from pydatalake_spark.queries.text import _MH_K, _ngram_max_df_plan
+    from pydatalake_spark.session import cache_once
+    from tests.conftest import SF_DIR, cc_loop, jobs_in
+
+    docs = load_table(spark, SF_DIR, "documents")
+
+    def front():
+        return ngram_jaccard_pairs(
+            docs, shingle_size=_MH_K, threshold=0.5,
+            max_df=_ngram_max_df_plan(docs),
+        )
+
+    pairs, n_pairs = jobs_in(spark, "pair_front", front)
+    assert (
+        pairs._jdf.queryExecution().analyzed().getClass().getSimpleName()
+        == "LocalRelation"
+    )
+    assert cache_once(pairs) is pairs
+    assert pairs.storageLevel == StorageLevel.NONE
+    cc, n_cc = jobs_in(spark, "pair_front_cc", lambda: connected_components(pairs))
+    assert n_cc == 0
+    assert n_pairs + n_cc <= 6, (n_pairs, n_cc)
+    got = sorted(map(tuple, pairs.collect()))
+    assert got
+    with cc_loop(spark, True):
+        assert sorted(map(tuple, front().collect())) == got
+
+
+def test_cc_respects_max_result_size():
+    """The driver bound is the least of the broadcast threshold and
+    ``spark.driver.maxResultSize``: with a 1 GB threshold and a 1 MB
+    result cap, CC on a low-diameter graph whose edge table is over 1 MB
+    takes the min-label loop (collecting the edges would abort the job)
+    and labels every node with its star's minimum. ``maxResultSize`` is
+    fixed when the context starts, so this runs in its own session."""
+    import os
+    import subprocess
+    import sys
+
+    script = """
+from pyspark.sql import functions as F
+from pydatalake_spark.operators.cluster import connected_components
+from pydatalake_spark.session import driver_bound, get_spark
+
+spark = get_spark("maxresult", master="local[2]", extra_conf={
+    "spark.driver.maxResultSize": "1m",
+    "spark.sql.autoBroadcastJoinThreshold": str(1 << 30),
+})
+assert driver_bound(spark) == 1 << 20, driver_bound(spark)
+# 100 stars of 5 nodes (diameter 2), each of their 400 edges listed
+# 175 times: CC sizes the raw pair table, 70,000 rows x 16 bytes, over
+# 1 MB. The loop deduplicates the edges before it joins; its joins are
+# planned by Spark under the 1 GB threshold alone, so distinct edges
+# over 1 MB would make Spark's own broadcast hit the result cap.
+edges = spark.range(70_000).select(
+    ((F.col("id") % 100) * 5).alias("id_a"),
+    ((F.col("id") % 100) * 5 + 1 + F.col("id") / 100 % 4).cast("long").alias("id_b"),
+)
+cc = connected_components(edges)
+bad = cc.filter(F.col("cluster_id") != F.col("node") - F.col("node") % 5)
+print("RESULT", cc.count(), bad.count())
+spark.stop()
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root + os.pathsep + os.environ.get("PYTHONPATH", ""))
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert "RESULT 500 0" in out.stdout, out.stdout + out.stderr[-3000:]
 
 
 def test_quality_score_empty_doc_yields_null_not_error(spark):
@@ -1646,6 +1750,7 @@ def test_ngram_containment_catches_embedded_doc(spark):
         ngram_containment_pairs,
         ngram_jaccard_pairs,
     )
+    from tests.conftest import cc_loop
 
     inner = " ".join(f"t{i}" for i in range(12))
     outer = inner + " " + " ".join(f"z{i}" for i in range(60))
@@ -1660,8 +1765,9 @@ def test_ngram_containment_catches_embedded_doc(spark):
     assert (1, 2) in got and got[(1, 2)] == 1.0
     assert all(k == (1, 2) for k in got)
     # the same pair is invisible to Jaccard at any common threshold
-    j = ngram_jaccard_pairs(df, threshold=0.5).collect()
-    assert j == []
+    for spark_path in (False, True):
+        with cc_loop(spark, spark_path):
+            assert ngram_jaccard_pairs(df, threshold=0.5).collect() == []
 
 
 def test_bloom_chunked_build_multi_chunk_layout(spark, monkeypatch):

@@ -185,12 +185,18 @@ def test_near_dup_joins_are_equi_joins(spark):
     docs = load_table(spark, SF, "documents")
     emb = load_table(spark, SF, "embeddings")
     from pydatalake_spark.operators.ngram_jaccard import ngram_jaccard_pairs
+    from tests.conftest import cc_loop
 
+    # with the driver tiers off the exact pair front builds its Spark
+    # plan; under the bound it would return a LocalRelation
+    with cc_loop(spark, True):
+        ngram = ngram_jaccard_pairs(docs)
+    assert "Join" in ngram._jdf.queryExecution().optimizedPlan().toString()
     for df in (
         simhash_near_dup(docs),
         embedding_near_dup(emb),
         near_dup_pairs(docs),
-        ngram_jaccard_pairs(docs),
+        ngram,
     ):
         p = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in p

@@ -175,6 +175,7 @@ def test_ngram_jaccard_matches_set_model(spark, texts):
     tiny corpora — short docs (< k tokens), identical docs, and all-same
     corpora fall out of the generator."""
     from pydatalake_spark.operators.ngram_jaccard import ngram_jaccard_pairs
+    from tests.conftest import cc_loop
 
     k = 3
     docs = {i: " ".join(t) for i, t in enumerate(texts)}
@@ -197,13 +198,61 @@ def test_ngram_jaccard_matches_set_model(spark, texts):
     df = spark.createDataFrame(
         pd.DataFrame({"doc_id": list(docs), "text": list(docs.values())})
     )
-    got = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(df, threshold=0.5).collect()
-    }
-    assert set(got) == set(expect)
-    for pair, j in expect.items():
-        assert abs(got[pair] - j) < 1e-12
+    for spark_path in (False, True):
+        with cc_loop(spark, spark_path):
+            got = {
+                (r.id_a, r.id_b): r.jaccard
+                for r in ngram_jaccard_pairs(df, threshold=0.5).collect()
+            }
+        assert set(got) == set(expect), spark_path
+        for pair, j in expect.items():
+            assert abs(got[pair] - j) < 1e-12, spark_path
+
+
+_pair_text = st.one_of(
+    st.none(),
+    st.sampled_from(["", " ", "   "]),
+    st.lists(st.sampled_from(["aa", "bb", "cc", "dd"]), min_size=1, max_size=7).map(
+        " ".join
+    ),
+)
+_pair_corpus = st.lists(
+    st.tuples(st.one_of(st.none(), st.integers(0, 5)), _pair_text),
+    min_size=0,
+    max_size=9,
+)
+
+
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@given(rows=_pair_corpus, int_cap=st.integers(0, 4))
+def test_ngram_driver_pairs_match_spark_plan(spark, rows, int_cap):
+    """The driver-side pair kernel returns exactly the Spark plan's rows
+    (same jaccard bits) on corpora with null, empty and whitespace-only
+    text, docs shorter than k, duplicate ids and null ids, under an int
+    cap, a one-row cap frame and no cap. Where duplicate ids make a
+    Jaccard denominator zero, both paths raise DIVIDE_BY_ZERO."""
+    from pydatalake_spark.operators.ngram_jaccard import ngram_jaccard_pairs
+    from tests.conftest import cc_loop
+
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    frame = spark.createDataFrame([(int_cap + 1,)], "__max_df long")
+
+    def outcome(max_df):
+        try:
+            return sorted(
+                map(
+                    tuple,
+                    ngram_jaccard_pairs(df, threshold=0.3, max_df=max_df).collect(),
+                )
+            )
+        except Exception as e:  # both paths must fail the same way
+            assert "DIVIDE_BY_ZERO" in str(e), e
+            return "DIVIDE_BY_ZERO"
+
+    for max_df in (int_cap, frame, None):
+        with cc_loop(spark, True):
+            want = outcome(max_df)
+        assert outcome(max_df) == want, (rows, max_df)
 
 
 # --- span dedup vs a pure-Python model --------------------------------------
