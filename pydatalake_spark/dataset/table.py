@@ -271,14 +271,13 @@ class DataLakeTable:
         rows whose embedding has no higher-priority (lower-id) cosine
         neighbor >= ``threshold`` within its cluster cell. ``num_cells``
         defaults to corpus-sized auto-selection (suggest_num_cells) so the
-        within-cell pair work stays linear in table size; the verify tier
-        is the Arrow/numpy gram-matrix path (pytest-pinned equal to the
-        expression form)."""
-        from pydatalake_spark.operators.semdedup import semantic_dedup_numpy
+        within-cell pair work stays linear in table size; the verify is
+        one numpy gram matrix per cell."""
+        from pydatalake_spark.operators.semdedup import semantic_dedup
 
         df = self.to_df()
         keep = (
-            semantic_dedup_numpy(
+            semantic_dedup(
                 df, id_col=id_col, vec_col=vec_col,
                 num_cells=num_cells, threshold=threshold, **kwargs,
             )

@@ -522,13 +522,10 @@ def build_literal_bloom(
 BLOOM_JOIN_MAX_BITS = 1 << 31
 
 
-def bloom_tier(
-    n_keys: int,
-    vector_max_bits: int = BLOOM_VECTOR_MAX_BITS,
-    join_max_bits: int = BLOOM_JOIN_MAX_BITS,
-) -> str:
+def bloom_tier(n_keys: int) -> str:
     """'vector' | 'join' | 'exact' — the explicit scale dispatch for
-    membership screens (VERDICT r5 item 2: the crossover policy, stated).
+    membership screens: the crossover policy, stated. The ceilings are
+    the module constants, read at call time.
 
     At ``BLOOM_BITS_PER_KEY`` = 24 bits/key the boundaries are:
 
@@ -546,9 +543,9 @@ def bloom_tier(
       here; see SCALE.md §bloom-crossover.
     """
     m = bloom_num_bits(n_keys)
-    if m <= vector_max_bits:
+    if m <= BLOOM_VECTOR_MAX_BITS:
         return "vector"
-    if m <= join_max_bits:
+    if m <= BLOOM_JOIN_MAX_BITS:
         return "join"
     return "exact"
 
@@ -558,8 +555,6 @@ def membership_screen(
     train_keys: DataFrame,
     key_col: str = "key",
     n_train_keys: int | None = None,
-    vector_max_bits: int = BLOOM_VECTOR_MAX_BITS,
-    join_max_bits: int = BLOOM_JOIN_MAX_BITS,
 ) -> DataFrame:
     """Probe rows + ``bf_hit`` ("possible member of train_keys"), through
     the explicit three-tier ``bloom_tier`` dispatch. No false negatives
@@ -574,7 +569,7 @@ def membership_screen(
             .distinct()
             .count()
         )
-    tier = bloom_tier(n_train_keys, vector_max_bits, join_max_bits)
+    tier = bloom_tier(n_train_keys)
     _log.info(
         "membership_screen tier=%s n_train_keys=%d num_bits=%d",
         tier, n_train_keys, bloom_num_bits(n_train_keys),
@@ -582,8 +577,8 @@ def membership_screen(
     if tier == "exact":
         # internal marker name must not collide with probe columns — the
         # decontamination audit passes a probe that already carries `_hit`
-        # (r7 ADVICE: AMBIGUOUS_REFERENCE past the join ceiling, the exact
-        # scale this tier exists for)
+        # (a collision raises AMBIGUOUS_REFERENCE past the join ceiling,
+        # the exact scale this tier exists for)
         mark = "__ms_hit"
         while mark in probe.columns:
             mark += "_"

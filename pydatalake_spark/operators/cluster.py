@@ -25,8 +25,9 @@ two paths:
   min-label propagation, the only path for an edge table the driver must
   not hold. Every node starts labeled with its own id; each round every
   node takes the min label over itself and its neighbors. Per round: one
-  join (labels onto symmetrized edges) + one min-aggregation — two keyed
-  shuffles, both algebraic with map-side partial agg. Rounds = graph
+  sort-merge join (labels onto symmetrized edges; hinted, so neither
+  side is ever broadcast) + one min-aggregation — two keyed shuffles,
+  both algebraic with map-side partial agg. Rounds = graph
   diameter; near-dup graphs are dense little cliques with tiny diameters
   (2-4 rounds in practice). `localCheckpoint` truncates the plan each
   round so lineage doesn't grow O(iterations) — the standard Spark
@@ -157,9 +158,14 @@ def _min_label_loop(
         # reads a `_changed` flag off the checkpointed result — a
         # shuffle-free scan of cached blocks — instead of re-joining the
         # new generation against the old one (a second keyed exchange
-        # pair per round).
+        # pair per round). The loop only runs on edge tables above
+        # session.driver_bound, so broadcasting either side is never
+        # right here: the merge hint keeps Spark (and AQE) from picking a
+        # broadcast from the threshold alone, which would collect the
+        # edges past spark.driver.maxResultSize.
         neighbor = (
-            edges.join(labels, edges.dst == labels.node)
+            edges.hint("merge")
+            .join(labels, edges.dst == labels.node)
             .select(F.col("src").alias("node"), "cluster_id")
         )
         new_labels, new_ids = _ckpt(

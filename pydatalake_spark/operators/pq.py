@@ -17,31 +17,32 @@ tiers in ``operators/similarity.py`` as the compression leg.
 
 Spark-first shapes:
 
-- **Training** (`train_pq_codebooks`): deterministic init (the
-  subvectors of the ``k`` lowest-id vectors — same convention as the
-  SemDeDup/k-means quantizers, so a SQL oracle can replay it) + ONE
-  distributed Lloyd refinement: a map-only argmin against the
-  broadcast-literal init, then a single groupBy over ``m*k`` groups
-  with map-side partial means.  One shuffle of skinny partials,
-  corpus never collected.  Centroid means are rounded to 6 dp so the
+- **Training** (`train_pq_codebooks`, long form `train_pq_long_numpy`):
+  deterministic init (the subvectors of the ``k`` lowest-id vectors —
+  same convention as the SemDeDup/k-means quantizers, so a SQL oracle
+  can replay it) + ONE distributed Lloyd refinement: each Arrow batch is
+  assigned with one ``|batch| x k`` matmul per subspace and collapsed to
+  per-(subspace, code, dim) sum/count partials, then a single groupBy
+  over ``m*k*sub_dim`` groups.  One shuffle of skinny partials, corpus
+  never collected.  Centroid means are rounded to 6 dp so the
   downstream argmin is bit-identical across engines (and across
   re-runs on differently-partitioned input).
 - **Encode** (`pq_encode`): the refined codebook is a bounded model
-  artifact (``m*k*sub_dim`` doubles — a few KB); it is fused into the
-  plan as literals, so encoding is MAP-ONLY: zero shuffles, zero
-  joins, scales embarrassingly.  `pq_encode_numpy` is the Arrow tier
-  for large ``k`` (256+), where a k-branch expression tree would blow
-  past codegen limits — one ``|batch| x k`` matmul per subspace.
+  artifact (``m*k*sub_dim`` doubles — a few KB) captured in the batch
+  closure; per batch and subspace one ``|batch| x k`` distance matmul +
+  argmin, so encoding is MAP-ONLY: zero shuffles, zero joins, and no
+  k-branch expression tree to outgrow codegen at large ``k``.
 - **Search** (`pq_adc_topk`): the query set is bounded by contract
   (like `cosine_topk` / `hard_triplets` anchors); its distance table
   is computed driver-side (``|Q| * m * k`` doubles) and fused as
   literals, so scoring is map-only + one rank-window top-k shuffle of
   ``|Q| x n`` skinny rows.
 
-Everything is oracle-exact: fold order matches DuckDB ``list_sum``
-(left-to-right, 0.0 seed — see functions/vector.py), ties break to the
-lowest code on both sides, and ADC sums its ``m`` terms in fixed
-subspace order (a group-by sum could reorder floats).
+Everything is oracle-exact: codebook means are rounded to ``PQ_ROUND``
+dp (absorbing partial-sum reorder), ties break to the lowest code on
+both sides, and ADC sums its ``m`` terms in fixed subspace order (a
+group-by sum could reorder floats). The column-expression trainer and
+encoder the tests compare against live in tests/test_pq.py.
 """
 
 from __future__ import annotations
@@ -56,39 +57,8 @@ PQ_K = 16  # codes per subspace
 PQ_ROUND = 6  # codebook rounding (cross-engine exact argmin downstream)
 
 
-def _subvec(vec: F.Column, s: int, sub_dim: int) -> F.Column:
-    """1-based slice of subspace ``s`` out of a double-array column."""
-    return F.slice(vec, s * sub_dim + 1, sub_dim)
-
-
 def _lit_vec(values) -> F.Column:
     return F.array(*[F.lit(float(v)) for v in values])
-
-
-def _d2_lit(sv: F.Column, centroid) -> F.Column:
-    """Squared L2 distance of a subvector column to a literal centroid,
-    summed left-to-right from a 0.0 seed — the exact fold DuckDB's
-    ``list_sum(list_transform(...))`` computes."""
-    return F.aggregate(
-        F.zip_with(sv, _lit_vec(centroid), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _argmin_code(sv: F.Column, centroids: list[tuple[int, list[float]]]) -> F.Column:
-    """Code of the nearest literal centroid; ties -> lowest code.
-
-    ``centroids`` is [(code, cvec), ...] sorted by code (codes may be a
-    sparse subset when a Lloyd cell went empty — both engines omit empty
-    cells identically).  ``array_position`` returns the FIRST index of
-    the min, which with code-sorted input is the lowest code — the same
-    tie rule as the oracle's ``ORDER BY d2, code``.
-    """
-    d2s = F.array(*[_d2_lit(sv, cv) for _, cv in centroids])
-    pos = F.array_position(d2s, F.array_min(d2s))
-    codes = F.array(*[F.lit(int(c)) for c, _ in centroids])
-    return F.element_at(codes, pos.cast("int"))
 
 
 def _seed_rows(
@@ -105,52 +75,6 @@ def _seed_rows(
     return [[float(x) for x in r["v"]] for r in rows]
 
 
-def train_pq_codebooks(
-    df: DataFrame,
-    m: int = PQ_M,
-    k: int = PQ_K,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """One Lloyd refinement from the deterministic lowest-id init.
-
-    Returns (s, code, cvec array<double>) with per-dim means rounded to
-    ``PQ_ROUND`` dp.  Codes whose cell went empty are absent.  The
-    assignment is map-only (init fused as literals); the only shuffle is
-    the ``m*k``-group mean aggregation with map-side partials.
-    """
-    sub_dim = dim // m
-    seeds = _seed_rows(df, k, id_col, vec_col)
-    init = [
-        [(j, seeds[j][s * sub_dim : (s + 1) * sub_dim]) for j in range(len(seeds))]
-        for s in range(m)
-    ]
-    base = df.select(to_double_array(vec_col).alias("v"))
-    # one struct per subspace: (subvector, assigned init code) — both
-    # computed in the map stage, exploded to (s, sv, code) rows
-    per_s = [
-        F.struct(
-            _subvec(F.col("v"), s, sub_dim).alias("sv"),
-            _argmin_code(_subvec(F.col("v"), s, sub_dim), init[s]).alias("code"),
-        )
-        for s in range(m)
-    ]
-    exploded = base.select(F.posexplode(F.array(*per_s)).alias("s", "a"))
-    agg = exploded.groupBy(
-        F.col("s").cast("long").alias("s"),
-        F.col("a.code").cast("long").alias("code"),
-    ).agg(
-        *[
-            F.round(F.avg(F.col("a.sv")[i]), PQ_ROUND).alias(f"m{i}")
-            for i in range(sub_dim)
-        ]
-    )
-    return agg.select(
-        "s", "code", F.array(*[F.col(f"m{i}") for i in range(sub_dim)]).alias("cvec")
-    )
-
-
 def train_pq_long_numpy(
     df: DataFrame,
     m: int = PQ_M,
@@ -159,19 +83,19 @@ def train_pq_long_numpy(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Fused Arrow tier of the PQ trainer, long form (s, code, i, v).
+    """One Lloyd refinement of the PQ codebooks from the deterministic
+    lowest-id init, long form (s, code, i, v): per-dim means rounded to
+    ``PQ_ROUND`` dp; codes whose cell went empty are absent.
 
-    Why it exists: the expression-form trainer is oracle-exact but its
-    argmin tree (m*k zip_with/aggregate blocks) costs SECONDS of
-    driver-side Catalyst analysis — a fixed cost that is noise against
-    hours of execution at real scale but dominates a small-SF benchmark.
-    This tier assigns each Arrow batch with one |batch| x k matmul per
-    subspace and collapses it to (s, code, i, partial_sum, n) partials,
-    so the corpus is scanned once and the shuffle carries only
-    tasks x m x k x sub_dim skinny rows (the kmeans_step_numpy posture).
-    Per-dim means are rounded to PQ_ROUND dp, which absorbs the
-    partial-sum reorder vs the sequential oracle; rounded-value equality
-    with the expression form is pytest-pinned.
+    Each Arrow batch is assigned with one |batch| x k matmul per
+    subspace and collapsed to (s, code, i, partial_sum, n) partials, so
+    the corpus is scanned once and the shuffle carries only
+    tasks x m x k x sub_dim skinny rows (the ``kmeans_step`` posture).
+    An expression-form argmin tree (m*k zip_with/aggregate blocks)
+    would cost seconds of driver-side Catalyst analysis per plan. The
+    rounding absorbs the partial-sum reorder vs the sequential oracle;
+    rounded-value equality with the column-expression reference is
+    pinned in tests/test_pq.py.
     """
     import numpy as np
     import pandas as pd
@@ -221,7 +145,7 @@ def train_pq_long_numpy(
     )
 
 
-def train_pq_codebooks_numpy(
+def train_pq_codebooks(
     df: DataFrame,
     m: int = PQ_M,
     k: int = PQ_K,
@@ -229,8 +153,8 @@ def train_pq_codebooks_numpy(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """`train_pq_codebooks` output contract from the fused Arrow tier:
-    (s, code, cvec) assembled from the long-form partial aggregation."""
+    """(s, code, cvec array<double>): the ``train_pq_long_numpy``
+    codebooks with each code's means assembled into one vector."""
     long = train_pq_long_numpy(df, m=m, k=k, dim=dim, id_col=id_col, vec_col=vec_col)
     return long.groupBy("s", "code").agg(
         F.transform(
@@ -260,29 +184,12 @@ def pq_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Map-only PQ encode against a literal codebook: (id, codes
-    array<int>), codes[s] = nearest refined centroid in subspace s.
-    Zero shuffles — the 100 TB shape for a corpus-wide encode pass."""
-    m = len(codebooks)
-    sub_dim = dim // m
-    v = to_double_array(vec_col)
-    codes = F.array(
-        *[_argmin_code(_subvec(v, s, sub_dim), codebooks[s]) for s in range(m)]
-    )
-    return df.select(F.col(id_col), codes.alias("codes"))
-
-
-def pq_encode_numpy(
-    df: DataFrame,
-    codebooks: list[list[tuple[int, list[float]]]],
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow tier of `pq_encode` for large k: per batch and subspace, one
-    ``|batch| x k`` distance matmul + argmin.  Same output contract
-    (ties -> lowest code; sparse code sets respected); equality with the
-    expression form is pytest-pinned."""
+    """Map-only PQ encode against a collected codebook: (id, codes
+    array<int>), codes[s] = nearest refined centroid in subspace s
+    (ties -> lowest code; sparse code sets respected).  Per batch and
+    subspace, one ``|batch| x k`` distance matmul + argmin — zero
+    shuffles, the 100 TB shape for a corpus-wide encode pass.  Equality
+    with the column-expression reference is pinned in tests/test_pq.py."""
     import numpy as np
     import pandas as pd
 

@@ -8,24 +8,24 @@ all-pairs comparison runs only WITHIN a cluster, so total work is
 sum(|cell|²) instead of n² — the same candidate-bounding idea as LSH, but
 with semantically coherent buckets.
 
-Two quantizers are provided:
+The quantizer defaults to the ``num_cells`` lowest-id vectors
+(``_default_centroids``): fully deterministic and SQL-expressible, which
+makes the whole pipeline DuckDB-oracle-checkable — and in production a
+fixed, versioned centroid set is what you want anyway (re-clustering a
+growing corpus would reshuffle cell assignments between runs). k-means
+centroids (``kmeans_step`` iterations, or
+``operators/similarity.train_ivf_centroids``) can be passed through
+``centroids`` for quality-over-determinism deployments.
 
-- ``assign_fixed_cells``: centroids = the ``num_cells`` lowest-id vectors.
-  Fully deterministic and SQL-expressible, which makes the whole pipeline
-  DuckDB-oracle-checkable (the driver gate) — and in production a fixed,
-  versioned centroid set is exactly what you want anyway (re-clustering a
-  growing corpus would reshuffle cell assignments between runs).
-- k-means centroids via ``operators/similarity.train_ivf_centroids`` can be
-  passed through ``centroids`` for quality-over-determinism deployments.
-
-Scale shape: centroids broadcast as a tiny literal table; assignment is a
-broadcast cross join + map-side ``min(struct(d2, cent_id))`` partial
-aggregate — the only shuffle is the groupBy on vec_id, and only
-(id, cell) pairs move. The within-cell self-join shuffles ids+vectors once
-on the cell key; AQE splits hot cells. Dedup policy is lowest-id-wins: a
+Each operator has one implementation, an Arrow/numpy pass per batch:
+assignment is one ``|batch| x |centroids|`` distance matmul
+(``assign_cells_numpy``; two-level from ``HIER_MIN_CELLS`` centroids on),
+the within-cell verify one gram matrix per cell, the Lloyd step one
+fused assign-and-sum pass. The column-expression forms the tests compare
+them against live in the test modules. Dedup policy is lowest-id-wins: a
 vector is dropped iff some SMALLER-id vector in its cell is within the
-threshold — deterministic, single anti-join, and transitive-chain behavior
-matches the greedy scan of the paper's implementation.
+threshold — deterministic, and transitive-chain behavior matches the
+greedy scan of the paper's implementation.
 
 The reference engine has no semantic dedup (SURVEY.md §2 gap list); this is
 beyond-reference capability for the 100 TB training-data pipeline.
@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pydatalake_spark.functions.vector import dot, l2_norm, to_double_array
+from pydatalake_spark.functions.vector import to_double_array
 from pydatalake_spark.session import _ckpt, _reap
 
 
@@ -64,59 +64,6 @@ def _default_centroids(
     )
 
 
-def assign_fixed_cells(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_cells: int | None = None,
-    centroids: DataFrame | None = None,
-) -> DataFrame:
-    """(id, cell): nearest-centroid assignment with deterministic
-    (distance, centroid-id) tie-breaking.
-
-    ``centroids`` defaults to the ``num_cells`` lowest-id vectors of the
-    corpus itself (deterministic "init-only" quantizer); pass a trained
-    centroid DataFrame (cent_id, cvec) to override. ``num_cells=None``
-    sizes the cell count from the corpus via ``suggest_num_cells`` (one
-    count() pass) so within-cell pair work stays LINEAR in corpus size —
-    a fixed cell count is quadratic at scale (VERDICT r3 #5).
-
-    Centroid selection is ``orderBy(id_col).limit(num_cells)`` — the
-    num_cells lowest ids whatever the id space looks like. (A
-    ``filter(id < num_cells)`` shortcut would silently select nothing for
-    offset/sparse/non-numeric id spaces and dedup would then drop every
-    row.)
-    """
-    if centroids is None:
-        if num_cells is None:
-            num_cells = suggest_num_cells(emb.count())
-        centroids = (
-            emb.orderBy(F.col(id_col).asc())
-            .limit(num_cells)
-            .select(
-                F.col(id_col).alias("cent_id"),
-                to_double_array(vec_col).alias("cvec"),
-            )
-        )
-    j = (
-        emb.select(F.col(id_col), to_double_array(vec_col).alias("dv"))
-        .crossJoin(F.broadcast(centroids))
-        .withColumn(
-            "d2",
-            F.aggregate(
-                F.zip_with("dv", "cvec", lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-    )
-    return (
-        j.groupBy(id_col)
-        .agg(F.min(F.struct("d2", "cent_id")).alias("m"))
-        .select(F.col(id_col), F.col("m.cent_id").alias("cell"))
-    )
-
-
 def semantic_dedup(
     emb: DataFrame,
     id_col: str = "vec_id",
@@ -124,6 +71,7 @@ def semantic_dedup(
     num_cells: int | None = None,
     threshold: float = 0.3,
     centroids: DataFrame | None = None,
+    max_cell_size: int | None = None,
 ) -> DataFrame:
     """(id, cell, keep): SemDeDup verdict per vector.
 
@@ -132,92 +80,31 @@ def semantic_dedup(
     dataset. ``num_cells=None`` (the default) auto-sizes the quantizer
     with ``suggest_num_cells`` so pair work scales linearly with the
     corpus; pass an explicit count only for oracle-pinned determinism.
-    """
-    cells = assign_fixed_cells(
-        emb, id_col, vec_col, num_cells=num_cells, centroids=centroids
-    )
-    # norms are bound per VECTOR before the self-join: the pair predicate
-    # dot/(na*nb) is the same expression tree as cosine() so it matches the
-    # oracle bit-for-bit, but each norm is computed n times, not n·|cell|
-    wv = cells.join(
-        emb.select(F.col(id_col), to_double_array(vec_col).alias("dv")),
-        id_col,
-    ).withColumn("nrm", l2_norm(F.col("dv")))
-    a = wv.select(
-        F.col(id_col).alias("id_a"),
-        F.col("cell"),
-        F.col("dv").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    b = wv.select(
-        F.col(id_col).alias("id_b"),
-        F.col("cell"),
-        F.col("dv").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    dropped = (
-        a.join(b, "cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-            >= threshold
-        )
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
-    return cells.join(
-        dropped.withColumn("_dup", F.lit(True)), id_col, "left"
-    ).select(
-        F.col(id_col),
-        F.col("cell"),
-        F.coalesce(~F.col("_dup"), F.lit(True)).alias("keep"),
-    )
-
-
-def semantic_dedup_numpy(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_cells: int | None = None,
-    threshold: float = 0.3,
-    centroids: DataFrame | None = None,
-    approx_assign: bool | None = None,
-    max_cell_size: int | None = None,
-) -> DataFrame:
-    """(id, cell, keep): SemDeDup verdict — numpy within-cell verify.
+    Verdicts are pinned equal to the column-expression reference in
+    tests/test_semdedup.py.
 
     ``max_cell_size`` (opt-in) engages ``split_oversized_cells`` between
     assignment and verify, bounding the one un-splittable stage's group
     size against hot semantic regions; see that function for the
     best-effort contract. Leave None on oracle-parity paths.
 
-    Same semantics as ``semantic_dedup`` (pytest-pinned equal): keep = no
-    smaller-id vector in the same cell has cosine >= threshold. The
-    within-cell stage runs as ``groupBy(cell).applyInPandas``: one
-    shuffle keyed by cell (identical to the self-join's exchange), then
-    each cell's pair matrix is ONE numpy matmul instead of |cell|²
-    interpreted ``aggregate``/``zip_with`` trees — the same
-    expression-vs-Arrow swap as ``cosine_topk_numpy``
-    (operators/similarity.py), and the win grows with embedding width.
+    The within-cell stage runs as ``groupBy(cell).applyInPandas``: one
+    shuffle keyed by cell, then each cell's pair matrix is one numpy
+    matmul instead of |cell|² interpreted ``aggregate``/``zip_with``
+    trees — the win grows with embedding width. Cells arrive sized
+    ~``target_cell_size`` by ``suggest_num_cells``, so per-group work is
+    bounded (~10⁶ pair dots) and the matmul never exceeds a few MB per
+    task. applyInPandas groups can't be AQE-split, so a pathologically
+    hot cell lands on one task — ``max_cell_size`` is the guard.
 
-    Scale shape: cells arrive sized ~``target_cell_size`` by
-    ``suggest_num_cells``, so per-group work is bounded (~10⁶ pair dots)
-    and the matmul never exceeds a few MB per task. applyInPandas groups
-    can't be AQE-split, so a pathologically hot cell lands on one task —
-    if the quantizer can't hold cells balanced, fall back to
-    ``semantic_dedup`` (joins split fine) or refine centroids.
-
-    ASSIGNMENT runs the matmul tier (``assign_cells_numpy``), NOT the
-    expression form: with auto-sized cells (C ~ n/1000) the expression
-    path evaluates n x C interpreted zip_with trees — O(n²/1000)
-    interpreter work that the round-7 1000x probe measured at exponent
-    ~1.9 (2M vectors x 2048 cells never finished; the matmul tier does
-    the same distances as |batch| x C BLAS calls in seconds).  Above
-    ``HIER_MIN_CELLS`` it escalates to the two-level assignment
-    (``assign_cells_hier_numpy``, n x 2 sqrt(C) distances): the flat
-    matmul's n x C FLOPs are themselves O(n²/1000) once C scales with
-    the corpus (exponent 1.5 at the 1000x probe).  Gate SFs sit at
-    C <= 2, so every oracle row checks the flat/exact path.
+    Assignment is the matmul tier (``assign_cells_numpy``): with
+    auto-sized cells (C ~ n/1000) a per-(row, centroid) expression
+    assignment is O(n²/1000) interpreted work. From ``HIER_MIN_CELLS``
+    centroids on it is the two-level assignment
+    (``assign_cells_hier_numpy``, n x 2 sqrt(C) distances), because the
+    flat matmul's n x C FLOPs are themselves O(n²/1000) once C scales
+    with the corpus. The tier follows the centroid count alone. Gate
+    SFs sit at C <= 2, so every oracle row checks the flat/exact path.
     """
     import numpy as np
     import pandas as pd
@@ -226,37 +113,28 @@ def semantic_dedup_numpy(
     if centroids is None and num_cells is None:
         num_cells = suggest_num_cells(emb.count())
     cents = _default_centroids(emb, id_col, vec_col, num_cells, centroids)
-    # tier from the ACTUAL centroid count when trained centroids are
-    # passed (r7 ADVICE: a num_cells mismatching len(centroids) must not
-    # pick the tier); centroid tables are bounded by contract so the
-    # count is cheap
-    if approx_assign is None:
-        # lazy (r8 ADVICE): when the tier is pinned by the caller the
-        # count is never needed — don't pay a Spark job for it
-        n_cells = cents.count() if centroids is not None else (
-            num_cells if num_cells is not None else cents.count()
-        )
-        approx_assign = n_cells >= HIER_MIN_CELLS
-        if approx_assign:
-            # loud, not silent (r7 ADVICE): the two-level assignment is
-            # IVF-approximate at the coarse boundary and DIVERGES from
-            # semantic_dedup / the exact SQL oracle — an oracle gate that
-            # auto-sizes past HIER_MIN_CELLS must see this in the log
-            # before it sees the hash mismatch.
-            import warnings
+    # the tier follows the ACTUAL centroid count: a num_cells that does
+    # not match passed centroids must not pick it (centroid tables are
+    # bounded by contract, so the count is cheap)
+    n_cells = cents.count() if centroids is not None else num_cells
+    hier = n_cells >= HIER_MIN_CELLS
+    if hier:
+        # loud, not silent: the two-level assignment is approximate at
+        # the coarse boundary and can diverge from the exact SQL oracle —
+        # an oracle gate that auto-sizes past HIER_MIN_CELLS must see this
+        # in the log before it sees the hash mismatch
+        import warnings
 
-            warnings.warn(
-                f"semantic_dedup_numpy: auto-escalating to APPROXIMATE "
-                f"two-level assignment (n_cells={n_cells} >= "
-                f"{HIER_MIN_CELLS}); pass approx_assign=False for the "
-                f"exact (oracle-parity) flat assignment",
-                stacklevel=2,
-            )
-    assign = assign_cells_hier_numpy if approx_assign else assign_cells_numpy
-    # FUSED assignment (r8): the assignment map already holds each
-    # vector, so it emits (id, cell, dv) directly — the old
-    # cells-join-corpus step was a data-sized SMJ (sort both sides) that
-    # existed only to re-attach vectors the assignment had just read
+        warnings.warn(
+            f"semantic_dedup: {n_cells} cells >= HIER_MIN_CELLS "
+            f"({HIER_MIN_CELLS}), so the assignment is the APPROXIMATE "
+            f"two-level one and may differ from the exact flat assignment "
+            f"at coarse-cell boundaries",
+            stacklevel=2,
+        )
+    assign = assign_cells_hier_numpy if hier else assign_cells_numpy
+    # the assignment map already holds each vector, so it emits (id,
+    # cell, dv) directly — no data-sized join back onto the corpus
     wv = assign(emb, cents, id_col, vec_col, with_vec=True)
     if max_cell_size is not None:
         wv = split_oversized_cells(wv, max_cell_size, id_col)
@@ -272,17 +150,15 @@ def semantic_dedup_numpy(
         pdf = pdf.sort_values(id_col).reset_index(drop=True)
         V = np.array(pdf["dv"].tolist(), dtype=np.float64)
         n = len(V)
-        # dot / (na * nb): the same quantity as the expression form
-        # (cosine()), evaluated as a gram matrix in COLUMN BLOCKS.
-        # The monolithic n x n form was allocation-bound, not FLOP-bound
-        # — an 8.5k-row cell built four ~0.6 GB temporaries (S, outer,
-        # the >= bool, the triu copy) and measured 4.6 s where this
-        # blocked walk of the same elementwise ops (identical dot,
-        # identical division, identical compare per entry — r9-measured
-        # byte-equal dominated flags) runs 0.63 s. This was the actual
-        # source of the 1000x probe's wall exponent 1.33 on exactly
-        # linear shuffle volume: per-cell temporaries growing as |cell|²
-        # past the cache, 34x the balanced-cell CPU estimate.
+        # dot / (na * nb): the same quantity as cosine(), evaluated as
+        # a gram matrix in COLUMN BLOCKS. The monolithic n x n form is
+        # allocation-bound, not FLOP-bound: an 8.5k-row cell builds four
+        # ~0.6 GB temporaries (S, outer, the >= bool, the triu copy) and
+        # measured 4.6 s where this blocked walk runs 0.63 s. Each entry
+        # sees the identical dot, division and compare, so the dominated
+        # flags are byte-equal to the monolithic form's; keep that order
+        # (dot THEN divide by the outer product) or a threshold compare
+        # against the oracle can flip.
         norms = np.sqrt((V * V).sum(axis=1))
         dominated = np.zeros(n, dtype=bool)
         blk = 2048
@@ -457,180 +333,6 @@ def suggest_num_cells(n_vectors: int, target_cell_size: int = 1000) -> int:
     return 1 << (c - 1).bit_length()  # next power of two
 
 
-# above this embedding dimension the Lloyd readout switches from the
-# codegen per-index avg columns to the Arrow/numpy partial-sum tier: a
-# dim-wide hash agg generates `dim` scalar avg expressions, and past a few
-# hundred columns codegen width (and janino compile time) grows faster
-# than the data work it saves
-KMEANS_NUMPY_DIM = 256
-
-
-def kmeans_step(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_cells: int = 8,
-    centroids: DataFrame | None = None,
-    dim: int | None = None,
-) -> DataFrame:
-    """One Lloyd iteration of k-means over the embedding corpus:
-    assign every vector to its nearest centroid (Euclidean, deterministic
-    (distance, centroid-id) tie-break), recompute each centroid as its
-    cell's elementwise mean, and report how far each centroid moved.
-
-    Returns (cell, n_members BIGINT, drift DOUBLE) — the per-iteration
-    convergence readout a clustering loop monitors; empty cells drop out
-    (no members → no row), matching standard Lloyd behavior.
-
-    This is the trainer step behind the IVF quantizer
-    (operators/similarity.train_ivf_centroids samples; this runs over the
-    FULL corpus): iterate by feeding the new means back in as
-    ``centroids``. Beyond-reference op (clustering family).
-
-    Scale shape: assignment reuses ``assign_fixed_cells`` (broadcast
-    centroids + map-side min partial agg); above ``KMEANS_NUMPY_DIM`` it
-    routes to ``assign_cells_numpy`` (one matmul per Arrow batch) —
-    dim-wide expression trees stop being the fast path there. The mean
-    recomputation is ONE hash aggregation keyed on cell with ``dim``
-    scalar ``avg(dv[i])`` columns (whole-stage-codegen friendly,
-    map-side partials collapse each task to |cells|·dim values, no
-    per-element explode) up to ``KMEANS_NUMPY_DIM``; past it, Arrow
-    partial sums per batch + a per-cell merge. Pass ``dim`` when looping
-    Lloyd iterations — otherwise it is read once from one head row
-    (bounded driver scalar, documented contract).
-    """
-    if dim is None:
-        dim = _vec_dim(emb, vec_col)
-    if centroids is None:
-        centroids = (
-            emb.orderBy(F.col(id_col).asc())
-            .limit(num_cells)
-            .select(
-                F.col(id_col).alias("cent_id"),
-                to_double_array(vec_col).alias("cvec"),
-            )
-        )
-    if dim > KMEANS_NUMPY_DIM:
-        cells = assign_cells_numpy(emb, centroids, id_col, vec_col)
-    else:
-        cells = assign_fixed_cells(emb, id_col, vec_col, centroids=centroids)
-    return _lloyd_readout(emb, cells, centroids, id_col, vec_col, dim=dim)
-
-
-def _vec_dim(emb: DataFrame, vec_col: str) -> int:
-    """Embedding dimension from one head row (bounded driver scalar).
-    Callers looping Lloyd iterations should read it once and pass
-    ``dim=`` through — it cannot change between iterations."""
-    head = emb.select(F.size(to_double_array(vec_col)).alias("d")).first()
-    return int(head["d"])
-
-
-def _lloyd_readout(
-    emb: DataFrame,
-    cells: DataFrame,
-    centroids: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int | None = None,
-) -> DataFrame:
-    """Shared Lloyd-step tail: per-cell elementwise mean + centroid
-    drift. Mean tier by ``dim``: ≤ ``KMEANS_NUMPY_DIM`` is one hash agg
-    of ``dim`` scalar avg columns (map-side partials, no explode); above
-    it, Arrow/numpy partial sums (``_cell_means_numpy``) — identical
-    semantics, no dim-wide codegen."""
-    wv = cells.join(
-        emb.select(F.col(id_col), to_double_array(vec_col).alias("dv")),
-        id_col,
-    )
-    if dim is None:
-        dim = _vec_dim(emb, vec_col)
-    if dim > KMEANS_NUMPY_DIM:
-        new = _cell_means_numpy(wv)
-    else:
-        means = wv.groupBy("cell").agg(
-            F.count(F.lit(1)).alias("n_members"),
-            *[F.avg(F.col("dv")[i]).alias(f"_m{i}") for i in range(dim)],
-        )
-        new = means.select(
-            "cell",
-            "n_members",
-            F.array(*[F.col(f"_m{i}") for i in range(dim)]).alias("mvec"),
-        )
-    old = centroids.select(F.col("cent_id").alias("cell"), "cvec")
-    return new.join(old, "cell").select(
-        F.col("cell"),
-        F.col("n_members").cast("long").alias("n_members"),
-        F.sqrt(
-            F.aggregate(
-                F.zip_with("mvec", "cvec", lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        ).alias("drift"),
-    )
-
-
-def _cell_means_numpy(wv: DataFrame) -> DataFrame:
-    """(cell, n_members, mvec) from (cell, dv) — Arrow partial-sum tier
-    for high-dim vectors. Each Arrow batch collapses to ≤ |cells| rows of
-    (count, sum-vector) via one numpy reduction (the distributed
-    map-side combine, done in Python because no built-in aggregate sums
-    arrays elementwise without an explode); the per-cell merge then sees
-    only |cells| × num_partitions tiny rows. Float-addition order
-    differs from the codegen avg tier by design — equality to ~1e-9 is
-    the contract (pytest-pinned), not bitwise identity."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    cell_type = wv.schema["cell"].dataType
-    part_schema = T.StructType(
-        [
-            T.StructField("cell", cell_type),
-            T.StructField("n", T.LongType()),
-            T.StructField("s", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def partials(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array(pdf["dv"].tolist(), dtype=np.float64)
-            cells_, ns, sums = [], [], []
-            for cell, idx in pdf.groupby("cell", sort=False).indices.items():
-                cells_.append(cell)
-                ns.append(len(idx))
-                sums.append(V[idx].sum(axis=0).tolist())
-            yield pd.DataFrame({"cell": cells_, "n": ns, "s": sums})
-
-    out_schema = T.StructType(
-        [
-            T.StructField("cell", cell_type),
-            T.StructField("n_members", T.LongType()),
-            T.StructField("mvec", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def merge(pdf):
-        n = int(pdf["n"].sum())
-        s = np.array(pdf["s"].tolist(), dtype=np.float64).sum(axis=0)
-        return pd.DataFrame(
-            {
-                "cell": [pdf["cell"].iloc[0]],
-                "n_members": [n],
-                "mvec": [(s / n).tolist()],
-            }
-        )
-
-    return (
-        wv.select("cell", "dv")
-        .mapInPandas(partials, part_schema)
-        .groupBy("cell")
-        .applyInPandas(merge, out_schema)
-    )
-
-
 def assign_cells_numpy(
     emb: DataFrame,
     centroids: DataFrame,
@@ -639,19 +341,17 @@ def assign_cells_numpy(
     with_dist: bool = False,
     with_vec: bool = False,
 ) -> DataFrame:
-    """(id, cell): nearest-centroid assignment — Arrow/numpy tier.
-    ``with_vec`` carries the double-cast vector through as ``dv`` so a
-    consumer that needs (cell, vector) pairs — SemDeDup's within-cell
-    verify — skips the data-sized join back onto the corpus entirely
-    (one exchange and two SMJ sorts saved at every scale).
+    """(id, cell): nearest-centroid assignment, Euclidean argmin with
+    lowest-centroid-id tie-break. ``with_vec`` carries the double-cast
+    vector through as ``dv`` so a consumer that needs (cell, vector)
+    pairs — SemDeDup's within-cell verify — skips the data-sized join
+    back onto the corpus entirely (one exchange and two SMJ sorts saved
+    at every scale).
 
-    Same semantics as ``assign_fixed_cells`` with explicit ``centroids``
-    (pytest-pinned equal): Euclidean argmin with lowest-centroid-id
-    tie-break. Each Arrow batch computes ALL its distances as one
+    Each Arrow batch computes ALL its distances as one
     ``|batch| x |centroids|`` matrix via the expansion
     ``|x|^2 + |c|^2 - 2 x.c`` (one matmul) instead of per-(row, centroid)
-    interpreted ``zip_with`` trees — the same expression-vs-Arrow swap as
-    ``semantic_dedup_numpy``, and the win grows with dim x num_cells.
+    interpreted ``zip_with`` trees; the win grows with dim x num_cells.
 
     Scale shape: the centroid table is collected once (bounded by
     contract: |cells| rows) and broadcast inside the closure; the map is
@@ -729,7 +429,7 @@ def assign_cells_hier_numpy(
 
     Flat assignment does n x C distance evaluations; with SemDeDup's
     auto-sized C ~ n/1000 that is O(n²/1000) FLOPs — BLAS-fast but still
-    quadratic (round-7 1000x probe: exponent 1.5 at 2M x 2048). Here the
+    quadratic (a 1000x probe measured exponent 1.5 at 2M x 2048). Here the
     C fine centroids are first grouped under ~sqrt(C) coarse
     representatives (driver-side, C bounded by contract); each vector
     then prices sqrt(C) coarse + ~sqrt(C) fine distances — n x 2 sqrt(C)
@@ -739,8 +439,8 @@ def assign_cells_hier_numpy(
     The assignment is approximate at the coarse boundary (a vector whose
     true nearest fine centroid lives under a different coarse rep gets
     its best WITHIN-group cell — the standard IVF trade-off), so this is
-    NOT the oracle-checked path: ``semantic_dedup_numpy`` switches to it
-    only above ``HIER_MIN_CELLS`` (gate SFs run flat/exact; the scaling
+    NOT the oracle-checked path: ``semantic_dedup`` switches to it from
+    ``HIER_MIN_CELLS`` centroids on (gate SFs run flat/exact; the scaling
     probe runs this). Cells remain a valid space partition, which is all
     SemDeDup's within-cell dedup semantics require; determinism is
     preserved (fixed centroid order, first-min ties).
@@ -806,40 +506,39 @@ def assign_cells_hier_numpy(
     return src.mapInPandas(assign, out_schema)
 
 
-def kmeans_step_numpy(
+def kmeans_step(
     emb: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     num_cells: int = 8,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
-    """One Lloyd iteration — FUSED Arrow/numpy tier. Same output as
-    ``kmeans_step`` (pytest-pinned equal to 1e-9): (cell, n_members,
-    drift).
+    """One Lloyd iteration of k-means over the embedding corpus: assign
+    every vector to its nearest centroid (Euclidean, lowest-centroid-id
+    tie-break), recompute each centroid as its cell's elementwise mean,
+    and report how far each centroid moved.
 
-    Unlike the two-phase form (assign → join corpus back on id → agg),
-    one ``mapInPandas`` pass both assigns each Arrow batch (one
+    Returns (cell, n_members BIGINT, drift DOUBLE) — the per-iteration
+    convergence readout a clustering loop monitors; empty cells drop out
+    (no members → no row), matching standard Lloyd behavior. Iterate by
+    feeding the new means back in as ``centroids``; the default init is
+    the ``num_cells`` lowest-id vectors (``_default_centroids``).
+    Beyond-reference op (clustering family).
+
+    One ``mapInPandas`` pass both assigns each Arrow batch (one
     |batch| × |cells| distance matmul) AND collapses it to per-cell
     (count, sum-vector) partials — so the corpus is scanned ONCE and
     NEVER shuffled: the only exchange moves ≤ |cells| × num_partitions
     partial rows, and the per-cell merge computes mean + drift against
-    the (bounded, closure-broadcast) centroid table. This is the right
-    Lloyd shape at 100 TB — per-iteration network cost is independent of
-    corpus size.
+    the (bounded, closure-broadcast) centroid table. Per-iteration
+    network cost is independent of corpus size, at any embedding width
+    (no dim-wide codegen aggregate).
     """
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
-    if centroids is None:
-        centroids = (
-            emb.orderBy(F.col(id_col).asc())
-            .limit(num_cells)
-            .select(
-                F.col(id_col).alias("cent_id"),
-                to_double_array(vec_col).alias("cvec"),
-            )
-        )
+    centroids = _default_centroids(emb, id_col, vec_col, num_cells, centroids)
     cent_rows = sorted(
         centroids.select("cent_id", "cvec").collect(),
         key=lambda r: r["cent_id"],
@@ -918,23 +617,20 @@ def assignment_outliers(
     from every quantizer cell; the flagged tail is what you eyeball or
     drop before training).
 
-    Same quantizer contract as ``assign_fixed_cells`` (auto-sized
+    Same quantizer contract as ``semantic_dedup`` (auto-sized
     deterministic init by default, trained centroids optional). The
     threshold is ONE exact-percentile scalar broadcast back over the
     per-vector distances — no global sort of the corpus.
 
     Distances come from the matmul tier (``assign_cells_numpy`` with
-    ``with_dist``): the old broadcast-crossJoin expression path was
-    n x C interpreted zip_with rows — the same O(n²/1000) wall the
-    round-7 1000x probe caught in semantic_dedup's assignment.  The
-    min-distance shuffle disappears with it (the argmin happens inside
-    the Arrow batch); only (id, dist2) rows and one percentile scalar
-    move.
+    ``with_dist``): the argmin happens inside the Arrow batch, so there
+    is no min-distance shuffle; only (id, dist2) rows and one percentile
+    scalar move.
 
     dist2 is rounded to ``SD_DIST_ROUND`` dp BEFORE the percentile and
-    the threshold comparison (r7 ADVICE): numpy's pairwise summation and
-    the oracle's left-to-right fold differ in the last ulp, which could
-    flip membership of a row sitting exactly on the ``dist2 >= thr``
+    the threshold comparison: numpy's pairwise summation and the
+    oracle's left-to-right fold differ in the last ulp, which could flip
+    membership of a row sitting exactly on the ``dist2 >= thr``
     boundary — the same reorder-absorbing trick as ``PQ_ROUND`` in the
     PQ trainer. The oracle rounds identically.
     """

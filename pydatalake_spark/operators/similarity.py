@@ -14,14 +14,23 @@ Two tiers, per SURVEY §7.1.8 / the north-star brief:
   deterministically from md5, so any SQL oracle reproduces them) gives a
   bucket key; cosine-similar vectors land in the same bucket with
   probability ``1 - angle/π`` per bit. Candidate generation is then a
-  bucket equi-join (one shuffle) instead of all-pairs. An IVF variant
-  (k-means coarse quantizer) would slot in the same two-stage shape.
+  bucket equi-join (one shuffle) instead of all-pairs.
+
+- **IVF** (`train_ivf_centroids`, `ivf_topk`): the quantizer-based ANN
+  shape. A k-means coarse quantizer trained on a bounded sample; the
+  search assigns, masks to each query's ``nprobe`` nearest cells and
+  scores in one numpy pass per Arrow batch, then prunes to a local top-k
+  before the rank window.
 
 At 100 TB: the corpus side never broadcasts, never collects; only the
 query set (or the bucket index) moves. Bucket skew → AQE; recall ↑ via
 `lsh_multiprobe_candidates` (Hamming-1 probes, one-sided constant
-fan-out). An IVF tier (`ivf_topk`/`ivf_topk_numpy`) covers the
-quantizer-based ANN shape.
+fan-out).
+
+Each operator has one implementation. The IVF search and the triplet
+miner are Arrow passes; the column-expression forms the tests compare
+them against live in the test modules (tests/test_operators.py,
+tests/test_semdedup.py).
 """
 
 from __future__ import annotations
@@ -153,118 +162,6 @@ def hyperplane_buckets(
     )
 
 
-def cosine_topk_numpy(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Brute-force cosine top-k, vectorized: one numpy matmul per Arrow
-    batch instead of interpreted per-element array expressions.
-
-    The expression form (`cosine_topk`) is oracle-exact and fine at the
-    64-dim fixture width; at production embedding widths (768–4096) the
-    interpreted `zip_with`/`aggregate` loop is the bottleneck and this
-    path wins by orders of magnitude. Shape is identical: query matrix
-    broadcast (as a plan literal via crossJoin-free closure capture),
-    corpus streamed per partition, per-batch scores, global rank window.
-    Ties and float associativity differ from the expression form at ~1e-15
-    relative — rank order may differ only on exact ties.
-    """
-    import numpy as np
-    import pandas as pd
-
-    q_rows = queries.select(id_col, vec_col).collect()  # |Q| is small by contract
-    q_ids = np.array([r[id_col] for r in q_rows])
-    q_mat = np.array([list(map(float, r[vec_col])) for r in q_rows])
-    q_norm = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-
-    id_type = corpus.schema[id_col].dataType  # follow the caller's id type
-    out_schema = T.StructType(
-        [
-            T.StructField("q_id", id_type),
-            T.StructField("c_id", id_type),
-            T.StructField("sim", T.DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            c_mat = np.array([list(map(float, v)) for v in pdf[vec_col]])
-            c_norm = c_mat / np.linalg.norm(c_mat, axis=1, keepdims=True)
-            sims = c_norm @ q_norm.T  # (batch, |Q|)
-            c_ids = pdf[id_col].to_numpy()
-            yield pd.DataFrame(
-                {
-                    "q_id": np.repeat(q_ids, len(c_ids)),
-                    "c_id": np.tile(c_ids, len(q_ids)),
-                    "sim": sims.T.ravel(),
-                }
-            )
-
-    scored = fan_out(corpus).select(id_col, vec_col).mapInPandas(score, out_schema)
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("c_id").asc())
-    return (
-        scored.filter(F.col("q_id") != F.col("c_id"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("q_id", "c_id", "sim")
-    )
-
-
-def _centroid_dist_structs(v, centroids: list[list[float]]):
-    """array<struct<d: squared-L2 to centroid i, i>> — shared by assignment
-    and query-side probing so the distance semantics cannot drift."""
-
-    def dist2(c: list[float]):
-        return F.aggregate(
-            F.zip_with(
-                v,
-                F.array(*[F.lit(float(x)) for x in c]),
-                lambda a, b: (a - b) * (a - b),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    return F.array(
-        *[
-            F.struct(dist2(c).alias("d"), F.lit(i).alias("i"))
-            for i, c in enumerate(centroids)
-        ]
-    )
-
-
-def ivf_assign(
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-    out_col: str = "cell",
-    keep_vec: str | None = None,
-) -> DataFrame:
-    """Assign each vector to its nearest centroid (squared L2).
-
-    Centroids ship as literal arrays (they are tiny — the coarse quantizer
-    is `num_cells × dim` floats), so assignment is a narrow per-row
-    argmin with no join and no shuffle; Catalyst folds the centroid
-    constants into codegen. The cast vector binds to a column first so the
-    per-centroid distance expressions reference it instead of re-casting
-    `num_cells` times per row (the winnowing lesson: multiply-referenced
-    non-cheap expressions need a projection boundary). ``keep_vec`` names
-    a column to retain the cast vector under (callers that need it next,
-    like the probe join, avoid a second full-corpus cast).
-    """
-    tmp = df.withColumn("__v", to_double_array(vec_col))
-    dists = _centroid_dist_structs(F.col("__v"), centroids)
-    out = tmp.withColumn(out_col, F.array_min(dists)["i"])
-    if keep_vec:
-        return out.withColumnRenamed("__v", keep_vec)
-    return out.drop("__v")
-
-
 def train_ivf_centroids(
     corpus: DataFrame,
     num_cells: int = 16,
@@ -288,61 +185,6 @@ def train_ivf_centroids(
     )
     model = KMeans(k=num_cells, seed=seed, maxIter=10).fit(train)
     return [c.tolist() for c in model.clusterCenters()]
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF ANN search: probe the `nprobe` nearest cells per query, exact
-    cosine only within probed cells, per-query top-k.
-
-    Scale shape: corpus-side work is one narrow assignment pass + ONE
-    shuffle keyed by cell for the probe join; with `nprobe/num_cells`
-    fraction probed, the exact-cosine cost drops proportionally vs
-    brute force. `nprobe = num_cells` degrades to exact search (used by
-    the tests as the equivalence oracle).
-    """
-    assigned = (
-        ivf_assign(fan_out(corpus), centroids, vec_col, "cell", keep_vec="c_vec")
-        .select(F.col(id_col).alias("c_id"), "c_vec", "cell")
-        .withColumn("c_norm", l2_norm(F.col("c_vec")))
-    )
-    probe_arr = F.slice(
-        F.array_sort(_centroid_dist_structs(F.col("__v"), centroids)),
-        1,
-        nprobe,
-    )
-    q = (
-        queries.withColumn("__v", to_double_array(vec_col))
-        .select(
-            F.col(id_col).alias("q_id"),
-            F.col("__v").alias("q_vec"),
-            F.explode(F.transform(probe_arr, lambda s: s["i"])).alias("cell"),
-        )
-        .withColumn("q_norm", l2_norm(F.col("q_vec")))
-    )
-    pairs = assigned.join(F.broadcast(q), "cell").filter(
-        F.col("q_id") != F.col("c_id")
-    )
-    sim = pairs.select(
-        "q_id",
-        "c_id",
-        (dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm"))).alias(
-            "sim"
-        ),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("c_id").asc())
-    return (
-        sim.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("q_id", "c_id", "sim")
-    )
 
 
 def lsh_multiprobe_candidates(
@@ -397,7 +239,7 @@ def lsh_multiprobe_candidates(
     )
 
 
-def ivf_topk_numpy(
+def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     centroids: list[list[float]],
@@ -406,13 +248,13 @@ def ivf_topk_numpy(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF ANN search, vectorized: assignment + probe-mask + scoring fused
-    into one numpy pass per Arrow batch, then a global rank window.
-
-    Same semantics as `ivf_topk` (squared-L2 cell assignment, exact cosine
-    within the `nprobe` nearest cells per query, per-query top-k with
-    (sim desc, c_id asc) tie-break) — pytest proves the equivalence. Two
-    scale levers over the expression form:
+    """IVF ANN search: probe the `nprobe` nearest cells per query
+    (squared L2), exact cosine only within probed cells, per-query top-k
+    with (sim desc, c_id asc) tie-break. `nprobe = num_cells` degrades
+    to exact search. Assignment + probe-mask + scoring are fused into one
+    numpy pass per Arrow batch, then a global rank window; results are
+    pinned equal to the column-expression reference in
+    tests/test_operators.py. Two scale levers over an expression form:
 
     - the per-row work is a matmul against the centroid matrix + one
       matmul against the (tiny, closure-captured) query matrix instead of
@@ -425,9 +267,8 @@ def ivf_topk_numpy(
       shuffle proportional to the corpus and one proportional to the
       task count.
 
-    The query side is driver-collected (|Q| small by contract, same as
-    `cosine_topk_numpy`); the corpus side streams — never collected,
-    never broadcast.
+    The query side is driver-collected (|Q| small by contract); the
+    corpus side streams — never collected, never broadcast.
     """
     import numpy as np
     import pandas as pd
@@ -637,11 +478,12 @@ def load_ivf_centroids(spark, path: str) -> list[list[float]]:
 
 def hard_triplets(
     corpus: DataFrame,
-    anchors: DataFrame,
+    anchors: DataFrame | None,
     k_neg: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
+    anchor_rows: list | None = None,
 ) -> DataFrame:
     """Online triplet mining for contrastive training (the batch-hard
     strategy of Hermans et al. 2017, "In Defense of the Triplet Loss"):
@@ -650,89 +492,26 @@ def hard_triplets(
     (same label, lowest cosine — the most spread-out true neighbor).
 
     Returns (q_id, c_id, sim, kind) with kind in ('hard_neg', 'hard_pos').
+    ``anchors`` (or its pre-collected rows, ``anchor_rows``) is small by
+    contract.
 
-    Scale shape: identical to cosine_topk — the anchor set broadcasts, the
-    corpus never shuffles for scoring, and both mining windows share the
-    q_id partitioning so Spark plans ONE exchange for the two ranks.
-    """
-    q = anchors.select(
-        F.col(id_col).alias("q_id"),
-        to_double_array(vec_col).alias("q_vec"),
-        F.col(label_col).alias("q_label"),
-    ).withColumn("q_norm", l2_norm(F.col("q_vec")))
-    c = (
-        fan_out(corpus)
-        .select(
-            F.col(id_col).alias("c_id"),
-            to_double_array(vec_col).alias("c_vec"),
-            F.col(label_col).alias("c_label"),
-        )
-        .withColumn("c_norm", l2_norm(F.col("c_vec")))
-    )
-    pairs = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            "q_label",
-            "c_label",
-            (
-                dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("sim"),
-        )
-    )
-    w_neg = Window.partitionBy("q_id").orderBy(
-        F.col("sim").desc(), F.col("c_id").asc()
-    )
-    negs = (
-        pairs.filter(F.col("q_label") != F.col("c_label"))
-        .withColumn("rnk", F.row_number().over(w_neg))
-        .filter(F.col("rnk") <= k_neg)
-        .select("q_id", "c_id", "sim", F.lit("hard_neg").alias("kind"))
-    )
-    w_pos = Window.partitionBy("q_id").orderBy(
-        F.col("sim").asc(), F.col("c_id").asc()
-    )
-    poss = (
-        pairs.filter(F.col("q_label") == F.col("c_label"))
-        .withColumn("rnk", F.row_number().over(w_pos))
-        .filter(F.col("rnk") <= 1)
-        .select("q_id", "c_id", "sim", F.lit("hard_pos").alias("kind"))
-    )
-    return negs.unionByName(poss)
-
-
-def hard_triplets_numpy(
-    corpus: DataFrame,
-    anchors: DataFrame | None,
-    k_neg: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    anchor_rows: list | None = None,
-) -> DataFrame:
-    """Batch-hard triplet mining, vectorized: the numpy/Arrow tier of
-    ``hard_triplets`` (pytest-pinned equal). One matmul per Arrow batch
-    replaces |corpus|·|anchors| interpreted ``zip_with``/``aggregate``
-    trees — the same expression-vs-Arrow swap as ``cosine_topk_numpy``,
-    and the win grows with embedding width (768–4096 in production).
-
-    Scale shape improves on the expression form: each batch locally
-    prunes to the per-anchor top ``k_neg`` negatives + 1 positive under
-    the SAME (sim, c_id) total order the global rank uses, so only
+    One matmul per Arrow batch replaces |corpus|·|anchors| interpreted
+    ``zip_with``/``aggregate`` trees; the win grows with embedding width
+    (768–4096 in production). Each batch locally prunes to the
+    per-anchor top ``k_neg`` negatives + 1 positive under the SAME
+    (sim, c_id) total order the global rank uses, so only
     |anchors|·(k_neg+1) candidate rows per batch reach the exchange —
     the full pair stream never shuffles. Local top-k under a total order
-    merges exactly, so results match ``hard_triplets`` bit-for-bit up to
-    float-summation associativity (~1e-15 relative).
+    merges exactly, so results match the column-expression reference in
+    tests/test_semdedup.py up to float-summation associativity (~1e-15
+    relative).
     """
     import numpy as np
     import pandas as pd
 
     # anchors are small by contract; callers that mine repeatedly against
     # the same anchor set pass the pre-collected rows (`anchor_rows`) so
-    # the anchor-scan job runs once, not once per call (VERDICT r6)
+    # the anchor-scan job runs once, not once per call
     q_rows = (
         anchor_rows
         if anchor_rows is not None
@@ -787,15 +566,13 @@ def hard_triplets_numpy(
                 {"q_id": out_q, "c_id": out_c, "sim": out_s, "kind": out_k}
             )
 
-    # r12: pin ONE (q_id, kind)-keyed repartition below BOTH rank
-    # branches — the exchange subtrees are then canonically identical,
-    # so ReuseExchange / the AQE stage cache materializes the corpus
-    # scoring MapInPandas pass ONCE (the old shape filtered by kind
-    # BELOW each branch's window exchange, making the exchanges
-    # distinct: the full matmul pass ran twice — guide §2.4/§7.2). The
-    # repartition satisfies both windows' clustering, so neither plans
-    # its own shuffle; each sorts only its kind's slice, with the exact
-    # original orderings (ties, NaN and null placement unchanged).
+    # pin ONE (q_id, kind)-keyed repartition below BOTH rank branches —
+    # the exchange subtrees are then canonically identical, so
+    # ReuseExchange / the AQE stage cache materializes the corpus scoring
+    # MapInPandas pass ONCE (filtering by kind BELOW each branch's window
+    # exchange makes the exchanges distinct and runs the full matmul pass
+    # twice). The repartition satisfies both windows' clustering, so
+    # neither plans its own shuffle; each sorts only its kind's slice.
     cand = (
         fan_out(corpus)
         .select(id_col, vec_col, label_col)

@@ -16,7 +16,7 @@ from pydatalake_spark.operators.similarity import (
     cosine_topk,
     embedding_near_dup,
     hyperplane_buckets,
-    ivf_topk_numpy,
+    ivf_topk,
     lsh_bucket_candidates,
     lsh_multiprobe_candidates,
     train_ivf_centroids,
@@ -287,9 +287,6 @@ def embedding_near_dup_q(spark: SparkSession, sf: str) -> DataFrame:
     return embedding_near_dup(e, threshold=0.3, num_planes=_PLANES, dim=_DIM)
 
 
-_IVF_CENTROIDS: dict = {}
-
-
 @q(
     "ivf_topk",
     f"""
@@ -309,8 +306,8 @@ _IVF_CENTROIDS: dict = {}
 )
 def ivf_topk_q(spark: SparkSession, sf: str) -> DataFrame:
     """IVF ANN: k-means coarse quantizer (bounded sample), probe-cells
-    search, exact cosine within probed cells — the fused numpy path
-    (operators/similarity.py:ivf_topk_numpy): assignment + probe mask +
+    search, exact cosine within probed cells — the fused numpy pass
+    (operators/similarity.py:ivf_topk): assignment + probe mask +
     scoring + lossless per-batch top-k prune in one Arrow pass, so the
     rank-window shuffle scales with task count, not probed-corpus size.
 
@@ -321,15 +318,15 @@ def ivf_topk_q(spark: SparkSession, sf: str) -> DataFrame:
     prune, rank window) still executes, so the gate covers the real code
     path; the recall-at-reduced-nprobe behavior is pytest-pinned
     (tests/test_operators.py::test_ivf_full_probe_equals_brute_force).
-    The quantizer is trained once per corpus and memoized — an IVF index
-    is build-once / search-many, so the benchmark measures the search
-    path, as production would."""
+    The quantizer is trained once per corpus and memoized in the session
+    memo (retrained when the corpus dir is rewritten) — an IVF index is
+    build-once / search-many, so the benchmark measures the search path,
+    as production would."""
     e = _t(spark, sf, "embeddings")
-    if sf not in _IVF_CENTROIDS:
-        _IVF_CENTROIDS[sf] = train_ivf_centroids(e, num_cells=8)
-    return ivf_topk_numpy(
-        e, e.filter(F.col("vec_id") < 10), _IVF_CENTROIDS[sf], k=10, nprobe=8
+    cents = corpus_memo(
+        spark, "ivf_centroids", sf, lambda: train_ivf_centroids(e, num_cells=8)
     )
+    return ivf_topk(e, e.filter(F.col("vec_id") < 10), cents, k=10, nprobe=8)
 
 
 @q(
@@ -529,19 +526,18 @@ def semantic_dedup_q(spark: SparkSession, sf: str) -> DataFrame:
 
     The cell count is the AUTO-SIZED default (suggest_num_cells): cells
     grow with the corpus so within-cell pair work is linear, not n²/C
-    (VERDICT r3 #5 — a pinned cell count was the one quadratic scale
-    hazard left in the dedup tier). The oracle reproduces the same
-    sizing rule as a scalar subquery, so the gate stays value-exact at
-    every SF.
+    (a pinned cell count is quadratic at scale). The oracle reproduces
+    the same sizing rule as a scalar subquery, so the gate stays
+    value-exact at every SF.
 
-    Runs the Arrow/numpy verify tier (one gram matmul per cell instead
-    of |cell|² interpreted HOF trees — 7.5x at sf0.1, same scaling
-    exponent; VERDICT r3 perf item); verdict equality with the
-    expression form is pytest-pinned."""
-    from pydatalake_spark.operators.semdedup import semantic_dedup_numpy
+    The verify is one gram matmul per cell instead of |cell|²
+    interpreted HOF trees (7.5x at sf0.1, same scaling exponent);
+    verdict equality with the column-expression reference is pinned in
+    tests/test_semdedup.py."""
+    from pydatalake_spark.operators.semdedup import semantic_dedup
 
     e = _t(spark, sf, "embeddings")
-    return semantic_dedup_numpy(e, threshold=_SD_TAU)
+    return semantic_dedup(e, threshold=_SD_TAU)
 
 
 @q(
@@ -574,12 +570,10 @@ def semantic_dedup_q(spark: SparkSession, sf: str) -> DataFrame:
 )
 def hard_triplet_mining_q(spark: SparkSession, sf: str) -> DataFrame:
     """Batch-hard triplet mining over the embedding corpus: 5 hardest
-    negatives + 1 hardest positive per anchor. Runs the Arrow/numpy tier
-    (operators/similarity.py:hard_triplets_numpy — one matmul per batch,
-    per-batch local top-k prune; pytest-pinned equal to the expression
-    form ``hard_triplets``, which stays the oracle-exact baseline)."""
-    from pydatalake_spark.operators.similarity import hard_triplets_numpy
-
+    negatives + 1 hardest positive per anchor
+    (operators/similarity.py:hard_triplets — one matmul per batch,
+    per-batch local top-k prune; pinned equal to the column-expression
+    reference in tests/test_semdedup.py)."""
     e = _t(spark, sf, "embeddings")
     # per-corpus cached anchor rows (≤10 by the filter): the anchor-scan
     # job runs once per session, every later call fuses the collected
@@ -592,7 +586,7 @@ def hard_triplet_mining_q(spark: SparkSession, sf: str) -> DataFrame:
         .select("vec_id", "embedding", "label")
         .collect(),
     )
-    return hard_triplets_numpy(e, None, k_neg=5, anchor_rows=rows)
+    return hard_triplets(e, None, k_neg=5, anchor_rows=rows)
 
 
 # ---------------------------------------------------------------------------
@@ -647,16 +641,15 @@ def kmeans_lloyd_step_q(spark: SparkSession, sf: str) -> DataFrame:
     trained centroids back in): per-cell membership count + centroid
     drift.
 
-    Runs the FUSED Arrow/numpy tier (operators/semdedup.py:
-    kmeans_step_numpy): one mapInPandas pass assigns each batch (one
-    |batch| x |cells| distance matmul) and collapses it to per-cell
-    (count, sum) partials, so the corpus is scanned once and never
-    shuffled — per-iteration network cost independent of corpus size.
-    Equality with the expression form is pytest-pinned at dim 16 and dim
-    1024 (the high-dim tier VERDICT r4 asked for)."""
-    from pydatalake_spark.operators.semdedup import kmeans_step_numpy
+    operators/semdedup.py:kmeans_step is one fused mapInPandas pass: it
+    assigns each batch (one |batch| x |cells| distance matmul) and
+    collapses it to per-cell (count, sum) partials, so the corpus is
+    scanned once and never shuffled — per-iteration network cost
+    independent of corpus size. Equality with a pure-numpy Lloyd step is
+    pinned up to dim 1024 in tests/test_ngram_lm.py."""
+    from pydatalake_spark.operators.semdedup import kmeans_step
 
-    return kmeans_step_numpy(_t(spark, sf, "embeddings"), num_cells=8)
+    return kmeans_step(_t(spark, sf, "embeddings"), num_cells=8)
 
 
 @q(
@@ -689,19 +682,19 @@ def pipeline_embedding_curation_q(spark: SparkSession, sf: str) -> DataFrame:
     share of the training mix."""
     from pyspark.sql import Window
 
-    from pydatalake_spark.operators.semdedup import semantic_dedup_numpy
+    from pydatalake_spark.operators.semdedup import semantic_dedup
 
     e = _t(spark, sf, "embeddings")
-    sd = semantic_dedup_numpy(e, threshold=_SD_TAU)
+    sd = semantic_dedup(e, threshold=_SD_TAU)
     kept = sd.filter(F.col("keep")).select("vec_id", "cell")
-    # r12: cap membership IS a row_number predicate over the same cell
+    # cap membership IS a row_number predicate over the same cell
     # partition the readout aggregates on, so the whole tail collapses to
-    # one window + one shuffle-free aggregation. The old shape ran
-    # cap_per_group as a second branch and re-joined it by vec_id —
-    # which re-executed the SemDeDup MapInPandas chain per branch (two
-    # Arrow passes over the corpus) and paid a join exchange (guide
-    # §2.4/§7.2). The rank order below replicates cap_per_group's
-    # documented (md5(key), key) contract exactly — keep them in sync.
+    # one window + one shuffle-free aggregation. Running cap_per_group as
+    # a second branch re-joined by vec_id would re-execute the SemDeDup
+    # MapInPandas chain per branch (two Arrow passes over the corpus) and
+    # pay a join exchange. The rank order below replicates
+    # cap_per_group's documented (md5(key), key) contract exactly — keep
+    # them in sync.
     w = Window.partitionBy("cell").orderBy(
         F.md5(F.col("vec_id").cast("string")).asc(), F.col("vec_id").asc()
     )
@@ -761,14 +754,14 @@ def pipeline_full_curation_q(spark: SparkSession, sf: str) -> DataFrame:
     modality; only ids cross)."""
     from pydatalake_spark.functions.split import hash_bucket, split_label
     from pydatalake_spark.functions.text import quality_score, tokenize
-    from pydatalake_spark.operators.semdedup import semantic_dedup_numpy
+    from pydatalake_spark.operators.semdedup import semantic_dedup
 
     d = _t(spark, sf, "documents")
     e = _t(spark, sf, "embeddings")
     quality = quality_score(tokenize("text"))
     q_keep = d.filter(quality >= 0.45).select("doc_id")
     sd_keep = (
-        semantic_dedup_numpy(e, threshold=_SD_TAU)
+        semantic_dedup(e, threshold=_SD_TAU)
         .filter(F.col("keep"))
         .select(F.col("vec_id").alias("doc_id"))
     )
@@ -1044,20 +1037,16 @@ def _pq_codebooks(spark: SparkSession, sf: str):
     """Per-corpus cached (trained-then-collected) PQ codebook — a PQ
     index is train-once / encode-and-search-many, so queries downstream
     of training fuse the same bounded artifact (m*k rows) as literals.
-    Trains on the fused Arrow tier (pytest-pinned == the oracle-exact
-    expression form; the expression trainer's m*k argmin tree costs
-    seconds of driver-side analysis that would bill every consumer)."""
-    from pydatalake_spark.operators.pq import (
-        collect_codebooks,
-        train_pq_codebooks_numpy,
-    )
+    Trains with operators/pq.py:train_pq_codebooks (pinned equal to the
+    column-expression reference in tests/test_pq.py)."""
+    from pydatalake_spark.operators.pq import collect_codebooks, train_pq_codebooks
 
     return corpus_memo(
         spark,
         "pq_codebooks",
         sf,
         lambda: collect_codebooks(
-            train_pq_codebooks_numpy(
+            train_pq_codebooks(
                 _t(spark, sf, "embeddings"), m=_PQ_M, k=_PQ_K, dim=_DIM
             )
         ),
@@ -1065,16 +1054,16 @@ def _pq_codebooks(spark: SparkSession, sf: str):
 
 
 def _pq_encoded(spark: SparkSession, sf: str):
-    """Per-corpus cached PQ-encoded table (Arrow encode tier) — encode
-    once, search many: the ADC/recall queries measure the SEARCH path
-    over a standing code table, as a production index would."""
-    from pydatalake_spark.operators.pq import pq_encode_numpy
+    """Per-corpus cached PQ-encoded table — encode once, search many:
+    the ADC/recall queries measure the SEARCH path over a standing code
+    table, as a production index would."""
+    from pydatalake_spark.operators.pq import pq_encode
     return corpus_memo(
         spark,
         "pq_encoded",
         sf,
         lambda: cache_once(
-            pq_encode_numpy(
+            pq_encode(
                 _t(spark, sf, "embeddings"), _pq_codebooks(spark, sf), dim=_DIM
             )
         ),
@@ -1107,8 +1096,8 @@ def pq_codebooks_q(spark: SparkSession, sf: str) -> DataFrame:
     subspace assigns the batch and collapses it to per-(s, code, dim)
     sum/count partials, so the corpus is scanned once and the shuffle
     carries only tasks x m*k*sub_dim skinny rows; the kmeans_lloyd_step
-    posture).  Rounded-mean equality with the oracle-exact expression
-    form (`train_pq_codebooks`) is pytest-pinned.  Long-form output
+    posture).  Rounded-mean equality with the column-expression
+    reference is pinned in tests/test_pq.py.  Long-form output
     (s, code, i, v): array result columns crash pandas canonicalizers.
     The built plan is memoized per corpus (the _fingerprints pattern):
     PQ training is train-once/reuse-many, and rebuilding the plan would
@@ -1135,14 +1124,14 @@ def pq_codebooks_q(spark: SparkSession, sf: str) -> DataFrame:
 )
 def pq_encode_q(spark: SparkSession, sf: str) -> DataFrame:
     """Corpus-wide PQ encode (operators/pq.py:pq_encode): the refined
-    codebook (bounded model artifact, fused as literals) turns each
-    vector into m byte-sized codes in a MAP-ONLY pass — zero shuffles,
-    the 8-bytes-per-vector storage tier a 100 TB embedding corpus ships
-    through every downstream stage.  Codes joined to CSV for the gate
-    (array result columns, VERDICT r3 #3); integer formatting is
-    engine-identical so the row stays bit-exact.  Runs the Arrow encode
-    tier (pytest-pinned == the expression form, whose literal argmin
-    tree bills seconds of Catalyst analysis per plan)."""
+    codebook (bounded model artifact, captured in the batch closure)
+    turns each vector into m byte-sized codes in a MAP-ONLY pass — zero
+    shuffles, the 8-bytes-per-vector storage tier a 100 TB embedding
+    corpus ships through every downstream stage.  Codes joined to CSV
+    for the gate (array result columns crash pandas canonicalizers);
+    integer formatting is engine-identical so the row stays bit-exact.
+    Equality with the column-expression reference is pinned in
+    tests/test_pq.py."""
     enc = _pq_encoded(spark, sf)
     return enc.select(
         "vec_id",

@@ -275,13 +275,70 @@ def test_ivf_full_probe_equals_brute_force(spark):
     assert e == i
 
 
+def _ivf_topk_expr(corpus, queries, centroids, k, nprobe):
+    """Column-expression reference for ``ivf_topk``: squared-L2 folds to
+    literal centroids put each corpus vector in its nearest cell and
+    explode each query over its ``nprobe`` nearest cells, then exact
+    cosine within shared cells and a (sim desc, c_id asc) rank per
+    query."""
+    from pyspark.sql import Window
+
+    from pydatalake_spark.functions.vector import dot, l2_norm, to_double_array
+
+    def dists(v):
+        return F.array(
+            *[
+                F.struct(
+                    F.aggregate(
+                        F.zip_with(
+                            v,
+                            F.array(*[F.lit(float(x)) for x in c]),
+                            lambda a, b: (a - b) * (a - b),
+                        ),
+                        F.lit(0.0),
+                        lambda acc, x: acc + x,
+                    ).alias("d"),
+                    F.lit(i).alias("i"),
+                )
+                for i, c in enumerate(centroids)
+            ]
+        )
+
+    def side(df, p):
+        return df.select(
+            F.col("vec_id").alias(f"{p}_id"),
+            to_double_array("embedding").alias(f"{p}_vec"),
+        ).withColumn(f"{p}_norm", l2_norm(F.col(f"{p}_vec")))
+
+    c = side(corpus, "c").withColumn(
+        "cell", F.array_min(dists(F.col("c_vec")))["i"]
+    )
+    probed = F.slice(F.array_sort(dists(F.col("q_vec"))), 1, nprobe)
+    q = side(queries, "q").withColumn(
+        "cell", F.explode(F.transform(probed, lambda s: s["i"]))
+    )
+    sim = (
+        c.join(F.broadcast(q), "cell")
+        .filter(F.col("q_id") != F.col("c_id"))
+        .select(
+            "q_id",
+            "c_id",
+            (
+                dot(F.col("q_vec"), F.col("c_vec"))
+                / (F.col("q_norm") * F.col("c_norm"))
+            ).alias("sim"),
+        )
+    )
+    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("c_id").asc())
+    return sim.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+
+
 def test_ivf_numpy_equals_expression_form(spark):
-    """The fused numpy IVF path (assignment + probe-mask + scoring + local
-    top-k prune in one mapInPandas) returns the same pairs as the pure
-    expression form, at partial AND full probe."""
+    """ivf_topk (assignment + probe-mask + scoring + local top-k prune in
+    one mapInPandas) returns the same pairs as the column-expression
+    reference, at partial AND full probe."""
     from pydatalake_spark.operators.similarity import (
         ivf_topk,
-        ivf_topk_numpy,
         train_ivf_centroids,
     )
     from pydatalake_spark.queries.tables import load_table
@@ -290,8 +347,8 @@ def test_ivf_numpy_equals_expression_form(spark):
     queries = emb.filter(F.col("vec_id") < 5)
     cents = train_ivf_centroids(emb, num_cells=8)
     for nprobe in (2, 8):
-        expr = ivf_topk(emb, queries, cents, k=5, nprobe=nprobe)
-        np_ = ivf_topk_numpy(emb, queries, cents, k=5, nprobe=nprobe)
+        expr = _ivf_topk_expr(emb, queries, cents, k=5, nprobe=nprobe)
+        np_ = ivf_topk(emb, queries, cents, k=5, nprobe=nprobe)
         e = {(r.q_id, r.c_id) for r in expr.collect()}
         n = {(r.q_id, r.c_id) for r in np_.collect()}
         assert e == n, f"nprobe={nprobe}"
@@ -482,19 +539,6 @@ def test_multimodal_resize_and_frames(spark):
 
     with pytest.raises(Exception):
         resize_images(media, 4, 4, decode_stub="error").collect()
-
-
-def test_cosine_topk_numpy_matches_expression(spark):
-    """The vectorized numpy path must return the same (q_id, c_id) top-k
-    sets as the oracle-exact expression path."""
-    from pydatalake_spark.operators.similarity import cosine_topk, cosine_topk_numpy
-    from pydatalake_spark.queries.tables import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    e = {(r.q_id, r.c_id) for r in cosine_topk(emb, queries, k=8).collect()}
-    n = {(r.q_id, r.c_id) for r in cosine_topk_numpy(emb, queries, k=8).collect()}
-    assert e == n
 
 
 def test_salted_agg_matches_plain_groupby(spark, events):
@@ -1222,6 +1266,90 @@ spark.stop()
     assert "RESULT 500 0" in out.stdout, out.stdout + out.stderr[-3000:]
 
 
+def test_operator_twins_are_chosen_from_input():
+    """One implementation per operator: a public pair ``X`` / ``X_numpy``
+    in ``pydatalake_spark/operators/`` may stay only when some library
+    function calls both, i.e. the code picks between them from what it
+    observes (``membership_screen`` picks ``bloom_contains`` or
+    ``bloom_contains_numpy`` from the key count). A reference form a
+    test compares the production path against lives in the test
+    module."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    defs: set[str] = set()
+    calls: list[set[str]] = []
+    for path in glob.glob(os.path.join(root, "pydatalake_spark/operators/*.py")):
+        tree = ast.parse(open(path).read())
+        defs |= {
+            n.name for n in tree.body
+            if isinstance(n, ast.FunctionDef) and not n.name.startswith("_")
+        }
+        for fn in ast.walk(tree):
+            if isinstance(fn, ast.FunctionDef):
+                calls.append({
+                    c.func.id if isinstance(c.func, ast.Name) else c.func.attr
+                    for c in ast.walk(fn)
+                    if isinstance(c, ast.Call)
+                    and isinstance(c.func, (ast.Name, ast.Attribute))
+                })
+    pairs = sorted(
+        d[: -len("_numpy")] for d in defs
+        if d.endswith("_numpy") and d[: -len("_numpy")] in defs
+    )
+    unchosen = [
+        x for x in pairs if not any({x, x + "_numpy"} <= c for c in calls)
+    ]
+    assert pairs, "no X/X_numpy pair found: the scan is broken"
+    assert unchosen == [], unchosen
+
+
+def test_cc_loop_never_broadcasts_edges():
+    """The min-label loop runs only on edge tables above
+    ``session.driver_bound``, so none of its joins may broadcast the
+    edges: with a 1 GB broadcast threshold and a 1 MB result cap, CC on
+    73,500 DISTINCT clique edges (700 cliques of 15 nodes; 147,000
+    symmetrized rows, 2.35 MB) must finish the loop with every node
+    labeled by its clique's minimum. A broadcast of the edge side would
+    collect them past ``spark.driver.maxResultSize`` and abort."""
+    import os
+    import subprocess
+    import sys
+
+    script = """
+from pyspark.sql import functions as F
+from pydatalake_spark.operators.cluster import connected_components
+from pydatalake_spark.session import get_spark
+
+spark = get_spark("ccnobcast", master="local[2]", extra_conf={
+    "spark.driver.maxResultSize": "1m",
+    "spark.sql.autoBroadcastJoinThreshold": str(1 << 30),
+})
+r = spark.range(700 * 225).select(
+    (F.col("id") / 225).cast("long").alias("c"),
+    (F.col("id") % 225 / 15).cast("long").alias("i"),
+    (F.col("id") % 15).alias("j"),
+).filter(F.col("i") < F.col("j"))
+edges = r.select(
+    (F.col("c") * 15 + F.col("i")).alias("id_a"),
+    (F.col("c") * 15 + F.col("j")).alias("id_b"),
+)
+cc = connected_components(edges)
+bad = cc.filter(F.col("cluster_id") != F.col("node") - F.col("node") % 15)
+print("RESULT", edges.count(), cc.count(), bad.count())
+spark.stop()
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root + os.pathsep + os.environ.get("PYTHONPATH", ""))
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert "RESULT 73500 10500 0" in out.stdout, out.stdout + out.stderr[-3000:]
+
+
 def test_quality_score_empty_doc_yields_null_not_error(spark):
     """ANSI mode turns 0/0 into a job-killing error; empty documents must
     instead yield NULL ratios (and get filtered by quality thresholds)."""
@@ -1496,11 +1624,19 @@ def test_bloom_tiers_interchangeable_on_dups_and_nulls(spark):
     assert by_key[None] == {False}  # null key is never a member
 
 
-def test_membership_screen_three_tier_dispatch(spark):
-    """VERDICT r5 item 2: the explicit vector/join/exact dispatch. Force
-    each tier via the threshold params; every tier must keep all members
-    (no false negatives) and the exact tier must have zero false
-    positives."""
+def _force_bloom_tier(monkeypatch, vector_max_bits, join_max_bits):
+    """Pin the bloom tier ceilings, which the dispatch reads at call
+    time."""
+    import pydatalake_spark.operators.bloom as B
+
+    monkeypatch.setattr(B, "BLOOM_VECTOR_MAX_BITS", vector_max_bits)
+    monkeypatch.setattr(B, "BLOOM_JOIN_MAX_BITS", join_max_bits)
+
+
+def test_membership_screen_three_tier_dispatch(spark, monkeypatch):
+    """The explicit vector/join/exact dispatch. Force each tier via the
+    ceiling constants; every tier must keep all members (no false
+    negatives) and the exact tier must have zero false positives."""
     from pydatalake_spark.operators.bloom import (
         bloom_num_bits,
         bloom_tier,
@@ -1520,8 +1656,9 @@ def test_membership_screen_three_tier_dispatch(spark):
         "exact": dict(vector_max_bits=m // 4, join_max_bits=m // 2),
     }
     for tier, kw in forced.items():
-        assert bloom_tier(300, **kw) == tier
-        rows = membership_screen(probe, train, key_col="k", **kw).collect()
+        _force_bloom_tier(monkeypatch, **kw)
+        assert bloom_tier(300) == tier
+        rows = membership_screen(probe, train, key_col="k").collect()
         assert len(rows) == 600
         hits = {r.k: r.bf_hit for r in rows}
         assert all(hits[f"tk-{i}"] for i in range(300)), tier  # no FN
@@ -1532,7 +1669,9 @@ def test_membership_screen_three_tier_dispatch(spark):
             assert fp / 300 < 0.05, tier
 
 
-def test_membership_screen_exact_tier_probe_carrying_hit_column(spark):
+def test_membership_screen_exact_tier_probe_carrying_hit_column(
+    spark, monkeypatch
+):
     """r7 ADVICE (medium): the decontamination audit passes a probe that
     already carries a `_hit` marker column into membership_screen; the
     exact tier's internal join marker must not collide with it (the old
@@ -1554,9 +1693,9 @@ def test_membership_screen_exact_tier_probe_carrying_hit_column(spark):
         F.lit("x").alias("__ms_hit"),
     )
     m = bloom_num_bits(50)
-    kw = dict(vector_max_bits=m // 4, join_max_bits=m // 2)
-    assert bloom_tier(50, **kw) == "exact"
-    out = membership_screen(probe, train, key_col="k", **kw)
+    _force_bloom_tier(monkeypatch, m // 4, m // 2)
+    assert bloom_tier(50) == "exact"
+    out = membership_screen(probe, train, key_col="k")
     assert set(out.columns) == {"k", "_hit", "__ms_hit", "bf_hit"}
     rows = out.collect()
     assert len(rows) == 100
@@ -1803,7 +1942,7 @@ def test_bloom_chunked_build_multi_chunk_layout(spark, monkeypatch):
     assert hits.filter(~F.col("bf_hit")).count() == 0
 
 
-def test_membership_screen_join_tier_without_broadcast(spark):
+def test_membership_screen_join_tier_without_broadcast(spark, monkeypatch):
     """VERDICT r6 item 6: the join tier must stay correct when the
     bitmap-word broadcast is unavailable (autoBroadcastJoinThreshold
     disabled) — Spark honors the explicit broadcast() hint, and even if a
@@ -1818,13 +1957,11 @@ def test_membership_screen_join_tier_without_broadcast(spark):
         F.concat(F.lit("jt-"), F.col("id")).alias("k")
     )
     m = bloom_num_bits(400)
+    _force_bloom_tier(monkeypatch, m // 2, m)  # force the join tier
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        rows = membership_screen(
-            probe, train, key_col="k",
-            vector_max_bits=m // 2, join_max_bits=m,  # force the join tier
-        ).collect()
+        rows = membership_screen(probe, train, key_col="k").collect()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert len(rows) == 800

@@ -268,6 +268,39 @@ def test_corpus_dir_rewrite_serves_new_files(spark, tmp_path):
     assert counts() == (80, 80)
 
 
+def test_ivf_centroids_retrained_on_corpus_rewrite(spark, tmp_path, monkeypatch):
+    """The ``ivf_topk`` query memoizes its trained quantizer per corpus in
+    the session memo: a second call on an unchanged dir trains nothing,
+    and rewriting the dir's ``embeddings.parquet`` trains again, so the
+    search never runs on centroids of files that are gone."""
+    import shutil
+    import time
+
+    import pyarrow.parquet as pq
+
+    import pydatalake_spark.queries.similarity as qs
+
+    sf = str(tmp_path / "corpus")
+    emb = tmp_path / "corpus" / "embeddings.parquet"
+    emb.parent.mkdir()
+    shutil.copy(f"{SF_DIR}/embeddings.parquet", emb)
+    trained = []
+    real = qs.train_ivf_centroids
+
+    def counting(*args, **kwargs):
+        trained.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(qs, "train_ivf_centroids", counting)
+    assert qs.QUERIES["ivf_topk"](spark, sf).count() == 100
+    assert qs.QUERIES["ivf_topk"](spark, sf).count() == 100
+    assert len(trained) == 1
+    time.sleep(0.01)  # ensure mtime_ns moves even on coarse filesystems
+    pq.write_table(pq.read_table(emb).slice(0, 300), emb)
+    assert qs.QUERIES["ivf_topk"](spark, sf).count() == 100
+    assert len(trained) == 2
+
+
 def test_corpus_datacard_avg_quality_null_semantics(spark, tmp_path):
     """r13 ADVICE fix: avg_quality must be avg(q) over NON-NULL q only.
     q is null for empty-text (nullif(length,0)) and null-text docs; the

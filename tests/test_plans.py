@@ -203,23 +203,6 @@ def test_near_dup_joins_are_equi_joins(spark):
         assert "BroadcastNestedLoopJoin" not in p
 
 
-def test_ivf_broadcasts_query_side(spark):
-    """IVF probe join must broadcast the (small) query side, never shuffle
-    the corpus by anything but its cell assignment."""
-    from pydatalake_spark.operators.similarity import (
-        ivf_topk,
-        train_ivf_centroids,
-    )
-    from pydatalake_spark.queries.tables import load_table
-    from pyspark.sql import functions as F
-
-    emb = load_table(spark, SF, "embeddings")
-    cents = train_ivf_centroids(emb, num_cells=4)
-    df = ivf_topk(emb, emb.filter(F.col("vec_id") < 3), cents, k=3, nprobe=2)
-    p = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in p
-
-
 def test_bucketed_join_no_shuffle(spark, tmp_path_factory):
     """Two tables bucketed on the join key must join with ZERO Exchange
     nodes — the write-time shuffle is reused by every subsequent join."""
@@ -393,10 +376,9 @@ def test_span_dedup_joins_are_hash_keyed(spark):
 
 
 def test_semdedup_centroids_broadcast_and_cell_join_is_equi(spark):
-    """SemDeDup: centroid assignment broadcasts the tiny centroid side
-    (BroadcastNestedLoopJoin on the cross join is CORRECT there — 8 rows);
-    the within-cell pair join must be a hash equi-join on cell, and no
-    plain CartesianProduct may appear anywhere."""
+    """SemDeDup: the centroids ride the assignment map's closure (no
+    cross join with the corpus), the within-cell stage is keyed by cell,
+    and no plain CartesianProduct may appear anywhere."""
     from pydatalake_spark.operators.semdedup import semantic_dedup
     from pydatalake_spark.queries.tables import load_table
 
@@ -509,14 +491,13 @@ def test_multires_rollup_scans_raw_once(spark):
 
 
 def test_fused_kmeans_never_shuffles_corpus(spark):
-    """kmeans_step_numpy (round 5, fused): one mapInPandas pass assigns
-    AND partial-sums each batch, so the physical plan has NO join (the
-    two-phase form joined cells back to the corpus by id) and the only
-    exchange moves per-cell partials — cells x partitions rows, not the
-    corpus."""
+    """kmeans_step: one mapInPandas pass assigns AND partial-sums each
+    batch, so the physical plan has NO join (no cells-to-corpus re-join
+    by id) and the only exchange moves per-cell partials — cells x
+    partitions rows, not the corpus."""
     import numpy as np
 
-    from pydatalake_spark.operators.semdedup import kmeans_step_numpy
+    from pydatalake_spark.operators.semdedup import kmeans_step
 
     rng = np.random.default_rng(2)
     vecs = rng.normal(size=(50, 8)).astype(np.float32)
@@ -525,7 +506,7 @@ def test_fused_kmeans_never_shuffles_corpus(spark):
         "vec_id long, embedding array<float>",
     )
     p = (
-        kmeans_step_numpy(emb, num_cells=4)
+        kmeans_step(emb, num_cells=4)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -2,8 +2,9 @@
 
 Oracle-value parity for the four pq_* registry queries is covered by the
 driver gate / tools/check_parity.py; these tests pin the operator
-contracts the oracle can't see: numpy-tier equality, tie determinism,
-quantization sanity, and the map-only encode plan shape.
+contracts the oracle can't see: equality with the column-expression
+references below, tie determinism, quantization sanity, and the
+map-only encode plan shape.
 """
 
 from __future__ import annotations
@@ -11,18 +12,93 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from pydatalake_spark.functions.vector import to_double_array
 from pydatalake_spark.operators.pq import (
+    PQ_ROUND,
+    _seed_rows,
     collect_codebooks,
     pq_adc_topk,
     pq_encode,
-    pq_encode_numpy,
     train_pq_codebooks,
-    train_pq_codebooks_numpy,
     train_pq_long_numpy,
 )
 from pydatalake_spark.queries.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def _nearest_code(sv, centroids):
+    """Code of the nearest literal centroid in ``centroids`` (a
+    code-sorted [(code, cvec), ...]): squared L2 folded left-to-right
+    from 0.0 — DuckDB ``list_sum`` order — and ties to the lowest code,
+    since ``array_position`` finds the first minimum."""
+    d2s = F.array(
+        *[
+            F.aggregate(
+                F.zip_with(
+                    sv,
+                    F.array(*[F.lit(float(x)) for x in cv]),
+                    lambda a, b: (a - b) * (a - b),
+                ),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            )
+            for _, cv in centroids
+        ]
+    )
+    codes = F.array(*[F.lit(int(c)) for c, _ in centroids])
+    return F.element_at(codes, F.array_position(d2s, F.array_min(d2s)).cast("int"))
+
+
+def _sub(v, s, sub_dim):
+    return F.slice(v, s * sub_dim + 1, sub_dim)
+
+
+def _train_pq_codebooks_expr(emb, m=4, k=16, dim=64):
+    """Column-expression reference for ``train_pq_codebooks``: assign
+    each subvector to its nearest lowest-id init code, then one
+    (s, code) mean aggregation rounded to ``PQ_ROUND`` dp."""
+    sub_dim = dim // m
+    seeds = _seed_rows(emb, k, "vec_id", "embedding")
+    v = F.col("v")
+    per_s = [
+        F.struct(
+            _sub(v, s, sub_dim).alias("sv"),
+            _nearest_code(
+                _sub(v, s, sub_dim),
+                [(j, sv[s * sub_dim : (s + 1) * sub_dim]) for j, sv in enumerate(seeds)],
+            ).alias("code"),
+        )
+        for s in range(m)
+    ]
+    agg = (
+        emb.select(to_double_array("embedding").alias("v"))
+        .select(F.posexplode(F.array(*per_s)).alias("s", "a"))
+        .groupBy(
+            F.col("s").cast("long").alias("s"),
+            F.col("a.code").cast("long").alias("code"),
+        )
+        .agg(
+            *[
+                F.round(F.avg(F.col("a.sv")[i]), PQ_ROUND).alias(f"m{i}")
+                for i in range(sub_dim)
+            ]
+        )
+    )
+    return agg.select(
+        "s", "code", F.array(*[F.col(f"m{i}") for i in range(sub_dim)]).alias("cvec")
+    )
+
+
+def _pq_encode_expr(emb, codebooks, dim=64):
+    """Column-expression reference for ``pq_encode``: per subspace, the
+    nearest literal centroid's code."""
+    sub_dim = dim // len(codebooks)
+    v = to_double_array("embedding")
+    codes = F.array(
+        *[_nearest_code(_sub(v, s, sub_dim), cb) for s, cb in enumerate(codebooks)]
+    )
+    return emb.select("vec_id", codes.alias("codes"))
 
 
 @pytest.fixture(scope="module")
@@ -52,11 +128,11 @@ def test_codebook_shape_and_determinism(spark, emb, cb):
 
 
 def test_trainer_numpy_tier_equals_expression(spark, emb, cb):
-    """The fused Arrow trainer (the gate/scale tier) must produce the
-    SAME rounded codebook as the oracle-exact expression form — the
-    6 dp rounding absorbs partial-sum reordering."""
-    fast = collect_codebooks(train_pq_codebooks_numpy(emb, m=4, k=16, dim=64))
-    assert fast == cb
+    """The fused Arrow trainer must produce the SAME rounded codebook as
+    the column-expression reference — the 6 dp rounding absorbs
+    partial-sum reordering."""
+    expr = collect_codebooks(_train_pq_codebooks_expr(emb, m=4, k=16, dim=64))
+    assert expr == cb
     long = {
         (r["s"], r["code"], r["i"]): r["v"]
         for r in train_pq_long_numpy(emb, m=4, k=16, dim=64).collect()
@@ -70,11 +146,11 @@ def test_trainer_numpy_tier_equals_expression(spark, emb, cb):
 def test_encode_numpy_tier_equals_expression(spark, emb, cb):
     expr = {
         r["vec_id"]: list(r["codes"])
-        for r in pq_encode(emb, cb, dim=64).collect()
+        for r in _pq_encode_expr(emb, cb, dim=64).collect()
     }
     fast = {
         r["vec_id"]: list(r["codes"])
-        for r in pq_encode_numpy(emb, cb, dim=64).collect()
+        for r in pq_encode(emb, cb, dim=64).collect()
     }
     assert expr == fast
     assert len(expr) == emb.count()
@@ -209,8 +285,8 @@ def test_ivfadc_encode_cells_match_python(spark, emb, cb, coarse):
 
 
 def test_encode_plan_is_map_only(spark, emb, cb):
-    """The 100 TB contract: corpus-wide encode has NO shuffle — codebook
-    literals are fused into a single scan-project stage."""
+    """The 100 TB contract: corpus-wide encode has NO shuffle — the
+    codebook rides the batch closure of a single scan-map stage."""
     p = pq_encode(emb, cb, dim=64)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in p, p
 

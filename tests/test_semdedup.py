@@ -7,8 +7,10 @@ import math
 
 from pyspark.sql import functions as F
 
+from pydatalake_spark.functions.vector import dot, l2_norm, to_double_array
 from pydatalake_spark.operators.semdedup import (
-    assign_fixed_cells,
+    _default_centroids,
+    assign_cells_numpy,
     semantic_dedup,
 )
 
@@ -35,11 +37,95 @@ def _emb(spark):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
+def _sq_dist(a, b):
+    """Squared L2 distance of two double-array columns, summed
+    left-to-right from 0.0 — the oracle's fold."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _cos(a, b, na, nb):
+    """dot / (na * nb): the same expression tree as ``cosine()``."""
+    return dot(F.col(a), F.col(b)) / (F.col(na) * F.col(nb))
+
+
+def _semantic_dedup_expr(emb, num_cells=None, threshold=0.3, centroids=None):
+    """Column-expression reference for ``semantic_dedup``: nearest
+    centroid by a sequential squared-difference fold (ties to the lowest
+    centroid id via min(struct)), then a within-cell self-join; a vector
+    is dropped iff a smaller id in its cell has cosine >= threshold."""
+    cents = _default_centroids(emb, "vec_id", "embedding", num_cells, centroids)
+    wv = emb.select("vec_id", to_double_array("embedding").alias("dv"))
+    cells = (
+        wv.crossJoin(F.broadcast(cents))
+        .withColumn("d2", _sq_dist(F.col("dv"), F.col("cvec")))
+        .groupBy("vec_id")
+        .agg(F.min(F.struct("d2", "cent_id")).alias("m"))
+        .select("vec_id", F.col("m.cent_id").alias("cell"))
+    )
+    v = cells.join(wv, "vec_id").withColumn("nrm", l2_norm(F.col("dv")))
+    a = v.select(
+        F.col("vec_id").alias("id_a"), "cell",
+        F.col("dv").alias("va"), F.col("nrm").alias("na"),
+    )
+    b = v.select(
+        F.col("vec_id").alias("id_b"), "cell",
+        F.col("dv").alias("vb"), F.col("nrm").alias("nb"),
+    )
+    dropped = (
+        a.join(b, "cell")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .filter(_cos("va", "vb", "na", "nb") >= threshold)
+        .select(F.col("id_b").alias("vec_id"), F.lit(True).alias("_dup"))
+        .distinct()
+    )
+    return cells.join(dropped, "vec_id", "left").select(
+        "vec_id", "cell", F.coalesce(~F.col("_dup"), F.lit(True)).alias("keep")
+    )
+
+
+def _hard_triplets_expr(corpus, anchors, k_neg):
+    """Column-expression reference for ``hard_triplets``: anchors
+    broadcast against the corpus, cosine per pair, then the k_neg most
+    similar other-label and the one least similar same-label candidates
+    per anchor, (sim, c_id) ordered."""
+    from pyspark.sql import Window
+
+    def side(df, p):
+        return df.select(
+            F.col("vec_id").alias(f"{p}_id"),
+            to_double_array("embedding").alias(f"{p}_vec"),
+            F.col("label").alias(f"{p}_label"),
+        ).withColumn(f"{p}_norm", l2_norm(F.col(f"{p}_vec")))
+
+    pairs = (
+        side(corpus, "c")
+        .crossJoin(F.broadcast(side(anchors, "q")))
+        .filter(F.col("q_id") != F.col("c_id"))
+        .withColumn("sim", _cos("q_vec", "c_vec", "q_norm", "c_norm"))
+    )
+
+    def ranked(same_label, order, k, kind):
+        w = Window.partitionBy("q_id").orderBy(order, F.col("c_id").asc())
+        return (
+            pairs.filter((F.col("q_label") == F.col("c_label")) == same_label)
+            .withColumn("rnk", F.row_number().over(w))
+            .filter(F.col("rnk") <= k)
+            .select("q_id", "c_id", "sim", F.lit(kind).alias("kind"))
+        )
+
+    return ranked(False, F.col("sim").desc(), k_neg, "hard_neg").unionByName(
+        ranked(True, F.col("sim").asc(), 1, "hard_pos")
+    )
+
+
 def test_cells_are_nearest_centroid(spark):
-    cells = {
-        r.vec_id: r.cell
-        for r in assign_fixed_cells(_emb(spark), num_cells=2).collect()
-    }
+    e = _emb(spark)
+    cents = _default_centroids(e, "vec_id", "embedding", 2, None)
+    cells = {r.vec_id: r.cell for r in assign_cells_numpy(e, cents).collect()}
     assert cells[0] == 0 and cells[2] == 0 and cells[3] == 0
     assert cells[1] == 1 and cells[4] == 1
 
@@ -89,7 +175,7 @@ def test_custom_centroids_override(spark):
     )
     cells = {
         r.vec_id: r.cell
-        for r in assign_fixed_cells(_emb(spark), centroids=cent).collect()
+        for r in assign_cells_numpy(_emb(spark), cent).collect()
     }
     assert set(cells.values()) <= {10, 11}
     assert cells[0] == 10 and cells[1] == 11
@@ -130,23 +216,20 @@ def test_hard_triplets_labels_and_ranks(spark):
 
 
 def test_hard_triplets_numpy_matches_expression(spark):
-    """The Arrow/numpy tier (per-batch local top-k prune) must return the
-    same triplets as the oracle-exact expression form."""
-    from pydatalake_spark.operators.similarity import (
-        hard_triplets,
-        hard_triplets_numpy,
-    )
+    """hard_triplets (per-batch local top-k prune) must return the same
+    triplets as the column-expression reference."""
+    from pydatalake_spark.operators.similarity import hard_triplets
     from pydatalake_spark.queries.tables import load_table
 
     e = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     anchors = e.filter(F.col("vec_id") < 8)
     exp = {
         (r.q_id, r.c_id, r.kind, round(r.sim, 9))
-        for r in hard_triplets(e, anchors, k_neg=5).collect()
+        for r in _hard_triplets_expr(e, anchors, k_neg=5).collect()
     }
     got = {
         (r.q_id, r.c_id, r.kind, round(r.sim, 9))
-        for r in hard_triplets_numpy(e, anchors, k_neg=5).collect()
+        for r in hard_triplets(e, anchors, k_neg=5).collect()
     }
     assert exp == got
 
@@ -219,11 +302,9 @@ def test_hier_assignment_valid_and_dedups_exact_twins(spark):
     from pydatalake_spark.operators.semdedup import (
         HIER_MIN_CELLS,
         assign_cells_hier_numpy,
-        semantic_dedup_numpy,
     )
     from pydatalake_spark.queries.tables import load_table
     from tests.conftest import SF_DIR
-    from pydatalake_spark.functions.vector import to_double_array
 
     base = load_table(spark, SF_DIR, "embeddings")
     cents = (
@@ -247,7 +328,7 @@ def test_hier_assignment_valid_and_dedups_exact_twins(spark):
     assert set(a.values()) <= cent_ids
 
     twins = base.withColumn("vec_id", F.col("vec_id") + 100_000)
-    sd = semantic_dedup_numpy(
+    sd = semantic_dedup(
         base.unionByName(twins), num_cells=HIER_MIN_CELLS, threshold=0.99
     )
     rows = {r["vec_id"]: (r["cell"], r["keep"]) for r in sd.collect()}
@@ -260,10 +341,9 @@ def test_hier_assignment_valid_and_dedups_exact_twins(spark):
 
 
 def test_numpy_variant_equals_expression_form(spark):
-    """semantic_dedup_numpy (applyInPandas gram-matrix verify) must emit
-    the exact same verdicts as the expression-form join, on the fixture
-    and on a real embeddings slice."""
-    from pydatalake_spark.operators.semdedup import semantic_dedup_numpy
+    """semantic_dedup (matmul assignment, applyInPandas gram-matrix
+    verify) must emit the exact same verdicts as the column-expression
+    reference, on the fixture and on a real embeddings slice."""
     from pydatalake_spark.queries.tables import load_table
     from tests.conftest import SF_DIR
 
@@ -271,13 +351,13 @@ def test_numpy_variant_equals_expression_form(spark):
     for tau in (0.99, 0.3):
         expr = {
             r.vec_id: (r.cell, r.keep)
-            for r in semantic_dedup(e, num_cells=2, threshold=tau).collect()
+            for r in _semantic_dedup_expr(
+                e, num_cells=2, threshold=tau
+            ).collect()
         }
         np_ = {
             r.vec_id: (r.cell, r.keep)
-            for r in semantic_dedup_numpy(
-                e, num_cells=2, threshold=tau
-            ).collect()
+            for r in semantic_dedup(e, num_cells=2, threshold=tau).collect()
         }
         # verdicts must agree everywhere; cells must agree except on
         # vector 5, which is EXACTLY equidistant (pi/4) between the two
@@ -295,11 +375,11 @@ def test_numpy_variant_equals_expression_form(spark):
     real = load_table(spark, SF_DIR, "embeddings")
     expr = {
         (r.vec_id, r.cell, r.keep)
-        for r in semantic_dedup(real, threshold=0.3).collect()
+        for r in _semantic_dedup_expr(real, threshold=0.3).collect()
     }
     np_ = {
         (r.vec_id, r.cell, r.keep)
-        for r in semantic_dedup_numpy(real, threshold=0.3).collect()
+        for r in semantic_dedup(real, threshold=0.3).collect()
     }
     assert expr == np_
 
@@ -465,19 +545,13 @@ def test_rp_ann_recall_high_on_clustered_data(spark):
 
 
 def test_assign_tier_from_actual_centroid_count_and_approx_flag(spark):
-    """r7 ADVICE: (a) when trained centroids are passed, the assignment
-    tier must derive from the ACTUAL centroid count, not a mismatching
-    num_cells; (b) approx_assign=False pins the exact flat assignment
-    even past HIER_MIN_CELLS; (c) the auto escalation to the approximate
-    hierarchical tier warns loudly."""
+    """(a) When trained centroids are passed, the assignment tier must
+    derive from the ACTUAL centroid count, not a mismatching num_cells;
+    (b) the escalation to the approximate two-level tier from
+    HIER_MIN_CELLS cells on warns loudly."""
     import warnings
 
-    from pydatalake_spark.functions.vector import to_double_array
-    from pydatalake_spark.operators.semdedup import (
-        HIER_MIN_CELLS,
-        semantic_dedup,
-        semantic_dedup_numpy,
-    )
+    from pydatalake_spark.operators.semdedup import HIER_MIN_CELLS
 
     # drop vec 5 (exactly equidistant from both centroids: matmul-vs-fold
     # float noise breaks the tie differently across engines)
@@ -487,13 +561,13 @@ def test_assign_tier_from_actual_centroid_count_and_approx_flag(spark):
         to_double_array("embedding").alias("cvec"),
     )
     # (a) 2 real centroids + lying num_cells >= HIER_MIN_CELLS: the tier
-    # must be chosen from the 2, i.e. exact flat — equal to the exact
-    # expression form, and no escalation warning
+    # must be chosen from the 2, i.e. exact flat — equal to the
+    # expression reference, and no escalation warning
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         got = {
             r.vec_id: (r.cell, r.keep)
-            for r in semantic_dedup_numpy(
+            for r in semantic_dedup(
                 emb,
                 num_cells=HIER_MIN_CELLS,
                 threshold=0.99,
@@ -502,36 +576,17 @@ def test_assign_tier_from_actual_centroid_count_and_approx_flag(spark):
         }
     exact = {
         r.vec_id: (r.cell, r.keep)
-        for r in semantic_dedup(
+        for r in _semantic_dedup_expr(
             emb, threshold=0.99, centroids=cents
         ).collect()
     }
     assert got == exact
 
-    # (b)+(c): without centroids, num_cells >= HIER_MIN_CELLS auto-warns;
-    # approx_assign=False silences it and stays exact
+    # (b) without centroids, num_cells >= HIER_MIN_CELLS warns
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        semantic_dedup_numpy(emb, num_cells=HIER_MIN_CELLS).collect()
+        semantic_dedup(emb, num_cells=HIER_MIN_CELLS).collect()
         assert any("APPROXIMATE" in str(x.message) for x in w)
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        flat = {
-            r.vec_id: (r.cell, r.keep)
-            for r in semantic_dedup_numpy(
-                emb,
-                num_cells=HIER_MIN_CELLS,
-                threshold=0.99,
-                approx_assign=False,
-            ).collect()
-        }
-    ref = {
-        r.vec_id: (r.cell, r.keep)
-        for r in semantic_dedup(
-            emb, num_cells=HIER_MIN_CELLS, threshold=0.99
-        ).collect()
-    }
-    assert flat == ref
 
 
 def test_split_oversized_cells_bounds_hot_cell(spark):
@@ -543,11 +598,7 @@ def test_split_oversized_cells_bounds_hot_cell(spark):
     and a no-hot-cell input is the identity."""
     import math
 
-    from pydatalake_spark.functions.vector import to_double_array
-    from pydatalake_spark.operators.semdedup import (
-        semantic_dedup_numpy,
-        split_oversized_cells,
-    )
+    from pydatalake_spark.operators.semdedup import split_oversized_cells
 
     # 90 vectors in 3 tight blobs near theta=0 (one coarse cell), plus a
     # far-away blob of 5 near pi/2 (a cold cell)
@@ -565,8 +616,6 @@ def test_split_oversized_cells_bounds_hot_cell(spark):
         F.col("vec_id").alias("cent_id"),
         to_double_array("embedding").alias("cvec"),
     )
-
-    from pydatalake_spark.operators.semdedup import assign_cells_numpy
 
     wv = assign_cells_numpy(emb, cents, with_vec=True)
     # all 95 hot-blob vectors land in cell 0; 5 in cell 94
@@ -629,7 +678,7 @@ def test_split_oversized_cells_bounds_hot_cell(spark):
     # vectors share every assignment decision)
     sd = {
         r.vec_id: r.keep
-        for r in semantic_dedup_numpy(
+        for r in semantic_dedup(
             emb, threshold=0.999, centroids=cents, max_cell_size=40
         ).collect()
     }
@@ -647,8 +696,6 @@ def test_blocked_verify_crosses_block_boundary(spark):
     both exercised."""
     import numpy as np
 
-    from pydatalake_spark.operators.semdedup import semantic_dedup_numpy
-
     rng = np.random.default_rng(42)
     n, d = 2200, 8
     V = rng.standard_normal((n, d))
@@ -664,9 +711,7 @@ def test_blocked_verify_crosses_block_boundary(spark):
     thr = 0.95
     got = {
         r["vec_id"]: r["keep"]
-        for r in semantic_dedup_numpy(
-            emb, num_cells=1, threshold=thr
-        ).collect()
+        for r in semantic_dedup(emb, num_cells=1, threshold=thr).collect()
     }
     # monolithic reference: same elementwise quantity, one n x n pass
     norms = np.sqrt((V * V).sum(axis=1))
