@@ -135,35 +135,100 @@ def test_prefix_pairs_token_boundary(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_kmeans_step_matches_numpy(spark):
-    """kmeans_step equals a local pure-numpy Lloyd step from the 4
-    lowest-id centroids: at dim 8, at dim 16 over an id space starting
-    at 1000, and at dim 1024 (no dim-wide codegen aggregate anywhere)."""
-    for seed, n, dim, base, tol in (
-        (7, 60, 8, 0, 1e-9),
-        (3, 80, 16, 1000, 1e-9),
-        (5, 40, 1024, 0, 1e-7),
-    ):
-        rng = np.random.default_rng(seed)
-        vecs = rng.normal(size=(n, dim)).astype(np.float32)
-        emb = spark.createDataFrame(
-            [(base + i, [float(x) for x in vecs[i]]) for i in range(n)],
-            "vec_id long, embedding array<float>",
-        )
-        out = {r.cell: r for r in kmeans_step(emb, num_cells=4).collect()}
+def _kmeans_emb(spark, seed, n, dim, base=0):
+    rng = np.random.default_rng(seed)
+    vecs = rng.normal(size=(n, dim)).astype(np.float32)
+    emb = spark.createDataFrame(
+        [(base + i, [float(x) for x in vecs[i]]) for i in range(n)],
+        "vec_id long, embedding array<float>",
+    )
+    return emb, vecs
 
-        V = vecs.astype(np.float64)
-        C = V[:4]
-        d2 = ((V[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)  # ties -> lowest centroid id, as argmin
-        for c in range(4):
-            members = V[assign == c]
-            if not len(members):
-                assert base + c not in out
-                continue
-            assert out[base + c].n_members == len(members)
-            drift = float(np.sqrt(((members.mean(axis=0) - C[c]) ** 2).sum()))
-            assert abs(out[base + c].drift - drift) < tol, (dim, c)
+
+def _assert_lloyd_step(out, vecs, base=0, tol=1e-9):
+    """``out`` (cell -> row) equals a local pure-numpy Lloyd step from
+    the 4 lowest-id vectors as centroids; empty cells have no row."""
+    V = vecs.astype(np.float64)
+    C = V[:4]
+    d2 = ((V[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+    assign = d2.argmin(axis=1)  # ties -> lowest centroid id, as argmin
+    for c in range(4):
+        members = V[assign == c]
+        if not len(members):
+            assert base + c not in out
+            continue
+        assert out[base + c].n_members == len(members)
+        drift = float(np.sqrt(((members.mean(axis=0) - C[c]) ** 2).sum()))
+        assert abs(out[base + c].drift - drift) < tol, c
+
+
+def _kmeans_step_expr(emb, num_cells):
+    """Column-expression reference for ``kmeans_step``: nearest centroid
+    by a squared-difference fold (ties to the lowest centroid id via
+    min(struct)), per-cell mean as one ``avg(dv[i])`` column per
+    dimension, drift as the L2 distance to the old centroid."""
+    from pyspark.sql import functions as F
+
+    from pydatalake_spark.functions.vector import to_double_array
+    from pydatalake_spark.operators.semdedup import _default_centroids
+
+    def sq_dist(a, b):
+        return F.aggregate(
+            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+
+    cents = _default_centroids(emb, "vec_id", "embedding", num_cells, None)
+    wv = emb.select("vec_id", to_double_array("embedding").alias("dv"))
+    cells = (
+        wv.crossJoin(F.broadcast(cents))
+        .withColumn("d2", sq_dist(F.col("dv"), F.col("cvec")))
+        .groupBy("vec_id")
+        .agg(F.min(F.struct("d2", "cent_id")).alias("m"))
+        .select("vec_id", F.col("m.cent_id").alias("cell"))
+    )
+    dim = len(emb.first()["embedding"])
+    means = (
+        cells.join(wv, "vec_id")
+        .groupBy("cell")
+        .agg(
+            F.count(F.lit(1)).alias("n_members"),
+            F.array(*[F.avg(F.col("dv")[i]) for i in range(dim)]).alias("mvec"),
+        )
+    )
+    old = cents.select(F.col("cent_id").alias("cell"), "cvec")
+    return means.join(old, "cell").select(
+        "cell",
+        "n_members",
+        F.sqrt(sq_dist(F.col("mvec"), F.col("cvec"))).alias("drift"),
+    )
+
+
+def test_kmeans_step_matches_numpy(spark):
+    emb, vecs = _kmeans_emb(spark, seed=7, n=60, dim=8)
+    out = {r.cell: r for r in kmeans_step(emb, num_cells=4).collect()}
+    _assert_lloyd_step(out, vecs)
+
+
+def test_kmeans_step_numpy_matches_expression(spark):
+    """The Arrow/numpy kmeans_step agrees with the column-expression
+    reference over an id space starting at 1000."""
+    emb, _ = _kmeans_emb(spark, seed=3, n=80, dim=16, base=1000)
+    expr = {r.cell: r for r in _kmeans_step_expr(emb, 4).collect()}
+    fast = {r.cell: r for r in kmeans_step(emb, num_cells=4).collect()}
+    assert set(expr) == set(fast)
+    for c in expr:
+        assert expr[c].n_members == fast[c].n_members
+        assert abs(expr[c].drift - fast[c].drift) < 1e-9
+
+
+def test_kmeans_step_high_dim_tier(spark):
+    """dim 1024: the step still matches a local pure-numpy Lloyd step
+    (no dim-wide codegen aggregate on its path)."""
+    emb, vecs = _kmeans_emb(spark, seed=5, n=40, dim=1024)
+    out = {r.cell: r for r in kmeans_step(emb, num_cells=4).collect()}
+    _assert_lloyd_step(out, vecs, tol=1e-7)
 
 
 def test_kmeans_iterating_reduces_drift(spark):
