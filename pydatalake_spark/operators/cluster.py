@@ -273,15 +273,7 @@ def pagerank(
     connected_components above. Every node in the pair graph has degree
     >= 1, so there is no dangling-mass term.
     """
-    bidir, _bidir_ids = _ckpt(
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .unionByName(
-            edges.select(
-                F.col(dst_col).alias("src"), F.col(src_col).alias("dst")
-            )
-        )
-        .distinct()
-    )
+    bidir, _bidir_ids = _ckpt(_symmetric_edges(edges, src_col, dst_col))
     deg = bidir.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     nodes = deg.select(F.col("src").alias("node"), "deg")
     n_nodes = nodes.count()
@@ -401,7 +393,7 @@ def label_propagation(
     localCheckpoint like the CC loop. num_iters is a fixed small constant
     (LPA converges in a few rounds on near-dup graphs).
     """
-    edges, _edge_ids = _ckpt(_symmetric_edges(pairs, src_col, dst_col))
+    edges, edge_ids = _ckpt(_symmetric_edges(pairs, src_col, dst_col))
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
@@ -437,4 +429,8 @@ def label_propagation(
         labels, new_ids = _ckpt(best)
         _reap(labels, label_ids)
         label_ids = new_ids
+    if num_iters >= 1:
+        # the last round's labels are an eager checkpoint: nothing reads
+        # the edges any more
+        _reap(labels, edge_ids)
     return labels

@@ -16,9 +16,9 @@ expressions:
    pipeline stays string-typed and portable to any SQL oracle;
 3. signatures grouped into ``num_bands`` bands, each band hashed to one
    bucket key;
-4. candidate pairs = documents sharing any band bucket — found with a
-   self-equi-join on (band_index, bucket), i.e. ONE shuffle keyed by
-   bucket; Jaccard-similar docs collide with probability
+4. candidate pairs = documents sharing any band bucket — the
+   `operators/banding.py` self-equi-join on (band, key), i.e. ONE
+   shuffle keyed by bucket; Jaccard-similar docs collide with probability
    ``1 - (1 - j^r)^b``;
 5. optional exact n-gram Jaccard verification of the candidates.
 
@@ -32,12 +32,11 @@ buckets move (payload re-joined afterwards), which is how this is written.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pydatalake_spark.functions.text import distinct_shingles
+from pydatalake_spark.operators.banding import band_pairs, band_rows, cap_bucket_size
 from pydatalake_spark.operators.scaling import fan_out
 from pydatalake_spark.session import cache_once
 
@@ -98,105 +97,26 @@ def minhash_signatures(
     return df.select(id_col, text_col).mapInPandas(run, schema)
 
 
-def band_buckets(
-    sig: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    num_bands: int = 2,
-) -> DataFrame:
-    """(id, band, bucket) — exploded band keys, the LSH index."""
-    rows_per_band = num_hashes // num_bands
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat(
-                        *[F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
-                    )
-                ).alias("bucket"),
-            )
-            for b in range(num_bands)
-        ]
-    )
-    return sig.select(F.col(id_col), F.explode(bands).alias("bb")).select(
-        id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-
-
-def cap_bucket_size(
-    bb: DataFrame, max_bucket_size: int, key_cols: Sequence[str] = ("band", "bucket")
-) -> DataFrame:
-    """Drop LSH buckets holding more than ``max_bucket_size`` members.
-
-    The degenerate-corpus guard (SCALE.md known-limits): a bucket shared by
-    k documents contributes k² candidate pairs, so one boilerplate bucket
-    with 10⁵ members adds 10¹⁰ pairs. Capping trades recall on EXTREMELY
-    common content for bounded join output — the standard production
-    choice (near-identical boilerplate that overflows a bucket is better
-    handled by exact-hash dedup first). One extra count-aggregation on the
-    (band, bucket) keys; the anti-join against the hot-key list is a
-    broadcast (the list is small by construction).
-    """
-    keys = list(key_cols)
-    hot = (
-        bb.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > max_bucket_size)
-        .select(*keys)
-    )
-    return bb.join(F.broadcast(hot), on=keys, how="left_anti")
-
-
 def _cached_band_table(
     sig: DataFrame, id_col: str, num_hashes: int, num_bands: int
 ) -> DataFrame:
-    """The (id, band, bucket) LSH index, cached. All minhash-family
-    operators build this table with the identical plan, so `cache_once`
-    resolves them to ONE CacheManager entry per corpus — the band
-    derivation runs once and both self-join sides read the blocks in
-    every join regime.
+    """The ``(id, band, key)`` LSH index, cached: band ``b``'s key is the
+    md5 of its ``num_hashes // num_bands`` signature components. All
+    minhash-family operators build this table with the identical plan, so
+    `cache_once` resolves them to ONE cache entry per corpus, and both
+    self-join sides read its blocks in every join regime
+    (`operators/banding.py`).
 
     Deliberately NOT cached pre-partitioned on the join key: that shape
-    makes the shuffle-regime self-join exchange-free, but
-    AQE cannot skew-split a cached scan — and hot LSH buckets are this
-    operator's documented skew hazard — while at bench SF it stores the
-    exploded table 32-way-partitioned for no broadcast-regime benefit
-    (simhash/phash A/B showed a consistent +0.13s warm regression). Two
-    AQE-skew-splittable narrow band shuffles beat one skew-frozen one."""
-    return cache_once(band_buckets(sig, id_col, num_hashes, num_bands))
-
-
-def _band_self_join(bb: DataFrame, id_col: str) -> DataFrame:
-    """Distinct (id_a < id_b) pairs sharing a (band, bucket) cell.
-
-    Both self-join sides keep the SAME projection until after the
-    exchange, so the children canonicalize equal. That lets
-    ReuseExchange/the AQE stage cache
-    materialize ONE band shuffle only in the SHUFFLE-join regime over an
-    UNCACHED upstream — over a cached relation each side gets its own
-    `TableCacheQueryStage` (Spark 4 AQE) and the exchanges above two
-    distinct cache stages never unify, and in the broadcast regime there
-    is no exchange to reuse at all. Callers therefore `cache_once` the
-    narrow band table itself: the InMemoryRelation's blocks are
-    computed ONCE and shared by both sides in EVERY regime — what is
-    duplicated is at most a cache scan + the narrow (id, band, bucket)
-    shuffle, never the upstream fingerprint/signature compute.
-    """
-    x, y = bb.alias("__ba"), bb.alias("__bb")
-    return (
-        x.join(
-            y,
-            (F.col("__ba.band") == F.col("__bb.band"))
-            & (F.col("__ba.bucket") == F.col("__bb.bucket")),
-        )
-        .filter(F.col(f"__ba.{id_col}") < F.col(f"__bb.{id_col}"))
-        .select(
-            F.col(f"__ba.{id_col}").alias("id_a"),
-            F.col(f"__bb.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
+    makes the shuffle-regime self-join exchange-free, but AQE cannot
+    skew-split a cached scan, and hot LSH buckets are this operator's
+    documented skew hazard."""
+    r = num_hashes // num_bands
+    keys = [
+        "md5(concat(" + ", ".join(f"mh_{b * r + i}" for i in range(r)) + "))"
+        for b in range(num_bands)
+    ]
+    return cache_once(band_rows(sig, (id_col,), keys))
 
 
 def lsh_candidate_pairs(
@@ -215,10 +135,8 @@ def lsh_candidate_pairs(
 
     The signature AND band tables are cached — the signature table
     is shared with `near_dup_pairs`/`minhash_jaccard_estimate` (same
-    plan → same CacheManager entry via `cache_once`), and the cached
-    band table guarantees the signature pass runs ONCE regardless of
-    join strategy (see `_band_self_join`; uncached, the broadcast regime
-    re-computes the full signature chain on both join sides).
+    plan → same cache entry via `cache_once`), and the cached band
+    table runs the signature pass ONCE in every join regime.
     """
     sig = cache_once(
         minhash_signatures(df, id_col, text_col, num_hashes, shingle_size)
@@ -226,7 +144,7 @@ def lsh_candidate_pairs(
     bb = _cached_band_table(sig, id_col, num_hashes, num_bands)
     if max_bucket_size is not None:
         bb = cap_bucket_size(bb, max_bucket_size)
-    return _band_self_join(bb, id_col)
+    return band_pairs(bb, id_col, ("band", "key")).select("id_a", "id_b").distinct()
 
 
 def near_dup_pairs(
@@ -262,10 +180,8 @@ def near_dup_pairs(
             minhash_signatures(df, id_col, text_col, num_hashes, shingle_size)
         )
     sets = sig.select(F.col(id_col), F.col("shingles").alias("sset"))
-    # cached band table (see _cached_band_table): both self-join sides
-    # read ONE materialized copy; narrow (id, band, bucket) rows only
     bb = _cached_band_table(sig, id_col, num_hashes, num_bands)
-    cand = _band_self_join(bb, id_col)
+    cand = band_pairs(bb, id_col, ("band", "key")).select("id_a", "id_b").distinct()
     # the sets side is CORPUS-SIZED (every doc's shingle array): hint it
     # to a sort-merge join so Catalyst can never choose to broadcast it.
     # Static size estimates for aggregated array columns undershoot badly
@@ -345,18 +261,14 @@ def minhash_jaccard_estimate(
 
     Scale: the pair set is LSH-bounded (never all-pairs); both the
     signature arrays and the shingle sets are re-joined BY ID after the
-    candidate join, so the band exchange stays (id, band, bucket)-narrow.
+    candidate join, so the band exchange stays (id, band, key)-narrow.
     Cache lifetime: LRU-evictable (see near_dup_pairs note).
     """
-    sig = minhash_signatures(
-        df, id_col, text_col, num_hashes, shingle_size
+    sig = cache_once(
+        minhash_signatures(df, id_col, text_col, num_hashes, shingle_size)
     )
-    sig = cache_once(sig)
-    # cached band table (see _cached_band_table), plan-equal with
-    # near_dup_pairs'/lsh_candidate_pairs' band table, so the family
-    # shares ONE cache entry per corpus
     bb = _cached_band_table(sig, id_col, num_hashes, num_bands)
-    cand = _band_self_join(bb, id_col)
+    cand = band_pairs(bb, id_col, ("band", "key")).select("id_a", "id_b").distinct()
     mharr = F.array(*[F.col(f"mh_{j}") for j in range(num_hashes)])
     side = sig.select(
         F.col(id_col), mharr.alias("mhs"), F.col("shingles").alias("sset")

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pydatalake_spark.operators.banding import band_pairs, band_rows
 from pydatalake_spark.session import cache_once
 
 _DECODE_TIERS = ("fake", "error", "real")
@@ -526,40 +527,19 @@ def perceptual_hashes(
     )
 
 
-def _banded_hashes(df: DataFrame, decode_stub: str = "fake") -> DataFrame:
-    """The (media_id, phash, band, key) LSH index over a CACHED
-    (media_id, phash) fingerprint table — 16 bytes/row of metadata, the
-    guide §8 lightweight proxy (the image payload never rides any of
-    this).
-
-    Plan identity deduplicates the MapInPandas decode+hash pass only in
-    the SHUFFLE-join regime (ReuseExchange); in the broadcast regime the
-    streamed side has no exchange to reuse and the corpus would be
-    decoded TWICE per query. Caching the fingerprint table makes the
-    decode run once in every regime (eviction degrades to recompute);
-    the band explode over the cached blocks is shift/mask expressions,
-    cheap per side. (Caching the exploded band table pre-partitioned
-    instead measured +0.15s warm at sf0.1 — 4x the cache bytes — and
-    freezes AQE skew splitting.)"""
-    h = cache_once(perceptual_hashes(df, decode_stub=decode_stub))
-    bands = h.select(
-        "media_id",
-        "phash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned(F.col("phash"), 16 * b)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("key"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select("media_id", "phash", "bk.band", "bk.key")
-    return bands
+def _dhash_bands(hashes: DataFrame, keep: tuple[str, ...]) -> DataFrame:
+    """``(*keep, band, key)``: each 64-bit ``phash`` of ``hashes`` cut
+    into four 16-bit band keys. ``hashes`` is a CACHED fingerprint table
+    (ids and longs, the payload never rides it): the decode and hash pass
+    then runs once per query in every join regime, where an uncached one
+    runs once per join side (operators/banding.py), and the band explode
+    over the cached blocks is shift/mask expressions, cheap per side.
+    (Caching the exploded band table pre-partitioned instead measured
+    +0.15s warm at sf0.1 — 4x the cache bytes — and freezes AQE skew
+    splitting.)"""
+    return band_rows(
+        hashes, keep, [f"shiftrightunsigned(phash, {16 * b}) & 65535" for b in range(4)]
+    )
 
 
 def phash_near_dup(
@@ -578,24 +558,12 @@ def phash_near_dup(
     candidate join is a hash equi-join on (band, key) — ids and two longs
     move, never payloads.
     """
-    bands = _banded_hashes(df, decode_stub=decode_stub)
-    x, y = bands.alias("__pa"), bands.alias("__pb")
-    ham = F.bit_count(
-        F.col("__pa.phash").bitwiseXOR(F.col("__pb.phash"))
-    )
+    h = cache_once(perceptual_hashes(df, decode_stub=decode_stub))
+    bands = _dhash_bands(h, ("media_id", "phash"))
     return (
-        x.join(
-            y,
-            (F.col("__pa.band") == F.col("__pb.band"))
-            & (F.col("__pa.key") == F.col("__pb.key")),
-        )
-        .filter(F.col("__pa.media_id") < F.col("__pb.media_id"))
-        .filter(ham <= max_hamming)
-        .select(
-            F.col("__pa.media_id").alias("id_a"),
-            F.col("__pb.media_id").alias("id_b"),
-            ham.alias("hamming"),
-        )
+        band_pairs(bands, "media_id", ("band", "key"), carry=("phash",))
+        .selectExpr("id_a", "id_b", "bit_count(phash_a ^ phash_b) AS hamming")
+        .where(f"hamming <= {max_hamming}")
         .distinct()
     )
 
@@ -616,59 +584,30 @@ def video_near_dup(
     frame sampler and the image pHash machinery above).
 
     Scale: frames expand rows x num_frames but payloads are dropped right
-    after hashing — the candidate join moves (video_id, frame_idx, long)
-    triples on 16-bit band keys; the final count is one keyed aggregation.
+    after hashing — the frame-hash table is cached, so every frame is
+    sampled and hashed once per query, and the candidate join moves
+    (video_id, frame_idx, long) triples on 16-bit band keys; the final
+    count is one keyed aggregation.
     """
     frames = sample_frames(df, num_frames=num_frames, decode_stub=decode_stub)
-    fh = perceptual_hashes(
-        frames,
-        decode_stub=decode_stub,
-        payload_col="frame",
-        extra_cols=("frame_idx",),
+    fh = cache_once(
+        perceptual_hashes(
+            frames,
+            decode_stub=decode_stub,
+            payload_col="frame",
+            extra_cols=("frame_idx",),
+        )
     )
-    bands = fh.select(
-        "media_id",
-        "frame_idx",
-        "phash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned(F.col("phash"), 16 * b)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("key"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select("media_id", "frame_idx", "phash", "bk.band", "bk.key")
-    a = bands.select(
-        F.col("media_id").alias("id_a"),
-        F.col("frame_idx").alias("fa"),
-        F.col("phash").alias("ha"),
-        "band",
-        "key",
-    )
-    b = bands.select(
-        F.col("media_id").alias("id_b"),
-        F.col("frame_idx").alias("fb"),
-        F.col("phash").alias("hb"),
-        "band",
-        "key",
-    )
-    ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
+    bands = _dhash_bands(fh, ("media_id", "frame_idx", "phash"))
     matched = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(ham <= max_hamming)
-        .select("id_a", "id_b", "fa", "fb")
+        band_pairs(bands, "media_id", ("band", "key"), carry=("frame_idx", "phash"))
+        .where(f"bit_count(phash_a ^ phash_b) <= {max_hamming}")
+        .select("id_a", "id_b", "frame_idx_a", "frame_idx_b")
         .distinct()
     )
     return (
         matched.groupBy("id_a", "id_b")
-        .agg(F.count_distinct("fa").alias("n_matching_frames"))
+        .agg(F.count_distinct("frame_idx_a").alias("n_matching_frames"))
         .filter(F.col("n_matching_frames") >= min_matching_frames)
     )
 

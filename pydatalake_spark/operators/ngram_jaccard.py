@@ -14,9 +14,10 @@ SIGMOD'10): one Arrow shingling pass, then two Catalyst shuffles:
    DF-pruning is the standard production guard (it only loses pairs whose
    ENTIRE overlap is ultra-common boilerplate, which exact-hash dedup
    handles better anyway);
-4. self-equi-join the index on shingle (ONE shuffle keyed by shingle) and
-   count co-occurrences per (id_a, id_b) — the pair's intersection size —
-   with map-side partial aggregation compressing the pair stream;
+4. self-equi-join the index on shingle (`operators/banding.py`, ONE
+   shuffle keyed by shingle) and count co-occurrences per (id_a, id_b) —
+   the pair's intersection size — with map-side partial aggregation
+   compressing the pair stream;
 5. join back per-doc set sizes (narrow, ids+ints only) and keep pairs with
    ``inter / (|A| + |B| - inter) >= threshold``.
 
@@ -54,6 +55,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pydatalake_spark.functions.text import distinct_shingles
+from pydatalake_spark.operators.banding import band_pairs
 from pydatalake_spark.operators.scaling import fan_out
 from pydatalake_spark.session import cache_once, driver_bound
 
@@ -155,29 +157,6 @@ def _pruned_index(
     return inv, inv.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
 
 
-def _inv_self_join_inter(inv: DataFrame, id_col: str) -> DataFrame:
-    """(id_a < id_b, inter): per-pair co-occurrence counts from the
-    inverted index's self-equi-join on shingle.
-
-    Both self-join sides keep identical projections until after the
-    exchange — canonically-equal children let ReuseExchange / the AQE
-    stage cache materialize ONE shuffle of the inverted index instead of
-    two (same rule as the minhash/simhash/phash band joins). The
-    per-side id renames happen above the join.
-    """
-    x, y = inv.alias("__ja"), inv.alias("__jb")
-    return (
-        x.join(y, F.col("__ja.shingle") == F.col("__jb.shingle"))
-        .filter(F.col(f"__ja.{id_col}") < F.col(f"__jb.{id_col}"))
-        .select(
-            F.col(f"__ja.{id_col}").alias("id_a"),
-            F.col(f"__jb.{id_col}").alias("id_b"),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -238,7 +217,11 @@ def ngram_jaccard_pairs(
         return _driver_pairs(docs, id_col, text_col, shingle_size, threshold, cap)
 
     inv, sizes = _pruned_index(docs, id_col, text_col, shingle_size, max_df)
-    inter = _inv_self_join_inter(inv, id_col)
+    inter = (
+        band_pairs(inv, id_col, ("shingle",))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
     return (
         inter.join(
             sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("n_a")), "id_a"
@@ -437,7 +420,11 @@ def ngram_containment_pairs(
     partially aggregated map-side; containment on the PRUNED space).
     """
     inv, sizes = _pruned_index(df, id_col, text_col, shingle_size, max_df)
-    inter = _inv_self_join_inter(inv, id_col)
+    inter = (
+        band_pairs(inv, id_col, ("shingle",))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
     scored = (
         inter.join(
             sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("n_a")),

@@ -18,45 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def salted_agg(
-    df: DataFrame,
-    keys: list[str],
-    aggs: dict[str, str],
-    salt: int = 16,
-) -> DataFrame:
-    """Two-phase aggregation for skewed keys: pre-aggregate on
-    (keys, random salt), then merge partials on the keys alone.
-
-    For algebraic aggregates only — ``sum``/``count``/``min``/``max``
-    (count merges by summing partial counts). Spark's partial aggregation
-    already map-side-combines, but a single hot key still lands its entire
-    merge on one reducer; the salt spreads THAT across ``salt`` reducers
-    first. Use when one key holds a double-digit percentage of rows and
-    AQE alone can't help (skew-join splitting applies to joins, not aggs).
-
-    ``aggs`` maps output column name → "fn(col)" e.g.
-    ``{"n": "count(*)", "total": "sum(value)"}``.
-    """
-    from pyspark.sql import functions as F
-
-    merge_fn = {"count": "sum", "sum": "sum", "min": "min", "max": "max"}
-    phase1, phase2 = [], []
-    for out, spec in aggs.items():
-        fn, _, arg = spec.partition("(")
-        fn = fn.strip().lower()
-        arg = arg.rstrip(")").strip()
-        if fn not in merge_fn:
-            raise ValueError(
-                f"salted_agg supports {sorted(merge_fn)} aggregates, got {fn!r}"
-            )
-        col = F.count(F.lit(1)) if fn == "count" and arg in ("*", "") else getattr(F, fn)(arg)
-        phase1.append(col.alias(out))
-        phase2.append(getattr(F, merge_fn[fn])(out).alias(out))
-    salted = df.withColumn("__salt", (F.rand(seed=7) * salt).cast("int"))
-    partial = salted.groupBy(*keys, "__salt").agg(*phase1)
-    return partial.groupBy(*keys).agg(*phase2)
-
-
 def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:
     """Round-robin repartition up to cluster parallelism — only if the
     plan's scan width is below it; never shrinks, never shuffles an

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pydatalake_spark.functions.text import tokenize
+from pydatalake_spark.operators.banding import band_pairs, band_rows
 from pydatalake_spark.operators.scaling import fan_out
 from pydatalake_spark.session import cache_once
 
@@ -103,7 +104,7 @@ def simhash_near_dup(
 
     Pigeonhole: two fingerprints within ``max_hamming < num_bands`` bits
     must agree on at least one of ``num_bands`` equal-width bands, so the
-    candidate set is an equi-join on (band_index, band_value) — ONE shuffle
+    candidate set is the `operators/banding.py` equi-join on (band, key) — ONE shuffle
     keyed by band value, never an all-pairs compare (the OR-of-bands form
     would plan as a nested-loop join). At 64 bits / 4 bands the band
     domain is 2^16 per band, which keeps candidate density ~n²·4/65536
@@ -158,27 +159,20 @@ def simhash_near_dup(
             src, off = "sh_lo", bits - start_bit - width
         return f"shiftrightunsigned({src}, {off}) % {2**width}"
 
-    bands = ", ".join(
-        f"named_struct('band', {b}, 'val', {band_val(b)})" for b in range(num_bands)
-    )
-    # the narrow (id, sh_hi, sh_lo, band, val) table is cached, so the
-    # fingerprint pass runs once and both self-join sides read its blocks
-    # in every join regime (over a cached relation each side gets its own
-    # TableCacheQueryStage, so the two exchanges never unify). It is not
-    # cached pre-partitioned: AQE cannot skew-split a cached scan, and hot
-    # band values are the skew hazard.
+    # cached, so the fingerprint pass runs once and both self-join sides
+    # read its blocks in every join regime (operators/banding.py); not
+    # pre-partitioned, since AQE cannot skew-split a cached scan and hot
+    # band values are the skew hazard
     bb = cache_once(
-        sh.selectExpr(f"`{id_col}`", "sh_hi", "sh_lo", f"inline(array({bands}))")
+        band_rows(sh, (id_col, "sh_hi", "sh_lo"), [band_val(b) for b in range(num_bands)])
     )
-    x, y = bb.alias("__sa"), bb.alias("__sb")
     return (
-        x.join(y, F.expr("__sa.band = __sb.band AND __sa.val = __sb.val"))
-        .where(f"__sa.`{id_col}` < __sb.`{id_col}`")
+        band_pairs(bb, id_col, ("band", "key"), carry=("sh_hi", "sh_lo"))
         .selectExpr(
-            f"__sa.`{id_col}` AS id_a",
-            f"__sb.`{id_col}` AS id_b",
-            "CAST(bit_count(__sa.sh_hi ^ __sb.sh_hi)"
-            " + bit_count(__sa.sh_lo ^ __sb.sh_lo) AS BIGINT) AS hamming",
+            "id_a",
+            "id_b",
+            "CAST(bit_count(sh_hi_a ^ sh_hi_b)"
+            " + bit_count(sh_lo_a ^ sh_lo_b) AS BIGINT) AS hamming",
         )
         .where(f"hamming <= {max_hamming}")
         .distinct()

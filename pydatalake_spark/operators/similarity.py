@@ -37,12 +37,12 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pydatalake_spark.functions.vector import cosine, dot, l2_norm, to_double_array
-from pydatalake_spark.operators.minhash import cap_bucket_size
+from pydatalake_spark.operators.banding import band_pairs, cap_bucket_size
 from pydatalake_spark.operators.scaling import fan_out
 
 
@@ -83,9 +83,9 @@ def cosine_topk(
 
 
 LSH_TARGET_BUCKET_OCCUPANCY = 16
-# auto-engaged hot-bucket cap (r8 VERDICT item 4): on the auto-planes
-# scale path, buckets holding > FACTOR x the target occupancy are dropped
-# before the candidate self-join — mean occupancy is held constant by
+# auto-engaged hot-bucket cap: on the auto-planes scale path, buckets
+# holding > FACTOR x the target occupancy are dropped before the
+# candidate self-join — mean occupancy is held constant by
 # suggest_num_planes, but concentrated semantic regions can still pile
 # one bucket high enough that its k² pairs dominate the candidate stream
 LSH_AUTO_MAX_BUCKET_FACTOR = 64
@@ -187,6 +187,19 @@ def train_ivf_centroids(
     return [c.tolist() for c in model.clusterCenters()]
 
 
+def bucket_probes(num_planes: int) -> Column:
+    """``array(bucket, flip_1, ..., flip_n)``: a ``bucket`` bit string
+    followed by its ``num_planes`` one-bit flips, the Hamming ≤ 1 probe
+    set of multiprobe LSH."""
+    flips = [
+        f"concat(substring(bucket, 1, {i}),"
+        f" CASE WHEN substring(bucket, {i + 1}, 1) = '1' THEN '0' ELSE '1' END,"
+        f" substring(bucket, {i + 2}, {num_planes - i - 1}))"
+        for i in range(num_planes)
+    ]
+    return F.expr(f"array(bucket, {', '.join(flips)})")
+
+
 def lsh_multiprobe_candidates(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -215,21 +228,9 @@ def lsh_multiprobe_candidates(
     b = hyperplane_buckets(df, id_col, vec_col, num_planes, dim)
     if max_bucket_size is not None:
         b = cap_bucket_size(b, max_bucket_size, key_cols=("bucket",))
-    probes = [F.col("bucket")]
-    for i in range(num_planes):
-        flipped = (
-            F.when(F.substring("bucket", i + 1, 1) == "1", F.lit("0"))
-            .otherwise(F.lit("1"))
-        )
-        probes.append(
-            F.concat(
-                F.substring("bucket", 1, i),
-                flipped,
-                F.substring("bucket", i + 2, num_planes - i - 1),
-            )
-        )
     a = b.select(
-        F.col(id_col).alias("id_a"), F.explode(F.array(*probes)).alias("bucket")
+        F.col(id_col).alias("id_a"),
+        F.explode(bucket_probes(num_planes)).alias("bucket"),
     )
     c = b.select(F.col(id_col).alias("id_b"), "bucket")
     return (
@@ -348,7 +349,6 @@ def embedding_near_dup(
     threshold: float = 0.3,
     num_planes: int | None = 8,
     dim: int = 64,
-    multiprobe: bool = False,
     max_bucket_size: int | str | None = "auto",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: hyperplane-LSH candidates
@@ -359,18 +359,13 @@ def embedding_near_dup(
     those pay the exact O(dim) cosine. Vectors are re-joined by id after
     candidate generation so the band join moves only (id, bucket).
 
-    ``multiprobe=True`` routes candidates through Hamming-1 probing
-    (`lsh_multiprobe_candidates`): higher recall near the threshold at a
-    constant (num_planes+1)× candidate fan-out — the exact-cosine verify
-    keeps precision unchanged either way.
-
     ``num_planes=None`` auto-sizes the plane count from the corpus
     (``suggest_num_planes`` — one count job) so EXPECTED bucket occupancy,
     and with it the candidate-pair volume, stays linear at ANY corpus
     size; a pinned plane count is only for oracle-matched fixtures.
 
-    ``max_bucket_size`` (r8 VERDICT item 4) is the minhash-style
-    hot-bucket cap for the hyperplane path: auto-sized planes hold the
+    ``max_bucket_size`` is the minhash-style hot-bucket cap for the
+    hyperplane path: auto-sized planes hold the
     MEAN occupancy constant, but embeddings concentrate (boilerplate
     semantic regions), and one bucket with 10⁵ members still contributes
     10¹⁰ candidate pairs. ``"auto"`` engages
@@ -379,7 +374,7 @@ def embedding_near_dup(
     oracle-checked fixture path is byte-identical); an int pins the cap;
     ``None`` disables it. Members of a dropped bucket lose candidacy
     through that bucket only — the documented recall trade
-    (`operators/minhash.py:cap_bucket_size`); content hot enough to
+    (`operators/banding.py:cap_bucket_size`); content hot enough to
     overflow 64× the target occupancy is exact-dedup's job anyway.
     """
     if max_bucket_size == "auto":
@@ -390,8 +385,7 @@ def embedding_near_dup(
         )
     if num_planes is None:
         num_planes = suggest_num_planes(df.count())
-    gen = lsh_multiprobe_candidates if multiprobe else lsh_bucket_candidates
-    cand = gen(
+    cand = lsh_bucket_candidates(
         df, id_col, vec_col, num_planes, dim, max_bucket_size=max_bucket_size
     ).select("id_a", "id_b")
     vecs = df.select(F.col(id_col), to_double_array(vec_col).alias("__v"))
@@ -420,13 +414,7 @@ def lsh_bucket_candidates(
     b = hyperplane_buckets(df, id_col, vec_col, num_planes, dim)
     if max_bucket_size is not None:
         b = cap_bucket_size(b, max_bucket_size, key_cols=("bucket",))
-    a = b.select(F.col(id_col).alias("id_a"), "bucket")
-    c = b.select(F.col(id_col).alias("id_b"), "bucket")
-    return (
-        a.join(c, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "bucket")
-    )
+    return band_pairs(b, id_col, ("bucket",))
 
 
 def quantize_embeddings(

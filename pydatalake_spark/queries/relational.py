@@ -2412,9 +2412,8 @@ def k_anonymity_screen(spark: SparkSession, sf: str) -> DataFrame:
 def key_skew_profile(spark: SparkSession, sf: str) -> DataFrame:
     """Shuffle-key skew diagnostic: per-key cardinality summary plus the
     top-5 hottest keys — the operational pre-check before keying a 100 TB
-    join/agg on a column (hot keys -> salting / AQE skew split;
-    operators/scaling.py:salted_agg). One partial-agg groupBy; the
-    summary and top-k both ride the tiny per-key table.
+    join/agg on a column (hot keys -> AQE skew split). One partial-agg
+    groupBy; the summary and top-k both ride the tiny per-key table.
 
     The top-5 is ``orderBy().limit(5)`` — TakeOrderedAndProject, a
     per-partition heap + driver merge — NOT a global row_number window,

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from pydatalake_spark.functions.vector import l2_norm, to_double_array
 from pydatalake_spark.operators.similarity import (
+    bucket_probes,
     hard_triplets,
     cosine_topk,
     embedding_near_dup,
@@ -401,21 +402,9 @@ def ann_recall_eval(spark: SparkSession, sf: str) -> DataFrame:
     exact = cosine_topk(e, qs, k=10).select("q_id", "c_id")
 
     b = hyperplane_buckets(e, num_planes=_PLANES, dim=_DIM)
-    probes = [F.col("bucket")]
-    for i in range(_PLANES):
-        flipped = (
-            F.when(F.substring("bucket", i + 1, 1) == "1", F.lit("0"))
-            .otherwise(F.lit("1"))
-        )
-        probes.append(
-            F.concat(
-                F.substring("bucket", 1, i),
-                flipped,
-                F.substring("bucket", i + 2, _PLANES - i - 1),
-            )
-        )
     qprobes = b.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.explode(F.array(*probes)).alias("bucket")
+        F.col("vec_id").alias("q_id"),
+        F.explode(bucket_probes(_PLANES)).alias("bucket"),
     )
     cand = (
         qprobes.join(b.select(F.col("vec_id").alias("c_id"), "bucket"), "bucket")

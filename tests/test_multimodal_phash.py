@@ -80,6 +80,54 @@ def test_video_near_dup_by_frame_overlap(spark):
     assert not any(4 in p for p in out)
 
 
+def test_video_near_dup_hashes_each_frame_once(spark, monkeypatch, tmp_path):
+    """Each query samples every video and hashes every frame ONCE, in the
+    broadcast and in the shuffle join regime: both sides of the band
+    self-join read one cached frame-hash table. Every Arrow pass is
+    tapped to log the rows it reads; each regime gets videos of its own,
+    so no cache from the other regime serves it."""
+    from pydatalake_spark.operators.multimodal import video_near_dup
+    from tests.conftest import cc_loop
+
+    log = tmp_path / "passes.log"
+    frame_type = type(spark.range(1))
+    real = frame_type.mapInPandas
+
+    def tapped(self, func, schema, *args, **kwargs):
+        path, tag = str(log), func.__qualname__.split(".")[0]
+
+        def run(batches):
+            def tap():
+                for pdf in batches:
+                    with open(path, "a") as f:
+                        f.write(f"{tag} {len(pdf)}\n")
+                    yield pdf
+
+            return func(tap())
+
+        return real(self, run, schema, *args, **kwargs)
+
+    monkeypatch.setattr(frame_type, "mapInPandas", tapped)
+    text = " ".join(f"tok{i}" for i in range(400))
+    other = " ".join(f"other{i}" for i in range(400))
+    for base, shuffle in ((100, False), (200, True)):
+        df = spark.createDataFrame(
+            [(base + i, text if i < 3 else other) for i in range(4)],
+            "doc_id long, text string",
+        )
+        log.write_text("")
+        with cc_loop(spark, shuffle):
+            out = video_near_dup(attach_payload(df, "doc_id", "text")).collect()
+        assert {(r.id_a, r.id_b) for r in out} == {
+            (base, base + 1), (base, base + 2), (base + 1, base + 2)
+        }
+        rows: dict = {}
+        for tag, n in (ln.split() for ln in log.read_text().splitlines()):
+            rows[tag] = rows.get(tag, 0) + int(n)
+        assert rows.get("sample_frames") == 4, (shuffle, rows)
+        assert rows.get("perceptual_hashes") == 16, (shuffle, rows)
+
+
 def test_audio_chunk_energy_flags_silence(spark):
     from pydatalake_spark.operators.multimodal import audio_chunk_energy
 

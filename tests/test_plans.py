@@ -177,15 +177,30 @@ def test_near_dup_joins_are_equi_joins(spark):
     """LSH/banded candidate generation must plan as hash equi-joins on the
     bucket key — a CartesianProduct or BroadcastNestedLoopJoin here would
     be the O(n^2) all-pairs scan the whole design exists to avoid."""
+    from pydatalake_spark.operators.minhash import (
+        lsh_candidate_pairs,
+        near_dup_pairs,
+    )
+    from pydatalake_spark.operators.multimodal import (
+        attach_payload,
+        phash_near_dup,
+        video_near_dup,
+    )
+    from pydatalake_spark.operators.ngram_jaccard import (
+        ngram_containment_pairs,
+        ngram_jaccard_pairs,
+    )
     from pydatalake_spark.operators.simhash import simhash_near_dup
-    from pydatalake_spark.operators.similarity import embedding_near_dup
-    from pydatalake_spark.operators.minhash import near_dup_pairs
+    from pydatalake_spark.operators.similarity import (
+        embedding_near_dup,
+        lsh_bucket_candidates,
+    )
     from pydatalake_spark.queries.tables import load_table
+    from tests.conftest import cc_loop
 
     docs = load_table(spark, SF, "documents")
     emb = load_table(spark, SF, "embeddings")
-    from pydatalake_spark.operators.ngram_jaccard import ngram_jaccard_pairs
-    from tests.conftest import cc_loop
+    media = attach_payload(docs, "doc_id", "text")
 
     # with the driver tiers off the exact pair front builds its Spark
     # plan; under the bound it would return a LocalRelation
@@ -195,8 +210,13 @@ def test_near_dup_joins_are_equi_joins(spark):
     for df in (
         simhash_near_dup(docs),
         embedding_near_dup(emb),
+        lsh_bucket_candidates(emb),
         near_dup_pairs(docs),
+        lsh_candidate_pairs(docs),
+        phash_near_dup(media),
+        video_near_dup(media),
         ngram,
+        ngram_containment_pairs(docs),
     ):
         p = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in p

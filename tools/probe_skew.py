@@ -17,8 +17,7 @@ shapes that skew actually breaks:
    handler OFF — the hot-reducer serialization AQE exists to prevent.
 2. **Hot-key aggregation**: plain ``groupBy`` (map-side partial aggregation
    is the built-in defense — partials combine before the exchange, so the
-   hot reducer receives one row per map task, not the raw rows) vs
-   ``operators/scaling.py:salted_agg`` (the explicit two-phase spread).
+   hot reducer receives one row per map task, not the raw rows).
 3. **Keyed window dedup** (``row_number() OVER (PARTITION BY key)``): the
    shape AQE can NOT split (windows need the whole partition on one task)
    — measured so the scale posture of keep-first/keep-last dedup is
@@ -112,17 +111,6 @@ def _agg_plain(spark, d: str):
     )
 
 
-def _agg_salted(spark, d: str):
-    from pydatalake_spark.operators.scaling import salted_agg
-
-    li = spark.read.parquet(os.path.join(d, "lineitem.parquet"))
-    return salted_agg(
-        li,
-        ["l_suppkey"],
-        {"total": "sum(l_extendedprice)", "n": "count(*)"},
-    )
-
-
 def _window_dedup(spark, d: str):
     from pyspark.sql import Window
 
@@ -179,7 +167,6 @@ def main() -> None:
     for shape, fn in [
         ("join", _join),
         ("agg_plain", _agg_plain),
-        ("agg_salted", _agg_salted),
         ("window_dedup", _window_dedup),
         ("window_dedup_auto", _window_dedup_auto),
     ]:
