@@ -110,7 +110,9 @@ def _cached_band_table(
     Deliberately NOT cached pre-partitioned on the join key: that shape
     makes the shuffle-regime self-join exchange-free, but AQE cannot
     skew-split a cached scan, and hot LSH buckets are this operator's
-    documented skew hazard."""
+    documented skew hazard; at bench SF it also stored the exploded table
+    32-way-partitioned for no broadcast-regime gain (the simhash/phash
+    A/B measured +0.13s warm)."""
     r = num_hashes // num_bands
     keys = [
         "md5(concat(" + ", ".join(f"mh_{b * r + i}" for i in range(r)) + "))"

@@ -24,7 +24,9 @@ Decode tiers, selected by ``decode_stub``:
 Partitioning note: media blobs make rows huge; `extract_features` keeps the
 payload out of its OUTPUT (id + features only), so the shuffle-heavy
 downstream (joins, dedup on checksum) moves kilobytes, not media. That —
-not the decode tier — is the part that matters at scale.
+not the decode tier — is the part that matters at scale. The image and
+video near-dup fronts band cached hash tables through
+`operators/banding.py`.
 """
 
 from __future__ import annotations
