@@ -87,6 +87,24 @@ def distinct_shingles(text: str | None, k: int = 3) -> list:
     )
 
 
+def window_hashes(text: str | None, k: int = 3) -> list:
+    """Python form of the distinct values of
+    ``transform(shingles(tokenize(text), k), md5)`` for the driver-side
+    passes: the md5 hex digest of every ``distinct_shingles`` window of
+    the UTF-8 text, distinct in first-occurrence order. A null text
+    gives ``[None]`` (md5 of the null shingle); an empty or
+    whitespace-only text is the one window ``md5("")``."""
+    import hashlib
+
+    md5 = hashlib.md5
+    return list(
+        dict.fromkeys(
+            None if s is None else md5(s.encode("utf-8")).hexdigest()
+            for s in distinct_shingles(text, k)
+        )
+    )
+
+
 def language_scores(tokens: Column) -> dict[str, Column]:
     """Marker-word hit count per language."""
     return {

@@ -17,19 +17,25 @@ bitmap and the membership verdicts bit-for-bit: position j of key g is
 ``(h1 + j*h2) % num_bits`` with ``h1/h2 = conv(substr(md5(g), 1|9, 8),
 16, 10)`` — Kirsch–Mitzenmacher double hashing, see ``_positions``.
 
-Scale shape (round 6): auto-sized bitmaps (``bloom_num_bits``: 24
-bits/key, floored at 4096 bits) with an EXPLICIT three-tier dispatch
+Scale shape: auto-sized bitmaps (``bloom_num_bits``: 24 bits/key,
+floored at 4096 bits) with an EXPLICIT three-tier dispatch
 (``bloom_tier`` / ``membership_screen``):
 
-- vector (≤ 2^27 bits ≈ 5.59M keys): build = per-partition dense numpy
-  OR (``bloom_build_chunks``, merge shuffle = partitions × 256 KB
-  chunks), probe = driver-collected array tested per Arrow batch
+- vector (≤ 2^27 bits ≈ 5.59M keys, and the bitmap's bytes within
+  ``session.driver_bound``): build = per-partition dense numpy OR
+  (``bloom_build_chunks``, merge shuffle = partitions × 256 KB chunks),
+  probe = driver-collected array tested per Arrow batch
   (``bloom_contains_numpy``) — zero probe-side exchanges;
 - join (≤ 2^31 bits ≈ 89.5M keys): expression build (groupBy bit_or
-  over word indices, map-side partials), probe = explode(k) → broadcast
-  word-table join → one keyed re-aggregation;
+  over word indices, map-side partials), probe = explode(k) → word-table
+  join (broadcast while the word rows fit ``session.driver_bound``) →
+  one keyed re-aggregation;
 - exact beyond: the bitmap would be data-sized — fall back to the
   distinct + left-semi-join screen (FP = 0).
+
+The numpy tiers and the decontamination family's driver pass
+(``queries/text.py:_decon_local``) share one Python form of the position
+and bit math: ``bloom_set`` / ``bloom_test`` over ``_bit_positions``.
 
 The reference engine has no probabilistic membership structure
 (SURVEY.md §2 gap list) — beyond-reference capability for the 100 TB
@@ -168,18 +174,58 @@ def _is_chunked(bitmap: DataFrame) -> bool:
     return set(bitmap.columns) == {"chunk_idx", "chunk"}
 
 
-def _md5_h1h2(series):
-    """(h1, h2) int64 numpy arrays for a pandas Series of keys — the same
-    first/second 32-bit md5 windows as ``_positions``, so the numpy build
-    and probe tiers are bit-identical to the expression tiers."""
+# keys hashed per numpy block by ``bloom_set`` / ``bloom_test``: bounds
+# each of their (keys × num_hashes) int64 position temporaries at
+# 557 KB at k = 17, whatever the number of keys
+_BLOCK_KEYS = 1 << 12
+
+
+def _bit_positions(keys: list, num_bits: int, num_hashes: int):
+    """(len(keys), num_hashes) int64 bit positions of non-null ``keys``:
+    the Python form of ``_positions``. h1/h2 are the first and second
+    big-endian 32-bit words of md5(str(key)) — the 8-hex-digit windows
+    ``_positions`` reads — so the numpy tiers and the driver pass are
+    bit-identical to the expression tiers."""
     import hashlib
 
     import numpy as np
 
-    digs = series.map(lambda s: hashlib.md5(str(s).encode()).hexdigest())
-    h1 = digs.map(lambda d: int(d[:8], 16)).to_numpy(np.int64)
-    h2 = digs.map(lambda d: int(d[8:16], 16)).to_numpy(np.int64)
-    return h1, h2
+    md5 = hashlib.md5
+    words = np.frombuffer(
+        b"".join(md5(str(k).encode("utf-8")).digest() for k in keys),
+        dtype=">u4",
+    ).reshape(-1, 4)
+    h1 = words[:, 0].astype(np.int64)
+    h2 = words[:, 1].astype(np.int64)
+    js = np.arange(num_hashes, dtype=np.int64)
+    return (h1[:, None] + js[None, :] * h2[:, None]) % num_bits
+
+
+def bloom_set(words, keys: list, num_bits: int, num_hashes: int) -> None:
+    """OR the ``num_hashes`` bits of every non-null key of ``keys`` into
+    the numpy word array ``words`` (``num_bits/32`` words of any integer
+    dtype), in place."""
+    import numpy as np
+
+    for i in range(0, len(keys), _BLOCK_KEYS):
+        pos = _bit_positions(keys[i : i + _BLOCK_KEYS], num_bits, num_hashes)
+        pos = pos.ravel()
+        np.bitwise_or.at(
+            words, pos // _WORD, (np.int64(1) << (pos % _WORD)).astype(words.dtype)
+        )
+
+
+def bloom_test(words, keys: list, num_bits: int, num_hashes: int):
+    """Bool array: for each non-null key of ``keys``, whether all its
+    ``num_hashes`` bits are set in ``words``."""
+    import numpy as np
+
+    hit = np.zeros(len(keys), dtype=bool)
+    for i in range(0, len(keys), _BLOCK_KEYS):
+        pos = _bit_positions(keys[i : i + _BLOCK_KEYS], num_bits, num_hashes)
+        bits = (words[pos // _WORD] >> (pos % _WORD)) & 1
+        hit[i : i + len(pos)] = bits.all(axis=1)
+    return hit
 
 
 def bloom_build_chunks(
@@ -197,8 +243,8 @@ def bloom_build_chunks(
     nonzero chunks; a tiny groupBy(chunk_idx) OR-merge follows. Rows
     through the merge shuffle = partitions × chunks (hundreds), vs the
     k·n_keys explode → num_bits/32-group hash aggregate of the expression
-    build — this is what makes the audit/screen build cheap (VERDICT r5
-    item 1: decontamination_audit 8.4s → the explode build was the cost).
+    build, which made the explode the cost of the decontamination screen
+    (8.4 s of ``decontamination_audit`` once, measured).
 
     Pair with ``bloom_contains_numpy``, which collects these chunks
     directly. Memory: one num_bits/8-byte array per task — 16 MB at the
@@ -228,19 +274,12 @@ def bloom_build_chunks(
 
     def partials(batches):
         arr = np.zeros(n_words, dtype=np.uint32)
-        js = np.arange(k, dtype=np.int64)[None, :]
         touched = False
         for pdf in batches:
-            ks = pdf[key_col].dropna()
-            if not len(ks):
+            ks = pdf[key_col].dropna().tolist()
+            if not ks:
                 continue
-            h1, h2 = _md5_h1h2(ks)
-            pos = ((h1[:, None] + js * h2[:, None]) % num_bits).ravel()
-            np.bitwise_or.at(
-                arr,
-                pos // _WORD,
-                np.uint32(1) << (pos % _WORD).astype(np.uint32),
-            )
+            bloom_set(arr, ks, num_bits, k)
             touched = True
         if touched:
             for ci in range(n_chunks):
@@ -329,13 +368,16 @@ def bloom_contains(
 ) -> DataFrame:
     """Input rows + ``bf_hit``: true iff ALL ``num_hashes`` bits of
     ``key_col`` are set in ``bitmap`` (possible member; false = definitely
-    absent — null keys read false). The bitmap side broadcasts (either
-    layout: (word_idx, word) rows or chunked binary), so no shuffle ever
-    touches eval/train data together; the probe side pays exactly ONE
+    absent — null keys read false). The bitmap side (either layout:
+    (word_idx, word) rows or chunked binary) broadcasts when its word
+    rows fit the driver (``_fits_driver``), so no shuffle ever touches
+    eval/train data together and the probe side pays exactly ONE
     exchange — the re-aggregation of the k-way explode, keyed by a
     per-row id so duplicate input rows are preserved one-for-one
-    (interchangeable with ``bloom_contains_numpy`` on ANY input). This is
-    the tier for bitmaps past driver memory; below that the numpy tier is
+    (interchangeable with ``bloom_contains_numpy`` on ANY input). A
+    word table past that bound is sort-merge joined instead: a broadcast
+    would collect it past ``spark.driver.maxResultSize``. This is the
+    tier for bitmaps past driver memory; below that the numpy tier is
     strictly better (zero probe-side exchanges).
     """
     if _is_chunked(bitmap):
@@ -353,7 +395,12 @@ def bloom_contains(
             f"shiftleft(CAST(1 AS BIGINT), CAST(_pos % {_WORD} AS INT))"
         ).alias("mask"),
     )
-    tested = probes.join(F.broadcast(bitmap), "word_idx", "left").withColumn(
+    # (word_idx, word): two longs per word row
+    if _fits_driver(df.sparkSession, num_bits // _WORD * 16):
+        bitmap = F.broadcast(bitmap)
+    else:
+        bitmap = bitmap.hint("merge")
+    tested = probes.join(bitmap, "word_idx", "left").withColumn(
         "_bit_set",
         F.coalesce(
             (F.col("word").bitwiseAND(F.col("mask")) != 0), F.lit(False)
@@ -431,18 +478,14 @@ def bloom_contains_array(
     k = num_hashes
 
     def probe(batches):
-        js = np.arange(k, dtype=np.int64)[None, :]
         for pdf in batches:
             if not len(pdf):
                 continue
             hit = np.zeros(len(pdf), dtype=bool)
             valid = pdf[key_col].notna().to_numpy()
-            sub = pdf[key_col][valid]
-            if len(sub):
-                h1, h2 = _md5_h1h2(sub)
-                pos = (h1[:, None] + js * h2[:, None]) % num_bits
-                bits = (arr[pos // _WORD] >> (pos % _WORD)) & 1
-                hit[valid] = bits.all(axis=1)
+            hit[valid] = bloom_test(
+                arr, pdf[key_col][valid].tolist(), num_bits, k
+            )
             out = pdf[cols].copy()
             out["bf_hit"] = hit
             yield out
@@ -496,7 +539,7 @@ def build_literal_bloom(
     literal cap degrades its FP rate gracefully instead of saturating:
     the old fixed default (BLOOM_BITS=4096, k=17) at n=1000 keys sat at
     per-probe FP ≈ 0.72, over-dropping nearly every clean doc through
-    the ANY-window flag (r5 ADVICE). Callers pass all three values to
+    the ANY-window flag. Callers pass all three values to
     ``bloom_hit_expr``.
 
     ``min_bits`` floors m: Kirsch–Mitzenmacher double hashing degrades
@@ -532,9 +575,9 @@ def bloom_tier(n_keys: int) -> str:
     - **vector** (``bloom_build_chunks`` + ``bloom_contains_numpy``;
       bitmap collected once to the driver): m ≤ 2^27 bits = 16 MB ⇒
       n ≤ ~5.59M distinct keys.
-    - **join** (``bloom_build`` + ``bloom_contains``; bitmap broadcast
+    - **join** (``bloom_build`` + ``bloom_contains``; bitmap joined
       as a word table, never driver-materialized): m ≤ 2^31 bits ⇒
-      ~1 GiB broadcast ⇒ n ≤ ~89.5M distinct keys.
+      ~1 GiB of word rows ⇒ n ≤ ~89.5M distinct keys.
     - **exact** beyond: a 24-bits/key bitmap for n ≥ 10^8..10^12 keys is
       data-sized — the filter no longer buys anything over the exact
       distinct + semi-join screen (`exact_ngram_decontamination`'s
@@ -550,6 +593,23 @@ def bloom_tier(n_keys: int) -> str:
     return "exact"
 
 
+def _fits_driver(spark, nbytes: int) -> bool:
+    """Whether a bloom tier may pass ``nbytes`` of bitmap through the
+    driver in one action: the vector tier's collect or the join tier's
+    broadcast. They must fit ``session.driver_bound``. A ``-1``
+    threshold leaves only ``spark.driver.maxResultSize`` (0 =
+    unlimited): that threshold keeps Spark from choosing a broadcast,
+    but a bitmap goes through the driver on both bloom tiers, and
+    ``BLOOM_JOIN_MAX_BITS`` already caps it."""
+    from pydatalake_spark.session import driver_bound, result_cap
+
+    bound = driver_bound(spark)
+    if bound < 0:
+        bound = result_cap(spark)
+        return bound == 0 or nbytes <= bound
+    return nbytes <= bound
+
+
 def membership_screen(
     probe: DataFrame,
     train_keys: DataFrame,
@@ -557,7 +617,9 @@ def membership_screen(
     n_train_keys: int | None = None,
 ) -> DataFrame:
     """Probe rows + ``bf_hit`` ("possible member of train_keys"), through
-    the explicit three-tier ``bloom_tier`` dispatch. No false negatives
+    the explicit three-tier ``bloom_tier`` dispatch; a vector-tier
+    bitmap whose bytes do not fit ``session.driver_bound`` takes the
+    join tier instead (``_fits_driver``). No false negatives
     on any tier; FP ≈ 1e-5/probe on the bloom tiers and exactly 0 on the
     exact tier. Pass ``n_train_keys`` when the caller already counted
     (saves the sizing job); duplicates/nulls in ``probe`` are preserved /
@@ -570,6 +632,10 @@ def membership_screen(
             .count()
         )
     tier = bloom_tier(n_train_keys)
+    if tier == "vector" and not _fits_driver(
+        probe.sparkSession, bloom_num_bits(n_train_keys) // 8
+    ):
+        tier = "join"
     _log.info(
         "membership_screen tier=%s n_train_keys=%d num_bits=%d",
         tier, n_train_keys, bloom_num_bits(n_train_keys),

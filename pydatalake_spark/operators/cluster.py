@@ -266,8 +266,9 @@ def pagerank(
     most CENTRAL one (the version most other duplicates derive from),
     which is the better canonical document for training corpora.
 
-    Scale shape: per iteration, one join of ranks onto the edge list
-    (keyed by node — ids and doubles only) and one keyed aggregation; no
+    Scale shape: per iteration, one sort-merge join of ranks onto the
+    edge list (keyed by node — ids and doubles only; hinted, so the
+    edges are never broadcast) and one keyed aggregation; no
     node ever holds its neighborhood in memory, so hub nodes spread over
     the cluster. Lineage is truncated every few rounds exactly like
     connected_components above. Every node in the pair graph has degree
@@ -283,8 +284,12 @@ def pagerank(
     base = (1.0 - damping) / n_nodes
     rank_ids: list[int] = []
     for it in range(iters):
+        # hinted like the CC loop's label join: broadcasting the edges
+        # from the threshold alone would collect them past
+        # spark.driver.maxResultSize
         contrib = (
-            bidir.join(
+            bidir.hint("merge")
+            .join(
                 ranks.join(deg, ranks.node == deg.src)
                 .select("node", (F.col("rank") / F.col("deg")).alias("share")),
                 bidir.src == F.col("node"),
@@ -387,7 +392,8 @@ def label_propagation(
     near-dup groups separate across weak bridges — the finer-grained
     community readout for dedup planning.
 
-    Scale: per round ONE label join keyed on dst + one (node, label)
+    Scale: per round ONE sort-merge label join keyed on dst (hinted,
+    so the edges are never broadcast) + one (node, label)
     count aggregation + one argmax — all hash exchanges on node ids;
     labels table is node-sized, lineage truncated per round via
     localCheckpoint like the CC loop. num_iters is a fixed small constant
@@ -401,9 +407,13 @@ def label_propagation(
     )
     label_ids: list[int] = []
     for _ in range(num_iters):
-        neighbor = edges.join(
-            labels.withColumnRenamed("node", "dst"), "dst"
-        ).select(F.col("src").alias("node"), F.col("community").alias("nl"))
+        # hinted like the CC loop's label join: the edges are never
+        # broadcast
+        neighbor = (
+            edges.hint("merge")
+            .join(labels.withColumnRenamed("node", "dst"), "dst")
+            .select(F.col("src").alias("node"), F.col("community").alias("nl"))
+        )
         counted = neighbor.groupBy("node", "nl").agg(
             F.count(F.lit(1)).alias("c")
         )

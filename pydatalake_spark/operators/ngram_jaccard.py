@@ -28,10 +28,12 @@ whatever survives.
 
 Small inputs skip the plan. ``ngram_jaccard_pairs`` caches its
 ``(id, text)`` input, so neither path re-runs the upstream, and runs
-ONE aggregate action over it: rows, text bytes, an upper bound ``P`` on
-postings (``Σ max(#tokens − k + 1, 1)``) and the DF cap. A shingle held
-by ``d ≤ min(cap, rows)`` docs yields ``d(d−1)/2`` candidate pairs, so
-``P·(min(cap, rows) − 1)/2`` bounds the candidate-pair table. When the input bytes plus that table, at the
+ONE action over it (``text_shape``, which the decontamination
+family's dispatch shares): rows, text bytes, an upper
+bound ``P`` on postings (``Σ max(#tokens − k + 1, 1)``) and the DF
+cap. A shingle held by ``d ≤ min(cap, rows)`` docs yields ``d(d−1)/2``
+candidate pairs, so ``P·(min(cap, rows) − 1)/2`` bounds the
+candidate-pair table. When the input bytes plus that table, at the
 kernel's bytes per candidate pair, fit ``session.driver_bound``, the
 same steps run as one vectorized numpy pass on the driver and the pairs
 come back as a ``LocalRelation``; otherwise the Spark plan above runs
@@ -54,7 +56,7 @@ from pyspark.errors import ArithmeticException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pydatalake_spark.functions.text import distinct_shingles
+from pydatalake_spark.functions.text import distinct_shingles, tokenize
 from pydatalake_spark.operators.banding import band_pairs
 from pydatalake_spark.operators.scaling import fan_out
 from pydatalake_spark.session import cache_once, driver_bound
@@ -157,6 +159,38 @@ def _pruned_index(
     return inv, inv.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
 
 
+def text_shape(
+    docs: DataFrame, text_col: str, k: int, extra: DataFrame | None = None
+) -> dict:
+    """``rows``, ``text_bytes`` (UTF-8 octets) and ``windows`` (the token
+    ``k``-gram windows before any distinct, ``Σ max(#tokens − k + 1,
+    1)``) of ``docs``, plus the columns of the one-row frame ``extra``:
+    the measurement a driver-side tier over a text corpus is sized by,
+    read before anything is collected. One action: without ``extra``
+    the sums are observed metrics of a no-op write, one job whose tasks
+    each fold their partition (an aggregate would add an exchange and,
+    under AQE, a second job); with it, one aggregate crossed with
+    ``extra``."""
+    from pyspark.sql import Observation
+
+    text = F.col(text_col)
+    stats = [
+        F.count(F.lit(1)).alias("rows"),
+        F.coalesce(F.sum(F.octet_length(text)), F.lit(0)).alias("text_bytes"),
+        F.coalesce(
+            F.sum(F.greatest(F.size(tokenize(text)) - (k - 1), F.lit(1))), F.lit(0)
+        ).alias("windows"),
+    ]
+    if extra is None:
+        obs = Observation("text_shape")
+        docs.observe(obs, *stats).write.format("noop").mode("overwrite").save()
+        return obs.get
+    # one row against one row: a Cartesian product reads both sides in
+    # the result stage, where a broadcast would add a job
+    (got,) = docs.agg(*stats).crossJoin(extra.hint("shuffle_replicate_nl")).collect()
+    return got.asDict()
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -180,7 +214,7 @@ def ngram_jaccard_pairs(
     this knob is the difference between an operator that survives 100 TB
     and one that doesn't.
 
-    The input is cached once and measured by one aggregate action; an
+    The input is cached once and measured by one action; an
     input whose candidate-pair table fits ``session.driver_bound`` is
     resolved by ``_driver_pairs`` and returned as a ``LocalRelation``,
     a larger one by the Spark plan (module docstring). Both paths share
@@ -191,26 +225,15 @@ def ngram_jaccard_pairs(
     duplicate ids) raises under ANSI mode and drops the pair otherwise.
     """
     docs = cache_once(df.select(id_col, text_col))
-    text = F.col(text_col)
-    stats = docs.agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.octet_length(text)).alias("text_bytes"),
-        F.sum(
-            F.greatest(
-                F.size(F.split(F.trim(text), " ")) - (shingle_size - 1), F.lit(1)
-            )
-        ).alias("postings"),
+    frame = isinstance(max_df, DataFrame)
+    got = text_shape(
+        docs, text_col, shingle_size, _cap_row(max_df) if frame else None
     )
-    if isinstance(max_df, DataFrame):
-        # one row against one row: a Cartesian product reads both sides
-        # in the result stage, where a broadcast would add a job
-        stats = stats.crossJoin(_cap_row(max_df).hint("shuffle_replicate_nl"))
-    (got,) = stats.collect()
-    cap = got["__max_df"] if isinstance(max_df, DataFrame) else max_df
-    rows, postings = got["rows"], got["postings"] or 0
+    cap = got["__max_df"] if frame else max_df
+    rows, postings = got["rows"], got["windows"]
     fanout = rows if cap is None else max(min(cap, rows), 0)
     id_bytes = docs._jdf.schema().apply(id_col).dataType().defaultSize()
-    held = (got["text_bytes"] or 0) + rows * id_bytes
+    held = got["text_bytes"] + rows * id_bytes
     candidates = postings * max(fanout - 1, 0) // 2
     bound = driver_bound(df.sparkSession)
     if bound >= 0 and held + candidates * _PAIR_ROW_BYTES <= bound:

@@ -7,6 +7,9 @@ two sides cannot drift.
 
 from __future__ import annotations
 
+import sys
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,7 +34,7 @@ from pydatalake_spark.operators.simhash import (
 )
 from pydatalake_spark.queries.tables import load_table as _t
 from pydatalake_spark.queries.tables import sf_stamp
-from pydatalake_spark.session import cache_once, memo
+from pydatalake_spark.session import cache_once, driver_bound, memo
 
 QUERIES: dict = {}
 ORACLE: dict = {}
@@ -346,8 +349,13 @@ def _bands_sql() -> str:
     """,
 )
 def minhash_signatures_q(spark: SparkSession, sf: str) -> DataFrame:
+    """The corpus's MinHash signatures, cached (``cache_once``): the
+    minhash-family operators (`near_dup_pairs`, `lsh_candidate_pairs`,
+    ``DataLakeTable.dedup_near``) cache the plan-equal table, so once
+    this query ran they read its blocks instead of signing every
+    document again."""
     d = _t(spark, sf, "documents")
-    sig = minhash_signatures(d, num_hashes=_MH_N, shingle_size=_MH_K)
+    sig = cache_once(minhash_signatures(d, num_hashes=_MH_N, shingle_size=_MH_K))
     return sig.select("doc_id", *[f"mh_{j}" for j in range(_MH_N)])
 
 
@@ -2171,24 +2179,186 @@ _DECON_CTE = f"""
     )"""
 
 
+# Bytes the driver pass (`_decon_local`) holds per 13-token window at
+# its peak, from the types it holds them in (every window counted as an
+# eval window, the larger side). Measured with tracemalloc plus the
+# Arrow buffers at sf0.1 (211,014 windows): about 250 B per window.
+_DECON_WINDOW_BYTES = (
+    # the hash, a str of 32 ASCII hex digits, and its per-doc list slot
+    sys.getsizeof("0" * 32) + np.dtype(np.intp).itemsize
+    # the (doc_id, wh) frame and its distinct copy: int64 id, pointer
+    + 2 * (np.dtype(np.int64).itemsize + np.dtype(np.intp).itemsize)
+    # drop_duplicates: two int64 factor codes and an int64 hash slot
+    + 3 * np.dtype(np.int64).itemsize
+    # the exl frame (int64, pointer, bool) and its Arrow columns
+    + np.dtype(np.int64).itemsize + np.dtype(np.intp).itemsize + 1
+    + np.dtype(np.int64).itemsize + 32 + 4 + 1
+    # the eval frame (int64, pointer), exact_hit (int32), bf_hit and the
+    # non-null mask (bool), and the screen's Arrow columns
+    + np.dtype(np.int64).itemsize + np.dtype(np.intp).itemsize + 4 + 1 + 1
+    + np.dtype(np.int64).itemsize + 32 + 4 + 4 + 1
+)
+
+
+def _decon_local(spark: SparkSession, sf: str):
+    """The decontamination family's two shared tables of a small corpus,
+    ``(exl, screen)``, built on the driver in one pass as
+    ``LocalRelation``s; ``None`` when the corpus is above
+    ``session.driver_bound``. The bound test reads one measurement
+    (`text_shape`: one job) of the cached ``(doc_id, text)`` corpus —
+    the plan `ngram_jaccard_pairs` caches, so a corpus both families
+    screen reads its parquet once — before anything is collected: the
+    text bytes plus every 13-token window at `_DECON_WINDOW_BYTES` must
+    fit. A ``-1`` bound turns the tier off without the measurement.
+
+    Below the bound the Spark plans are fixed costs a 500-doc shard
+    cannot amortize: three Python-worker stages (the bitmap partials,
+    their merge, the probe) and a per-element HOF chain (13
+    ``element_at`` per window, which Spark interprets), against one
+    collect of the labeled docs here."""
+    from pydatalake_spark.functions.split import hash_bucket
+    from pydatalake_spark.operators.ngram_jaccard import text_shape
+
+    def build():
+        bound = driver_bound(spark)
+        if bound < 0:
+            return None
+        docs = cache_once(_t(spark, sf, "documents").select("doc_id", "text"))
+        got = text_shape(docs, "text", _DECON_K)
+        if got["text_bytes"] + got["windows"] * _DECON_WINDOW_BYTES > bound:
+            return None
+        return _decon_local_tables(
+            docs.where(F.col("doc_id").isNotNull()).select(
+                "doc_id",
+                "text",
+                (hash_bucket("doc_id", 100) < 80).alias("is_train"),
+            )
+        )
+
+    return corpus_memo(spark, "decon_local", sf, build)
+
+
+def _decon_local_tables(labeled: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """`_decon_exl`'s and `_decon_screen`'s rows from one collect of
+    ``labeled`` (doc_id, text, is_train; null ids already dropped, as the
+    Spark plan's inner join with the label drops them), each as a
+    ``LocalRelation``.
+
+    exl takes the Spark plan's steps: each row's window hashes
+    (`window_hashes`), distinct (doc_id, wh), inner join with the
+    per-row labels — so rows sharing an id repeat each of that id's
+    distinct windows once per copy. The screen takes the Spark pass's:
+    the train set is the distinct train-side hashes, null included (its
+    ``train_w.count()``); ``exact_hit`` is membership of a non-null eval
+    hash in it; the bitmap is ``bloom_num_bits`` of its size with
+    ``BLOOM_HASHES`` probes, built and probed by the vector tier's own
+    ``bloom_set`` / ``bloom_test``, and past the join ceiling
+    (``bloom_tier`` 'exact') the bloom verdict is the exact one, as
+    there. A null hash is never a member and never a bloom hit."""
+    import itertools
+
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from pydatalake_spark.functions.text import window_hashes
+    from pydatalake_spark.operators.bloom import (
+        BLOOM_HASHES,
+        bloom_num_bits,
+        bloom_set,
+        bloom_test,
+        bloom_tier,
+    )
+
+    spark = labeled.sparkSession
+    table = labeled.toArrow()
+    ids = table.column("doc_id").to_numpy()
+    whs = [window_hashes(t, _DECON_K) for t in table.column("text").to_pylist()]
+    n_win = np.fromiter(map(len, whs), np.int64, len(whs))
+    ex = pd.DataFrame(
+        {
+            "doc_id": ids.repeat(n_win),
+            "wh": np.fromiter(
+                itertools.chain.from_iterable(whs), object, int(n_win.sum())
+            ),
+        }
+    ).drop_duplicates()
+    del whs
+    lab = pd.DataFrame(
+        {"doc_id": ids, "is_train": table.column("is_train").to_numpy()}
+    )
+    exl = ex.merge(lab, on="doc_id")
+    del ex, table
+
+    wh = exl["wh"].to_numpy()
+    is_train = exl["is_train"].to_numpy()
+    train = pd.unique(wh[is_train])
+    keys = train[pd.notna(train)]
+    ev_id = exl["doc_id"].to_numpy()[~is_train]
+    ev_wh = wh[~is_train]
+    valid = pd.notna(ev_wh)
+    exact = np.zeros(len(ev_wh), dtype=np.int32)
+    exact[valid] = pd.Series(ev_wh[valid]).isin(keys).to_numpy()
+    if bloom_tier(len(train)) == "exact":
+        bf = exact.astype(bool)
+    else:
+        m = bloom_num_bits(len(train))
+        words = np.zeros(m // 32, dtype=np.uint32)
+        bloom_set(words, keys, m, BLOOM_HASHES)
+        bf = np.zeros(len(ev_wh), dtype=bool)
+        bf[valid] = bloom_test(words, ev_wh[valid], m, BLOOM_HASHES)
+
+    id_type = to_arrow_schema(labeled.select("doc_id").schema).field(0).type
+    exl_rows = {
+        "doc_id": pa.array(exl["doc_id"].to_numpy(), id_type),
+        "wh": pa.array(wh, pa.string()),
+        "is_train": pa.array(is_train, pa.bool_()),
+    }
+    screen_rows = {
+        "doc_id": pa.array(ev_id, id_type),
+        "wh": pa.array(ev_wh, pa.string()),
+        "exact_hit": pa.array(exact, pa.int32()),
+        "bf_hit": pa.array(bf, pa.bool_()),
+    }
+    return (
+        spark.createDataFrame(pa.table(exl_rows)),
+        spark.createDataFrame(pa.table(screen_rows)),
+    )
+
+
 def _decon_exl(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-corpus cached (doc_id, wh, is_train) table — the tokenize →
-    13-gram shingle → md5 → explode → distinct pass that every
-    decontamination query starts from. ONE cached DataFrame shared by
-    the exact screen, the bloom screen, and the audit (each of which has
-    3-4 internal consumers of it too), so the expensive pass runs once
+    """Per-corpus (doc_id, wh, is_train) table — the tokenize → 13-gram
+    shingle → md5 → explode → distinct pass that every decontamination
+    query starts from, joined to the 80/20 train label. ONE DataFrame
+    shared by the exact screen, the bloom screen, and the audit (each of
+    which has 3-4 internal consumers of it too), so the pass runs once
     per corpus, not once per consumer, and all consumers hold the SAME
     object. Its lifetime is the session store's materialization rule
-    (``session.py``)."""
+    (``session.py``).
+
+    A corpus below ``session.driver_bound`` gets it from the driver pass
+    `_decon_local`, as a ``LocalRelation``; a larger one, or any corpus
+    under a ``-1`` bound, from this Spark plan, cached. Both give the
+    same rows: a null text is one
+    null window hash; an empty or whitespace-only text is one window of
+    ``md5("")``; a null doc_id drops out of the inner join with the
+    label; rows sharing an id repeat each of that id's distinct windows
+    once per copy."""
     from pydatalake_spark.functions.split import hash_bucket
     from pydatalake_spark.functions.text import shingles
 
+    local = _decon_local(spark, sf)
+    if local is not None:
+        return local[0]
+
     def build() -> DataFrame:
-        d = _t(spark, sf, "documents")
-        base = d.select("doc_id", tokenize("text").alias("_toks"))
+        # plan-equal to the corpus `_decon_local` caches, so Spark reads
+        # that cache when the measurement built it, and never builds it
+        docs = _t(spark, sf, "documents").select("doc_id", "text")
+        base = docs.select("doc_id", tokenize("text").alias("_toks"))
         wh = F.transform(shingles(F.col("_toks"), k=_DECON_K), F.md5)
         ex = base.select("doc_id", F.explode(wh).alias("wh")).distinct()
-        lab = d.select(
+        lab = docs.select(
             "doc_id", (hash_bucket("doc_id", 100) < 80).alias("is_train")
         )
         return cache_once(ex.join(lab, "doc_id"))
@@ -2230,19 +2400,26 @@ def _decon_eval_w(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _decon_screen(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-corpus cached per-window screen VERDICT table
-    ``(doc_id, wh, exact_hit, bf_hit)`` over the eval windows — the
-    `_minhash_pairs` pattern applied to the decontamination family: the
-    exact semi-join verdict and the bloom probe verdict are computed in
-    ONE fused pass (one wh-keyed shuffle against the distinct train set,
-    the bloom probe mapped over that join's own output), and the three
-    screen queries (`exact_ngram_decontamination`,
-    `bloom_decontamination`, `decontamination_audit`) reduce the SAME
-    cached table with their own doc-level aggregation instead of each
-    re-running a probe pass.
+    """Per-corpus per-window screen VERDICT table
+    ``(doc_id, wh, exact_hit, bf_hit)`` over the eval windows: the exact
+    membership of each window in the distinct train set and the bloom
+    probe's verdict, computed in ONE pass per corpus. The three screen
+    queries (`exact_ngram_decontamination`, `bloom_decontamination`,
+    `decontamination_audit`) reduce the SAME table with their own
+    doc-level aggregation instead of each re-running a probe pass.
+
+    A corpus below ``session.driver_bound`` gets it from the driver pass
+    `_decon_local`, as a ``LocalRelation`` built with `_decon_exl`'s.
+    Otherwise the Spark pass runs, cached: one wh-keyed left join
+    against the distinct train set, with the `membership_screen` probe
+    mapped over that join's own output.
     Size contract: one row per distinct eval (doc, window) — the same
     order as `_decon_exl` itself, LRU-evictable under memory pressure."""
     from pydatalake_spark.operators.bloom import membership_screen
+
+    local = _decon_local(spark, sf)
+    if local is not None:
+        return local[1]
 
     def build() -> DataFrame:
         exl = _decon_exl(spark, sf)
@@ -2353,21 +2530,22 @@ def bloom_decontamination_q(spark: SparkSession, sf: str) -> DataFrame:
     the ANY-window doc-level flag stays rare on clean docs), so screening
     an eval stream needs NO shuffle against train data, with a bounded
     false-positive rate at EVERY scale factor and no false negatives
-    (pytest pins flagged ⊇ exact-contaminated). The sizing count is one
-    distinct-count job whose result is a bounded driver scalar. The
-    screen routes through the explicit THREE-tier `membership_screen`
+    (pytest pins flagged ⊇ exact-contaminated). The per-window verdicts
+    come from the shared `_decon_screen` table, one pass per corpus that
+    also serves the exact screen and the audit.
+
+    Two tiers build that table. A corpus whose 13-token windows fit
+    ``session.driver_bound`` (a 500-doc shard under ``get_spark``) is
+    screened on the driver in one pass (`_decon_local`): one measuring
+    job, one collect of the labeled docs, no Python worker. A larger one
+    runs the Spark pass through the THREE-tier `membership_screen`
     dispatch (operators/bloom.py:bloom_tier): vectorized Arrow bitmap
-    while it fits driver memory (BLOOM_VECTOR_MAX_BITS), broadcast word
-    table to 2^31 bits, and the EXACT distinct+semi-join beyond — the
-    round-7 1000x probe caught the old two-branch version trying to
-    broadcast a 6.9e9-bit word table (216M rows) through
-    spark.driver.maxResultSize; past the join ceiling a 24-bits/key
-    bitmap is data-sized and buys nothing over the exact screen (FP=0
-    there, so `flagged` only gets MORE precise). The (doc, window-hash)
-    table comes from the shared `_decon_exl` cache, and the per-window
-    verdicts from the shared `_decon_screen` pass (r10: one fused
-    exact+bloom probe per corpus serves this query, the exact screen,
-    and the audit). See operators/bloom.py."""
+    while it fits the driver, word-table join to 2^31 bits, and the
+    EXACT distinct+semi-join beyond, where a 24-bits/key bitmap is
+    data-sized and buys nothing over the exact screen (FP=0 there, so
+    `flagged` only gets MORE precise): a 6.9e9-bit bitmap is a 216M-row
+    word table, which no broadcast carries through
+    spark.driver.maxResultSize. See operators/bloom.py."""
     scr = _decon_screen(spark, sf)
     return scr.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_windows"),
@@ -3786,9 +3964,10 @@ def decontamination_audit_q(spark: SparkSession, sf: str) -> DataFrame:
     the price of the 1 KB bitmap) and false negatives (must be 0 by
     construction — a nonzero value means the filter is broken). The
     number that justifies deploying the bloom path at a given bitmap
-    size. Round 6: the two screens run FUSED — the bloom probe maps over
-    the exact screen's join output, so the eval windows pay one wh-keyed
-    shuffle and one doc_id aggregation total.
+    size. The two screens run FUSED in the shared `_decon_screen` table
+    (on the driver for a small corpus; otherwise the bloom probe maps
+    over the exact screen's join output, so the eval windows pay one
+    wh-keyed shuffle), and the audit adds one doc_id aggregation.
 
     The bitmap is auto-sized from the distinct train-hash count
     (`bloom_num_bits`: 24 bits/key, k=17 double-hash probes → ~1e-5
@@ -3800,14 +3979,12 @@ def decontamination_audit_q(spark: SparkSession, sf: str) -> DataFrame:
     over-flagged ~28% of clean docs through the ANY-window flag. FN
     must read 0 at any size; a nonzero value means the filter is
     broken."""
-    # fused single pass via the shared `_decon_screen` verdict cache: the
-    # bloom probe runs on the exact screen's OWN join output, so the eval
-    # windows cross one wh-keyed shuffle and one doc_id groupBy TOTAL —
-    # no second scan, no two per-screen aggregates to re-join on doc_id —
-    # and (r10) the pass itself is shared with bloom_decontamination and
+    # the shared `_decon_screen` verdicts: one doc_id groupBy, no second
+    # scan, no two per-screen aggregates to re-join on doc_id; the pass
+    # itself is shared with bloom_decontamination and
     # exact_ngram_decontamination instead of re-run per query.
     # membership_screen's three-tier dispatch keeps the audit runnable
-    # past the 2^31-bit broadcast ceiling the 1000x probe hit.
+    # past the 2^31-bit broadcast ceiling.
     scr = _decon_screen(spark, sf)
     j = scr.groupBy("doc_id").agg(
         (F.max("exact_hit") == 1).alias("contaminated"),

@@ -116,10 +116,16 @@ def driver_bound(spark: SparkSession) -> int:
     threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     if threshold < 0:
         return -1
-    result_max = spark.sparkContext._jsc.sc().conf().getSizeAsBytes(
+    result_max = result_cap(spark)
+    return threshold if result_max == 0 else min(threshold, result_max)
+
+
+def result_cap(spark: SparkSession) -> int:
+    """``spark.driver.maxResultSize`` in bytes: the most one action may
+    return to the driver (0 means unlimited)."""
+    return spark.sparkContext._jsc.sc().conf().getSizeAsBytes(
         "spark.driver.maxResultSize", "1g"
     )
-    return threshold if result_max == 0 else min(threshold, result_max)
 
 
 def _is_cached(df: DataFrame) -> bool:

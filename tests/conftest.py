@@ -38,10 +38,15 @@ def jobs_in(spark, group, fn):
 def cc_loop(spark, on):
     """Inside, every driver-side tier is off when ``on`` (broadcast
     threshold ``-1``, so ``session.driver_bound`` is ``-1``):
-    ``connected_components`` runs the distributed min-label loop and
-    ``ngram_jaccard_pairs`` its Spark plan. Otherwise the session
-    threshold applies, under which test-sized inputs take the driver-side
-    union-find and pair kernel."""
+    ``connected_components`` runs the distributed min-label loop,
+    ``ngram_jaccard_pairs`` its Spark plan, and the decontamination
+    tables (``queries/text.py:_decon_exl`` / ``_decon_screen``) their
+    Spark plans; the bloom tiers still pass a bitmap through the driver
+    up to ``spark.driver.maxResultSize``. Otherwise the session threshold
+    applies, under which test-sized inputs take the driver-side
+    union-find, pair kernel and decontamination pass. The
+    decontamination tables are memoized per corpus dir, so a test that
+    wants the other tier drops their memo entries first."""
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
     if on:

@@ -970,10 +970,6 @@ def test_cc_checkpoints_reaped_between_iterations(spark, monkeypatch):
         assert n_persistent() <= before + 1
 
     before = n_persistent()
-    pagerank(pairs, iters=12).collect()
-    assert n_persistent() <= before + 2  # bidir + last rank checkpoint
-
-    before = n_persistent()
     label_propagation(pairs, num_iters=5).collect()
     assert n_persistent() <= before + 1  # final labels; edges reaped
 
@@ -1007,6 +1003,13 @@ def test_cc_checkpoints_reaped_between_iterations(spark, monkeypatch):
     )
     assert {r.cluster_id for r in connected_components(chain).collect()} == {0}
     assert live_checkpoints() == (1, [])
+
+    # pagerank: every superseded rank generation is reaped; the
+    # symmetrized edges and the last rank generation stay live
+    made.clear()
+    pagerank(pairs, iters=12).collect()
+    n_made, live = live_checkpoints()
+    assert n_made == 4 and len(live) <= 2  # bidir + 3 rank generations
 
     # label propagation: the edge checkpoint and every superseded label
     # generation are reaped, only the returned labels stay live
@@ -1326,6 +1329,62 @@ spark.stop()
         cwd=root, env=env, capture_output=True, text=True, timeout=600,
     )
     assert "RESULT 73500 10500 0" in out.stdout, out.stdout + out.stderr[-3000:]
+
+
+def test_graph_loops_never_broadcast_edges():
+    """``label_propagation`` and ``pagerank`` always run distributed
+    loops, so their edge joins may not broadcast the edges either: with
+    a 1 GB broadcast threshold and a 1 MB result cap, both run on the
+    73,500 clique edges of the CC test above (147,000 symmetrized rows,
+    2.35 MB). LPA labels every node with its clique's minimum after
+    three rounds; PageRank on the 15-regular graph gives every node
+    1/10,500. A broadcast of the edge side would collect them past
+    ``spark.driver.maxResultSize`` and abort. Each leg reports on its
+    own line."""
+    import os
+    import subprocess
+    import sys
+
+    script = """
+from pyspark.sql import functions as F
+from pydatalake_spark.operators.cluster import label_propagation, pagerank
+from pydatalake_spark.session import get_spark
+
+spark = get_spark("graphnobcast", master="local[2]", extra_conf={
+    "spark.driver.maxResultSize": "1m",
+    "spark.sql.autoBroadcastJoinThreshold": str(1 << 30),
+})
+r = spark.range(700 * 225).select(
+    (F.col("id") / 225).cast("long").alias("c"),
+    (F.col("id") % 225 / 15).cast("long").alias("i"),
+    (F.col("id") % 15).alias("j"),
+).filter(F.col("i") < F.col("j"))
+edges = r.select(
+    (F.col("c") * 15 + F.col("i")).alias("id_a"),
+    (F.col("c") * 15 + F.col("j")).alias("id_b"),
+)
+try:
+    lpa = label_propagation(edges, num_iters=3)
+    bad = lpa.filter(F.col("community") != F.col("node") - F.col("node") % 15)
+    print("RESULT lpa", lpa.count(), bad.count())
+except Exception as e:
+    print("FAILED lpa", type(e).__name__)
+try:
+    pr = pagerank(edges, iters=4)
+    bad = pr.filter(F.abs(F.col("rank") - 1 / 10500) > 1e-12)
+    print("RESULT pagerank", pr.count(), bad.count())
+except Exception as e:
+    print("FAILED pagerank", type(e).__name__)
+spark.stop()
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root + os.pathsep + os.environ.get("PYTHONPATH", ""))
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    for leg in ("lpa", "pagerank"):
+        assert f"RESULT {leg} 10500 0" in out.stdout, out.stdout + out.stderr[-3000:]
 
 
 def test_quality_score_empty_doc_yields_null_not_error(spark):
@@ -1762,6 +1821,68 @@ def test_bloom_tiers_agree_on_hostile_keys(spark):
         assert jt[k], f"member {k!r} missed"
 
 
+def test_bloom_screen_respects_max_result_size():
+    """The bloom tiers pass their bitmap through the driver — the vector
+    tier collects it, the join tier broadcasts its word rows — so each
+    runs only when that fits ``session.driver_bound``. With a 1 GB
+    broadcast threshold and a 1 MB result cap, a screen against 400,000
+    train keys (a 1.2 MB bitmap) takes the join tier, shuffle-joined,
+    and returns its verdicts: the members hit, and every verdict equals
+    a numpy replay of the bitmap. Collecting that bitmap would abort the
+    job. ``maxResultSize`` is fixed when the context starts, so this
+    runs in its own session."""
+    import os
+    import subprocess
+    import sys
+
+    script = """
+import hashlib
+
+import numpy as np
+from pyspark.sql import functions as F
+from pydatalake_spark.operators.bloom import (
+    BLOOM_HASHES, bloom_num_bits, membership_screen,
+)
+from pydatalake_spark.session import get_spark
+
+spark = get_spark("bloommaxresult", master="local[2]", extra_conf={
+    "spark.driver.maxResultSize": "1m",
+    "spark.sql.autoBroadcastJoinThreshold": str(1 << 30),
+})
+n = 400_000
+key = F.concat(F.lit("k-"), F.col("id").cast("string")).alias("key")
+train = spark.range(n).select(key)
+probe = spark.range(n - 1000, n + 1000).select(key)
+screen = membership_screen(probe, train, n_train_keys=n)
+plan = screen._jdf.queryExecution().executedPlan().toString()
+got = {r.key: r.bf_hit for r in screen.collect()}
+
+def positions(keys, m):
+    w = np.frombuffer(
+        b"".join(hashlib.md5(k.encode()).digest() for k in keys), ">u4"
+    ).reshape(-1, 4).astype(np.int64)
+    return (w[:, :1] + np.arange(BLOOM_HASHES) * w[:, 1:2]) % m
+
+m = bloom_num_bits(n)
+bits = np.zeros(m, dtype=bool)
+bits[positions([f"k-{i}" for i in range(n)], m).ravel()] = True
+keys = [f"k-{i}" for i in range(n - 1000, n + 1000)]
+want = dict(zip(keys, bits[positions(keys, m)].all(axis=1).tolist()))
+print("RESULT", m // 8, "MapInPandas" in plan, got == want,
+      all(got[f"k-{i}"] for i in range(n - 1000, n)))
+spark.stop()
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root + os.pathsep + os.environ.get("PYTHONPATH", ""))
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert "RESULT 1200000 False True True" in out.stdout, (
+        out.stdout + out.stderr[-3000:]
+    )
+
+
 def test_bloom_decon_supersets_exact_decon(spark):
     """The Bloom screen may over-flag (false positives) but must never
     miss a document the exact screen flags, and the window universe must
@@ -1980,6 +2101,48 @@ def test_suggest_num_planes_keeps_occupancy_linear(spark):
         for r in embedding_near_dup(e, num_planes=p).collect()
     }
     assert auto == explicit
+
+
+def test_near_dup_pairs_reads_cached_signatures(spark, monkeypatch, tmp_path):
+    """Once the ``minhash_signatures`` query ran on a corpus dir, the
+    ``near_dup_pairs`` query on that dir reads the cached signature
+    table: no Arrow pass signs a document again. Every Arrow pass is
+    tapped to log the rows it reads; the corpus is a copy of the sf0.001
+    documents in a fresh dir, so no cache from another test serves it."""
+    import shutil
+
+    from pydatalake_spark.queries import QUERIES
+    from tests.conftest import SF_DIR
+
+    sf = tmp_path / "corpus"
+    sf.mkdir()
+    shutil.copy(f"{SF_DIR}/documents.parquet", sf)
+    log = tmp_path / "passes.log"
+    frame_type = type(spark.range(1))
+    real = frame_type.mapInPandas
+
+    def tapped(self, func, schema, *args, **kwargs):
+        path, tag = str(log), func.__qualname__.split(".")[0]
+
+        def run(batches):
+            def tap():
+                for pdf in batches:
+                    with open(path, "a") as f:
+                        f.write(f"{tag} {len(pdf)}\n")
+                    yield pdf
+
+            return func(tap())
+
+        return real(self, run, schema, *args, **kwargs)
+
+    monkeypatch.setattr(frame_type, "mapInPandas", tapped)
+    log.write_text("")
+    n_docs = QUERIES["minhash_signatures"](spark, str(sf)).count()
+    signed = sum(int(ln.split()[1]) for ln in log.read_text().splitlines())
+    assert signed == n_docs
+    log.write_text("")
+    assert QUERIES["near_dup_pairs"](spark, str(sf)).collect()
+    assert log.read_text() == ""
 
 
 def test_minhash_band_table_cached_once(spark):

@@ -14,6 +14,7 @@ import re
 import pytest
 
 from pydatalake_spark.queries import QUERIES
+from tests.conftest import cc_loop, jobs_in
 
 SF = "/root/testdata/sf0.001"
 
@@ -550,13 +551,14 @@ def test_bloom_vector_probe_is_shuffle_free(spark):
     keys = spark.range(100).select(
         F.concat(F.lit("k-"), F.col("id")).alias("k")
     )
-    bitmap = bloom_build(keys, key_col="k")
-    p = (
-        bloom_contains_numpy(keys, bitmap, key_col="k")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    with cc_loop(spark, True):
+        bitmap = bloom_build(keys, key_col="k")
+        p = (
+            bloom_contains_numpy(keys, bitmap, key_col="k")
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
     assert "Join" not in p
     assert "Exchange" not in p
 
@@ -589,18 +591,34 @@ def test_bloom_chunked_build_plan_has_no_explode(spark):
     assert p.count("Exchange") == 1       # only the tiny chunk merge
 
 
+def _forget_decon_tables(sf=SF):
+    """Drop the decontamination tables of ``sf`` from the session memo, so
+    the next call builds them under the current broadcast threshold: a
+    sf0.001 table built under ``get_spark``'s is a driver-side
+    ``LocalRelation``, one built under ``cc_loop(spark, True)`` the
+    Spark plan."""
+    from pydatalake_spark import session
+
+    for k in list(session._MEMO):
+        if k[1].startswith("decon") and k[2] == sf:
+            session._release(session._MEMO.pop(k)[1])
+
+
 def test_fused_audit_plan_single_wh_shuffle(spark):
-    """decontamination_audit's fused pass: the eval windows cross exactly
-    one wh-keyed exchange (the exact-screen join) with the bloom probe
-    mapped over that join's output — no second scan of the eval windows,
-    no per-screen aggregate re-join. r10: the fused pass is the shared
-    `_decon_screen` cached table; its build subtree prints only while the
-    cache is COLD (a prior consumer in the same session materializes it
-    and the plan shows the elided cached stage instead), so the
-    always-true assertions are on the audit's own REDUCTION: one
+    """decontamination_audit's fused pass on the Spark path: the eval
+    windows cross exactly one wh-keyed exchange (the exact-screen join)
+    with the bloom probe mapped over that join's output — no second scan
+    of the eval windows, no per-screen aggregate re-join. The fused pass
+    is the shared `_decon_screen` cached table; its build subtree prints
+    only while the cache is COLD (a prior consumer in the same session
+    materializes it and the plan shows the elided cached stage instead),
+    so the always-true assertions are on the audit's own REDUCTION: one
     doc-keyed aggregation pair over the cached scan, zero probe passes
     and zero wh-keyed exchanges of its own."""
-    p = physical_plan(spark, "decontamination_audit")
+    _forget_decon_tables()
+    with cc_loop(spark, True):
+        p = physical_plan(spark, "decontamination_audit")
+    _forget_decon_tables()
     # one doc-keyed aggregation pair (partial + final), not two screens'
     # (keys=[doc_id] exactly; the (doc_id, wh) distincts of the shared
     # window-table build are a different aggregate)
@@ -619,20 +637,21 @@ def test_fused_audit_plan_single_wh_shuffle(spark):
 
 
 def test_decon_screen_cold_build_is_fused(spark):
-    """The shared `_decon_screen` verdict build itself: the bloom probe
-    (ONE MapInPandas) maps over the exact-screen join's own output — one
-    fused pass. Asserted on a COLD build: the screen's session memo entry and
-    Spark's relation cache are cleared first, so neither materialized-
-    stage elision nor CacheManager plan-equal substitution can hide the
-    build subtree (the consumers' test above stays cache-state-agnostic)."""
+    """The shared `_decon_screen` verdict build itself on the Spark path:
+    the bloom probe (ONE MapInPandas) maps over the exact-screen join's
+    own output — one fused pass. Asserted on a COLD build: the screen's
+    session memo entry and Spark's relation cache are cleared first, so
+    neither materialized-stage elision nor CacheManager plan-equal
+    substitution can hide the build subtree (the consumers' test above
+    stays cache-state-agnostic)."""
     import pydatalake_spark.queries.text as TX
-    from pydatalake_spark import session
 
-    for k in [k for k in session._MEMO if k[1] == "decon_screen"]:
-        del session._MEMO[k]
+    _forget_decon_tables()
     spark.catalog.clearCache()
-    scr = TX._decon_screen(spark, SF)
-    p = scr._jdf.queryExecution().executedPlan().toString()
+    with cc_loop(spark, True):
+        scr = TX._decon_screen(spark, SF)
+        p = scr._jdf.queryExecution().executedPlan().toString()
+    _forget_decon_tables()
     # distinct expression ids, not raw occurrences: nested adaptive
     # blocks print Final + Initial sections with the same node verbatim
     probes = set(re.findall(r"MapInPandas \w+\([^)]*\)#(\d+)", p))
@@ -651,6 +670,32 @@ def test_decon_screen_cold_build_is_fused(spark):
         )
     )
     assert len(joins) == 1, p
+
+
+def test_bloom_decontamination_small_corpus_on_driver(spark):
+    """Below ``session.driver_bound`` the decontamination tables are built
+    on the driver: on the sf0.001 docs both `_decon_exl` and
+    `_decon_screen` are ``LocalRelation``s, and ``bloom_decontamination``
+    fires at most 4 Spark jobs, build plus collect, with no Arrow pass.
+    The ``(doc_id, text)`` cache it shares with the n-gram pair front is
+    built first, as an earlier step of a curation shard builds it."""
+    import pydatalake_spark.queries.text as TX
+    from pydatalake_spark.queries.tables import load_table
+    from pydatalake_spark.session import cache_once
+
+    _forget_decon_tables()
+    cache_once(load_table(spark, SF, "documents").select("doc_id", "text")).count()
+
+    def run():
+        df = QUERIES["bloom_decontamination"](spark, SF)
+        return df, df.collect()
+
+    (df, rows), n_jobs = jobs_in(spark, "decon_driver", run)
+    assert rows and n_jobs <= 4, n_jobs
+    for t in (TX._decon_exl(spark, SF), TX._decon_screen(spark, SF)):
+        plan = t._jdf.queryExecution().optimizedPlan()
+        assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert "MapInPandas" not in df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_rp_distortion_is_join_free(spark):

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pydatalake_spark.operators.dedup import distinct_table
@@ -253,6 +253,64 @@ def test_ngram_driver_pairs_match_spark_plan(spark, rows, int_cap):
         with cc_loop(spark, True):
             want = outcome(max_df)
         assert outcome(max_df) == want, (rows, max_df)
+
+
+_decon_text = st.one_of(
+    st.none(),
+    st.sampled_from(["", " ", "   "]),
+    # long texts that recur across ids: contaminated eval windows
+    st.sampled_from(["aa " * 14 + "bb", "é 日本 " * 8]),
+    # a short vocabulary repeats 13-token windows across docs; the empty
+    # token makes double spaces, and non-ASCII tokens hash as UTF-8
+    st.lists(
+        st.sampled_from(["aa", "bb", "", "é", "日本"]), min_size=1, max_size=18
+    ).map(" ".join),
+)
+# ids 8 and 16 label eval, 0-2 train; None is a null id
+_decon_corpus = st.lists(
+    st.tuples(st.sampled_from([None, 0, 1, 2, 8, 16]), _decon_text),
+    min_size=0,
+    max_size=10,
+)
+
+
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@given(rows=_decon_corpus)
+@example(rows=[])
+@example(rows=[(8, "aa " * 14 + "bb"), (0, "aa " * 14 + "bb"), (8, None)])
+def test_decon_driver_tables_match_spark_plan(spark, rows, tmp_path_factory):
+    """The driver pass gives `_decon_exl` and `_decon_screen` exactly the
+    Spark plan's rows (as multisets) on corpora with null, empty and
+    whitespace-only text, docs shorter than 13 tokens, duplicate ids,
+    null ids and non-ASCII text; the driver tables are
+    ``LocalRelation``s."""
+    from collections import Counter
+
+    import pydatalake_spark.queries.text as TX
+    from pydatalake_spark import session
+    from tests.conftest import cc_loop
+
+    sf = str(tmp_path_factory.mktemp("decon"))
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
+        f"{sf}/documents.parquet"
+    )
+
+    def tables():
+        for k in [k for k in session._MEMO if k[2:3] == (sf,)]:
+            session._release(session._MEMO.pop(k)[1])
+        exl, scr = TX._decon_exl(spark, sf), TX._decon_screen(spark, sf)
+        local = [
+            t._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+            == "LocalRelation"
+            for t in (exl, scr)
+        ]
+        return local, [Counter(map(tuple, t.collect())) for t in (exl, scr)]
+
+    with cc_loop(spark, True):
+        spark_local, want = tables()
+    local, got = tables()
+    assert spark_local == [False, False] and local == [True, True]
+    assert got == want, rows
 
 
 # --- span dedup vs a pure-Python model --------------------------------------

@@ -64,20 +64,23 @@ PICKS = {
         "join anywhere; the only exchange moves per-cell partials"
     ),
     "bloom_decontamination": (
-        "vectorized probe: MapInPandas tests the bitmap in place — no "
-        "k-fold explode, no bitmap join; shingle table read from cache "
-        "(InMemoryTableScan). Round 6: the BUILD side is a MapInPandas "
-        "too (bloom_build_chunks: per-partition dense numpy OR → "
-        "chunk-keyed binary merge), so neither side explodes k-fold; "
-        "the cache is the shared _decon_exl table"
+        "a corpus within session.driver_bound is screened on the driver "
+        "(_decon_local): a LocalTableScan of the verdicts, one doc_id "
+        "aggregation. Above it, the vectorized probe: MapInPandas tests "
+        "the bitmap in place — no k-fold explode, no bitmap join; "
+        "shingle table read from cache (InMemoryTableScan). The BUILD "
+        "side is a MapInPandas too (bloom_build_chunks: per-partition "
+        "dense numpy OR → chunk-keyed binary merge), so neither side "
+        "explodes k-fold; the cache is the shared _decon_exl table"
     ),
     "decontamination_audit": (
-        "round-6 fused pass: ONE wh-keyed exchange (the exact-screen "
-        "join) with the bloom probe (MapInPandas) mapped over its "
-        "output; one doc_id aggregation pair, no per-screen re-join. "
-        "r10: the fused pass itself is the shared _decon_screen cache "
-        "(InMemoryTableScan) that bloom_decontamination and "
-        "exact_ngram_decontamination also reduce"
+        "the shared _decon_screen verdicts, which bloom_decontamination "
+        "and exact_ngram_decontamination also reduce: a driver-built "
+        "LocalTableScan within session.driver_bound; above it, a fused "
+        "pass (InMemoryTableScan) of ONE wh-keyed exchange (the "
+        "exact-screen join) with the bloom probe (MapInPandas) mapped "
+        "over its output; one doc_id aggregation pair, no per-screen "
+        "re-join"
     ),
     "q18_large_volume_customer": (
         "r10 single-pass: ONE exchange (per-order partial-combined "
